@@ -1,36 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // The catalog generates >100 distinct codegen stages; the default
-      // 100-entry codegen cache then evicts+recompiles nondeterministically
-      // (janino compiles of the big minhash/codec classes run seconds
-      // each — the source of the r02/r03 wandering per-query stalls).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // high-cardinality collect_list aggregates (the LSH band-bucket
-      // grouping: ~1 band hash per input row) otherwise hit
-      // ObjectHashAggregate's 128-entry sort-based fallback and SORT
-      // the whole band table per task; entries are (long key, tiny id
-      // list), so a few million hashed entries per task is cheap
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.maxPlanStringLength", "8192")
-      // async block/shuffle cleanup: the blocking cleaner serializes
-      // against job submission through the dispatcher and produced
-      // multi-second wandering stalls across a ~90-query session
-      .config("spark.cleaner.referenceTracking.blocking", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "false")
-    // extra confs for A/B experiments: SPARK_GRAFT_CONF="k=v,k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     // Uncounted warmup: pays one-time session/scheduler/codegen startup
     // so per-query timings measure the queries, not JVM init.
     // KernelWarmup first: spin every hot static kernel past the C2

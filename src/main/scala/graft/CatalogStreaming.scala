@@ -56,12 +56,12 @@ private[graft] trait CatalogStreaming { this: QueriesBase =>
     // LIMIT 3 over the distinct partition keys.
     ("sliding_index_window", (s: SparkSession, dir: String) => {
       // ts arrives as either nanos-long or native timestamp; normTs
-      // handles both. The nanosAsLong flag is scoped: the batch read
-      // materializes inside the collect so the conf restore is safe
-      // (the same save/restore the streaming helpers use, ADVICE r8).
-      val out = graft.streaming.StreamingIngest.withNanosAsLong(s) {
+      // handles both. The nanosAsLong flag is scoped to a cloned
+      // session; the result is collected inside the scope.
+      val out = graft.core.ScopedConf.withConfs(s,
+          graft.streaming.StreamingIngest.NanosAsLong) { c =>
         val ev = graft.streaming.StreamingIngest
-          .normTs(s.read.parquet(s"$dir/events.parquet"))
+          .normTs(c.read.parquet(s"$dir/events.parquet"))
           .withColumn("part", date_trunc("hour", col("ts")))
         val res = graft.streaming.StreamingIngest.slidingWindow(ev, "part", keep = 3)
           .groupBy(col("part"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for the headline operators into
   * EXPLAIN.md — evidence that the plans have the intended 100 TB
   * shapes (broadcast joins, partial top-k aggregation, pushdown,
@@ -19,12 +17,7 @@ object Explain {
     // query set is non-empty so the sections show the real scan +
     // pruning shapes.
     val bigDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(8)
 
     val interesting = Seq(
       "knn_flat_l2", "knn_idsel_range", "assign_1nn", "range_search_l2",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Times one named catalog query in a fresh session — separates a
   * query's intrinsic cost from cross-session-state effects when a
@@ -11,23 +10,7 @@ object TimeOne {
     val name = args(0)
     val repeat = if (args.length > 1) args(1).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.maxPlanStringLength", "8192")
-      // async block/shuffle cleanup: the blocking cleaner serializes
-      // against job submission through the dispatcher and produced
-      // multi-second wandering stalls across a ~90-query session
-      .config("spark.cleaner.referenceTracking.blocking", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "false")
-    // extra confs for A/B experiments: SPARK_GRAFT_CONF="k=v,k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     val fn = SparkEntry.queries(name)
     for (i <- 1 to repeat) {
       val t0 = System.nanoTime()

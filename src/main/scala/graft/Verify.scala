@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Minimal JSON writer for the two driver-contract mains — string
@@ -25,28 +24,7 @@ object JsonMin {
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: avoid codegen-cache eviction churn across ~90 queries
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // high-cardinality collect_list aggregates (the LSH band-bucket
-      // grouping: ~1 band hash per input row) otherwise hit
-      // ObjectHashAggregate's 128-entry sort-based fallback and SORT
-      // the whole band table per task; entries are (long key, tiny id
-      // list), so a few million hashed entries per task is cheap
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.maxPlanStringLength", "8192")
-      // async block/shuffle cleanup: the blocking cleaner serializes
-      // against job submission through the dispatcher and produced
-      // multi-second wandering stalls across a ~90-query session
-      .config("spark.cleaner.referenceTracking.blocking", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     // Dev-only subset (unset in the driver environment): iterate on a
     // few queries without the full 127-query dump.

@@ -82,88 +82,15 @@ object KMeans {
     * (codeSize bytes/row, e.g. d bytes for SQ8 vs 4d float bytes),
     * and the subsample hash keys on the code bytes. `decode` maps the
     * code column to the float vector the distance kernels consume
-    * (e.g. SqVariant.decode, PqModel.decodeCol). Identical arithmetic
-    * to `fit` over the pre-decoded set — the only difference is WHERE
-    * the decode runs. */
+    * (e.g. SqVariant.decode, PqModel.decodeCol); [[fit]] is this with
+    * `decode = identity`. */
   def fitEncoded(df: DataFrame, codeCol: String, decode: Column => Column,
       p: Params, init: Option[Array[Array[Float]]] = None): Model = {
     require(p.metric == "l2sq", "faiss trains the coarse quantizer with L2 (Clustering.cpp)")
+    val spark = df.sparkSession
     val codes = df.select(col(codeCol).as("_code")).filter(col("_code").isNotNull)
     val maxTrain = p.k.toLong * p.maxPointsPerCentroid
     val total = codes.count()
-    // same hash-threshold subsample as fit, keyed on the code bytes
-    val train0 =
-      if (total > maxTrain) {
-        val buckets = 1L << 30
-        val keep = math.min(buckets,
-          (maxTrain.toDouble / total * buckets).toLong + 1)
-        codes.filter(pmod(xxhash64(col("_code"), lit(p.seed)), lit(buckets)) < keep)
-      } else codes
-    var train = train0.cache()
-    try {
-      // lazy decoded view: every iteration re-reads the cached CODES
-      // and decodes in the scan — float vectors never persist
-      def decoded = train.select(decode(col("_code")).as("vec"))
-      var best: Model = null
-      var fellBack = total <= maxTrain // nothing to fall back from
-      // Training always runs on <= maxTrain = k*max_points_per_centroid
-      // rows (the subsample above) — a size known HERE, before any
-      // iteration. Scope the Lloyd loop's shuffle width to it (r20,
-      // guide §2.2/§1.2): at bench ks the per-iteration
-      // assign→VecSumAgg exchange otherwise runs cluster-width stages
-      // of near-empty tasks, with AQE adding a job per stage; at real
-      // nlist the derived count clamps to the session value and this
-      // is a no-op. Result risk is nil BY CONSTRUCTION of the oracle
-      // contract: DuckDB never trains — every consumer replays the
-      // engine-written trained-state sidecar, so both compare sides
-      // see the same centroids whatever the partial-sum order.
-      graft.core.ScopedConf.tinyShuffle(df.sparkSession,
-          graft.core.ScopedConf.tinyParts(df.sparkSession,
-            math.min(total, maxTrain))) {
-      for (redo <- 0 until p.nredo) {
-        val seed = p.seed + redo
-        // k-sufficiency fallback folded into the init collect (one
-        // fewer corpus pass per fit — guide §2.4; see fit())
-        val init0 = init match {
-          case Some(c) =>
-            // warm start skips the init collect, so the k-deficiency
-            // check cannot fold into it: restore the r18 guard here
-            // (VERDICT r19 #5) — a duplicate-heavy degenerate sample
-            // can be empty/k-deficient and must swap to the unsampled
-            // prefix before training. limit(k) stops at the first k
-            // cached rows; only warm-start fits pay it.
-            if (!fellBack && train.limit(p.k).count() < p.k) {
-              train.unpersist(blocking = false)
-              train = codes.limit(maxTrain.toInt).cache()
-              fellBack = true
-            }
-            c
-          case None =>
-            var c = collectInit(decoded, seed, p.k)
-            if (c.length < p.k && !fellBack) {
-              train.unpersist(blocking = false)
-              train = codes.limit(maxTrain.toInt).cache()
-              fellBack = true
-              c = collectInit(decoded, seed, p.k)
-            }
-            c
-        }
-        val m = fitOnce(decoded, p, init0)
-        if (best == null || m.objective < best.objective) best = m
-      }
-      }
-      best
-    } finally { train.unpersist() }
-  }
-
-  def fit(df: DataFrame, vecCol: String, p: Params,
-      init: Option[Array[Array[Float]]] = None): Model = {
-    require(p.metric == "l2sq", "faiss trains the coarse quantizer with L2 (Clustering.cpp)")
-    val spark = df.sparkSession
-    val vecs = df.select(col(vecCol).as("vec")).filter(col("vec").isNotNull)
-
-    val maxTrain = p.k.toLong * p.maxPointsPerCentroid
-    val total = vecs.count()
     // Subsample deterministically when the train set exceeds
     // k*max_points_per_centroid (Clustering.cpp:93 subsample_training_set).
     // Hash-THRESHOLD filter, not orderBy(hash).limit(n): TakeOrdered
@@ -177,58 +104,62 @@ object KMeans {
         val buckets = 1L << 30
         val keep = math.min(buckets,
           (maxTrain.toDouble / total * buckets).toLong + 1)
-        vecs.filter(pmod(xxhash64(col("vec"), lit(p.seed)), lit(buckets)) < keep)
-      } else vecs
+        codes.filter(pmod(xxhash64(col("_code"), lit(p.seed)), lit(buckets)) < keep)
+      } else codes
     var train = train0.cache()
     try {
-      var best: Model = null
+      // The subsample hash keys on the code VALUE, so duplicate-heavy
+      // data can land every copy in (or out of) the kept range: an
+      // empty or k-deficient sample is possible. The fallback is the
+      // unsampled arbitrary-prefix limit, degenerate inputs only.
       var fellBack = total <= maxTrain // nothing to fall back from
-      // scoped tiny-shuffle Lloyd loop — see fitEncoded for the
-      // derivation and the oracle-contract argument (sidecar replay
-      // makes partial-sum order invisible to every compare side)
+      def fallBack(): Unit = {
+        train.unpersist(blocking = false)
+        train = codes.limit(maxTrain.toInt).cache()
+        fellBack = true
+      }
+      // A warm start (ProgressiveDimKMeans) skips the init collect the
+      // cold path folds the check into (one fewer corpus pass per fit,
+      // guide §2.4), so it pays one limit(k) job here (VERDICT r19 #5).
+      if (init.isDefined && !fellBack && train.limit(p.k).count() < p.k) fallBack()
+      // Training always runs on <= maxTrain = k*max_points_per_centroid
+      // rows (the subsample above) — a size known HERE, before any
+      // iteration. Scope the Lloyd loop's shuffle width to it (r20,
+      // guide §2.2/§1.2): at bench ks the per-iteration
+      // assign→VecSumAgg exchange otherwise runs cluster-width stages
+      // of near-empty tasks, with AQE adding a job per stage; at real
+      // nlist the derived count clamps to the session value and this
+      // is a no-op. Result risk is nil BY CONSTRUCTION of the oracle
+      // contract: DuckDB never trains — every consumer replays the
+      // engine-written trained-state sidecar, so both compare sides
+      // see the same centroids whatever the partial-sum order.
       graft.core.ScopedConf.tinyShuffle(spark,
-          graft.core.ScopedConf.tinyParts(spark, math.min(total, maxTrain))) {
-      for (redo <- 0 until p.nredo) {
-        val seed = p.seed + redo
-        // The subsample hash keys on the vector VALUE, so
-        // duplicate-heavy data can land every copy in (or out of) the
-        // kept range: an empty or k-deficient sample is possible. The
-        // old shape spent a dedicated `sampled.limit(k).count()` job —
-        // a full corpus pass — deciding the fallback BEFORE the init
-        // collect re-scanned for the same information; folding the
-        // check into the init collect removes one pass per fit
-        // (guide §2.4 — remove shuffles/passes outright). Fallback =
-        // unsampled arbitrary-prefix limit, degenerate inputs only.
-        val init0 = init match {
-          case Some(c) =>
-            // warm start (ProgressiveDimKMeans) skips the init collect,
-            // so the k-deficiency check cannot fold into it: restore
-            // the r18 guard (VERDICT r19 #5) — swap a degenerate
-            // (empty/k-deficient) subsample for the unsampled prefix
-            // before training, exactly as the cold path does.
-            if (!fellBack && train.limit(p.k).count() < p.k) {
-              train.unpersist(blocking = false)
-              train = vecs.limit(maxTrain.toInt).cache()
-              fellBack = true
-            }
-            c
-          case None =>
-            var c = collectInit(train, seed, p.k)
+          graft.core.ScopedConf.tinyParts(spark, math.min(total, maxTrain))) { s =>
+        // lazy decoded view: every iteration re-reads the cached CODES
+        // and decodes in the scan — float vectors never persist
+        def decoded = shim.rebind(s, train).select(decode(col("_code")).as("vec"))
+        var best: Model = null
+        for (redo <- 0 until p.nredo) {
+          val init0 = init.getOrElse {
+            val seed = p.seed + redo
+            var c = collectInit(decoded, seed, p.k)
             if (c.length < p.k && !fellBack) {
-              train.unpersist(blocking = false)
-              train = vecs.limit(maxTrain.toInt).cache()
-              fellBack = true
-              c = collectInit(train, seed, p.k)
+              fallBack()
+              c = collectInit(decoded, seed, p.k)
             }
             c
+          }
+          val m = fitOnce(decoded, p, init0)
+          if (best == null || m.objective < best.objective) best = m
         }
-        val m = fitOnce(train, p, init0)
-        if (best == null || m.objective < best.objective) best = m
+        best
       }
-      }
-      best
     } finally { train.unpersist() }
   }
+
+  def fit(df: DataFrame, vecCol: String, p: Params,
+      init: Option[Array[Array[Float]]] = None): Model =
+    fitEncoded(df, vecCol, identity, p, init)
 
   /** First k rows in deterministic hash order (rand_perm analog) —
     * the init sample every fit draws when no warm start is given. */

@@ -1,8 +1,10 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.shim
 
-/** Session-conf scoping for DATA-DERIVED tiny-execution windows (r20).
+/** Conf scoping on a cloned session: the one way this engine runs work
+  * under confs other than the caller's.
   *
   * Several operators train/iterate over inputs whose size is known
   * exactly before the work starts (k-means' capped train sample,
@@ -10,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   * When that volume sits far below the session's shuffle width, every
   * exchange runs as a cluster-width stage of near-empty tasks and AQE
   * materializes each stage as its own job — pure scheduling latency.
-  * `tinyShuffle` scopes `spark.sql.shuffle.partitions` to the derived
-  * count and disables AQE for the duration, restoring both after.
+  * `tinyShuffle` runs such work with `spark.sql.shuffle.partitions` at
+  * the derived count and AQE off.
   *
   * Scale-safety contract for CALLERS: the partition count must be
   * DERIVED from the measured input (rows/bytes) and clamped to the
@@ -19,11 +21,22 @@ import org.apache.spark.sql.SparkSession
   * a no-op (callers skip it entirely via [[tinyParts]] returning the
   * session value). Never pass a constant tuned to a core count.
   *
-  * Concurrency: set/restore touches the shared session conf, so
-  * concurrent scopes are only safe when they write IDENTICAL values
-  * (the io-matrix pool case — every lifecycle derives partitions=1
-  * from the same fixed slice). Sequential catalog execution is the
-  * normal case.
+  * Contract of a scope: the body gets a clone of the caller's session
+  * (shared SparkContext, cache and catalog; copied conf, functions and
+  * temp views) with the scoped confs set, and the caller's session is
+  * never written — so concurrent scopes with different values, and a
+  * body that throws, leave it exactly as it was. A plan runs under the
+  * scoped confs only if its DataFrame belongs to the clone: the body
+  * rebinds its inputs with `shim.rebind(clone, df)`. What it returns
+  * must be collected values, or a DataFrame rebound to the caller's
+  * session with `shim.rebind(spark, df)` — a clone-bound frame would
+  * carry the scoped confs into every plan the caller builds on it, and
+  * temp views the body registers (memory sinks) exist only in the
+  * clone.
+  *
+  * Cost: a clone is cheap, but a clone of a session with artifact
+  * isolation on gets its own executor classloader, so its generated
+  * code compiles again. [[graft.GraftSession]] turns isolation off.
   */
 object ScopedConf {
 
@@ -36,23 +49,20 @@ object ScopedConf {
     math.max(1L, math.min(session.toLong, n)).toInt
   }
 
-  /** Runs `f` with shuffle partitions pinned to `parts` and AQE off,
-    * restoring both after; a no-op when `parts` is not below the
-    * session value (the at-scale case). Actions must complete inside
-    * `f` — lazily-evaluated plans escape the scope. */
-  def tinyShuffle[A](spark: SparkSession, parts: Int)(f: => A): A =
-    if (parts >= spark.sessionState.conf.numShufflePartitions) f
+  /** Runs `f` on a clone with shuffle partitions pinned to `parts` and
+    * AQE off; runs `f(spark)` itself when `parts` is not below the
+    * session value (the at-scale case). */
+  def tinyShuffle[A](spark: SparkSession, parts: Int)(f: SparkSession => A): A =
+    if (parts >= spark.sessionState.conf.numShufflePartitions) f(spark)
     else withConfs(spark,
       "spark.sql.shuffle.partitions" -> parts.toString,
       "spark.sql.adaptive.enabled" -> "false")(f)
 
-  /** Set the given session confs, run `f`, restore previous values. */
-  def withConfs[A](spark: SparkSession, pairs: (String, String)*)(f: => A): A = {
-    val prev = pairs.map { case (key, _) => key -> spark.conf.getOption(key) }
-    pairs.foreach { case (key, v) => spark.conf.set(key, v) }
-    try f finally prev.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
-    }
+  /** Runs `f` on a clone of `spark` with the given confs set. */
+  def withConfs[A](spark: SparkSession, pairs: (String, String)*)(
+      f: SparkSession => A): A = {
+    val scoped = shim.clone(spark)
+    pairs.foreach { case (key, v) => scoped.conf.set(key, v) }
+    f(scoped)
   }
 }

@@ -2,6 +2,8 @@ package graft.knn
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
+import graft.core.ScopedConf
 
 /** Batch kNN-graph construction (the capability behind the
   * reference's Deep1B kNN-graph benchmark, benchs/README.md:313, and
@@ -84,7 +86,7 @@ object KnnGraph {
         it.map { id => val r = (id, p); p += 1; r }
       }.toDF("_dstid", "_pos")
     }
-    var graph = ids.select(col("src"),
+    val graph0 = ids.select(col("src"),
       explode(sequence(lit(1), lit(k))).as("_j"))
       .select(col("src"),
         pmod(xxhash64(col("src"), col("_j"), lit(seed)), lit(n)).as("_pos"))
@@ -100,56 +102,59 @@ object KnnGraph {
     // shuffle width, the loop's 4 exchanges/round each run as 32-way
     // stages of near-empty tasks and AQE materializes every stage as
     // its own job — pure scheduling latency at 100 nodes. Tiny mode
-    // (derived, never a constant): shuffle partitions sized to the
-    // candidate volume, AQE off, eager per-round checkpoint so the
-    // round executes inside the scope. At scale tinyParts clamps to
-    // the session value and NOTHING changes (session confs, lazy
-    // checkpoint, AQE skew handling intact).
-    val sessionParts = spark.sessionState.conf.numShufflePartitions
-    val tinyParts = math.max(1L,
-      math.ceil(n.toDouble * k * (k + 2) / (1 << 17)).toLong)
-    val tiny = tinyParts < sessionParts
-    def withLoopConf[A](f: => A): A =
-      if (!tiny) f
-      else graft.core.ScopedConf.tinyShuffle(spark, tinyParts.toInt)(f)
-    for (_ <- 0 until iters) withLoopConf {
-      // NOT distinct'ed here: the union carries a duplicate (src, dst)
-      // only for mutual edges (a↔b both in graph), so skipping the
-      // dedup shuffle at this point at most doubles those rows through
-      // the neighbor join; the single distinct over the FINAL candidate
-      // union below removes them before the expensive knnByIdx. One
-      // shuffle per iteration instead of two for the same candidate
-      // set (guide §2.4 — remove shuffles outright; result-identical
-      // because only the post-distinct SET feeds the top-k).
-      val undirected = graph.select(col("src"), col("dst"))
-        .unionByName(graph.select(col("dst").as("src"), col("src").as("dst")))
-      // neighbors of neighbors
-      val non = undirected.as("a")
-        .join(undirected.as("b"), col("a.dst") === col("b.src"))
-        .select(col("a.src").as("src"), col("b.dst").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val candidates = undirected.unionByName(non).distinct()
-        .select(col("src").as("qid"), col("dst").as(idCol))
-      val q = base.select(col(idCol).as("qid"), col(vecCol).as("qvec"))
-      graph = Knn.knnByIdx(q, base, candidates, k, metric,
-        baseId = idCol, baseVec = vecCol)
-        .select(col("qid").as("src"), col(idCol).as("dst"), col("dist"))
-        // Truncate lineage each round: the graph feeds THREE plan
-        // references next round (undirected union + both join sides),
-        // so without a cut the logical plan grows geometrically with
-        // iterations — execution re-use aside, Spark re-formats the
-        // plan string on every AQE stage update, which alone turns
-        // minutes of CPU on deep plans (the r02/r03 bench stalls).
-        // Eager ONLY in tiny mode, so the round executes inside the
-        // scoped conf; at scale NON-eager (r20) skips the dedicated
-        // materialization job per round and lets the next round's
-        // FIRST action compute+persist the round result instead
-        // (VERDICT r19 #6 — fuse the per-round checkpoint action; one
-        // fewer job per iteration, same persisted data, concurrent
-        // readers of the persisted partitions are serialized by the
-        // block manager). The plan truncates to a LogicalRDD either
-        // way.
-        .localCheckpoint(tiny)
+    // (derived, never a constant): one scope around the round loop
+    // with shuffle partitions sized to the candidate volume, AQE off,
+    // eager per-round checkpoint so each round executes inside the
+    // scope. At scale tinyParts clamps to the session value and
+    // NOTHING changes (session confs, lazy checkpoint, AQE skew
+    // handling intact).
+    val parts = ScopedConf.tinyParts(spark, n * k * (k + 2), 1L << 17)
+    val tiny = parts < spark.sessionState.conf.numShufflePartitions
+    val graph = ScopedConf.tinyShuffle(spark, parts) { s =>
+      val b = shim.rebind(s, base)
+      var g = shim.rebind(s, graph0)
+      for (_ <- 0 until iters) {
+        // NOT distinct'ed here: the union carries a duplicate (src, dst)
+        // only for mutual edges (a↔b both in graph), so skipping the
+        // dedup shuffle at this point at most doubles those rows through
+        // the neighbor join; the single distinct over the FINAL candidate
+        // union below removes them before the expensive knnByIdx. One
+        // shuffle per iteration instead of two for the same candidate
+        // set (guide §2.4 — remove shuffles outright; result-identical
+        // because only the post-distinct SET feeds the top-k).
+        val undirected = g.select(col("src"), col("dst"))
+          .unionByName(g.select(col("dst").as("src"), col("src").as("dst")))
+        // neighbors of neighbors
+        val non = undirected.as("a")
+          .join(undirected.as("b"), col("a.dst") === col("b.src"))
+          .select(col("a.src").as("src"), col("b.dst").as("dst"))
+          .filter(col("src") =!= col("dst"))
+        val candidates = undirected.unionByName(non).distinct()
+          .select(col("src").as("qid"), col("dst").as(idCol))
+        val q = b.select(col(idCol).as("qid"), col(vecCol).as("qvec"))
+        g = Knn.knnByIdx(q, b, candidates, k, metric,
+          baseId = idCol, baseVec = vecCol)
+          .select(col("qid").as("src"), col(idCol).as("dst"), col("dist"))
+          // Truncate lineage each round: the graph feeds THREE plan
+          // references next round (undirected union + both join sides),
+          // so without a cut the logical plan grows geometrically with
+          // iterations — execution re-use aside, Spark re-formats the
+          // plan string on every AQE stage update, which alone turns
+          // minutes of CPU on deep plans (the r02/r03 bench stalls).
+          // Eager ONLY in tiny mode, so the round executes inside the
+          // scope; at scale NON-eager (r20) skips the dedicated
+          // materialization job per round and lets the next round's
+          // FIRST action compute+persist the round result instead
+          // (VERDICT r19 #6 — fuse the per-round checkpoint action; one
+          // fewer job per iteration, same persisted data, concurrent
+          // readers of the persisted partitions are serialized by the
+          // block manager). The plan truncates to a LogicalRDD either
+          // way.
+          .localCheckpoint(tiny)
+      }
+      // back on the caller's session: the ranking below and every
+      // downstream join plan at the session width
+      shim.rebind(spark, g)
     }
     // final ranking straight off the last round's (src, dst, dist)
     // rows: the loop's knnByIdx already computed the exact distance of

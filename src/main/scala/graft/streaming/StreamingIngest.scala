@@ -2,8 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cluster.KMeans
+import graft.core.ScopedConf
 
 /** Structured-Streaming ingest into an IVF index (SURVEY §2.10): the
   * reference's incremental `add` path (faiss/Index.h:100-116,
@@ -43,7 +45,7 @@ object StreamingIngest {
 
   /** FileStreamSource wants a DIRECTORY. A directory path streams
     * as-is (the multi-file 100 TB case); a single-file path (the
-    * testdata layout) is staged into a temp dir that [[unstage]]
+    * testdata layout) is staged into a temp dir that [[drain]]
     * removes once the memory sink holds the drained result. */
   private def stage(path: String): (String, Option[java.nio.file.Path]) = {
     val p = java.nio.file.Paths.get(path)
@@ -68,24 +70,42 @@ object StreamingIngest {
       finally walk.close()
     }
 
-  private def unstage(staged: Option[java.nio.file.Path]): Unit =
-    staged.foreach(rmTree)
+  /** `spark.sql.legacy.parquet.nanosAsLong=true`, needed to READ a
+    * TIMESTAMP(NANOS) parquet schema at all; a no-op unless the file
+    * really is TIMESTAMP(NANOS). Always scoped (ADVICE r8 — never set
+    * on the caller's session). */
+  private[graft] val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
-  /** Scoped `spark.sql.legacy.parquet.nanosAsLong=true` (needed to
-    * READ a TIMESTAMP(NANOS) parquet schema at all): restores the
-    * previous value after the streaming drain instead of mutating the
-    * session for good (ADVICE r8 — the sibling helpers leaked it).
-    * Safe to scope this tightly: every helper drains its query
-    * synchronously inside `f`, and the returned memory-sink table no
-    * longer touches parquet. */
-  private[graft] def withNanosAsLong[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+  /** Drains a one-shot stream over `eventsParquet` into a memory sink
+    * and returns the sink's table. The drain runs on a clone of `spark`
+    * ([[ScopedConf.withConfs]]) carrying [[NanosAsLong]], the source's
+    * [[adaptiveStatePartitions]] count — streaming queries read
+    * `spark.sql.shuffle.partitions` at query START, so the scoped value
+    * sizes the state — and `confs`. The caller's session is never
+    * written, and the sink's temp view lives only in the clone; the
+    * returned frame is rebound to `spark`, so the caller's downstream
+    * aggregations plan at the session width. `query` turns the source
+    * stream into the sink's input. */
+  private def drain(spark: SparkSession, eventsParquet: String,
+      outputMode: String, expandFactor: Double = 1.0,
+      confs: Seq[(String, String)] = Nil)(
+      query: DataFrame => DataFrame): DataFrame = {
+    val (srcDir, staged) = stage(eventsParquet)
+    val parts = adaptiveStatePartitions(spark, eventsParquet, expandFactor)
+    try ScopedConf.withConfs(spark, Seq(NanosAsLong,
+        "spark.sql.shuffle.partitions" -> parts.toString) ++ confs: _*) { c =>
+      // a query reports only to the listeners of the session that
+      // started it: hand the caller's to the clone so they still see
+      // the drain's progress
+      spark.streams.listListeners().foreach(c.streams.addListener)
+      val schema = c.read.parquet(eventsParquet).schema
+      val out = query(c.readStream.schema(schema).parquet(srcDir))
+      val name = s"graft_drain_${System.identityHashCode(out)}"
+      val q = out.writeStream.outputMode(outputMode)
+        .format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+      shim.rebind(spark, c.table(name))
+    } finally staged.foreach(rmTree)
   }
 
   /** The testdata's `ts` column has shipped both as TIMESTAMP(NANOS)
@@ -107,26 +127,13 @@ object StreamingIngest {
     * events table: readStream → tumbling window agg → memory sink,
     * drained synchronously. Returns the completed result table. */
   def windowedEventCounts(spark: SparkSession, eventsParquet: String,
-      windowLength: String = "1 hour"): DataFrame = {
-    val (srcDir, staged) = stage(eventsParquet)
-    // nanosAsLong is a no-op unless the file really is TIMESTAMP(NANOS)
-    try withNanosAsLong(spark) {
-      val schema = spark.read.parquet(eventsParquet).schema
-      val stream = normTs(spark.readStream.schema(schema).parquet(srcDir))
-      val agg = stream
+      windowLength: String = "1 hour"): DataFrame =
+    drain(spark, eventsParquet, "complete") { src =>
+      normTs(src)
         .groupBy(window(col("ts"), windowLength), col("event_type"))
         .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sv"))
-      val name = s"graft_windowed_${System.identityHashCode(stream)}"
-      withShufflePartitions(spark, adaptiveStatePartitions(spark, eventsParquet)) {
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      spark.table(name)
-        .select(col("window.start").cast("long").as("ws"), col("event_type"),
-          col("cnt"), round(col("sv"), 2).as("sv"))
-    } finally unstage(staged)
-  }
+    }.select(col("window.start").cast("long").as("ws"), col("event_type"),
+      col("cnt"), round(col("sv"), 2).as("sv"))
 
   /** Streaming exactly-once dedup ingest: readStream → stateful
     * dropDuplicates on `keys` → append sink, drained synchronously.
@@ -145,22 +152,9 @@ object StreamingIngest {
       /** Row multiplier of `expand` — sizes the adaptive state
         * partition count from the EXPANDED volume, since the opaque
         * expand hook hides it from the source stats. */
-      expandFactor: Double = 1.0): DataFrame = {
-    val (srcDir, staged) = stage(eventsParquet)
-    try withNanosAsLong(spark) {
-      val schema = spark.read.parquet(eventsParquet).schema
-      val stream = expand(spark.readStream.schema(schema).parquet(srcDir))
-        .dropDuplicates(keys)
-      val name = s"graft_dedup_${System.identityHashCode(stream)}"
-      withShufflePartitions(spark,
-          adaptiveStatePartitions(spark, eventsParquet, expandFactor)) {
-        val q = stream.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      spark.table(name)
-    } finally unstage(staged)
-  }
+      expandFactor: Double = 1.0): DataFrame =
+    drain(spark, eventsParquet, "append", expandFactor)(
+      src => expand(src).dropDuplicates(keys))
 
   /** Scale-adaptive shuffle/state partition count for the drained
     * one-shot streams (VERDICT r19 #4). Structured Streaming fixes the
@@ -204,64 +198,6 @@ object StreamingIngest {
     } catch { case scala.util.control.NonFatal(_) => session }
   }
 
-  /** Runs `f` with `spark.sql.shuffle.partitions` scoped to `n`,
-    * restoring the previous value after — streaming queries read the
-    * value at query START, so a session-level set scoped around
-    * start()/drain is the per-query knob (the withStateStoreProvider
-    * idiom). Callers' downstream batch aggregations plan AFTER the
-    * restore and keep the session value. */
-  private[graft] def withShufflePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Runs `f` with no-data micro-batches disabled, restoring the
-    * conf after. The engine schedules an EXTRA empty batch after the
-    * data drains whenever a watermark advanced, for eager state
-    * cleanup and watermark-gated EMISSION. For a drained one-shot
-    * `dropDuplicatesWithinWatermark` ingest that batch is pure
-    * overhead: dedup emits every surviving row in the batch it
-    * arrives (nothing is watermark-gated), so the empty batch only
-    * evicts state the `stop()` on the next line throws away anyway —
-    * yet it pays a full stateful-commit cycle across every state
-    * partition (measured: the no-data batch's triggerExecution ≈ the
-    * data batch's, ~40% of the query window). A CONTINUOUS ingest
-    * keeps the default: there the eager cleanup bounds state between
-    * arrivals. Never use this around watermark-EMITTING sinks
-    * (session/tumbling windows in append mode) — their final windows
-    * only emit in that extra batch. */
-  private[graft] def withNoDataBatchesDisabled[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Runs `f` with the given state-store provider class installed in
-    * the session conf, restoring the previous value after — the
-    * provider is read from SQLConf at query START, so a session-level
-    * set scoped around start()/stop() is the per-query toggle. */
-  private[graft] def withStateStoreProvider[A](spark: SparkSession,
-      providerClass: Option[String])(f: => A): A = providerClass match {
-    case None => f
-    case Some(cls) =>
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, cls)
-      try f finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-  }
-
   /** The RocksDB state-store provider (ships with Spark — no extra
     * dependency): per-key state lives OFF-HEAP in a local RocksDB
     * instance per state partition, spilling to executor disk, with
@@ -303,26 +239,25 @@ object StreamingIngest {
   def dedupIngestWithinWatermark(spark: SparkSession, eventsParquet: String,
       keys: Seq[String], delay: String = "10000 hours",
       rocksDb: Boolean = false): DataFrame = {
-    val (srcDir, staged) = stage(eventsParquet)
-    try withNanosAsLong(spark) {
-      withStateStoreProvider(spark,
-          if (rocksDb) Some(RocksDbProvider) else None) {
-        withNoDataBatchesDisabled(spark) {
-          val schema = spark.read.parquet(eventsParquet).schema
-          val stream = normTs(spark.readStream.schema(schema).parquet(srcDir))
-            .withWatermark("ts", delay)
-            .dropDuplicatesWithinWatermark(keys)
-          val name = s"graft_dedup_wm_${System.identityHashCode(stream)}"
-          withShufflePartitions(spark,
-              adaptiveStatePartitions(spark, eventsParquet)) {
-            val q = stream.writeStream.outputMode("append")
-              .format("memory").queryName(name).start()
-            try q.processAllAvailable() finally q.stop()
-          }
-          spark.table(name)
-        }
-      }
-    } finally unstage(staged)
+    // No-data micro-batches off: the engine schedules an EXTRA empty
+    // batch after the data drains whenever a watermark advanced, for
+    // eager state cleanup and watermark-gated EMISSION. For this
+    // drained one-shot ingest that batch is pure overhead: dedup emits
+    // every surviving row in the batch it arrives (nothing is
+    // watermark-gated), so the empty batch only evicts state the stop()
+    // throws away anyway — yet it pays a full stateful-commit cycle
+    // across every state partition (measured: its triggerExecution ≈
+    // the data batch's, ~40% of the query window). A CONTINUOUS ingest
+    // keeps the default: there the eager cleanup bounds state between
+    // arrivals. Never disable it around watermark-EMITTING sinks
+    // (session/tumbling windows in append mode) — their final windows
+    // only emit in that extra batch. The state-store provider is read
+    // at query START, so the scoped conf is the per-query toggle.
+    val confs = Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++
+      (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider)
+       else Nil)
+    drain(spark, eventsParquet, "append", confs = confs)(src =>
+      normTs(src).withWatermark("ts", delay).dropDuplicatesWithinWatermark(keys))
   }
 
   /** Session-window streaming aggregation (Structured Streaming
@@ -339,28 +274,16 @@ object StreamingIngest {
     * closed before the corpus watermark", which the oracle replays
     * with the same last-event + gap <= max(ts) cutoff. */
   def sessionizedEventCounts(spark: SparkSession, eventsParquet: String,
-      gap: String = "12 hours", maxUser: Long = Long.MaxValue): DataFrame = {
-    val (srcDir, staged) = stage(eventsParquet)
-    try withNanosAsLong(spark) {
-      val schema = spark.read.parquet(eventsParquet).schema
-      val stream = normTs(spark.readStream.schema(schema).parquet(srcDir))
+      gap: String = "12 hours", maxUser: Long = Long.MaxValue): DataFrame =
+    drain(spark, eventsParquet, "append") { src =>
+      normTs(src)
         .filter(col("user_id") < maxUser)
         .withWatermark("ts", "0 seconds")
-      val agg = stream
         .groupBy(session_window(col("ts"), gap).as("sw"), col("user_id"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sv"))
-      val name = s"graft_sessions_${System.identityHashCode(stream)}"
-      withShufflePartitions(spark, adaptiveStatePartitions(spark, eventsParquet)) {
-        val q = agg.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      spark.table(name)
-        .select(col("user_id"),
-          unix_micros(col("sw.start")).as("session_start"),
-          col("n_events"), col("sv"))
-    } finally unstage(staged)
-  }
+    }.select(col("user_id"),
+      unix_micros(col("sw.start")).as("session_start"),
+      col("n_events"), col("sv"))
 
   /** Custom per-key streaming state via flatMapGroupsWithState (the
     * KeyValueGroupedDataset custom-state surface — arbitrary state
@@ -374,13 +297,10 @@ object StreamingIngest {
       maxUser: Long): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val (srcDir, staged) = stage(eventsParquet)
-    try withNanosAsLong(spark) {
-      val schema = spark.read.parquet(eventsParquet).schema
-      val stream = spark.readStream.schema(schema).parquet(srcDir)
-        .filter(col("user_id") < maxUser)
+    drain(spark, eventsParquet, "update") { src =>
+      src.filter(col("user_id") < maxUser)
         .select(col("user_id"), col("value")).as[(Long, Double)]
-      val states = stream.groupByKey(_._1)
+        .groupByKey(_._1)
         .flatMapGroupsWithState[(Long, Double, Double), (Long, Long, Double, Double)](
           OutputMode.Update, GroupStateTimeout.NoTimeout) { (uid, rows, state) =>
           var (cnt, mx, mn) = state.getOption
@@ -391,20 +311,13 @@ object StreamingIngest {
           state.update((cnt, mx, mn))
           Iterator((uid, cnt, mx, mn))
         }
-      val name = s"graft_state_${System.identityHashCode(stream)}"
-      withShufflePartitions(spark, adaptiveStatePartitions(spark, eventsParquet)) {
-        val q = states.toDF("user_id", "cnt", "mx", "mn")
-          .writeStream.outputMode("update")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
+        .toDF("user_id", "cnt", "mx", "mn")
+    }
       // update mode emits one row per (key, batch): keep the final
       // state = the row with the largest running count per key
-      spark.table(name)
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("cnt"), col("mx"), col("mn"))).as("_s"))
-        .select(col("user_id"), col("_s.cnt").as("cnt"),
-          round(col("_s.mx"), 2).as("mx"), round(col("_s.mn"), 2).as("mn"))
-    } finally unstage(staged)
+      .groupBy(col("user_id"))
+      .agg(max(struct(col("cnt"), col("mx"), col("mn"))).as("_s"))
+      .select(col("user_id"), col("_s.cnt").as("cnt"),
+        round(col("_s.mx"), 2).as("mx"), round(col("_s.mn"), 2).as("mn"))
   }
 }

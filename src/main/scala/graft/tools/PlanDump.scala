@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps one catalog query's `.explain("formatted")` to a file — the
   * per-change plan evidence of the optimization rounds
   * (plans/rNN/<query>_{before,after}.txt). Same session shape as
@@ -18,12 +16,7 @@ object PlanDump {
     val dir = if (args.length > 2) args(2)
       else if (name.contains("_big")) "/root/testdata/sf0.01"
       else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(8)
     val df = graft.SparkEntry.queries(name)(spark, dir)
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(out).toAbsolutePath.getParent)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-level wall-clock attribution for the at-scale MinHash dedup
@@ -61,23 +60,7 @@ object ProfileMinhash {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val mode = if (args.length > 1) args(1) else "full"
     val scale = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's aggregate fallback + codegen cache so profiled
-      // stages run under the SAME session posture as the bench cells
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4194304")
-    // honor the scaling tier's conf overrides (partition scaling etc.)
-    // exactly as Bench does — the r18 minhash investigation found the
-    // profiler silently running 32-way while the tier ran 320-way
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     import graft.llm.Dedup
 
     // per-stage executor CPU + shuffle bytes (steal-immune): wall alone

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Per-job/per-stage timeline for ONE catalog query — the measurement
@@ -23,20 +22,7 @@ object ProfileOne {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val repeat = if (args.length > 1) args(1).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.maxPlanStringLength", "8192")
-      .config("spark.cleaner.referenceTracking.blocking", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
 
     case class JobRec(id: Int, desc: String, t0: Long, var t1: Long = 0L,
         var nTasks: Int = 0, var taskMs: Long = 0L, var cpuMs: Long = 0L,

@@ -1,20 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only phase profiler for unigram_logprob_big (r9 gate work). */
 object ProfileUnigram {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32)
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       System.err.println(f"[prof] $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r

@@ -1,16 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: show a named catalog query's result (Test/runMain graft.DevShow <name>...). */
 object DevShow {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(8)
     if (args.headOption.contains("--nnd")) {
       import org.apache.spark.sql.functions._
       val pts = spark.read.parquet(s"$sfDir/embeddings.parquet")

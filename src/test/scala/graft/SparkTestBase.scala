@@ -11,15 +11,7 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.maxPlanStringLength", "8192")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

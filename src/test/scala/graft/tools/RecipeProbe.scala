@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.AtomicLong
 
@@ -18,16 +17,7 @@ import java.util.concurrent.atomic.AtomicLong
 object RecipeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     val cpuMs = new AtomicLong
     val taskMs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
