@@ -92,15 +92,15 @@ class IvfPq4FastScanIndex(
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
     // LUT computed ONCE per query (pre-explode), replicated over the
-    // probe rows by the generator; only distinct list ids cross the
-    // driver (static pruning), the LUT-bearing probe rows stay
-    // cluster-side inside the broadcast (Probes.probedListIds).
-    val probesPlan = queries.select(col(queryId),
+    // probe rows by the generator; query rows and their probe arrays
+    // cross the driver (Probes.local), the LUT-bearing probe rows stay
+    // cluster-side inside the broadcast.
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    val probesPlan = q.select(col(queryId),
       shim.col(Pq4QuantLut(shim.expr(col(queryVec)), model.codebooks)).as("_ql"),
-      explode(Probes.selExpr(col(queryVec), centroids, nprobe, "l2sq",
-        coarse, graphCacheKey)).as("_p"))
+      explode(col("_sel")).as("_p"))
       .select(col(queryId), col("_ql"), col("_p.list_no").as("list_no"))
-    val probed = Probes.probedListIds(probesPlan)
     codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId),
@@ -381,15 +381,15 @@ class IvfRq4FastScanIndex(
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val probesPlan = queries.select(col(queryId),
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    val probesPlan = q.select(col(queryId),
       shim.col(Rq4FsQuantLut(shim.expr(col(queryVec)), model.codebooks, normCb))
         .as("_ql"),
       aggregate(col(queryVec).cast("array<double>"), lit(0.0),
         (a, x) => a + x * x).as("_qn"),
-      explode(Probes.selExpr(col(queryVec), centroids, nprobe, "l2sq",
-        coarse, graphCacheKey)).as("_p"))
+      explode(col("_sel")).as("_p"))
       .select(col(queryId), col("_ql"), col("_qn"), col("_p.list_no").as("list_no"))
-    val probed = Probes.probedListIds(probesPlan)
     codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId),
@@ -475,23 +475,23 @@ class IvfRq4FastScanRIndex(
     val spark = queries.sparkSession
     val centDf = Probes.centroidsDf(spark, centroids)
     // ONE quantized LUT + ||q||^2 per query (pre-explode), a scalar
-    // -2<q,c> bias per probe row; only distinct list ids cross the
-    // driver (static pruning), the LUT-bearing probe rows stay
-    // cluster-side inside the broadcast (Probes.probedListIds).
-    val probesPlan = queries.select(col(queryId), col(queryVec),
+    // -2<q,c> bias per probe row; query rows and their probe arrays
+    // cross the driver (Probes.local), the LUT-bearing probe rows stay
+    // cluster-side inside the broadcast.
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    val probesPlan = q.select(col(queryId), col(queryVec),
       shim.col(Rq4FsQuantLut(shim.expr(col(queryVec)), model.codebooks, normCb))
         .as("_ql"),
       aggregate(col(queryVec).cast("array<double>"), lit(0.0),
         (a, x) => a + x * x).as("_qn"),
-      explode(Probes.selExpr(col(queryVec), centroids, nprobe, "l2sq",
-        coarse, graphCacheKey)).as("_p"))
+      explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_ql"), col("_qn"),
         col("_p.list_no").as("list_no"))
       .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"), col("_ql"), col("_qn"),
         (lit(-2.0) * graft.functions.inner_product(col(queryVec), col("centroid")))
           .as("_bias"))
-    val probed = Probes.probedListIds(probesPlan)
     codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("id"),
@@ -591,26 +591,21 @@ class IvfPq4FastScanRIndex(
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     import graft.functions.vec_sub
-    val centDf = centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("list_no", "centroid")
-      .select(col("list_no"), col("centroid").cast("array<float>").as("centroid"))
+    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     // per (query, probed list): float32 residual -> double LUT ->
-    // uint8 quantization; only distinct list ids cross the driver
-    // (static pruning), the per-probe LUTs stay cluster-side inside
-    // the broadcast (Probes.probedListIds).
-    val probesPlan = queries.select(col(queryId), col(queryVec),
-      explode(Probes.selExpr(col(queryVec), centroids, nprobe, "l2sq",
-        coarse, graphCacheKey)).as("_p"))
+    // uint8 quantization; query rows and their probe arrays cross the
+    // driver (Probes.local), the per-probe LUTs stay cluster-side
+    // inside the broadcast.
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
       .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"),
         shim.col(Pq4QuantLut(
           shim.expr(vec_sub(col(queryVec), col("centroid"))),
           model.codebooks)).as("_ql"))
-    val probed = Probes.probedListIds(probesPlan)
     codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("id"),

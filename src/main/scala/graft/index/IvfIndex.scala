@@ -37,43 +37,63 @@ class IvfIndex(
     * every task of every search over THIS index reuses one graph. */
   private val graphCacheKey = java.util.UUID.randomUUID().toString
 
-  /** Per-query probe lists: (qid, qvec, list_no, coarse_dist).
-    * `coarse = Some(HnswCoarse/NsgCoarse)` routes the coarse
-    * quantization through a per-executor graph walk over the
-    * centroids (the reference's `IVF{n}_HNSW{m}` / `IVF{n}_NSG{R}`
-    * coarse grammar) — the scale path when nlist is large enough that
-    * the exact O(nlist) argmin per row dominates; budget >= nlist
-    * degenerates to exact. */
+  /** Per-query probe lists: (qid, qvec, list_no, coarse_dist, pr), and
+    * with `local` the probed-list scan set. `coarse =
+    * Some(HnswCoarse/NsgCoarse)` routes the coarse quantization
+    * through a graph walk over the centroids (the reference's
+    * `IVF{n}_HNSW{m}` / `IVF{n}_NSG{R}` coarse grammar) — the scale
+    * path when nlist is large enough that the exact O(nlist) argmin
+    * per row dominates; budget >= nlist degenerates to exact.
+    *
+    * `local = true` (small query sets) coarse-quantizes on the driver
+    * ([[Probes.local]]) and returns the probed lists; `false`
+    * (corpus-sized query sets) keeps the quantizer in the plan, runs
+    * no job and returns no scan set. */
   private def probes(queries: DataFrame, nprobe: Int,
       queryId: String, queryVec: String,
-      coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val sel = Probes.selExpr(col(queryVec), centroids, nprobe, metric,
-      coarse, graphCacheKey)
-    queries.select(col(queryId), col(queryVec),
-      posexplode(sel).as(Seq("_pr", "_p")))
+      coarse: Option[Probes.CoarseQuant],
+      local: Boolean): (DataFrame, Option[Array[Int]]) = {
+    val (q, sel, probed) =
+      if (!local) (queries, Probes.selExpr(col(queryVec), centroids, nprobe,
+        metric, coarse, graphCacheKey), None)
+      else {
+        val (lq, ids) = Probes.local(queries, queryId, queryVec, centroids,
+          nprobe, metric, coarse, graphCacheKey)
+        (lq, col("_sel"), Some(ids))
+      }
+    (q.select(col(queryId), col(queryVec), posexplode(sel).as(Seq("_pr", "_p")))
       .select(col(queryId), col(queryVec),
         col("_p.list_no").as("list_no"), col("_p.dist").as("coarse_dist"),
         // 0-based probe rank (closest centroid first): lets a sweep
         // reconstruct the nprobe=j candidate set as `pr < j`
-        col("_pr").as("pr"))
+        col("_pr").as("pr")), probed)
   }
+
+  /** The invlists statically pruned to `probed`, or all of them when
+    * the scan set is left to the equi-join. */
+  private def prunedLists(probed: Option[Array[Int]]): DataFrame =
+    probed.fold(invlists)(p => invlists.filter(col("list_no").isin(p.map(Integer.valueOf): _*)))
 
   /** Distinct lists any query probes at this nprobe (the scan set). */
   def probedListNos(queries: DataFrame, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): Array[Int] =
-    probes(queries, nprobe, queryId, queryVec, coarse)
-      .select("list_no").distinct().collect().map(_.getInt(0))
+    Probes.local(queries, queryId, queryVec, centroids, nprobe, metric,
+      coarse, graphCacheKey)._2
 
   /** Each probed list's minimum probe rank over the query set at
     * nprobe=npMax — reconstructs the probed-list union of ANY smaller
     * nprobe (list in scan set at np iff min rank < np) without
-    * re-running the coarse quantization per operating point. */
+    * re-running the coarse quantization per operating point. Read on
+    * the driver from the collected probe arrays. */
   def probedListMinRank(queries: DataFrame, npMax: Int,
-      queryId: String = "qid", queryVec: String = "qvec"): Array[(Int, Int)] =
-    probes(queries, npMax, queryId, queryVec)
-      .groupBy("list_no").agg(min(col("pr")).as("_pr"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
+      queryId: String = "qid", queryVec: String = "qvec"): Array[(Int, Int)] = {
+    val (q, _) = Probes.local(queries, queryId, queryVec, centroids, npMax,
+      metric, None, graphCacheKey)
+    q.select(col("_sel.list_no")).collect().iterator
+      .flatMap(r => if (r.isNullAt(0)) Nil else r.getSeq[Int](0).zipWithIndex)
+      .toSeq.groupMapReduce(_._1)(_._2)(math.min).toArray
+  }
 
   /** max_codes probe-budget filter (IndexIVF::search_preassigned,
     * faiss/IndexIVF.cpp:586: `nscan` accumulates WHOLE scanned lists
@@ -103,8 +123,9 @@ class IvfIndex(
     * faiss/IndexIVF.cpp:398-683). Output (qid, rank, id, dist).
     * `filter` = IDSelector pushed inside the scan (IndexIVF.h:377).
     * `maxCodes` = the per-query TOTAL scan budget consumed in
-    * probe-rank order (faiss/IndexIVF.h:67-72; see [[budgetProbes]]). */
-  /** @param broadcastQueries true (default) broadcasts the probe table
+    * probe-rank order (faiss/IndexIVF.h:67-72; see [[budgetProbes]]).
+    *
+    * @param broadcastQueries true (default) broadcasts the probe table
     *        (small query sets); false leaves it to a shuffle equi-join
     *        on list_no — the right plan when the query set itself is
     *        huge (e.g. a full-corpus self-join for dedup). Partition
@@ -116,31 +137,24 @@ class IvfIndex(
       withCentroid: Boolean = false,
       broadcastQueries: Boolean = true,
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val pr0 = probes(queries, nprobe, queryId, queryVec, coarse)
-    // Small query sets (broadcastQueries=true): the probed-list set is
-    // tiny (≤ queries × nprobe ints), so collecting it turns the
-    // invlists scan into a statically partition-pruned read — worth one
-    // cheap pass over the small query table. Big-batch sets
+    // Small query sets (broadcastQueries=true) are coarse-quantized on
+    // the driver, once: the query rows come back with their ranked
+    // probe arrays, and the probed lists turn the invlists scan into a
+    // statically partition-pruned read. Big-batch sets
     // (broadcastQueries=false, corpus-sized queries): the probed union
     // approaches every list, the isin would prune nothing, and the
     // collect would force an eager full coarse-quantization job inside
-    // a plan builder AND recompute it in the join — so the scan set is
-    // left entirely to the shuffle equi-join (unprobed lists drop out
-    // of the join; parquet partition pruning on list_no still applies
-    // dynamically). Plan construction launches ZERO jobs on this path
-    // (PlanSpec pins it).
-    def pruneLists(pr: DataFrame): DataFrame =
-      if (!broadcastQueries) invlists
-      else {
-        val probed = pr.select("list_no").distinct().collect().map(_.getInt(0))
-        invlists.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
-      }
-    val listsRaw = pruneLists(pr0)
+    // a plan builder — so the scan set is left entirely to the shuffle
+    // equi-join (unprobed lists drop out of the join; parquet partition
+    // pruning on list_no still applies dynamically). Plan construction
+    // launches ZERO jobs on that path (PlanSpec pins it). A maxCodes
+    // cut drops lists from the probe table; the scan set stays the
+    // probed lists, and the join drops the cut ones.
+    val (pr0, probed) = probes(queries, nprobe, queryId, queryVec, coarse,
+      broadcastQueries)
+    val listsRaw = prunedLists(probed)
     val pr = maxCodes.map(budgetProbes(pr0, listsRaw, _, queryId)).getOrElse(pr0)
-    // re-prune after the budget cut: lists past the budget drop out of
-    // the scan set entirely
-    val lists0 = if (maxCodes.isDefined) pruneLists(pr) else listsRaw
-    val lists = filter.map(lists0.filter).getOrElse(lists0)
+    val lists = filter.map(listsRaw.filter).getOrElse(listsRaw)
     val prSide = if (broadcastQueries) broadcast(pr) else pr
     val cand = lists.join(prSide, "list_no")
       .select(col(queryId), col("list_no"), col("id"),
@@ -204,13 +218,10 @@ class IvfIndex(
       broadcastProbes: Boolean = true): DataFrame = {
     val pr = queries.select(col(queryId), col(queryVec))
       .join(probesDf.select(col(queryId), col("list_no")), queryId)
-    val lists0 =
-      if (!broadcastProbes) invlists
-      else {
-        val probed = probesDf.select(col("list_no").cast("int"))
-          .distinct().collect().map(_.getInt(0))
-        invlists.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
-      }
+    // a broadcastable probesDf is small: its list_no column crosses
+    // the driver whole and is deduplicated there
+    val lists0 = prunedLists(Option.when(broadcastProbes)(
+      probesDf.select(col("list_no").cast("int")).collect().map(_.getInt(0)).distinct))
     val lists = filter.map(lists0.filter).getOrElse(lists0)
     lists.join(if (broadcastProbes) broadcast(pr) else pr, "list_no")
       .select(col(queryId), col("id"),
@@ -232,16 +243,11 @@ class IvfIndex(
       queryId: String = "qid", queryVec: String = "qvec",
       broadcastQueries: Boolean = true): DataFrame = {
     val sess = queries.sparkSession
-    val npMax = nprobes.max
-    val pr = probes(queries, npMax, queryId, queryVec)
     // same contract as [[search]]: a corpus-sized query set must not
     // drive an eager probed-set collect — the equi-join is the prune
-    val lists =
-      if (!broadcastQueries) invlists
-      else {
-        val probed = pr.select("list_no").distinct().collect().map(_.getInt(0))
-        invlists.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
-      }
+    val (pr, probed) = probes(queries, nprobes.max, queryId, queryVec, None,
+      broadcastQueries)
+    val lists = prunedLists(probed)
     val prSide = if (broadcastQueries) broadcast(pr) else pr
     val cand = lists.join(prSide, "list_no")
       .select(col(queryId), col("pr"), col("id"),
@@ -270,20 +276,14 @@ class IvfIndex(
       maxCodes: Option[Int] = None,
       coarse: Option[Probes.CoarseQuant] = None,
       broadcastQueries: Boolean = true): DataFrame = {
-    val pr0 = probes(queries, nprobe, queryId, queryVec, coarse)
     // static prune only for small query sets; see [[search]]
-    def pruneLists(pr: DataFrame): DataFrame =
-      if (!broadcastQueries) invlists
-      else {
-        val probed = pr.select("list_no").distinct().collect().map(_.getInt(0))
-        invlists.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
-      }
+    val (pr0, probed) = probes(queries, nprobe, queryId, queryVec, coarse,
+      broadcastQueries)
     // budget sizes are pre-IDSelector (the reference counts raw
     // list_size even under a selector)
-    val listsRaw = pruneLists(pr0)
+    val listsRaw = prunedLists(probed)
     val pr = maxCodes.map(budgetProbes(pr0, listsRaw, _, queryId)).getOrElse(pr0)
-    val lists0 = if (maxCodes.isDefined) pruneLists(pr) else listsRaw
-    val lists = filter.map(lists0.filter).getOrElse(lists0)
+    val lists = filter.map(listsRaw.filter).getOrElse(listsRaw)
     val asc = Metric.ascending(metric)
     val pred = if (asc) col("dist") < radius else col("dist") > radius
     val prSide = if (broadcastQueries) broadcast(pr) else pr

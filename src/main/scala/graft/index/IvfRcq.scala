@@ -17,8 +17,9 @@ import graft.functions.{l2sq, topk}
   * IVF whose quantizer costs 2·1024·d, not 10^6·d, per assignment.
   *
   * Storage is Flat (the invlists hold raw vectors); search is the
-  * [[IvfIndex]] pruned-join shape — distinct probed list ids collected
-  * for static pruning ([[Probes.probedListIds]]), probe rows broadcast,
+  * [[IvfIndex]] pruned-join shape — the beam search runs on the driver
+  * over the collected queries ([[Probes.local]]) and its probed lists
+  * statically prune the scan, probe rows broadcast,
   * exact distance over the probed lists, partial+merge top-k.
   *
   * With `beam` >= nlist the beam search enumerates every path, so
@@ -45,11 +46,12 @@ class IvfRcqFlatIndex(
     // probe beam: the reference's beam_factor (default 4x nprobe,
     // ResidualCoarseQuantizer.h beam_factor) capped at full enumeration
     val probeBeam = math.min(nlist, math.max(beam, 4 * nprobe))
-    val probesPlan = queries.select(col(queryId), col(queryVec),
-      explode(shim.col(RcqTopLists(shim.expr(col(queryVec)),
-        model.codebooks, probeBeam, math.min(nprobe, nlist)))).as("_p"))
+    val (q, probed) = Probes.local(queries.select(col(queryId), col(queryVec)),
+      queryVec, shim.col(RcqTopLists(shim.expr(col(queryVec)),
+        model.codebooks, probeBeam, math.min(nprobe, nlist))),
+      model.codebooks.head.head.length)
+    val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
-    val probed = Probes.probedListIds(probesPlan)
     invlists.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("id"), l2sq(col(queryVec), col("vec")).as("_d"))

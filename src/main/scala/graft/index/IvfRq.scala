@@ -36,26 +36,21 @@ class IvfRqIndex(
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val s = queries.sparkSession
-    import s.implicits._
-    val centDf = centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("list_no", "_cent")
-      .select(col("list_no"), col("_cent").cast("array<float>").as("_cent"))
-    val probesPlan = queries.select(col(queryId), col(queryVec),
-      explode(Probes.selExpr(col(queryVec), centroids, nprobe, "l2sq",
-        coarse, graphCacheKey)).as("_p"))
+    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
+    // the query rows and their probe arrays cross the driver once
+    // (Probes.local); the probe rows themselves — query vectors
+    // replicated per probe — are exploded in the plan and stay
+    // cluster-side inside the broadcast
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
-    // only the distinct probed list ids cross the driver (static
-    // pruning of the codes scan); the probe rows themselves — query
-    // vectors replicated per probe — stay cluster-side inside the
-    // broadcast (Probes.probedListIds, VERDICT r8).
-    val probed = Probes.probedListIds(probesPlan)
     codes.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
       .join(broadcast(centDf), "list_no")
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("id"),
         l2sq(col(queryVec),
-          vec_add(col("_cent"), model.decodeCol(col("code")))).as("_dist"))
+          vec_add(col("centroid"), model.decodeCol(col("code")))).as("_dist"))
       .groupBy(col(queryId))
       .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
       .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
@@ -87,15 +82,14 @@ class IvfRqIndex(
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
     val s = queries.sparkSession
     val centDf = Probes.centroidsDf(s, centroids)
-    val probesPlan = queries.select(col(queryId), col(queryVec),
-      explode(Probes.selExpr(col(queryVec), centroids, nprobe, "l2sq",
-        coarse, graphCacheKey)).as("_p"))
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
       .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"),
         l2sq(col(queryVec), col("centroid")).as("_cd"),
         model.lutCol(vec_sub(col(queryVec), col("centroid"))).as("_lut"))
-    val probed = Probes.probedListIds(probesPlan)
     val ip = model.ipFromLutCol(col("code"), col("_lut"))
     val d = if (nonorm) col("_cd") - lit(2.0) * ip
       else col("_cd") - lit(2.0) * ip + col("nq")
@@ -111,14 +105,9 @@ class IvfRqIndex(
 
   /** Lossy reconstruction: centroid + decoded residual, shuffle-free. */
   def reconstruct: DataFrame = {
-    val s = codes.sparkSession
-    import s.implicits._
-    val centDf = centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("list_no", "_cent")
-      .select(col("list_no"), col("_cent").cast("array<float>").as("_cent"))
-    codes.join(broadcast(centDf), "list_no")
+    codes.join(broadcast(Probes.centroidsDf(codes.sparkSession, centroids)), "list_no")
       .select(col("id"),
-        vec_add(col("_cent"), model.decodeCol(col("code"))).as("vec"))
+        vec_add(col("centroid"), model.decodeCol(col("code"))).as("vec"))
   }
 }
 
@@ -175,14 +164,9 @@ object IvfRq {
     val data = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val coarse = graft.cluster.KMeans.fit(data, "vec",
       graft.cluster.KMeans.Params(k = nlist, niter = niterCoarse, seed = seed))
-    val s = df.sparkSession
-    import s.implicits._
-    val centDf = coarse.centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("list_no", "_cent")
-      .select(col("list_no"), col("_cent").cast("array<float>").as("_cent"))
     val assigned = coarse.assign(data, "vec")
-      .join(broadcast(centDf), "list_no")
-      .select(col("id"), col("list_no"), vec_sub(col("vec"), col("_cent")).as("res"))
+      .join(broadcast(Probes.centroidsDf(df.sparkSession, coarse.centroids)), "list_no")
+      .select(col("id"), col("list_no"), vec_sub(col("vec"), col("centroid")).as("res"))
       .cache()
     try {
       val model = Rq.train(assigned, "res", levels, k, niterRq, seed, beam)

@@ -55,17 +55,13 @@ class IvfSpectralHashIndex(
       .map { case (t, l) => (l, t.toSeq) }.toDF("list_no", "_th")
       .select(col("list_no"), col("_th").cast("array<float>").as("_th"))
     // probe selection on the ORIGINAL d-dim vector (coarse quantizer
-    // runs before the hash transform, IndexIVF::search_preassigned).
-    // The driver-side collect for partition pruning runs only this
-    // slim coarse-assign subplan; the rotation + threshold join +
-    // signature plan below executes exactly once, inside the join
-    // (r04 finding: the full probe plan used to run twice).
-    val sel = queries.select(col(queryId), col(queryVec),
-        explode(Probes.selExpr(col(queryVec), centroids, nprobe, "l2sq",
-          coarse, graphCacheKey)).as("_p"))
+    // runs before the hash transform, IndexIVF::search_preassigned),
+    // on the driver (Probes.local); the rotation + threshold join +
+    // signature plan below executes once, inside the join.
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    val probes = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
-    val probed = sel.select("list_no").distinct().collect().map(_.getInt(0))
-    val probes = sel
       .join(broadcast(threshDf), "list_no")
       .select(col(queryId), col("list_no"),
         signature(vt.applyCol(col(queryVec)), col("_th"), nbit, period).as("_qsig"))

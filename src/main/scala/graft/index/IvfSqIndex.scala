@@ -34,14 +34,6 @@ class IvfSqIndex(
     * Built.close()). */
   def close(): Unit = codes.unpersist(blocking = false)
 
-  private def centroidsDf = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
-      .toDF("list_no", "centroid")
-      .select(col("list_no"), col("centroid").cast("array<float>").as("centroid"))
-  }
-
   /** Per-instance id for the executor-side graph coarse cache. */
   private val graphCacheKey = java.util.UUID.randomUUID().toString
 
@@ -52,15 +44,14 @@ class IvfSqIndex(
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    var probes = queries.select(col(queryId), col(queryVec),
-      explode(Probes.selExpr(col(queryVec), centroids, nprobe, "l2sq",
-        coarse, graphCacheKey)).as("_p"))
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    var probes = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
     if (byResidual)
-      probes = probes.join(broadcast(centroidsDf), "list_no")
+      probes = probes.join(broadcast(Probes.centroidsDf(queries.sparkSession, centroids)), "list_no")
         .select(col(queryId), col("list_no"),
           vec_sub(col(queryVec), col("centroid")).as(queryVec))
-    val probed = probes.select("list_no").distinct().collect().map(_.getInt(0))
     codes.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
       .join(broadcast(probes), "list_no")
       .select(col(queryId), col("id"),
@@ -93,11 +84,7 @@ object IvfSqIndex {
       } else graft.cluster.KMeans.fit(data, "vec",
         graft.cluster.KMeans.Params(k = nlist, niter = niter, seed = seed))
         .centroids
-    val spark = df.sparkSession
-    import spark.implicits._
-    val centDf = cents.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("list_no", "centroid")
-      .select(col("list_no"), col("centroid").cast("array<float>").as("centroid"))
+    val centDf = Probes.centroidsDf(df.sparkSession, cents)
     val assigned0 = data
       .withColumn("_a", shim.col(graft.core.NearestCentroid(
         shim.expr(col("vec")), cents, "l2sq")))

@@ -277,21 +277,20 @@ class IvfPqIndex(
       .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
         col("_r.id").as("id"), col("_r.dist").as("dist"))
 
-  /** Shared ADC scan head of [[search]] / [[rangeSearch]]: only the
-    * distinct probed list ids cross the driver (static pruning of the
-    * codes scan); the per-(query, probed-list) residual LUT rows stay
-    * cluster-side inside the broadcast (Probes.probedListIds), then
-    * the pruned codes join scores every candidate. */
+  /** Shared ADC scan head of [[search]] / [[rangeSearch]]: the query
+    * rows and their ranked probe arrays cross the driver once
+    * ([[Probes.local]]), and the probed lists statically prune the
+    * codes scan; the per-(query, probed-list) residual LUT rows are
+    * computed in the plan and stay cluster-side inside the broadcast,
+    * then the pruned codes join scores every candidate. */
   private def adcCandidates(queries: DataFrame, nprobe: Int,
       queryId: String, queryVec: String,
       polysemousHt: Option[Int] = None,
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centDf = Probes.centroidsDf(spark, centroids)
-    var probesPlan = queries.select(col(queryId), col(queryVec),
-      explode(Probes.selExpr(col(queryVec), centroids, nprobe, "l2sq",
-        coarse, graphCacheKey)).as("_p"))
+    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    var probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
       .join(broadcast(centDf), "list_no")
       .withColumn("_qres", vec_sub(col(queryVec), col("centroid")))
@@ -302,7 +301,6 @@ class IvfPqIndex(
         shim.col(PQEncode(shim.expr(col("_qres")), model.codebooks))).drop("_qres")
       case None => probesPlan.drop("_qres")
     }
-    val probed = Probes.probedListIds(probesPlan)
     var cand = codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probesPlan), "list_no")
     polysemousHt.foreach { ht =>
@@ -325,13 +323,11 @@ class IvfPqIndex(
   def sweepCandidates(queries: DataFrame, npMax: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centDf = Probes.centroidsDf(spark, centroids)
-    val probesPlan = queries.select(col(queryId), col(queryVec),
-      posexplode(Probes.selExpr(col(queryVec), centroids,
-        math.min(npMax, nlist), "l2sq", coarse, graphCacheKey))
-        .as(Seq("_pr", "_p")))
+    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      math.min(npMax, nlist), "l2sq", coarse, graphCacheKey)
+    val probesPlan = q.select(col(queryId), col(queryVec),
+      posexplode(col("_sel")).as(Seq("_pr", "_p")))
       .select(col(queryId), col(queryVec), col("_pr").as("pr"),
         col("_p.list_no").as("list_no"))
       .join(broadcast(centDf), "list_no")
@@ -339,7 +335,6 @@ class IvfPqIndex(
       .select(col(queryId), col("list_no"), col("pr"),
         model.lutCol(col("_qres")).as("_lut"),
         shim.col(PQEncode(shim.expr(col("_qres")), model.codebooks)).as("_qcode"))
-    val probed = Probes.probedListIds(probesPlan)
     codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("list_no"), col("pr"), col("id"),
@@ -357,23 +352,24 @@ class IvfPqIndex(
     * shape. */
   def sweepCandidatesEf(queries: DataFrame, npMax: Int, efs: Seq[Int],
       queryId: String = "qid", queryVec: String = "qvec"): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centDf = Probes.centroidsDf(spark, centroids)
-    val probesPlan = efs.map { ef =>
-      queries.select(lit(ef).as("ef"), col(queryId), col(queryVec),
-        posexplode(Probes.selExpr(col(queryVec), centroids,
-          math.min(npMax, nlist), "l2sq",
-          Some(Probes.HnswCoarse(ef)), graphCacheKey))
-          .as(Seq("_pr", "_p")))
-    }.reduce(_ unionByName _)
+    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
+    // one driver collect for every budget: each (ef, query) row takes
+    // the walk of its own ef
+    val side = efs.map(ef => queries.select(lit(ef).as("ef"), col(queryId), col(queryVec)))
+      .reduce(_ unionByName _)
+    def walk(ef: Int) = Probes.selExpr(col(queryVec), centroids,
+      math.min(npMax, nlist), "l2sq", Some(Probes.HnswCoarse(ef)), graphCacheKey)
+    val sel = efs.tail.foldLeft(when(col("ef") === efs.head, walk(efs.head))) {
+      (w, ef) => w.when(col("ef") === ef, walk(ef)) }
+    val (q, probed) = Probes.local(side, queryVec, sel, centroids.head.length)
+    val probesPlan = q.select(col("ef"), col(queryId), col(queryVec),
+        posexplode(col("_sel")).as(Seq("_pr", "_p")))
       .select(col("ef"), col(queryId), col(queryVec), col("_pr").as("pr"),
         col("_p.list_no").as("list_no"))
       .join(broadcast(centDf), "list_no")
       .withColumn("_qres", vec_sub(col(queryVec), col("centroid")))
       .select(col("ef"), col(queryId), col("list_no"), col("pr"),
         model.lutCol(col("_qres")).as("_lut"))
-    val probed = Probes.probedListIds(probesPlan)
     codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probesPlan), Seq("list_no"))
       .select(col("ef"), col(queryId), col("list_no"), col("pr"), col("id"),
@@ -428,18 +424,15 @@ class IvfPqrIndex(
 
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec"): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centDf = Probes.centroidsDf(spark, centroids)
-    val probes = queries.select(col(queryId), col(queryVec),
-      explode(shim.col(NearestCentroids(shim.expr(col(queryVec)), centroids,
-        math.min(nprobe, nlist), "l2sq"))).as("_p"))
+    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
+    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", None, "")
+    val probes = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
       .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"),
         vec_sub(col(queryVec), col("centroid")).as("_qres"))
       .withColumn("_lut", model1.lutCol(col("_qres")))
-    val probed = probes.select("list_no").distinct().collect().map(_.getInt(0))
     val lists = codes.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
     // stage 1: ADC over code1, keep k*kFactor candidates per query
     val stage1 = lists.join(broadcast(probes.select(col(queryId), col("list_no"), col("_lut"))), "list_no")

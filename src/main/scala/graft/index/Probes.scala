@@ -1,26 +1,63 @@
 package graft.index
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, size, when}
+import org.apache.spark.sql.graft.shim
 
 /** Driver-side handling of IVF probe plans (the (qid, …, list_no)
-  * coarse-assignment output of a search's query side). */
+  * coarse-assignment output of a search's query side).
+  *
+  * A small-batch search coarse-quantizes on the driver, as
+  * IndexIVF::search runs its quantizer in-process (faiss/IndexIVF.cpp:330)
+  * before search_preassigned (:341): query rows and their ranked probe
+  * arrays cross the driver ([[local]]), and the probed list ids read
+  * from them statically prune the invlists scan. LUT and residual rows
+  * never cross the driver: callers compute them in the plan and ship
+  * them to the scan inside the broadcast (VERDICT r8). */
 object Probes {
 
-  /** The distinct probed list ids, collected for static partition
-    * pruning of the invlists scan.
-    *
-    * Only `list_no` INTS ever cross the driver (≤ nlist of them after
-    * distinct): the probe plan itself — which may carry per-query LUT
-    * columns of M×16 doubles — stays cluster-side, and the caller
-    * ships it to the scan with broadcast(probesPlan). Collecting the
-    * full LUT-bearing probe rows instead (the r8 idiom) is the first
-    * driver OOM when the query table grows 100x (VERDICT r8). The
-    * probe subplan executes twice (this distinct + the broadcast
-    * exchange), but it is nq·nprobe rows of per-query arithmetic —
-    * pennies next to a driver that must hold every LUT at once.
-    */
+  /** The distinct probed list ids of a probe plan, by a Spark
+    * distinct: the IMI cell-pair probes, whose selector is a join of
+    * two sub-quantizer rankings rather than one [[selExpr]] column.
+    * Every single-selector search uses [[local]] instead. */
   def probedListIds(probesPlan: DataFrame): Array[Int] =
     probesPlan.select("list_no").distinct().collect().map(_.getInt(0))
+
+  /** Collects `side` (a search's id column(s) and `queryVec`) with the
+    * ranked probe array `sel` ([[selExpr]]-shaped) as `_sel`, once, as
+    * internal rows. Returns them as a LocalRelation frame, which the
+    * caller posexplodes in the plan, and the probed list ids. Over a
+    * LocalRelation side the optimizer folds the collect (no job); over
+    * any other it is one narrow job. A vector whose length is not `d`
+    * is rejected before the selector sees it; a null vector gets a null
+    * `_sel`, so no probe rows. */
+  def local(side: DataFrame, queryVec: String, sel: Column,
+      d: Int): (DataFrame, Array[Int]) = {
+    val q = side.select(col("*"), when(size(col(queryVec)) === d, sel).as("_sel"))
+    val rows = shim.collectRows(q)
+    val (v, s) = (q.schema.fieldIndex(queryVec), q.schema.fieldIndex("_sel"))
+    val probed = scala.collection.mutable.BitSet.empty
+    rows.foreach { r =>
+      if (!r.isNullAt(v)) {
+        val n = r.getArray(v).numElements()
+        require(n == d, s"query vector column `$queryVec` has a row of length $n; the index has d = $d")
+        val a = r.getArray(s)
+        var i = 0
+        while (i < a.numElements()) { probed += a.getStruct(i, 2).getInt(0); i += 1 }
+      }
+    }
+    (shim.localFrame(side.sparkSession, q, rows.toSeq), probed.toArray)
+  }
+
+  /** [[local]] over `queries`' (queryId, queryVec) with the
+    * [[selExpr]] selector over `centroids`: the probe step of a
+    * small-batch search. */
+  def local(queries: DataFrame, queryId: String, queryVec: String,
+      centroids: Array[Array[Float]], nprobe: Int, metric: String,
+      coarse: Option[CoarseQuant], cacheKey: String): (DataFrame, Array[Int]) =
+    local(queries.select(col(queryId), col(queryVec)), queryVec,
+      selExpr(col(queryVec), centroids, nprobe, metric, coarse, cacheKey),
+      centroids.head.length)
 
   /** A graph-accelerated coarse quantizer for probe selection — the
     * reference's `IVF<n>_HNSW<m>` / `IVF<n>_NSG<R>` coarse grammar
@@ -66,11 +103,10 @@ object Probes {
     * to exact). Returns an array<struct(list_no, dist)> column ranked
     * best-first. The graph degree is folded into the cache key so one
     * index searched at two degrees never reuses the other's graph. */
-  def selExpr(queryVec: org.apache.spark.sql.Column,
+  def selExpr(queryVec: Column,
       centroids: Array[Array[Float]], nprobe: Int, metric: String,
       coarse: Option[CoarseQuant],
-      cacheKey: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.graft.shim
+      cacheKey: String): Column = {
     val np = math.min(nprobe, centroids.length)
     coarse match {
       case Some(g) =>
@@ -108,7 +144,6 @@ object Probes {
   def centroidsDf(spark: org.apache.spark.sql.SparkSession,
       centroids: Array[Array[Float]]): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     centroids.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq) }.toDF("list_no", "centroid")
       .select(col("list_no"),

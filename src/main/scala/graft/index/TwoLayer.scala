@@ -26,20 +26,12 @@ class TwoLayerIndex(
     /** (id, list_no, code) — sequential storage, no list partitioning */
     val codes: DataFrame) {
 
-  private def centDf = {
-    val s = codes.sparkSession
-    import s.implicits._
-    centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
-      .toDF("list_no", "_cent")
-      .select(col("list_no"), col("_cent").cast("array<float>").as("_cent"))
-  }
-
   /** reconstruct_n (Index2Layer.cpp reconstruct): coarse centroid +
     * PQ-decoded residual, one row per stored vector. */
   def reconstruct: DataFrame =
-    codes.join(broadcast(centDf), "list_no")
+    codes.join(broadcast(Probes.centroidsDf(codes.sparkSession, centroids)), "list_no")
       .select(col("id"),
-        vec_add(col("_cent"), model.decodeCol(col("code"))).as("vec"))
+        vec_add(col("centroid"), model.decodeCol(col("code"))).as("vec"))
 }
 
 object TwoLayerIndex {
@@ -57,13 +49,9 @@ object TwoLayerIndex {
     val assigned = vecs
       .withColumn("_a", shim.col(NearestCentroid(shim.expr(col("vec")), km.centroids)))
       .withColumn("list_no", col("_a.list_no")).drop("_a")
-    val s = df.sparkSession
-    import s.implicits._
-    val centDf = km.centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("list_no", "_cent")
-      .select(col("list_no"), col("_cent").cast("array<float>").as("_cent"))
+    val centDf = Probes.centroidsDf(df.sparkSession, km.centroids)
     val residuals = assigned.join(broadcast(centDf), "list_no")
-      .select(col("id"), col("list_no"), vec_sub(col("vec"), col("_cent")).as("_res"))
+      .select(col("id"), col("list_no"), vec_sub(col("vec"), col("centroid")).as("_res"))
     val pq = Pq.train(residuals.select(col("_res")), "_res", m, ksub,
       niter = niterPq, seed = seed)
     val codes = residuals.select(col("id"), col("list_no"),

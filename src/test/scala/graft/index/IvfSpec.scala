@@ -436,4 +436,69 @@ class IvfSpec extends SparkTestBase {
     assert(got.forall { case (a, c) => a == c },
       s"self-lookup through the ADC quantizer must hit its own list")
   }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+    df.select(cols.map(col): _*).collect().map(_.toSeq.mkString(",")).sorted.toSeq
+
+  test("probes on the driver (broadcastQueries=true) and in the plan (false) give identical rows") {
+    val outCols = Seq("qid", "rank", "id", "dist")
+    for (coarse <- Seq(None, Some(Probes.HnswCoarse(efSearch = 16)))) {
+      val viaDriver = sortedRows(idx.search(q, 10, nprobe = 3, coarse = coarse), outCols: _*)
+      assert(viaDriver.length == 100)
+      assert(viaDriver == sortedRows(idx.search(q, 10, nprobe = 3, coarse = coarse,
+        broadcastQueries = false), outCols: _*), s"search, coarse = $coarse")
+    }
+    val radius = idx.search(q, 5, nprobe = 3).agg(max(col("dist"))).head().getDouble(0)
+    val range = sortedRows(idx.rangeSearch(q, radius, nprobe = 3), "qid", "id", "dist")
+    assert(range.length >= 50)
+    assert(range == sortedRows(idx.rangeSearch(q, radius, nprobe = 3,
+      broadcastQueries = false), "qid", "id", "dist"), "rangeSearch")
+    val nps = Seq(1, 2, 5)
+    val sweep = idx.searchSweep(q, 10, nps)
+    val sweepInPlan = idx.searchSweep(q, 10, nps, broadcastQueries = false)
+    nps.foreach { np =>
+      val at = (df: org.apache.spark.sql.DataFrame) =>
+        sortedRows(df.filter(col("np") === np), outCols: _*)
+      assert(at(sweep).length == 100 && at(sweep) == at(sweepInPlan), s"searchSweep np = $np")
+    }
+  }
+
+  /** A d=4 corpus and the d=4 IVF-Flat and IVF-PQ indexes over it. */
+  private lazy val idx4 = {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(7)
+    val base = (0 until 400).map(i => (i.toLong, Array.fill(4)(rnd.nextFloat())))
+      .toDF("id", "vec")
+    (IvfIndex.build(base, "id", "vec", nlist = 4, niter = 2),
+      IvfPqIndex.build(base, "id", "vec", nlist = 4, m = 2, ksub = 4,
+        niterCoarse = 2, niterPq = 2))
+  }
+
+  private def queries4(vecs: Option[Seq[Float]]*) = {
+    val s = spark
+    import s.implicits._
+    vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("qid", "qvec")
+  }
+
+  test("probe step rejects a query vector whose length is not d, without a job") {
+    val (flat, pq) = idx4
+    val bad = queries4(Some(Seq(0.1f, 0.2f, 0.3f, 0.4f)), Some(Seq(0.1f, 0.2f, 0.3f)))
+    for ((name, search) <- Seq[(String, () => Any)](
+        "IVF-Flat" -> (() => flat.search(bad, 5, nprobe = 2)),
+        "IVF-PQ" -> (() => pq.search(bad, 5, nprobe = 2)))) {
+      val (err, jobs) = jobsLaunchedBy(intercept[IllegalArgumentException](search()))
+      assert(err.getMessage.contains("`qvec` has a row of length 3") &&
+        err.getMessage.contains("d = 4"), s"$name: ${err.getMessage}")
+      assert(jobs == 0, s"$name: the shape check launched $jobs job(s)")
+    }
+  }
+
+  test("a null query vector yields no rows for that query") {
+    val (flat, pq) = idx4
+    val qs = queries4(None, Some(Seq(0.5f, 0.5f, 0.5f, 0.5f)))
+    for (res <- Seq(flat.search(qs, 5, nprobe = 2), pq.search(qs, 5, nprobe = 2),
+        flat.search(qs, 5, nprobe = 2, broadcastQueries = false)))
+      assert(res.select("qid").collect().map(_.getLong(0)).toSeq == Seq.fill(5)(1L))
+  }
 }

@@ -3,6 +3,7 @@ package graft.knn
 import graft.SparkTestBase
 import graft.index.IvfIndex
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan regression checks: the scale story depends on these
   * plan shapes, not just on correct results (builder prompt: "the plan
@@ -238,6 +239,21 @@ class PlanSpec extends SparkTestBase {
       assert(jobs.get() == 1,
         s"plan construction launched ${jobs.get() - 1} eager Spark job(s)")
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("small-batch IVF-Flat and IVF-PQ search coarse-quantize a createDataFrame " +
+    "query set on the driver: no job before the action, at most 3 in it") {
+    val idx = IvfIndex.build(b, "id", "vec", nlist = 8, niter = 2)
+    val pq = graft.index.IvfPqIndex.build(b, "id", "vec", nlist = 8, m = 8,
+      ksub = 16, niterCoarse = 2, niterPq = 2)
+    val local = spark.createDataFrame(q.collect().toSeq.asJava, q.schema)
+    val ((flat, adc), planJobs) = jobsLaunchedBy(
+      (idx.search(local, 5, nprobe = 2), pq.search(local, 5, nprobe = 2)))
+    assert(planJobs == 0, s"search plan construction launched $planJobs job(s)")
+    val (rows, execJobs) = jobsLaunchedBy(flat.collect())
+    assert(rows.length == 50 && execJobs <= 3, s"IVF-Flat action ran $execJobs jobs")
+    assert(adc.count() == 50)
+    pq.codes.unpersist()
   }
 
   test("assign uses the heap aggregate (no window, no sort aggregate)") {
