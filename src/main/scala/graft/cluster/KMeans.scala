@@ -3,20 +3,26 @@ package graft.cluster
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
-import graft.core.{NearestCentroid, VecSumAgg}
+import graft.core.{Lloyd, NearestCentroid, ScopedConf, VecSumAgg}
 
 /** FAISS-semantics Lloyd k-means (faiss/Clustering.cpp:271-560) as a
   * DataFrame fit.
   *
-  * Per-round dataflow (all distributed, only k×d floats ever reach the
-  * driver):
+  * Like faiss, a fit first caps its training sample at
+  * k × maxPointsPerCentroid rows (Clustering.cpp:93); one count of the
+  * input sizes it. A sample of at most [[graft.core.Lloyd.inProcess]]'s
+  * 2^16 rows is collected once and every round runs on the driver
+  * ([[graft.core.Lloyd]]: parallel assign, sequential double update).
+  * A larger sample stays in the cluster, one job per round:
   *   1. assign: per-row argmin over the centroid table embedded in the
   *      plan ([[graft.core.NearestCentroid]]) — no join, no shuffle of
   *      the data;
   *   2. update: groupBy(list_no) + [[graft.core.VecSumAgg]] (partial
-  *      map-side sums, shuffle k × d doubles);
-  *   3. driver: centroid = sum/cnt, empty-cluster split, optional
-  *      spherical renorm (Clustering.cpp:220-260, :65).
+  *      map-side sums, shuffle k × d doubles), and only k×d sums reach
+  *      the driver.
+  * Both paths compute the same distances with the same tie rule, and
+  * share everything after the sums: centroid = sum/cnt, empty-cluster
+  * split, optional spherical renorm (Clustering.cpp:220-260, :65).
   *
   * FAISS parity notes (SURVEY.md §7 "seeded-RNG parity" non-goal):
   * subsampling to k*max_points_per_centroid (Clustering.cpp:93) and
@@ -85,9 +91,15 @@ object KMeans {
     * (e.g. SqVariant.decode, PqModel.decodeCol); [[fit]] is this with
     * `decode = identity`. */
   def fitEncoded(df: DataFrame, codeCol: String, decode: Column => Column,
-      p: Params, init: Option[Array[Array[Float]]] = None): Model = {
+      p: Params, init: Option[Array[Array[Float]]] = None): Model =
+    fitEncodedWith(df, codeCol, decode, p, init, Lloyd.inProcess)
+
+  /** [[fitEncoded]] with the rule that picks in-process rounds for a
+    * sample of the given row count (tests pin either path). */
+  private[graft] def fitEncodedWith(df: DataFrame, codeCol: String,
+      decode: Column => Column, p: Params, init: Option[Array[Array[Float]]],
+      inProcess: Long => Boolean): Model = {
     require(p.metric == "l2sq", "faiss trains the coarse quantizer with L2 (Clustering.cpp)")
-    val spark = df.sparkSession
     val codes = df.select(col(codeCol).as("_code")).filter(col("_code").isNotNull)
     val maxTrain = p.k.toLong * p.maxPointsPerCentroid
     val total = codes.count()
@@ -99,67 +111,126 @@ object KMeans {
     // process (VERDICT r02 finding #4). The filter keeps ≈maxTrain rows
     // (binomial around the target) fully distributed; exact sample
     // counts are not a FAISS-parity goal (SURVEY §7 seeded-RNG parity).
-    val train0 =
+    val sampled =
       if (total > maxTrain) {
         val buckets = 1L << 30
         val keep = math.min(buckets,
           (maxTrain.toDouble / total * buckets).toLong + 1)
         codes.filter(pmod(xxhash64(col("_code"), lit(p.seed)), lit(buckets)) < keep)
       } else codes
-    var train = train0.cache()
-    try {
-      // The subsample hash keys on the code VALUE, so duplicate-heavy
-      // data can land every copy in (or out of) the kept range: an
-      // empty or k-deficient sample is possible. The fallback is the
-      // unsampled arbitrary-prefix limit, degenerate inputs only.
-      var fellBack = total <= maxTrain // nothing to fall back from
-      def fallBack(): Unit = {
-        train.unpersist(blocking = false)
-        train = codes.limit(maxTrain.toInt).cache()
-        fellBack = true
-      }
-      // A warm start (ProgressiveDimKMeans) skips the init collect the
-      // cold path folds the check into (one fewer corpus pass per fit,
-      // guide §2.4), so it pays one limit(k) job here (VERDICT r19 #5).
-      if (init.isDefined && !fellBack && train.limit(p.k).count() < p.k) fallBack()
-      // Training always runs on <= maxTrain = k*max_points_per_centroid
-      // rows (the subsample above) — a size known HERE, before any
-      // iteration. Scope the Lloyd loop's shuffle width to it (r20,
-      // guide §2.2/§1.2): at bench ks the per-iteration
-      // assign→VecSumAgg exchange otherwise runs cluster-width stages
-      // of near-empty tasks, with AQE adding a job per stage; at real
-      // nlist the derived count clamps to the session value and this
-      // is a no-op. Result risk is nil BY CONSTRUCTION of the oracle
-      // contract: DuckDB never trains — every consumer replays the
-      // engine-written trained-state sidecar, so both compare sides
-      // see the same centroids whatever the partial-sum order.
-      graft.core.ScopedConf.tinyShuffle(spark,
-          graft.core.ScopedConf.tinyParts(spark, math.min(total, maxTrain))) { s =>
-        // lazy decoded view: every iteration re-reads the cached CODES
-        // and decodes in the scan — float vectors never persist
-        def decoded = shim.rebind(s, train).select(decode(col("_code")).as("vec"))
-        var best: Model = null
-        for (redo <- 0 until p.nredo) {
-          val init0 = init.getOrElse {
-            val seed = p.seed + redo
-            var c = collectInit(decoded, seed, p.k)
-            if (c.length < p.k && !fellBack) {
-              fallBack()
-              c = collectInit(decoded, seed, p.k)
-            }
-            c
-          }
-          val m = fitOnce(decoded, p, init0)
-          if (best == null || m.objective < best.objective) best = m
-        }
-        best
-      }
-    } finally { train.unpersist() }
+    // The subsample hash keys on the code VALUE, so duplicate-heavy
+    // data can land every copy in (or out of) the kept range: an
+    // empty or k-deficient sample is possible. The fallback is the
+    // unsampled arbitrary-prefix limit, degenerate inputs only; with
+    // no subsample there is nothing to fall back from.
+    val fallback = if (total > maxTrain) Some(codes.limit(maxTrain.toInt)) else None
+    val decoded = (t: DataFrame) => t.select(decode(col("_code")).as("vec"))
+    val sampleRows = math.min(total, maxTrain)
+    if (inProcess(sampleRows)) fitInProcess(sampled, fallback, decoded, p, init)
+    else fitDistributed(sampled, fallback, decoded, sampleRows, p, init)
   }
 
   def fit(df: DataFrame, vecCol: String, p: Params,
       init: Option[Array[Array[Float]]] = None): Model =
     fitEncoded(df, vecCol, identity, p, init)
+
+  /** One collect of the sample (decoded, with one init hash per redo),
+    * then every round on the driver ([[graft.core.Lloyd]]). The driver
+    * holds the sample once as floats, rows × d × 4 bytes (16 MB at the
+    * 2^16-row bound and d 64, 200 MB at d 768), plus the collected rows
+    * while they are converted. */
+  private def fitInProcess(sampled: DataFrame, fallback: Option[DataFrame],
+      decoded: DataFrame => DataFrame, p: Params,
+      init: Option[Array[Array[Float]]]): Model = {
+    val redos = if (init.isDefined) 0 else p.nredo
+    // the sample, and per redo the indices of its first k rows in
+    // xxhash64(vec, seed + redo) order (collectInit's order); the
+    // collected rows are dropped here
+    def collect(t: DataFrame): (Array[Array[Float]], Seq[Array[Int]]) = {
+      val rows = shim.collectRows(decoded(t).select(col("vec") +:
+        (0 until redos).map(r => xxhash64(col("vec"), lit(p.seed + r))): _*))
+      val firstK = (0 until redos).map(r =>
+        rows.indices.sortBy(i => rows(i).getLong(1 + r)).take(p.k).toArray)
+      (rows.map(_.getArray(0).toFloatArray()), firstK)
+    }
+    val first = collect(sampled)
+    // the check the distributed path runs as a job (warm start) or
+    // folds into its init collect (cold start)
+    val (xs, firstK) = fallback.filter(_ => first._1.length < p.k).map(collect).getOrElse(first)
+    val assigned = new Array[Int](xs.length)
+    def round(c: Array[Array[Float]]): Lloyd.Stats = {
+      val cb = Lloyd.flatten(c)
+      Lloyd.assign(xs, 0, c(0).length, cb, assigned)
+      Lloyd.stats(xs, 0, c(0).length, cb, assigned)
+    }
+    bestOf(p, redo => init.getOrElse(firstK(redo).map(xs)), round)
+  }
+
+  /** The sample stays cached in the cluster; each round is one
+    * assign + groupBy job and only k×d sums reach the driver. */
+  private def fitDistributed(sampled: DataFrame, fallback: Option[DataFrame],
+      decoded: DataFrame => DataFrame, sampleRows: Long, p: Params,
+      init: Option[Array[Array[Float]]]): Model = {
+    val spark = sampled.sparkSession
+    var train = sampled.cache()
+    try {
+      def fallBack(): Boolean = fallback.exists { f =>
+        train.unpersist(blocking = false)
+        train = f.cache()
+        true
+      }
+      // A warm start (ProgressiveDimKMeans) skips the init collect the
+      // cold path folds the check into (one fewer corpus pass per fit,
+      // guide §2.4), so it pays one limit(k) job here (VERDICT r19 #5).
+      var fellBack = false
+      if (init.isDefined && fallback.isDefined && train.limit(p.k).count() < p.k)
+        fellBack = fallBack()
+      // The sample size is known HERE, before any iteration. Scope the
+      // Lloyd loop's shuffle width to it (r20, guide §2.2/§1.2): the
+      // per-iteration assign→VecSumAgg exchange otherwise runs
+      // cluster-width stages of near-empty tasks, with AQE adding a job
+      // per stage; at real nlist the derived count clamps to the session
+      // value and this is a no-op. Result risk is nil BY CONSTRUCTION of
+      // the oracle contract: DuckDB never trains — every consumer replays
+      // the engine-written trained-state sidecar, so both compare sides
+      // see the same centroids whatever the partial-sum order.
+      ScopedConf.tinyShuffle(spark, ScopedConf.tinyParts(spark, sampleRows)) { s =>
+        // lazy decoded view: every iteration re-reads the cached CODES
+        // and decodes in the scan — float vectors never persist
+        def vecs = decoded(shim.rebind(s, train))
+        def round(c: Array[Array[Float]]): Lloyd.Stats = {
+          val d = c(0).length
+          val stats = vecs.select(col("vec"),
+              shim.col(NearestCentroid(shim.expr(col("vec")), c, p.metric)).as("_a"))
+            .select(col("_a.list_no").as("list_no"), col("_a.dist").as("dist"), col("vec"))
+            .groupBy(col("list_no"))
+            .agg(shim.agg(VecSumAgg(shim.expr(col("vec")))).as("s"),
+              sum(col("dist")).as("obj"))
+            .collect()
+          val sums = new Array[Double](p.k * d)
+          val counts = new Array[Long](p.k)
+          var obj = 0.0
+          stats.foreach { r =>
+            val l = r.getInt(0)
+            val st = r.getStruct(1)
+            st.getSeq[Double](0).copyToArray(sums, l * d)
+            counts(l) = st.getLong(1)
+            obj += r.getDouble(2)
+          }
+          Lloyd.Stats(sums, counts, obj)
+        }
+        bestOf(p, redo => init.getOrElse {
+          val seed = p.seed + redo
+          var c = collectInit(vecs, seed, p.k)
+          if (c.length < p.k && !fellBack && fallBack()) {
+            fellBack = true
+            c = collectInit(vecs, seed, p.k)
+          }
+          c
+        }, round)
+      }
+    } finally { train.unpersist() }
+  }
 
   /** First k rows in deterministic hash order (rand_perm analog) —
     * the init sample every fit draws when no warm start is given. */
@@ -170,10 +241,24 @@ object KMeans {
       .select("vec").collect()
       .map(_.getSeq[Float](0).toArray)
 
-  private def fitOnce(train: DataFrame, p: Params,
-      init: Array[Array[Float]]): Model = {
+  /** Best-of-`nredo` ([[Params.nredo]]): the lowest final objective,
+    * the earlier redo on a tie. */
+  private def bestOf(p: Params, init: Int => Array[Array[Float]],
+      round: Array[Array[Float]] => Lloyd.Stats): Model = {
+    var best: Model = null
+    for (redo <- 0 until p.nredo) {
+      val m = fitOnce(p, init(redo), round)
+      if (best == null || m.objective < best.objective) best = m
+    }
+    best
+  }
+
+  /** Lloyd rounds from `init`; `round` runs one assign + update over
+    * the sample and returns its statistics. */
+  private def fitOnce(p: Params, init: Array[Array[Float]],
+      round: Array[Array[Float]] => Lloyd.Stats): Model = {
     // init: warm-start centroids if given (ProgressiveDimClustering),
-    // else the caller's collectInit sample
+    // else the first k rows of the hash order
     var centroids: Array[Array[Float]] = init
     require(centroids.nonEmpty, "empty training set")
     if (centroids.length < p.k) {
@@ -187,39 +272,14 @@ object KMeans {
     var sizes = new Array[Long](p.k)
 
     for (_ <- 0 until p.niter) {
-      val assigned = train.select(
-        col("vec"),
-        shim.col(NearestCentroid(shim.expr(col("vec")), centroids, p.metric)).as("_a"))
-      val stats = assigned
-        .select(col("_a.list_no").as("list_no"), col("_a.dist").as("dist"), col("vec"))
-        .groupBy(col("list_no"))
-        .agg(shim.agg(VecSumAgg(shim.expr(col("vec")))).as("s"),
-          sum(col("dist")).as("obj"))
-        .collect()
-
-      val sums = new Array[Array[Double]](p.k)
-      val counts = new Array[Long](p.k)
-      var obj = 0.0
-      stats.foreach { r =>
-        val l = r.getInt(0)
-        val s = r.getStruct(1)
-        sums(l) = s.getSeq[Double](0).toArray
-        counts(l) = s.getLong(1)
-        obj += r.getDouble(2)
-      }
-      objectives += obj
-      lastObjective = obj
-
-      val next = new Array[Array[Float]](p.k)
-      for (j <- 0 until p.k) {
-        next(j) =
-          if (counts(j) > 0) {
-            val c = new Array[Float](sums(j).length)
-            var i = 0
-            while (i < c.length) { c(i) = (sums(j)(i) / counts(j)).toFloat; i += 1 }
-            postProcess(c, p)
-          } else null
-      }
+      val d = centroids(0).length
+      val st = round(centroids)
+      objectives += st.objective
+      lastObjective = st.objective
+      val counts = st.counts
+      val mean = Lloyd.unflatten(Lloyd.means(Lloyd.flatten(centroids), st, d), d)
+      val next = Array.tabulate(p.k)(j =>
+        if (counts(j) > 0) postProcess(mean(j), p) else null)
       // split_clusters (Clustering.cpp:220-260): each empty cluster takes
       // a perturbed copy of the (deterministically) largest cluster's
       // centroid; both get half its size for subsequent splits.

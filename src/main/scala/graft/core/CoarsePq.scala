@@ -15,10 +15,12 @@ import org.apache.spark.sql.types._
   *
   * The table being quantized is the nlist-row centroid set — driver
   * memory by construction (it is already held as `Array[Array[Float]]`
-  * on every IVF index) — so training runs locally: per-subspace Lloyd
-  * k-means, deterministic under `seed` so every caller (factory
-  * build, search probe selection, the Verify sidecar dump) derives
-  * the identical model from the same centroids. */
+  * on every IVF index) — so training always runs in-process, on
+  * [[Lloyd]]'s rounds like every sample at or below its bound: per-
+  * subspace k-means from a seeded-shuffle init, deterministic under
+  * `seed` so every caller (factory build, search probe selection, the
+  * Verify sidecar dump) derives the identical model from the same
+  * centroids. */
 object CoarsePq {
 
   /** (codebooks(m)(j) = float[dsub], codes(i) = byte[m]) */
@@ -85,7 +87,8 @@ object CoarsePq {
   private val assignCache =
     new java.util.WeakHashMap[Array[Array[Float]], Map[(Int, Int, Long), (Array[Array[Float]], Array[Int])]]()
 
-  /** One subspace's Lloyd k-means over [off, off+dsub): returns the
+  /** One subspace's Lloyd k-means over [off, off+dsub) ([[Lloyd]]'s
+    * rounds; an empty cluster keeps its previous center): returns the
     * trained codebook and each row's final integer assignment. */
   private def lloyd(vecs: Array[Array[Float]], off: Int, dsub: Int,
       ksub: Int, niter: Int, rng: java.util.Random): (Array[Array[Float]], Array[Int]) = {
@@ -98,56 +101,11 @@ object CoarsePq {
       val t = order(i); order(i) = order(j); order(j) = t
       i -= 1
     }
-    val cb = Array.tabulate(ksub) { j =>
-      java.util.Arrays.copyOfRange(vecs(order(j)), off, off + dsub)
-    }
+    val cb0 = Lloyd.flatten(Array.tabulate(ksub)(j => vecs(order(j))), off, dsub)
+    val cb = Lloyd.train(vecs, off, dsub, cb0, niter)
     val assign = new Array[Int](n)
-    // the dominant cost at large nlist: O(n·ksub·dsub) per round —
-    // rows are independent, so stripe them over the common pool
-    // (deterministic: each row's write is its own argmin; the update
-    // accumulation below stays sequential, so centroids are
-    // bit-reproducible run to run)
-    def assignAll(): Unit = {
-      java.util.stream.IntStream.range(0, n).parallel().forEach { r =>
-        var best = 0; var bestD = Double.MaxValue
-        var j = 0
-        while (j < ksub) {
-          var s = 0.0; var t = 0
-          val c = cb(j)
-          while (t < dsub) {
-            val dd = vecs(r)(off + t).toDouble - c(t); s += dd * dd; t += 1
-          }
-          if (s < bestD) { bestD = s; best = j }
-          j += 1
-        }
-        assign(r) = best
-      }
-    }
-    var it = 0
-    while (it < niter) {
-      assignAll()
-      // update; empty clusters keep their previous center
-      val sums = Array.ofDim[Double](ksub, dsub)
-      val cnt = new Array[Int](ksub)
-      var r = 0
-      while (r < n) {
-        val a = assign(r); cnt(a) += 1
-        var t = 0
-        while (t < dsub) { sums(a)(t) += vecs(r)(off + t); t += 1 }
-        r += 1
-      }
-      var j = 0
-      while (j < ksub) {
-        if (cnt(j) > 0) {
-          var t = 0
-          while (t < dsub) { cb(j)(t) = (sums(j)(t) / cnt(j)).toFloat; t += 1 }
-        }
-        j += 1
-      }
-      it += 1
-    }
-    assignAll() // final assignment from the trained codebook
-    (cb, assign)
+    Lloyd.assign(vecs, off, dsub, cb, assign) // final assignment from the trained codebook
+    (Lloyd.unflatten(cb, dsub), assign)
   }
 
   /** Per-subspace Lloyd k-means + encode, all in driver memory. */

@@ -11,28 +11,20 @@ import org.apache.spark.sql.types._
   * layout: [M][ksub][dsub]. */
 object PqKernels {
 
-  def encode(a: ArrayData, cb: Array[Array[Array[Float]]]): Array[Byte] = {
-    val m = cb.length
-    val dsub = cb(0)(0).length
-    val out = new Array[Byte](m)
+  /** Per-subspace flat codebooks, [M][ksub·dsub] — the layout of the
+    * trainer's nearest-codeword loop ([[Lloyd.nearest]]). */
+  def flatten(cb: Array[Array[Array[Float]]]): Array[Array[Float]] = cb.map(Lloyd.flatten)
+
+  /** Flattens `cb` on every call; the expressions below flatten once. */
+  def encode(a: ArrayData, cb: Array[Array[Array[Float]]]): Array[Byte] =
+    encodeFlat(a, flatten(cb), cb(0)(0).length)
+
+  /** Codegen entry point: `cb` is [[flatten]]'s layout. */
+  def encodeFlat(a: ArrayData, cb: Array[Array[Float]], dsub: Int): Array[Byte] = {
+    val x = a.toFloatArray()
+    val out = new Array[Byte](cb.length)
     var mi = 0
-    while (mi < m) {
-      val base = mi * dsub
-      var best = 0; var bestD = Double.MaxValue
-      var j = 0
-      while (j < cb(mi).length) {
-        val c = cb(mi)(j)
-        var s = 0.0; var i = 0
-        while (i < dsub) {
-          val d = a.getFloat(base + i).toDouble - c(i)
-          s += d * d; i += 1
-        }
-        if (s < bestD) { bestD = s; best = j }
-        j += 1
-      }
-      out(mi) = best.toByte
-      mi += 1
-    }
+    while (mi < cb.length) { out(mi) = Lloyd.nearest(x, mi * dsub, cb(mi), dsub).toByte; mi += 1 }
     out
   }
 
@@ -90,51 +82,54 @@ object PqKernels {
     new GenericArrayData(decode(code, cb))
   def lutData(q: ArrayData, cb: Array[Array[Array[Float]]]): ArrayData =
     new GenericArrayData(lut(q, cb))
-  def subAssign(mi: Int, sub: ArrayData, cb: Array[Array[Array[Float]]]): Int = {
-    val cbm = cb(mi)
-    var best = 0; var bestD = Double.MaxValue
-    var j = 0
-    while (j < cbm.length) {
-      val c = cbm(j)
-      var s = 0.0; var i = 0
-      while (i < c.length) {
-        val d = sub.getFloat(i).toDouble - c(i); s += d * d; i += 1
-      }
-      if (s < bestD) { bestD = s; best = j }
-      j += 1
-    }
-    best
-  }
+  /** Codegen entry point: `cb` is [[flatten]]'s layout. */
+  def subAssignFlat(mi: Int, sub: ArrayData, cb: Array[Array[Float]], dsub: Int): Int =
+    Lloyd.nearest(sub.toFloatArray(), 0, cb(mi), dsub)
 }
 
 /** Assignment of one subvector within subspace `left` (int m) to its
-  * nearest codebook entry — the per-subspace Lloyd assign step. */
+  * nearest codebook entry — the per-subspace Lloyd assign step. `flat`
+  * is [[PqKernels.flatten]]'s layout of the [M][ksub][dsub] codebooks
+  * the companion's `apply` takes. */
 case class PQSubAssign(left: Expression, right: Expression,
-    codebooks: Array[Array[Array[Float]]])
+    flat: Array[Array[Float]], dsub: Int)
     extends BinaryExpression {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "pq_sub_assign"
   override def nullSafeEval(m: Any, sub: Any): Any =
-    PqKernels.subAssign(m.asInstanceOf[Int], sub.asInstanceOf[ArrayData], codebooks)
+    PqKernels.subAssignFlat(m.asInstanceOf[Int], sub.asInstanceOf[ArrayData], flat, dsub)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    defineCodeGen(ctx, ev, (m, sub) => s"graft.core.PqKernels.subAssign($m, $sub, $cb)")
+    val cb = ctx.addReferenceObj("codebooks", flat, "float[][]")
+    defineCodeGen(ctx, ev, (m, sub) => s"graft.core.PqKernels.subAssignFlat($m, $sub, $cb, $dsub)")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class PQEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
+object PQSubAssign {
+  def apply(left: Expression, right: Expression,
+      codebooks: Array[Array[Array[Float]]]): PQSubAssign =
+    PQSubAssign(left, right, PqKernels.flatten(codebooks), codebooks(0)(0).length)
+}
+
+/** Per-subspace nearest codeword of a vector, as M code bytes; `flat`
+  * as in [[PQSubAssign]]. */
+case class PQEncode(child: Expression, flat: Array[Array[Float]], dsub: Int)
     extends UnaryExpression {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pq_encode"
   override def nullSafeEval(v: Any): Any =
-    PqKernels.encode(v.asInstanceOf[ArrayData], codebooks)
+    PqKernels.encodeFlat(v.asInstanceOf[ArrayData], flat, dsub)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    defineCodeGen(ctx, ev, c => s"graft.core.PqKernels.encode($c, $cb)")
+    val cb = ctx.addReferenceObj("codebooks", flat, "float[][]")
+    defineCodeGen(ctx, ev, c => s"graft.core.PqKernels.encodeFlat($c, $cb, $dsub)")
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object PQEncode {
+  def apply(child: Expression, codebooks: Array[Array[Array[Float]]]): PQEncode =
+    PQEncode(child, PqKernels.flatten(codebooks), codebooks(0)(0).length)
 }
 
 case class PQDecode(child: Expression, codebooks: Array[Array[Array[Float]]])

@@ -7,8 +7,9 @@ import org.apache.spark.sql.graft.shim
   * under confs other than the caller's.
   *
   * Several operators train/iterate over inputs whose size is known
-  * exactly before the work starts (k-means' capped train sample,
-  * nnDescent's candidate volume, the io-matrix's fixed 490-row slice).
+  * exactly before the work starts (k-means' capped train sample when
+  * it is too large to train in-process, see [[graft.core.Lloyd]];
+  * nnDescent's candidate volume; the io-matrix's fixed 490-row slice).
   * When that volume sits far below the session's shuffle width, every
   * exchange runs as a cluster-width stage of near-empty tasks and AQE
   * materializes each stage as its own job — pure scheduling latency.
@@ -40,10 +41,14 @@ import org.apache.spark.sql.graft.shim
   */
 object ScopedConf {
 
+  /** Rows per shuffle partition of the width rule, and the largest
+    * training sample the engine trains in-process ([[Lloyd.inProcess]]). */
+  val RowsPerPartition: Long = 1L << 16
+
   /** Derived shuffle-partition count for `rows` input rows at
     * `rowsPerPartition` granularity, clamped to [1, session]. */
   def tinyParts(spark: SparkSession, rows: Long,
-      rowsPerPartition: Long = 1L << 16): Int = {
+      rowsPerPartition: Long = RowsPerPartition): Int = {
     val session = spark.sessionState.conf.numShufflePartitions
     val n = math.ceil(rows.toDouble / math.max(1L, rowsPerPartition)).toLong
     math.max(1L, math.min(session.toLong, n)).toInt

@@ -28,54 +28,81 @@ case class PqModel(m: Int, ksub: Int, dsub: Int,
 
 object Pq {
 
-  /** Train M independent subspace codebooks with joint Lloyd rounds:
-    * one distributed assign+update job per iteration for ALL subspaces
-    * (groupBy (m, code) + VecSumAgg on the subvector), not M separate
-    * fits — M× fewer Spark jobs than the naive loop.
-    * (faiss ProductQuantizer::train, impl/ProductQuantizer.cpp; each
-    * subspace is a ksub-means over dsub dims.) */
+  /** Train M independent subspace codebooks (faiss
+    * ProductQuantizer::train, impl/ProductQuantizer.cpp; each subspace
+    * is a ksub-means over dsub dims) on at most 256 × ksub rows — the
+    * reference's k-means max_points_per_centroid convention
+    * (Clustering.h:36), never the full add set.
+    *
+    * The sample is the first 256 × ksub rows in xxhash64(vec, seed)
+    * order (one TakeOrdered pass instead of niter full scans; the
+    * deterministic order keeps every memoized model reproducible, and
+    * the ENCODE of the full set, the add-time work, is untouched).
+    * Init: codebook[mi] = the mi-th subvectors of the first ksub sample
+    * rows. Each round assigns every subvector and moves each codeword
+    * to its mean; an empty codeword keeps its previous value.
+    *
+    * Every ksub ≤ 256 (all 8-bit and 4-bit PQ) has a sample within
+    * [[graft.core.Lloyd.inProcess]]'s bound: it is collected once and
+    * the rounds run on the driver ([[graft.core.Lloyd]]). Larger ksub
+    * (an IMI2x12 coarse) keeps joint distributed rounds: one assign +
+    * groupBy (m, code) + VecSumAgg for ALL subspaces per round.
+    *
+    * Fewer than ksub training rows is an error, as in faiss's
+    * Clustering::train: a codebook shorter than ksub would break the
+    * ADC lookup-table stride. Oracles read trained codebooks from
+    * sidecars, so the training set is free to shrink. */
   def train(df: DataFrame, vecCol: String, m: Int, ksub: Int,
-      niter: Int = 8, seed: Long = 1234L): PqModel = {
-    val all = df.select(col(vecCol).as("vec")).filter(col("vec").isNotNull)
-    // Training subsample — the reference's k-means
-    // max_points_per_centroid convention (Clustering.h:36;
-    // ProductQuantizer::train clusters each subspace on <= 256*ksub
-    // points, never the full add set). One TakeOrdered pass replaces
-    // niter full scans at corpus scale; the deterministic xxhash64
-    // order keeps every memoized model reproducible, and the ENCODE
-    // of the full set (the add-time work) is untouched. Oracles read
-    // trained codebooks from sidecars, so the training set is free to
-    // shrink.
+      niter: Int = 8, seed: Long = 1234L): PqModel =
+    trainWith(df, vecCol, m, ksub, niter, seed, Lloyd.inProcess)
+
+  /** [[train]] with the rule that picks in-process rounds for a sample
+    * of the given row count (tests pin either path). */
+  private[graft] def trainWith(df: DataFrame, vecCol: String, m: Int,
+      ksub: Int, niter: Int, seed: Long, inProcess: Long => Boolean): PqModel = {
+    val maxTrain = 256 * ksub
+    val ordered = df.select(col(vecCol).as("vec")).filter(col("vec").isNotNull)
+      .withColumn("_h", xxhash64(col("vec"), lit(seed)))
+      .orderBy(col("_h")).limit(maxTrain).select("vec")
+    def checked(sample: Array[Array[Float]]): Int = {
+      require(sample.length >= ksub,
+        s"PQ training needs at least ksub = $ksub rows; got ${sample.length}")
+      val d = sample.head.length
+      require(d % m == 0, s"d=$d not divisible by M=$m")
+      d / m
+    }
+    if (inProcess(maxTrain)) {
+      val xs = shim.collectRows(ordered).map(_.getArray(0).toFloatArray())
+      val dsub = checked(xs)
+      val codebooks = Array.tabulate(m) { mi =>
+        val cb0 = Lloyd.flatten(xs.take(ksub), mi * dsub, dsub)
+        Lloyd.unflatten(Lloyd.train(xs, mi * dsub, dsub, cb0, niter), dsub)
+      }
+      PqModel(m, ksub, dsub, codebooks)
+    } else trainDistributed(ordered, m, ksub, niter, seed, checked)
+  }
+
+  private def trainDistributed(ordered: DataFrame, m: Int, ksub: Int,
+      niter: Int, seed: Long, checked: Array[Array[Float]] => Int): PqModel = {
     // repartition after the TakeOrdered limit: the limit's output is a
     // single partition, which would serialize every Lloyd iteration at
     // large ksub (256*4096 rows for an IMI2x12 coarse)
-    val maxTrain = 256 * ksub
-    val ordered = all.withColumn("_h", xxhash64(col("vec"), lit(seed)))
-      .orderBy(col("_h")).limit(maxTrain)
-    val vecs = ordered.select("vec")
+    val vecs = ordered
       .repartition(math.max(8,
-        df.sparkSession.sparkContext.defaultParallelism / 2)).cache()
+        ordered.sparkSession.sparkContext.defaultParallelism / 2)).cache()
 
-    // init: ksub deterministic sample rows; codebook[mi] = their mi-th
-    // subvectors (random-point init per subspace). Collected from the
-    // CACHED subsample by re-sorting on the recomputed row hash — the
-    // first ksub rows of the hash order are a prefix of the cached
-    // maxTrain-row TakeOrdered, so the set is identical to sampling
-    // the corpus directly, but this collect doubles as the cache
-    // materialization: the old shape paid the full corpus TakeOrdered
-    // TWICE (a `ordered.limit(ksub).collect()` init pass + the first
-    // iteration's cache build) plus a third `first()` job just for
-    // `d` (guide §2.4 — remove passes outright; for IVFPQ the removed
-    // pass was a full scan of the cached 600k-row residual table).
+    // init: collected from the CACHED subsample by re-sorting on the
+    // recomputed row hash — the first ksub rows of the hash order are a
+    // prefix of the cached maxTrain-row TakeOrdered, so the set is
+    // identical to sampling the corpus directly, but this collect
+    // doubles as the cache materialization (guide §2.4 — remove passes
+    // outright).
     val sample = vecs.withColumn("_h", xxhash64(col("vec"), lit(seed)))
       .orderBy(col("_h")).limit(ksub).select("vec").collect()
       .map(_.getSeq[Float](0).toArray)
-    require(sample.nonEmpty, "empty training set")
-    val d = sample.head.length
-    require(d % m == 0, s"d=$d not divisible by M=$m")
-    val dsub = d / m
+    val dsub = checked(sample)
     var codebooks: Array[Array[Array[Float]]] =
-      Array.tabulate(m)(mi => Array.tabulate(math.min(ksub, sample.length))(j =>
+      Array.tabulate(m)(mi => Array.tabulate(ksub)(j =>
         sample(j).slice(mi * dsub, (mi + 1) * dsub)))
 
     for (_ <- 0 until niter) {

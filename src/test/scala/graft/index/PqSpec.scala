@@ -118,4 +118,31 @@ class PqSpec extends SparkTestBase {
       .select("qid", "id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(tight.size <= openIds.length)
   }
+
+  test("PQ training rejects fewer rows than ksub; ksub within the row count trains and searches") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val base = (0 until 100).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat())))
+      .toDF("id", "vec")
+    val err = intercept[IllegalArgumentException] {
+      PqIndex.build(base, "id", "vec", m = 4, ksub = 256)
+    }
+    assert(err.getMessage.contains("ksub = 256") && err.getMessage.contains("got 100"),
+      err.getMessage)
+    // ksub 64 <= 100 rows: every ADC distance is the exact squared L2
+    // to the decoded code, so PQ search equals exact search over the
+    // reconstruction
+    val ix = PqIndex.build(base, "id", "vec", m = 4, ksub = 64)
+    assert(ix.model.codebooks.forall(_.length == 64))
+    val qs = base.filter(col("id") < 5).select(col("id").as("qid"), col("vec").as("qvec"))
+    def dists(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "rank", "dist").collect()
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val got = dists(ix.search(qs, 5))
+    val want = dists(Knn.knnJoin(qs, ix.reconstruct, 5))
+    assert(got.keySet == want.keySet && got.size == 25)
+    got.foreach { case (key, d) =>
+      assert(d >= 0 && math.abs(d - want(key)) < 1e-5, s"$key: $d vs ${want(key)}")
+    }
+  }
 }

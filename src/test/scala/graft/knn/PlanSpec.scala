@@ -279,18 +279,32 @@ class PlanSpec extends SparkTestBase {
           qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
     }
     spark0.listenerManager.register(listener)
-    try {
-      graft.cluster.KMeans.fit(vecs, "vec",
-        graft.cluster.KMeans.Params(k = 4, niter = 2, maxPointsPerCentroid = 100))
+    // the k-row init TakeOrdered is fine (k rows); a TakeOrdered over
+    // the SAMPLE (maxTrain rows through the driver) is the
+    // scale-killer — assert no job sorts more than the k init rows
+    def badPlans() = {
       // listener delivery is async; poll briefly for the last plans
       Thread.sleep(1500)
-      // the k-row init TakeOrdered is fine (k rows); a TakeOrdered over
-      // the SAMPLE (maxTrain rows through the driver) is the
-      // scale-killer — assert no job sorts more than the k init rows
       val bad = plans.filter(p =>
         p.contains("TakeOrderedAndProject") && !p.contains("limit=4,"))
       assert(bad.isEmpty,
         s"subsample planned a non-init TakeOrdered:\n${bad.headOption.getOrElse("")}")
+    }
+    try {
+      graft.cluster.KMeans.fit(vecs, "vec",
+        graft.cluster.KMeans.Params(k = 4, niter = 2, maxPointsPerCentroid = 100))
+      badPlans()
+      // a sample above the in-process bound (70 000 rows > 2^16) keeps
+      // the distributed rounds: still no sample-sized TakeOrdered, and
+      // the rounds run as assign + vec_sum aggregation jobs
+      plans.clear()
+      val big = spark0.range(70000).select(
+        transform(sequence(lit(0), lit(3)), i => ((col("id") * 7 + i) % 97).cast("float")).as("vec"))
+      graft.cluster.KMeans.fit(big, "vec",
+        graft.cluster.KMeans.Params(k = 4, niter = 2, maxPointsPerCentroid = 20000))
+      badPlans()
+      assert(plans.count(_.contains("vec_sum")) >= 2,
+        s"expected one distributed round per iteration:\n${plans.mkString("\n")}")
     } finally spark0.listenerManager.unregister(listener)
   }
 }
