@@ -3,26 +3,18 @@ package graft.cluster
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
-import graft.core.{Lloyd, NearestCentroid, ScopedConf, VecSumAgg}
+import graft.core.{Lloyd, NearestCentroid}
 
 /** FAISS-semantics Lloyd k-means (faiss/Clustering.cpp:271-560) as a
   * DataFrame fit.
   *
   * Like faiss, a fit first caps its training sample at
   * k × maxPointsPerCentroid rows (Clustering.cpp:93); one count of the
-  * input sizes it. A sample of at most [[graft.core.Lloyd.inProcess]]'s
-  * 2^16 rows is collected once and every round runs on the driver
-  * ([[graft.core.Lloyd]]: parallel assign, sequential double update).
-  * A larger sample stays in the cluster, one job per round:
-  *   1. assign: per-row argmin over the centroid table embedded in the
-  *      plan ([[graft.core.NearestCentroid]]) — no join, no shuffle of
-  *      the data;
-  *   2. update: groupBy(list_no) + [[graft.core.VecSumAgg]] (partial
-  *      map-side sums, shuffle k × d doubles), and only k×d sums reach
-  *      the driver.
-  * Both paths compute the same distances with the same tie rule, and
-  * share everything after the sums: centroid = sum/cnt, empty-cluster
-  * split, optional spherical renorm (Clustering.cpp:220-260, :65).
+  * input sizes it. The rounds run on the sample through
+  * [[graft.core.Lloyd]] as one group, on the backend its one rule
+  * picks for the sample size; this object keeps k-means' own policy:
+  * centroid = sum/cnt, empty-cluster split, optional spherical renorm
+  * and integer rounding (Clustering.cpp:220-260, :65), best of nredo.
   *
   * FAISS parity notes (SURVEY.md §7 "seeded-RNG parity" non-goal):
   * subsampling to k*max_points_per_centroid (Clustering.cpp:93) and
@@ -143,103 +135,48 @@ object KMeans {
       decoded: DataFrame => DataFrame, p: Params,
       init: Option[Array[Array[Float]]]): Model = {
     val redos = if (init.isDefined) 0 else p.nredo
-    // the sample, and per redo the indices of its first k rows in
-    // xxhash64(vec, seed + redo) order (collectInit's order); the
-    // collected rows are dropped here
-    def collect(t: DataFrame): (Array[Array[Float]], Seq[Array[Int]]) = {
+    // the sample, and per redo its rows' xxhash64(vec, seed + redo);
+    // the collected rows are dropped here
+    def collect(t: DataFrame): (Array[Array[Float]], Seq[Array[Long]]) = {
       val rows = shim.collectRows(decoded(t).select(col("vec") +:
         (0 until redos).map(r => xxhash64(col("vec"), lit(p.seed + r))): _*))
-      val firstK = (0 until redos).map(r =>
-        rows.indices.sortBy(i => rows(i).getLong(1 + r)).take(p.k).toArray)
-      (rows.map(_.getArray(0).toFloatArray()), firstK)
+      (rows.map(_.getArray(0).toFloatArray()), (0 until redos).map(r => rows.map(_.getLong(1 + r))))
     }
     val first = collect(sampled)
-    // the check the distributed path runs as a job (warm start) or
-    // folds into its init collect (cold start)
-    val (xs, firstK) = fallback.filter(_ => first._1.length < p.k).map(collect).getOrElse(first)
+    // the check the distributed path folds into its first init
+    val (xs, hashes) = fallback.filter(_ => first._1.length < p.k).map(collect).getOrElse(first)
     val assigned = new Array[Int](xs.length)
     def round(c: Array[Array[Float]]): Lloyd.Stats = {
       val cb = Lloyd.flatten(c)
       Lloyd.assign(xs, 0, c(0).length, cb, assigned)
       Lloyd.stats(xs, 0, c(0).length, cb, assigned)
     }
-    bestOf(p, redo => init.getOrElse(firstK(redo).map(xs)), round)
+    bestOf(p, redo => init.getOrElse(
+      Lloyd.firstInHashOrder(xs.indices.map(i => (0, hashes(redo)(i), xs(i))), Array(p.k))(0)), round)
   }
 
-  /** The sample stays cached in the cluster; each round is one
-    * assign + groupBy job and only k×d sums reach the driver. */
+  /** The sample stays cached as codes, decoded in every job's scan;
+    * each round is one job of [[graft.core.Lloyd.Distributed]]. */
   private def fitDistributed(sampled: DataFrame, fallback: Option[DataFrame],
       decoded: DataFrame => DataFrame, sampleRows: Long, p: Params,
       init: Option[Array[Array[Float]]]): Model = {
-    val spark = sampled.sparkSession
-    var train = sampled.cache()
+    var train = new Lloyd.Distributed(sampled, sampleRows)
+    def rows = decoded(train.cached).select(lit(0).as("_g"), col("vec").as("_v"))
+    val firsts = collection.mutable.Map.empty[Int, Array[Array[Float]]]
+    def initOf(redo: Int) = init.getOrElse(firsts.getOrElseUpdate(redo,
+      Lloyd.firstInHashOrder(rows, Array(p.k), p.seed + redo)(0)))
     try {
-      def fallBack(): Boolean = fallback.exists { f =>
-        train.unpersist(blocking = false)
-        train = f.cache()
-        true
+      // the fallback check: a cold start's first init doubles as it, a
+      // warm start (ProgressiveDimKMeans) pays one limit(k) job
+      val short = fallback.isDefined &&
+        (if (init.isDefined) rows.limit(p.k).count() < p.k else initOf(0).length < p.k)
+      if (short) {
+        train.close(); firsts.clear()
+        train = new Lloyd.Distributed(fallback.get, sampleRows)
       }
-      // A warm start (ProgressiveDimKMeans) skips the init collect the
-      // cold path folds the check into (one fewer corpus pass per fit,
-      // guide §2.4), so it pays one limit(k) job here (VERDICT r19 #5).
-      var fellBack = false
-      if (init.isDefined && fallback.isDefined && train.limit(p.k).count() < p.k)
-        fellBack = fallBack()
-      // The sample size is known HERE, before any iteration. Scope the
-      // Lloyd loop's shuffle width to it (r20, guide §2.2/§1.2): the
-      // per-iteration assign→VecSumAgg exchange otherwise runs
-      // cluster-width stages of near-empty tasks, with AQE adding a job
-      // per stage; at real nlist the derived count clamps to the session
-      // value and this is a no-op. Result risk is nil BY CONSTRUCTION of
-      // the oracle contract: DuckDB never trains — every consumer replays
-      // the engine-written trained-state sidecar, so both compare sides
-      // see the same centroids whatever the partial-sum order.
-      ScopedConf.tinyShuffle(spark, ScopedConf.tinyParts(spark, sampleRows)) { s =>
-        // lazy decoded view: every iteration re-reads the cached CODES
-        // and decodes in the scan — float vectors never persist
-        def vecs = decoded(shim.rebind(s, train))
-        def round(c: Array[Array[Float]]): Lloyd.Stats = {
-          val d = c(0).length
-          val stats = vecs.select(col("vec"),
-              shim.col(NearestCentroid(shim.expr(col("vec")), c, p.metric)).as("_a"))
-            .select(col("_a.list_no").as("list_no"), col("_a.dist").as("dist"), col("vec"))
-            .groupBy(col("list_no"))
-            .agg(shim.agg(VecSumAgg(shim.expr(col("vec")))).as("s"),
-              sum(col("dist")).as("obj"))
-            .collect()
-          val sums = new Array[Double](p.k * d)
-          val counts = new Array[Long](p.k)
-          var obj = 0.0
-          stats.foreach { r =>
-            val l = r.getInt(0)
-            val st = r.getStruct(1)
-            st.getSeq[Double](0).copyToArray(sums, l * d)
-            counts(l) = st.getLong(1)
-            obj += r.getDouble(2)
-          }
-          Lloyd.Stats(sums, counts, obj)
-        }
-        bestOf(p, redo => init.getOrElse {
-          val seed = p.seed + redo
-          var c = collectInit(vecs, seed, p.k)
-          if (c.length < p.k && !fellBack && fallBack()) {
-            fellBack = true
-            c = collectInit(vecs, seed, p.k)
-          }
-          c
-        }, round)
-      }
-    } finally { train.unpersist() }
+      bestOf(p, initOf, c => train.round(rows, Array(Lloyd.flatten(c)), c(0).length)(0))
+    } finally train.close()
   }
-
-  /** First k rows in deterministic hash order (rand_perm analog) —
-    * the init sample every fit draws when no warm start is given. */
-  private def collectInit(train: DataFrame, seed: Long,
-      k: Int): Array[Array[Float]] =
-    train.withColumn("_h", xxhash64(col("vec"), lit(seed)))
-      .orderBy(col("_h")).limit(k)
-      .select("vec").collect()
-      .map(_.getSeq[Float](0).toArray)
 
   /** Best-of-`nredo` ([[Params.nredo]]): the lowest final objective,
     * the earlier redo on a tie. */
@@ -259,13 +196,8 @@ object KMeans {
       round: Array[Array[Float]] => Lloyd.Stats): Model = {
     // init: warm-start centroids if given (ProgressiveDimClustering),
     // else the first k rows of the hash order
-    var centroids: Array[Array[Float]] = init
-    require(centroids.nonEmpty, "empty training set")
-    if (centroids.length < p.k) {
-      // fewer distinct points than k: pad by perturbing existing ones
-      centroids = Array.tabulate(p.k)(i => perturb(centroids(i % centroids.length), i))
-    }
-    centroids = centroids.map(c => postProcess(c, p))
+    require(init.nonEmpty, "empty training set")
+    var centroids = pad(init, p.k).map(c => postProcess(c, p))
 
     val objectives = Vector.newBuilder[Double]
     var lastObjective = 0.0
@@ -294,6 +226,10 @@ object KMeans {
     }
     Model(centroids, lastObjective, objectives.result(), sizes)
   }
+
+  /** Fewer distinct points than k: k perturbed copies cycling through `c`. */
+  private[cluster] def pad(c: Array[Array[Float]], k: Int): Array[Array[Float]] =
+    if (c.length >= k) c else Array.tabulate(k)(i => perturb(c(i % c.length), i))
 
   /** faiss split perturbation (Clustering.cpp:247-252): scale by
     * (1 ± EPS) with sign alternating on dim parity, EPS = 1/1024. */

@@ -7,9 +7,9 @@ import org.apache.spark.sql.graft.shim
   * under confs other than the caller's.
   *
   * Several operators train/iterate over inputs whose size is known
-  * exactly before the work starts (k-means' capped train sample when
-  * it is too large to train in-process, see [[graft.core.Lloyd]];
-  * nnDescent's candidate volume; the io-matrix's fixed 490-row slice).
+  * exactly before the work starts (Lloyd's Spark round, see
+  * [[graft.core.Lloyd.Distributed]]; nnDescent's candidate volume; the
+  * io-matrix's fixed 490-row slice).
   * When that volume sits far below the session's shuffle width, every
   * exchange runs as a cluster-width stage of near-empty tasks and AQE
   * materializes each stage as its own job — pure scheduling latency.

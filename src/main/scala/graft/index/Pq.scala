@@ -39,14 +39,11 @@ object Pq {
     * deterministic order keeps every memoized model reproducible, and
     * the ENCODE of the full set, the add-time work, is untouched).
     * Init: codebook[mi] = the mi-th subvectors of the first ksub sample
-    * rows. Each round assigns every subvector and moves each codeword
-    * to its mean; an empty codeword keeps its previous value.
-    *
-    * Every ksub ≤ 256 (all 8-bit and 4-bit PQ) has a sample within
-    * [[graft.core.Lloyd.inProcess]]'s bound: it is collected once and
-    * the rounds run on the driver ([[graft.core.Lloyd]]). Larger ksub
-    * (an IMI2x12 coarse) keeps joint distributed rounds: one assign +
-    * groupBy (m, code) + VecSumAgg for ALL subspaces per round.
+    * rows. The rounds run through [[graft.core.Lloyd]], the M subspaces
+    * as its groups: in-process for every ksub ≤ 256 (all 8-bit and
+    * 4-bit PQ), on Spark over the posexploded subspace slices of the
+    * cached sample for a larger ksub (an IMI2x12 coarse). An empty
+    * codeword keeps its previous value.
     *
     * Fewer than ksub training rows is an error, as in faiss's
     * Clustering::train: a codebook shorter than ksub would break the
@@ -71,64 +68,25 @@ object Pq {
       require(d % m == 0, s"d=$d not divisible by M=$m")
       d / m
     }
-    if (inProcess(maxTrain)) {
+    def init(sample: Array[Array[Float]], dsub: Int) =
+      Array.tabulate(m)(mi => Lloyd.flatten(sample.take(ksub), mi * dsub, dsub))
+    val (dsub, cbs) = if (inProcess(maxTrain)) {
       val xs = shim.collectRows(ordered).map(_.getArray(0).toFloatArray())
       val dsub = checked(xs)
-      val codebooks = Array.tabulate(m) { mi =>
-        val cb0 = Lloyd.flatten(xs.take(ksub), mi * dsub, dsub)
-        Lloyd.unflatten(Lloyd.train(xs, mi * dsub, dsub, cb0, niter), dsub)
-      }
-      PqModel(m, ksub, dsub, codebooks)
-    } else trainDistributed(ordered, m, ksub, niter, seed, checked)
-  }
-
-  private def trainDistributed(ordered: DataFrame, m: Int, ksub: Int,
-      niter: Int, seed: Long, checked: Array[Array[Float]] => Int): PqModel = {
-    // repartition after the TakeOrdered limit: the limit's output is a
-    // single partition, which would serialize every Lloyd iteration at
-    // large ksub (256*4096 rows for an IMI2x12 coarse)
-    val vecs = ordered
-      .repartition(math.max(8,
-        ordered.sparkSession.sparkContext.defaultParallelism / 2)).cache()
-
-    // init: collected from the CACHED subsample by re-sorting on the
-    // recomputed row hash — the first ksub rows of the hash order are a
-    // prefix of the cached maxTrain-row TakeOrdered, so the set is
-    // identical to sampling the corpus directly, but this collect
-    // doubles as the cache materialization (guide §2.4 — remove passes
-    // outright).
-    val sample = vecs.withColumn("_h", xxhash64(col("vec"), lit(seed)))
-      .orderBy(col("_h")).limit(ksub).select("vec").collect()
-      .map(_.getSeq[Float](0).toArray)
-    val dsub = checked(sample)
-    var codebooks: Array[Array[Array[Float]]] =
-      Array.tabulate(m)(mi => Array.tabulate(ksub)(j =>
-        sample(j).slice(mi * dsub, (mi + 1) * dsub)))
-
-    for (_ <- 0 until niter) {
-      // assign all M subspaces in one pass, then per-(m, code) means
-      val exploded = vecs.select(
-        posexplode(transform(sequence(lit(0), lit(m - 1)),
-          mi => slice(col("vec"), mi * dsub + 1, lit(dsub)))).as(Seq("_m", "_sub")))
-        .select(col("_m"),
-          shim.col(PQSubAssign(shim.expr(col("_m")), shim.expr(col("_sub")),
-            codebooks)).as("_j"),
-          col("_sub"))
-      val stats = exploded.groupBy(col("_m"), col("_j"))
-        .agg(shim.agg(VecSumAgg(shim.expr(col("_sub")))).as("s"))
-        .collect()
-      val next = Array.tabulate(m)(mi => codebooks(mi).map(_.clone()))
-      stats.foreach { r =>
-        val mi = r.getInt(0)
-        val j = r.getInt(1)
-        val s = r.getStruct(2)
-        val sums = s.getSeq[Double](0); val cnt = s.getLong(1)
-        if (cnt > 0) next(mi)(j) = sums.map(x => (x / cnt).toFloat).toArray
-      }
-      codebooks = next
+      (dsub, init(xs, dsub).zipWithIndex.map { case (cb0, mi) =>
+        Lloyd.train(xs, mi * dsub, dsub, cb0, niter) })
+    } else {
+      val train = new Lloyd.Distributed(ordered, maxTrain)
+      try {
+        val sample = Lloyd.firstInHashOrder(
+          train.cached.select(lit(0).as("_g"), col("vec").as("_v")), Array(ksub), seed)(0)
+        val dsub = checked(sample)
+        val subs = train.cached.select(posexplode(transform(sequence(lit(0), lit(m - 1)),
+          mi => slice(col("vec"), mi * dsub + 1, lit(dsub)))).as(Seq("_g", "_v")))
+        (dsub, train.train(subs, init(sample, dsub), dsub, niter))
+      } finally train.close()
     }
-    vecs.unpersist(blocking = false)
-    PqModel(m, ksub, dsub, codebooks)
+    PqModel(m, ksub, dsub, cbs.map(Lloyd.unflatten(_, dsub)))
   }
 }
 

@@ -139,10 +139,13 @@ class CodegenStrictSpec extends AnyFunSuite {
       shim.col(PQAdcFromLut(shim.expr(col("code")), shim.expr(col("lut")), 4)).as("adc"),
       shim.col(Pq4PackCodes(shim.expr(col("code")))).as("packed"),
       shim.col(Pq4QuantLut(shim.expr(col("a")), cb)).as("qlut"),
-      shim.col(PQSubAssign(shim.expr(lit(0)), shim.expr(slice(col("a"), 1, 2)), cb)).as("sa"))
+      shim.col(PQSubAssign(shim.expr(lit(0)), shim.expr(slice(col("a"), 1, 2)), cb)).as("sa"),
+      shim.col(LloydAssign(shim.expr(lit(0)), shim.expr(slice(col("a"), 1, 2)),
+        PqKernels.flatten(cb), 2)).as("la"))
       .collect()
     assert(out.length == 2)
     assert(out.head.getAs[Array[Byte]]("packed").length == 1)
+    assert(out.forall(r => r.getStruct(r.fieldIndex("la")).getInt(0) == r.getAs[Int]("sa")))
   }
 
   test("centroid probe expressions compile under CODEGEN_ONLY (r08 conversion)") {

@@ -3,13 +3,13 @@ package graft.misc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.cluster.KMeans
+import graft.cluster.{KMeans, TwoLevelClustering}
 import graft.index.Pq
 
 /** Training samples within the in-process bound run their Lloyd rounds
-  * on the driver (graft.core.Lloyd); larger ones keep the distributed
-  * rounds. Both paths must train the same model from the same sample,
-  * and the in-process one must not pay a Spark job per round. */
+  * on the driver (graft.core.Lloyd); larger ones run them on Lloyd's
+  * Spark backend. Both paths must train the same model from the same
+  * sample, and the in-process one must not pay a Spark job per round. */
 class InProcessTrainSpec extends SparkTestBase {
 
   private val inProcess: Long => Boolean = _ => true
@@ -67,6 +67,29 @@ class InProcessTrainSpec extends SparkTestBase {
     assert(train(inProcess) == train(distributed))
   }
 
+  test("two-level clustering: in-process == distributed rounds") {
+    val df = gridVecs(2000, 8, 7)
+    def fit(rule: Long => Boolean) =
+      TwoLevelClustering.fitWith(df, "vec", 12, 3, 4, 5L, rule).map(_.toSeq).toSeq
+    assert(fit(inProcess) == fit(distributed))
+  }
+
+  test("two-level clustering pads a cell with fewer rows than its share: nlist centroids") {
+    import spark.implicits._
+    // 3 blobs of 200 points and 2 far points: level 1 gives the far
+    // pair a cell of its own, 2 rows short of its share of 4
+    val rnd = new scala.util.Random(11)
+    val centers = Seq(Array(0f, 0f, 0f, 0f), Array(10f, 0f, 0f, 0f), Array(0f, 10f, 0f, 0f))
+    val pts = centers.flatMap(c => Seq.fill(200)(c.map(_ + rnd.nextFloat()))) ++
+      Seq.fill(2)(Array.fill(4)(1000f + rnd.nextFloat()))
+    val df = pts.map(Tuple1(_)).toDF("vec")
+    for (rule <- Seq(inProcess, distributed)) {
+      val cents = TwoLevelClustering.fitWith(df, "vec", 16, 5, 5, 1234L, rule)
+      assert(cents.length == 16)
+      assert(cents.count(_.forall(_ > 900f)) >= 2, "the far pair's cell keeps its codewords")
+    }
+  }
+
   test("Lloyd.nearest equals the plain double loop, ties to the lower index") {
     val rnd = new scala.util.Random(7)
     for (dsub <- Seq(1, 3, 4, 7, 8, 12); _ <- 0 until 50) {
@@ -92,5 +115,12 @@ class InProcessTrainSpec extends SparkTestBase {
     val (_, one) = jobsLaunchedBy(Pq.train(df, "vec", 4, 16, niter = 1))
     val (_, six) = jobsLaunchedBy(Pq.train(df, "vec", 4, 16, niter = 6))
     assert(one == six, s"niter 1: $one jobs, niter 6: $six jobs")
+  }
+
+  test("TwoLevelClustering.fit launches as many jobs at niter2 1 as at niter2 6") {
+    val df = gridVecs(2000, 8, 8)
+    val (_, one) = jobsLaunchedBy(TwoLevelClustering.fit(df, "vec", 16, niter2 = 1))
+    val (_, six) = jobsLaunchedBy(TwoLevelClustering.fit(df, "vec", 16, niter2 = 6))
+    assert(one == six, s"niter2 1: $one jobs, niter2 6: $six jobs")
   }
 }
