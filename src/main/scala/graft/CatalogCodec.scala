@@ -448,12 +448,12 @@ private[graft] trait CatalogCodec { this: QueriesBase =>
     ("transform_io_roundtrip", (s: SparkSession, dir: String) => {
       val mat = Array.tabulate(4, 64)((j, i) => if (((i >> j) & 1) == 0) 1f else -1f)
       val path = s"target/transform_io_${math.abs(dir.hashCode)}"
-      graft.io.IndexIO.saveTransform(s, graft.transform.Chain(
+      graft.io.Parts.transform.write(s, graft.transform.Chain(
         Seq(graft.transform.Linear(mat))), path)
       // unwrap to the raw matrix and apply via MatVec so the output
       // stays double (Linear.applyCol casts to float for chaining,
       // which would flip the compare schema to float32)
-      val lin = graft.io.IndexIO.loadTransform(s, path) match {
+      val lin = graft.io.Parts.transform.read(s, path) match {
         case l: graft.transform.Linear => l
         case graft.transform.Chain(Seq(l: graft.transform.Linear)) => l
         case other => throw new IllegalStateException(s"unexpected $other")
@@ -874,8 +874,8 @@ private[graft] trait CatalogCodec { this: QueriesBase =>
     // sidecar state).
     ("fastscan_io_roundtrip", (s: SparkSession, dir: String) => {
       val path = s"target/fastscan_io_${math.abs(dir.hashCode)}"
-      graft.io.IndexIO.saveRq4Fs(rqfsRs(s, dir), path)
-      graft.io.IndexIO.loadRq4Fs(s, path).search(qDf(s, dir, 10), 10)
+      graft.io.IndexIO.save(rqfsRs(s, dir), path)
+      graft.io.IndexIO.loadAs[graft.index.Rq4FastScanIndex](s, path).search(qDf(s, dir, 10), 10)
     },
       Some(rq4fsRescaleSql)),
 
@@ -1194,93 +1194,93 @@ private[graft] trait CatalogCodec { this: QueriesBase =>
           })
         }
         lazy val ivf = IvfIndex.build(base, "id", "vec", nlist = 8, niter = 2)
-        add("ivfflat", IvfIndex.save(ivf, _), sr(ivf.search(q, 5, nprobe = 8)),
+        add("ivfflat", IndexIO.save(ivf, _), sr(ivf.search(q, 5, nprobe = 8)),
           a => sr(a.asInstanceOf[IvfIndex].search(q, 5, nprobe = 8)))
         lazy val sq = SqIndex.build(base, "id", "vec")
-        add("sq", IndexIO.saveSq(sq, _), sr(sq.search(q, 5)),
+        add("sq", IndexIO.save(sq, _), sr(sq.search(q, 5)),
           a => sr(a.asInstanceOf[SqIndex].search(q, 5)))
         lazy val pq = PqIndex.build(base, "id", "vec", m = 8, ksub = 16, niter = 2)
-        add("pq", IndexIO.savePq(pq, _), sr(pq.search(q, 5)),
+        add("pq", IndexIO.save(pq, _), sr(pq.search(q, 5)),
           a => sr(a.asInstanceOf[PqIndex].search(q, 5)))
         lazy val ivfpq = IvfPqIndex.build(base, "id", "vec", nlist = 4, m = 8,
           ksub = 16, niterCoarse = 2, niterPq = 2)
-        add("ivfpq", IndexIO.saveIvfPq(ivfpq, _),
+        add("ivfpq", IndexIO.save(ivfpq, _),
           sr(ivfpq.search(q, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[IvfPqIndex].search(q, 5, nprobe = 4)))
         lazy val tl = TwoLayerIndex.build(base, "id", "vec", nlist = 4, m = 8,
           ksub = 16, niterCoarse = 2, niterPq = 2)
-        add("twolayer", IndexIO.saveTwoLayer(tl, _), tl.reconstruct,
+        add("twolayer", IndexIO.save(tl, _), tl.reconstruct,
           a => a.asInstanceOf[TwoLayerIndex].reconstruct)
         lazy val miq = MiqTwoLayerIndex.build(base, "id", "vec", mCoarse = 2,
           nbit = 4, m = 8, ksub = 16, niterCoarse = 2, niterPq = 2)
-        add("miq2layer", IndexIO.saveMiqTwoLayer(miq, _), miq.reconstruct,
+        add("miq2layer", IndexIO.save(miq, _), miq.reconstruct,
           a => a.asInstanceOf[MiqTwoLayerIndex].reconstruct)
         lazy val bivf = BinaryIvfIndex.buildFromVectors(base, "id", "vec",
           nlist = 4, niter = 2)
-        add("bivf", IndexIO.saveBinaryIvf(bivf, _),
+        add("bivf", IndexIO.save(bivf, _),
           sr(bivf.search(qc, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[BinaryIvfIndex].search(qc, 5, nprobe = 4)))
         lazy val imi = ImiIndex.build(base, "id", "vec", ksub = 4, niter = 2)
-        add("imi", IndexIO.saveImi(imi, _), sr(imi.search(q, 5, nprobe = 16)),
+        add("imi", IndexIO.save(imi, _), sr(imi.search(q, 5, nprobe = 16)),
           a => sr(a.asInstanceOf[ImiIndex].search(q, 5, nprobe = 16)))
         lazy val imipq = ImiPqIndex.build(base, "id", "vec", ksub = 4, m = 8,
           pqKsub = 16, niterCoarse = 2, niterPq = 2)
-        add("imipq", IndexIO.saveImiPq(imipq, _),
+        add("imipq", IndexIO.save(imipq, _),
           sr(imipq.search(q, 5, nprobe = 16)),
           a => sr(a.asInstanceOf[ImiPqIndex].search(q, 5, nprobe = 16)))
         lazy val sh = IvfSpectralHash.build(base, "id", "vec", nlist = 4,
           nbit = 16, period = 1.0, thresholdType = "global", niter = 2)
-        add("ivfsh", IndexIO.saveSpectralHash(sh, _),
+        add("ivfsh", IndexIO.save(sh, _),
           sr(sh.search(q, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[IvfSpectralHashIndex].search(q, 5, nprobe = 4)))
         lazy val pqfs = Pq4FastScanIndex.build(base, "id", "vec", m = 8, niter = 2)
-        add("pq4fs", IndexIO.savePq4Fs(pqfs, _), sr(pqfs.search(q, 5)),
+        add("pq4fs", IndexIO.save(pqfs, _), sr(pqfs.search(q, 5)),
           a => sr(a.asInstanceOf[Pq4FastScanIndex].search(q, 5)))
         lazy val ipqfs = IvfPq4FastScanIndex.build(base, "id", "vec", nlist = 4,
           m = 8, niterCoarse = 2, niterPq = 2)
-        add("ivfpq4fs", IndexIO.saveIvfPq4Fs(ipqfs, _),
+        add("ivfpq4fs", IndexIO.save(ipqfs, _),
           sr(ipqfs.search(q, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[IvfPq4FastScanIndex].search(q, 5, nprobe = 4)))
         lazy val ipqfsr = IvfPq4FastScanRIndex.build(base, "id", "vec", nlist = 4,
           m = 8, niterCoarse = 2, niterPq = 2)
-        add("ivfpq4fsr", IndexIO.saveIvfPq4FsR(ipqfsr, _),
+        add("ivfpq4fsr", IndexIO.save(ipqfsr, _),
           sr(ipqfsr.search(q, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[IvfPq4FastScanRIndex].search(q, 5, nprobe = 4)))
         lazy val rqfs = Rq4FastScanIndex.build(base, "id", "vec", levels = 2,
           niter = 2)
-        add("rq4fs", IndexIO.saveRq4Fs(rqfs, _), sr(rqfs.search(q, 5)),
+        add("rq4fs", IndexIO.save(rqfs, _), sr(rqfs.search(q, 5)),
           a => sr(a.asInstanceOf[Rq4FastScanIndex].search(q, 5)))
         lazy val irqfs = IvfRq4FastScanIndex.build(base, "id", "vec", nlist = 4,
           levels = 2, niterCoarse = 2, niter = 2)
-        add("ivfrq4fs", IndexIO.saveIvfRq4Fs(irqfs, _),
+        add("ivfrq4fs", IndexIO.save(irqfs, _),
           sr(irqfs.search(q, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[IvfRq4FastScanIndex].search(q, 5, nprobe = 4)))
         lazy val irqfsr = IvfRq4FastScanRIndex.build(base, "id", "vec", nlist = 4,
           levels = 2, niterCoarse = 2, niter = 2)
-        add("ivfrq4fsr", IndexIO.saveIvfRq4FsR(irqfsr, _),
+        add("ivfrq4fsr", IndexIO.save(irqfsr, _),
           sr(irqfsr.search(q, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[IvfRq4FastScanRIndex].search(q, 5, nprobe = 4)))
         lazy val ivfsq = IvfSqIndex.build(base, "id", "vec", nlist = 4, niter = 2,
           byResidual = true, qtype = "SQ8")
-        add("ivfsq", IndexIO.saveIvfSq(ivfsq, _),
+        add("ivfsq", IndexIO.save(ivfsq, _),
           sr(ivfsq.search(q, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[IvfSqIndex].search(q, 5, nprobe = 4)))
         lazy val ivfrq = IvfRq.build(base, "id", "vec", nlist = 4, levels = 2,
           k = 16, niterCoarse = 2, niterRq = 2)
-        add("ivfrq", IndexIO.saveIvfRq(ivfrq, _),
+        add("ivfrq", IndexIO.save(ivfrq, _),
           sr(ivfrq.search(q, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[IvfRqIndex].search(q, 5, nprobe = 4)))
         lazy val ivfrqn = new IvfRqNormIndex(ivfrq, ivfrq.codes, nonorm = true)
-        add("ivfrqnorm", IndexIO.saveIvfRqNorm(ivfrqn, _),
+        add("ivfrqnorm", IndexIO.save(ivfrqn, _),
           sr(ivfrqn.search(q, 5, nprobe = 4)),
           a => sr(a.asInstanceOf[IvfRqNormIndex].search(q, 5, nprobe = 4)))
-        add("bflat", IndexIO.saveBinaryFlat(bcodes, _), bcodes,
+        add("bflat", IndexIO.save(bcodes, _), bcodes,
           a => a.asInstanceOf[DataFrame])
         lazy val bh = BinaryHashIndex.build(bcodes, b = 6)
-        add("bhash", IndexIO.saveBinaryHash(bh, _), sr(bh.search(qc, 5)),
+        add("bhash", IndexIO.save(bh, _), sr(bh.search(qc, 5)),
           a => sr(a.asInstanceOf[BinaryHashIndex].search(qc, 5)))
         lazy val bmh = new BinaryMultiHashIndex(4, 8, bcodes)
-        add("bmultihash", IndexIO.saveBinaryMultiHash(bmh, _),
+        add("bmultihash", IndexIO.save(bmh, _),
           sr(bmh.search(qc, 5)),
           a => sr(a.asInstanceOf[BinaryMultiHashIndex].search(qc, 5)))
         // embeddings are d=64 (the znLat16 fixture's contract)
@@ -1289,18 +1289,18 @@ private[graft] trait CatalogCodec { this: QueriesBase =>
         lazy val th = Some(Array.tabulate(64)(i => 0.01 * (i % 5 - 2)))
         lazy val lsh = new LshIndex(rot, th, base.select(col("id"),
           LshIndex.signBits(rot, th, col("vec")).as("code")))
-        add("lsh", IndexIO.saveLsh(lsh, _), sr(lsh.search(q, 5)),
+        add("lsh", IndexIO.save(lsh, _), sr(lsh.search(q, 5)),
           a => sr(a.asInstanceOf[LshIndex].search(q, 5)))
         lazy val lat = Lattice.build(base, "id", "vec", nsq = 16, scaleNbit = 8,
           r2 = 10)
-        add("lattice", IndexIO.saveLattice(lat, _), lat.reconstruct,
+        add("lattice", IndexIO.save(lat, _), lat.reconstruct,
           a => a.asInstanceOf[LatticeIndex].reconstruct)
         lazy val mm = MinMaxCodec.buildIndex(base, "id", "vec", "SQ8",
           fp16Coeffs = false, niter = 2)
-        add("minmax", IndexIO.saveMinMax(mm, _), mm.reconstruct,
+        add("minmax", IndexIO.save(mm, _), mm.reconstruct,
           a => a.asInstanceOf[MinMaxIndex].reconstruct)
         lazy val rf = RefineFlatIndex.build(base, "id", "vec", kFactor = 3)
-        add("refineflat", IndexIO.saveRefineFlat(rf, _), sr(rf.search(q, 5)),
+        add("refineflat", IndexIO.save(rf, _), sr(rf.search(q, 5)),
           a => sr(a.asInstanceOf[RefineFlatIndex].search(q, 5)))
         base.count() // materialize the shared cache once, outside the pool
         // one thread per lifecycle (r19): the 26 chains are independent

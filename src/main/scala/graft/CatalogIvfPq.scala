@@ -899,8 +899,8 @@ private[graft] trait CatalogIvfPq { this: QueriesBase =>
     // fastscan_io_roundtrip convention).
     ("ivfsq_io_roundtrip", (s: SparkSession, dir: String) => {
       val path = s"target/ivfsq_io_${math.abs(dir.hashCode)}"
-      graft.io.IndexIO.saveIvfSq(ivfsqRes16(s, dir), path)
-      graft.io.IndexIO.loadIvfSq(s, path).search(qDf(s, dir, 10), 5, nprobe = 16)
+      graft.io.IndexIO.save(ivfsqRes16(s, dir), path)
+      graft.io.IndexIO.loadAs[graft.index.IvfSqIndex](s, path).search(qDf(s, dir, 10), 5, nprobe = 16)
         .withColumn("dist", r4("dist"))
     },
       Some(ivfsqResidualSql)),

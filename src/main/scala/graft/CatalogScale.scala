@@ -320,8 +320,8 @@ private[graft] trait CatalogScale { this: QueriesBase =>
     // asymmetry as distributed_ondisk_recipe (see Bench notes).
     ("fastscan_io_big", (s: SparkSession, dir: String) => {
       val path = s"target/fastscan_io_big_${math.abs(dir.hashCode)}"
-      graft.io.IndexIO.savePq4Fs(pqfsBig(s, dir), path)
-      graft.io.IndexIO.loadPq4Fs(s, path).search(bigQueries(s, dir), k = 10)
+      graft.io.IndexIO.save(pqfsBig(s, dir), path)
+      graft.io.IndexIO.loadAs[graft.index.Pq4FastScanIndex](s, path).search(bigQueries(s, dir), k = 10)
     },
       Some(pq4fsBigSql)),
 

@@ -12,16 +12,18 @@ import org.apache.spark.sql.functions.col
   * encoding, table lookups, distance sums), so agreement verifies the
   * pipeline, not just the dump.
   *
-  * The path is a fixed absolute location because the oracle SQL is a
-  * static string with no directory parameter; the driver's correctness
-  * gate always runs at sf0.01 (TESTDATA.md), and Verify writes the
-  * sidecars for whatever sf directory it is invoked with, keyed by the
-  * directory's basename so concurrent sf runs never clobber each
-  * other.
+  * The root is `target/oracle_aux` under the working directory, made
+  * absolute because the oracle SQL is a static string with no
+  * directory parameter: each checkout that runs Verify writes, and its
+  * oracle SQL reads, its own sidecars. The correctness gate always
+  * runs at sf0.01 (TESTDATA.md); Verify writes the sidecars for
+  * whatever sf directory it is invoked with, keyed by the directory's
+  * basename so concurrent sf runs never clobber each other, and
+  * `tools/localverify.py` points the SQL at the right one.
   */
 object OracleAux {
 
-  val Root = "/root/repo/target/oracle_aux"
+  val Root: String = new java.io.File("target/oracle_aux").getAbsolutePath
 
   def dir(sfDir: String): String =
     s"$Root/${new java.io.File(sfDir).getName}"

@@ -1,13 +1,11 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 import graft.core.{Metric, TopKAgg}
 import graft.cluster.KMeans
 import graft.functions.{topk, vec_dist}
-import graft.io.JsonSidecar
-import graft.io.JsonSidecar.SidecarWriter
 
 /** IVF (inverted-file) index: the reference's scale path
   * (faiss/IndexIVF.cpp) re-expressed as a list_no-partitioned
@@ -348,7 +346,8 @@ class IvfIndex(
     new IvfIndex(d, metric, nlist, centroids,
       invlists.join(broadcast(ids), Seq("id"), "left_anti"))
 
-  def save(path: String): Unit = IvfIndex.save(this, path)
+  /** Kept as a named entry point: `vecbench` calls it by name. */
+  def save(path: String): Unit = graft.io.IndexIO.save(this, path)
 }
 
 object IvfIndex {
@@ -387,8 +386,9 @@ object IvfIndex {
     * worker populates its own invlists against the common centroids;
     * the merge is a write, never a recluster). The store is a FULL
     * save (invlists + meta sidecar), so a later session reopens it
-    * with [[load]]; the returned index reads from disk, so searches
-    * partition-prune the merged store exactly like any loaded one. */
+    * with [[graft.io.IndexIO.load]]; the returned index reads from
+    * disk, so searches partition-prune the merged store exactly like
+    * any loaded one. */
   def mergeOnDisk(indexes: Seq[IvfIndex], path: String): IvfIndex = {
     require(indexes.nonEmpty, "no indexes to merge")
     val h = indexes.head
@@ -401,42 +401,8 @@ object IvfIndex {
         "merge_ondisk requires IDENTICAL centroids (one shared quantizer)")
     }
     val spark = h.invlists.sparkSession
-    save(new IvfIndex(h.d, h.metric, h.nlist, h.centroids,
+    graft.io.IndexIO.save(new IvfIndex(h.d, h.metric, h.nlist, h.centroids,
       indexes.map(_.invlists).reduce(_ unionByName _)), path)
-    load(spark, path)
-  }
-
-  /** Persist as list_no-partitioned parquet + a one-row-per-centroid
-    * JSON sidecar (read_index/write_index analog,
-    * faiss/impl/index_write.cpp — format is parquet+JSON, not the
-    * fourcc binary). */
-  def save(idx: IvfIndex, path: String): Unit = {
-    val spark = idx.invlists.sparkSession
-    idx.invlists
-      .repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no")
-      .parquet(s"$path/invlists")
-    import spark.implicits._
-    idx.centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq, idx.d, idx.metric, idx.nlist) }
-      .toDF("list_no", "centroid", "d", "metric", "nlist")
-      .writeSidecar(s"$path/meta")
-    graft.io.IndexIO.saveKind(spark, path, "ivfflat")
-  }
-
-  def load(spark: SparkSession, path: String): IvfIndex = {
-    val meta = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("list_no").cast("int"),
-        col("centroid").cast("array<float>"),
-        col("d").cast("int"), col("metric"), col("nlist").cast("int"))
-      .collect()
-    val d = meta.head.getInt(2)
-    val metric = meta.head.getString(3)
-    val nlist = meta.head.getInt(4)
-    val centroids = new Array[Array[Float]](nlist)
-    meta.foreach { r => centroids(r.getInt(0)) = r.getSeq[Float](1).toArray }
-    val invlists = spark.read.parquet(s"$path/invlists")
-      .select(col("id"), col("vec"), col("list_no").cast("int"))
-    new IvfIndex(d, metric, nlist, centroids, invlists)
+    graft.io.IndexIO.loadAs[IvfIndex](spark, path)
   }
 }

@@ -1,17 +1,50 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.reflect.{ClassTag, classTag}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import graft.index._
-import graft.io.JsonSidecar.SidecarWriter
-import graft.transform._
 
-/** read_index/write_index analogs for the remaining index families and
-  * trained transforms (faiss/index_io.h:38-71,
-  * faiss/impl/index_write.cpp / index_read.cpp): parquet for row data,
-  * a small JSON dataset for trained parameters. Layout:
-  *   <path>/codes|invlists/  — parquet (partitioned where meaningful)
-  *   <path>/meta/            — one-row-per-parameter JSON
+/** read_index/write_index analogs (faiss/index_io.h:38-71,
+  * faiss/impl/index_write.cpp / index_read.cpp) for every persistable
+  * family, driven by the codec table [[IndexCodecs.all]]: each family
+  * declares its parquet frames and its trained-state sidecars (JSON
+  * datasets written on the driver by [[JsonSidecar]]) once, and
+  * [[save]], [[load]], [[loadAs]] and [[reverseFactory]] work from that
+  * declaration. `<path>/kind` holds the family tag (the fourcc analog);
+  * a save removes it first and stamps it last.
+  *
+  * Layout per kind: frames (partition column), then sidecars.
+  * {{{
+  * ivfflat    invlists (list_no)      meta = centroids + d, metric, nlist
+  * sq         codes                   meta = SQ range; qtype
+  * pq         codes                   meta = PQ codebooks
+  * ivfpq      codes (list_no)         centroids; codebooks = PQ
+  * twolayer   codes                   centroids; codebooks = PQ
+  * bivf       invlists (list_no)      meta = centroid bits + nlist
+  * imi        invlists (cell)         meta = PQ (the 2 half-space codebooks)
+  * imipq      codes (cell)            coarse = PQ; codebooks = PQ
+  * miq2layer  codes                   coarse = PQ; codebooks = PQ
+  * ivfsh      codes (list_no)         centroids + nlist, nbit, period; thresholds; vt = transform
+  * pq4fs      codes                   meta = PQ codebooks
+  * ivfpq4fs   codes (list_no)         centroids; codebooks = PQ
+  * ivfpq4fsr  codes (list_no)         centroids; codebooks = PQ
+  * rq4fs      codes                   codebooks = RQ; normcb; meta = norm_scale
+  * ivfrq4fs   codes (list_no)         centroids; codebooks = RQ; normcb; meta = by_residual false
+  * ivfrq4fsr  codes (list_no)         centroids; codebooks = RQ; normcb; meta = by_residual true
+  * ivfsq      codes (list_no)         centroids; range = SQ range; meta = qtype, by_residual
+  * ivfrq      codes (list_no)         centroids; codebooks = RQ
+  * ivfrqnorm  codes (list_no)         centroids; codebooks = RQ; meta = nonorm
+  * bflat      codes                   meta = code_size
+  * bhash      codes (bucket)          meta = b
+  * bmultihash codes                   meta = nhash, b
+  * lsh        codes                   rot = transform?; thresholds?; meta = rotate_data, train_thresholds
+  * lattice    codes                   meta = per-subvector range + d, nsq, scale_nbit, r2
+  * minmax     codes                   meta = inner, fp16_coeffs; range = SQ range?; codebooks = PQ?
+  * refineflat base                    inner = a saved sq index; meta = k_factor, metric
+  * }}}
+  * `?` marks a sidecar written only when the index holds that state.
+  * A partitioned frame keeps static partition pruning after a reload.
   *
   * Graph-shard policy (the HNSW/NSG/NNDescent partition shards,
   * [[graft.knn.PartitionedHnsw]]/[[graft.knn.PartitionedNsg]]): the
@@ -19,7 +52,7 @@ import graft.transform._
   * physical accelerators built inside mapPartitions over whatever
   * partitioning the stored table has — the persistable state is the
   * stored table itself (raw vectors, or SQ/PQ codes + their trained
-  * codec, each with its own save/load here). The reference serializes
+  * codec, each with its own codec here). The reference serializes
   * its graph because a single-node graph build is the expensive step
   * it cannot parallelize (index_write.cpp write_HNSW); here the
   * rebuild is an embarrassingly parallel per-partition pass over
@@ -34,816 +67,13 @@ import graft.transform._
   */
 object IndexIO {
 
-  // ---- SQ -------------------------------------------------------------
-  def saveSq(idx: SqIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.write.mode("overwrite").parquet(s"$path/codes")
-    idx.vmin.indices.map(i => (i, idx.vmin(i), idx.vdiff(i))).toDF("dim", "vmin", "vdiff")
-      .writeSidecar(s"$path/meta")
-    // qtype in its own sidecar: fp16 has NO range rows, so the codec
-    // width cannot be inferred from meta
-    Seq(idx.qtype).toDF("qtype")
-      .writeSidecar(s"$path/qtype")
-    saveKind(spark, path, "sq")
-  }
+  /** write_index: persist any family's index (a bare codes DataFrame is
+    * a binary flat index). */
+  def save(index: Any, path: String): Unit =
+    IndexCodecs.byClass(index.getClass).asInstanceOf[Codec[Any]].write(index, path)
 
-  def loadSq(spark: SparkSession, path: String): SqIndex = {
-    // fp16 indexes have no trained range -> meta is an empty dataset
-    // (no inferable schema)
-    val meta =
-      try JsonSidecar.read(spark, s"$path/meta")
-        .select(col("dim").cast("int"), col("vmin").cast("double"),
-          col("vdiff").cast("double")).collect()
-      catch { case _: org.apache.spark.sql.AnalysisException => Array.empty[org.apache.spark.sql.Row] }
-    val d = meta.length
-    val vmin = new Array[Double](d); val vdiff = new Array[Double](d)
-    meta.foreach { r =>
-      vmin(r.getInt(0)) = r.getDouble(1); vdiff(r.getInt(0)) = r.getDouble(2)
-    }
-    // pre-r7 saves have no qtype sidecar -> SQ8
-    val qtype =
-      try JsonSidecar.read(spark, s"$path/qtype").select(col("qtype")).first().getString(0)
-      catch { case _: Throwable => "SQ8" }
-    new SqIndex(vmin, vdiff, spark.read.parquet(s"$path/codes"), qtype)
-  }
-
-  // ---- PQ -------------------------------------------------------------
-  def savePq(idx: PqIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.write.mode("overwrite").parquet(s"$path/codes")
-    val m = idx.model
-    val rows = for (mi <- 0 until m.m; j <- 0 until m.codebooks(mi).length)
-      yield (mi, j, m.codebooks(mi)(j).toSeq, m.ksub, m.dsub)
-    rows.toDF("m", "j", "centroid", "ksub", "dsub")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "pq")
-  }
-
-  def loadPq(spark: SparkSession, path: String): PqIndex = {
-    val meta = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("m").cast("int"), col("j").cast("int"),
-        col("centroid").cast("array<float>"),
-        col("ksub").cast("int"), col("dsub").cast("int")).collect()
-    val mCount = meta.map(_.getInt(0)).max + 1
-    val ksub = meta.head.getInt(3); val dsub = meta.head.getInt(4)
-    val cb = Array.ofDim[Array[Float]](mCount, ksub)
-    meta.foreach { r => cb(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray }
-    new PqIndex(PqModel(mCount, ksub, dsub, cb), spark.read.parquet(s"$path/codes"))
-  }
-
-  // ---- IVFPQ ----------------------------------------------------------
-  // (write/read of IndexIVFPQ, faiss/impl/index_write.cpp: coarse
-  // centroids + PQ codebooks + per-list codes). Codes are list_no-
-  // partitioned like IvfIndex.save so the loaded index keeps static
-  // partition pruning.
-  def saveIvfPq(idx: IvfPqIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no").parquet(s"$path/codes")
-    saveKind(spark, path, "ivfpq")
-    idx.centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq, idx.nlist) }
-      .toDF("list_no", "centroid", "nlist")
-      .writeSidecar(s"$path/centroids")
-    val m = idx.model
-    (for (mi <- 0 until m.m; j <- m.codebooks(mi).indices)
-      yield (mi, j, m.codebooks(mi)(j).toSeq, m.ksub, m.dsub))
-      .toDF("m", "j", "centroid", "ksub", "dsub")
-      .writeSidecar(s"$path/codebooks")
-  }
-
-  def loadIvfPq(spark: SparkSession, path: String): IvfPqIndex = {
-    val cents = JsonSidecar.read(spark, s"$path/centroids")
-      .select(col("list_no").cast("int"), col("centroid").cast("array<float>"),
-        col("nlist").cast("int")).collect()
-    val nlist = cents.head.getInt(2)
-    val centroids = new Array[Array[Float]](nlist)
-    cents.foreach { r => centroids(r.getInt(0)) = r.getSeq[Float](1).toArray }
-    val cb = JsonSidecar.read(spark, s"$path/codebooks")
-      .select(col("m").cast("int"), col("j").cast("int"),
-        col("centroid").cast("array<float>"),
-        col("ksub").cast("int"), col("dsub").cast("int")).collect()
-    val mCount = cb.map(_.getInt(0)).max + 1
-    val ksub = cb.head.getInt(3); val dsub = cb.head.getInt(4)
-    val books = Array.ofDim[Array[Float]](mCount, ksub)
-    cb.foreach { r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray }
-    val codes = spark.read.parquet(s"$path/codes")
-      .select(col("id"), col("list_no").cast("int"), col("code"))
-    new IvfPqIndex(nlist, centroids, PqModel(mCount, ksub, dsub, books), codes)
-  }
-
-  // ---- Index2Layer -----------------------------------------------------
-  // Same trained state as IVFPQ but sequential (unpartitioned) codes —
-  // the class's defining property (faiss/Index2Layer.h:29).
-  def saveTwoLayer(idx: TwoLayerIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.write.mode("overwrite").parquet(s"$path/codes")
-    saveKind(spark, path, "twolayer")
-    idx.centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq, idx.nlist) }
-      .toDF("list_no", "centroid", "nlist")
-      .writeSidecar(s"$path/centroids")
-    val m = idx.model
-    (for (mi <- 0 until m.m; j <- m.codebooks(mi).indices)
-      yield (mi, j, m.codebooks(mi)(j).toSeq, m.ksub, m.dsub))
-      .toDF("m", "j", "centroid", "ksub", "dsub")
-      .writeSidecar(s"$path/codebooks")
-  }
-
-  def loadTwoLayer(spark: SparkSession, path: String): TwoLayerIndex = {
-    val cents = JsonSidecar.read(spark, s"$path/centroids")
-      .select(col("list_no").cast("int"), col("centroid").cast("array<float>"),
-        col("nlist").cast("int")).collect()
-    val nlist = cents.head.getInt(2)
-    val centroids = new Array[Array[Float]](nlist)
-    cents.foreach { r => centroids(r.getInt(0)) = r.getSeq[Float](1).toArray }
-    val cb = JsonSidecar.read(spark, s"$path/codebooks")
-      .select(col("m").cast("int"), col("j").cast("int"),
-        col("centroid").cast("array<float>"),
-        col("ksub").cast("int"), col("dsub").cast("int")).collect()
-    val mCount = cb.map(_.getInt(0)).max + 1
-    val ksub = cb.head.getInt(3); val dsub = cb.head.getInt(4)
-    val books = Array.ofDim[Array[Float]](mCount, ksub)
-    cb.foreach { r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray }
-    val codes = spark.read.parquet(s"$path/codes")
-      .select(col("id"), col("list_no").cast("int"), col("code"))
-    new TwoLayerIndex(nlist, centroids, PqModel(mCount, ksub, dsub, books), codes)
-  }
-
-  // ---- Binary IVF ------------------------------------------------------
-  def saveBinaryIvf(idx: BinaryIvfIndex, path: String): Unit = {
-    val spark = idx.invlists.sparkSession
-    import spark.implicits._
-    idx.invlists.repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no").parquet(s"$path/invlists")
-    idx.centroidBits.zipWithIndex.toSeq
-      .map { case (bits, l) => (l, bits.toSeq, idx.nlist) }
-      .toDF("list_no", "bits", "nlist")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "bivf")
-  }
-
-  def loadBinaryIvf(spark: SparkSession, path: String): BinaryIvfIndex = {
-    val meta = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("list_no").cast("int"), col("bits").cast("array<int>"),
-        col("nlist").cast("int")).collect()
-    val nlist = meta.head.getInt(2)
-    val bits = new Array[Array[Int]](nlist)
-    meta.foreach { r => bits(r.getInt(0)) = r.getSeq[Int](1).toArray }
-    new BinaryIvfIndex(nlist, bits,
-      spark.read.parquet(s"$path/invlists")
-        .select(col("id"), col("code"), col("list_no").cast("int")))
-  }
-
-  // ---- IMI -------------------------------------------------------------
-  def saveImi(idx: ImiIndex, path: String): Unit = {
-    val spark = idx.invlists.sparkSession
-    import spark.implicits._
-    idx.invlists.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/invlists")
-    saveKind(spark, path, "imi")
-    val m = idx.model
-    (for (mi <- 0 until m.m; j <- m.codebooks(mi).indices)
-      yield (mi, j, m.codebooks(mi)(j).toSeq, m.ksub, m.dsub))
-      .toDF("m", "j", "centroid", "ksub", "dsub")
-      .writeSidecar(s"$path/meta")
-  }
-
-  def loadImi(spark: SparkSession, path: String): ImiIndex = {
-    val cb = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("m").cast("int"), col("j").cast("int"),
-        col("centroid").cast("array<float>"),
-        col("ksub").cast("int"), col("dsub").cast("int")).collect()
-    val mCount = cb.map(_.getInt(0)).max + 1
-    val ksub = cb.head.getInt(3); val dsub = cb.head.getInt(4)
-    val books = Array.ofDim[Array[Float]](mCount, ksub)
-    cb.foreach { r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray }
-    new ImiIndex(ksub, PqModel(mCount, ksub, dsub, books),
-      spark.read.parquet(s"$path/invlists")
-        .select(col("id"), col("vec"), col("cell").cast("int")))
-  }
-
-  // ---- IMI + PQ (IMI2x<b>,PQ<m> — write_index of the SIFT1B flagship
-  // composition): cell-partitioned residual codes + the two trained
-  // models (2-subspace coarse + residual PQ), both as json sidecars.
-  private def pqModelDf(spark: SparkSession, m: PqModel) = {
-    import spark.implicits._
-    (for (mi <- 0 until m.m; j <- m.codebooks(mi).indices)
-      yield (mi, j, m.codebooks(mi)(j).toSeq, m.ksub, m.dsub))
-      .toDF("m", "j", "centroid", "ksub", "dsub")
-  }
-
-  private def readPqModel(spark: SparkSession, path: String): PqModel = {
-    val cb = JsonSidecar.read(spark, path)
-      .select(col("m").cast("int"), col("j").cast("int"),
-        col("centroid").cast("array<float>"),
-        col("ksub").cast("int"), col("dsub").cast("int")).collect()
-    val mCount = cb.map(_.getInt(0)).max + 1
-    val ksub = cb.head.getInt(3); val dsub = cb.head.getInt(4)
-    val books = Array.ofDim[Array[Float]](mCount, ksub)
-    cb.foreach { r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray }
-    PqModel(mCount, ksub, dsub, books)
-  }
-
-  def saveImiPq(idx: ImiPqIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    idx.codes.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    saveKind(spark, path, "imipq")
-    pqModelDf(spark, idx.coarse)
-      .writeSidecar(s"$path/coarse")
-    pqModelDf(spark, idx.model)
-      .writeSidecar(s"$path/codebooks")
-  }
-
-  def loadImiPq(spark: SparkSession, path: String): ImiPqIndex = {
-    val coarse = readPqModel(spark, s"$path/coarse")
-    new ImiPqIndex(coarse.ksub, coarse,
-      readPqModel(spark, s"$path/codebooks"),
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("cell").cast("int"), col("code")))
-  }
-
-  // ---- MIQ-coarse Index2Layer (Residual<M>x<nbit>,PQ<m>) --------------
-  def saveMiqTwoLayer(idx: MiqTwoLayerIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    idx.codes.write.mode("overwrite").parquet(s"$path/codes")
-    saveKind(spark, path, "miq2layer")
-    pqModelDf(spark, idx.coarse)
-      .writeSidecar(s"$path/coarse")
-    pqModelDf(spark, idx.model)
-      .writeSidecar(s"$path/codebooks")
-  }
-
-  def loadMiqTwoLayer(spark: SparkSession, path: String): MiqTwoLayerIndex = {
-    val coarse = readPqModel(spark, s"$path/coarse")
-    new MiqTwoLayerIndex(coarse.m, coarse.ksub, coarse,
-      readPqModel(spark, s"$path/codebooks"),
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("cell").cast("long"), col("code")))
-  }
-
-  // ---- IVF spectral hash ----------------------------------------------
-  def saveSpectralHash(idx: IvfSpectralHashIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no").parquet(s"$path/codes")
-    idx.centroids.zipWithIndex.toSeq
-      .map { case (c, l) => (l, c.toSeq, idx.nlist, idx.nbit, idx.period) }
-      .toDF("list_no", "centroid", "nlist", "nbit", "period")
-      .writeSidecar(s"$path/centroids")
-    idx.thresholds.zipWithIndex.toSeq
-      .map { case (t, l) => (l, t.toSeq) }.toDF("list_no", "thresh")
-      .writeSidecar(s"$path/thresholds")
-    saveTransform(spark, idx.vt, s"$path/vt")
-    saveKind(spark, path, "ivfsh")
-  }
-
-  def loadSpectralHash(spark: SparkSession, path: String): IvfSpectralHashIndex = {
-    val cents = JsonSidecar.read(spark, s"$path/centroids")
-      .select(col("list_no").cast("int"), col("centroid").cast("array<float>"),
-        col("nlist").cast("int"), col("nbit").cast("int"),
-        col("period").cast("double")).collect()
-    val nlist = cents.head.getInt(2)
-    val nbit = cents.head.getInt(3)
-    val period = cents.head.getDouble(4)
-    val centroids = new Array[Array[Float]](nlist)
-    cents.foreach { r => centroids(r.getInt(0)) = r.getSeq[Float](1).toArray }
-    val th = JsonSidecar.read(spark, s"$path/thresholds")
-      .select(col("list_no").cast("int"), col("thresh").cast("array<float>"))
-      .collect()
-    val thresholds = new Array[Array[Float]](nlist)
-    th.foreach { r => thresholds(r.getInt(0)) = r.getSeq[Float](1).toArray }
-    val vt = loadTransform(spark, s"$path/vt").asInstanceOf[Linear]
-    new IvfSpectralHashIndex(nlist, nbit, period, centroids, vt, thresholds,
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("list_no").cast("int"), col("sig")))
-  }
-
-  // ---- RQ (trained model) ----------------------------------------------
-  def saveRq(spark: SparkSession, model: RqModel, path: String): Unit = {
-    import spark.implicits._
-    (for (l <- 0 until model.levels; j <- model.codebooks(l).indices)
-      yield (l, j, model.codebooks(l)(j).toSeq, model.k))
-      .toDF("level", "j", "centroid", "k")
-      .writeSidecar(path)
-  }
-
-  def loadRq(spark: SparkSession, path: String): RqModel = {
-    val rows = JsonSidecar.read(spark, path)
-      .select(col("level").cast("int"), col("j").cast("int"),
-        col("centroid").cast("array<float>"), col("k").cast("int")).collect()
-    val levels = rows.map(_.getInt(0)).max + 1
-    val k = rows.head.getInt(3)
-    val cb = Array.ofDim[Array[Float]](levels, k)
-    rows.foreach { r => cb(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray }
-    RqModel(levels, k, cb)
-  }
-
-  // ---- Fast-scan families ----------------------------------------------
-  // (write_index of IndexPQFastScan / IndexIVFPQFastScan /
-  // IndexAdditiveQuantizerFastScan, faiss/impl/index_write.cpp — codes
-  // stay nibble-packed on disk, half the width of the plain PQ/RQ
-  // saves; the AQ family persists its norm codebooks AND the trained
-  // norm_scale, which a retrain would re-estimate differently.)
-  def savePq4Fs(idx: Pq4FastScanIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.write.mode("overwrite").parquet(s"$path/codes")
-    saveKind(spark, path, "pq4fs")
-    val m = idx.model
-    (for (mi <- 0 until m.m; j <- m.codebooks(mi).indices)
-      yield (mi, j, m.codebooks(mi)(j).toSeq, m.ksub, m.dsub))
-      .toDF("m", "j", "centroid", "ksub", "dsub")
-      .writeSidecar(s"$path/meta")
-  }
-
-  def loadPq4Fs(spark: SparkSession, path: String): Pq4FastScanIndex =
-    new Pq4FastScanIndex(readPqModel(spark, s"$path/meta"),
-      spark.read.parquet(s"$path/codes"))
-
-  def saveIvfPq4Fs(idx: IvfPq4FastScanIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    // list_no-partitioned like IvfIndex.save: the loaded index keeps
-    // static partition pruning on the probed lists
-    idx.codes.repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no").parquet(s"$path/codes")
-    idx.centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq, idx.nlist) }
-      .toDF("list_no", "centroid", "nlist")
-      .writeSidecar(s"$path/centroids")
-    val m = idx.model
-    (for (mi <- 0 until m.m; j <- m.codebooks(mi).indices)
-      yield (mi, j, m.codebooks(mi)(j).toSeq, m.ksub, m.dsub))
-      .toDF("m", "j", "centroid", "ksub", "dsub")
-      .writeSidecar(s"$path/codebooks")
-    saveKind(spark, path, "ivfpq4fs")
-  }
-
-  def loadIvfPq4Fs(spark: SparkSession, path: String): IvfPq4FastScanIndex = {
-    val cents = JsonSidecar.read(spark, s"$path/centroids")
-      .select(col("list_no").cast("int"), col("centroid").cast("array<float>"),
-        col("nlist").cast("int")).collect()
-    val nlist = cents.head.getInt(2)
-    val centroids = new Array[Array[Float]](nlist)
-    cents.foreach { r => centroids(r.getInt(0)) = r.getSeq[Float](1).toArray }
-    val codes = spark.read.parquet(s"$path/codes")
-      .select(col("id"), col("list_no").cast("int"), col("code"))
-    new IvfPq4FastScanIndex(nlist, centroids,
-      readPqModel(spark, s"$path/codebooks"), codes)
-  }
-
-  def saveRq4Fs(idx: Rq4FastScanIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.write.mode("overwrite").parquet(s"$path/codes")
-    saveRq(spark, idx.model, s"$path/codebooks")
-    saveNormCb(spark, idx.normCb, s"$path/normcb")
-    Seq(idx.normScale).toDF("norm_scale")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "rq4fs")
-  }
-
-  def loadRq4Fs(spark: SparkSession, path: String): Rq4FastScanIndex = {
-    val ns = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("norm_scale").cast("int")).first().getInt(0)
-    new Rq4FastScanIndex(loadRq(spark, s"$path/codebooks"),
-      readNormCb(spark, s"$path/normcb"),
-      spark.read.parquet(s"$path/codes"), ns)
-  }
-
-  private def saveNormCb(spark: SparkSession,
-      normCb: Array[Array[Double]], path: String): Unit = {
-    import spark.implicits._
-    (for (l <- normCb.indices; j <- normCb(l).indices)
-      yield (l, j, normCb(l)(j)))
-      .toDF("l", "j", "c")
-      .writeSidecar(path)
-  }
-
-  private def readNormCb(spark: SparkSession, path: String): Array[Array[Double]] = {
-    val rows = JsonSidecar.read(spark, path)
-      .select(col("l").cast("int"), col("j").cast("int"),
-        col("c").cast("double")).collect()
-    val nlev = rows.map(_.getInt(0)).max + 1
-    val ncb = Array.ofDim[Double](nlev, 16)
-    rows.foreach { r => ncb(r.getInt(0))(r.getInt(1)) = r.getDouble(2) }
-    ncb
-  }
-
-  private def saveCentroids(spark: SparkSession,
-      centroids: Array[Array[Float]], path: String): Unit = {
-    import spark.implicits._
-    centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq, centroids.length) }
-      .toDF("list_no", "centroid", "nlist")
-      .writeSidecar(path)
-  }
-
-  private def readCentroids(spark: SparkSession, path: String): Array[Array[Float]] = {
-    val cents = JsonSidecar.read(spark, path)
-      .select(col("list_no").cast("int"), col("centroid").cast("array<float>"),
-        col("nlist").cast("int")).collect()
-    val out = new Array[Array[Float]](cents.head.getInt(2))
-    cents.foreach { r => out(r.getInt(0)) = r.getSeq[Float](1).toArray }
-    out
-  }
-
-  /** Both IVF AQ fast-scan forms share one on-disk layout (the
-    * residual flag is in meta): coarse centroids + RQ codebooks +
-    * norm codebooks + list_no-partitioned packed codes. The IVF
-    * families search with norm_scale 1 (their reference default), so
-    * no scale is stored. */
-  private def saveIvfRq4FsCommon(spark: SparkSession, path: String,
-      centroids: Array[Array[Float]], model: RqModel,
-      normCb: Array[Array[Double]], codes: DataFrame,
-      byResidual: Boolean): Unit = {
-    import spark.implicits._
-    codes.repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no").parquet(s"$path/codes")
-    saveCentroids(spark, centroids, s"$path/centroids")
-    saveRq(spark, model, s"$path/codebooks")
-    saveNormCb(spark, normCb, s"$path/normcb")
-    Seq(byResidual).toDF("by_residual")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, if (byResidual) "ivfrq4fsr" else "ivfrq4fs")
-  }
-
-  def saveIvfRq4Fs(idx: IvfRq4FastScanIndex, path: String): Unit =
-    saveIvfRq4FsCommon(idx.codes.sparkSession, path, idx.centroids,
-      idx.model, idx.normCb, idx.codes, byResidual = false)
-
-  def saveIvfRq4FsR(idx: IvfRq4FastScanRIndex, path: String): Unit =
-    saveIvfRq4FsCommon(idx.codes.sparkSession, path, idx.centroids,
-      idx.model, idx.normCb, idx.codes, byResidual = true)
-
-  def loadIvfRq4Fs(spark: SparkSession, path: String): IvfRq4FastScanIndex = {
-    require(!JsonSidecar.read(spark, s"$path/meta")
-      .select(col("by_residual")).first().getBoolean(0),
-      s"$path holds a by-residual (x4fsr) index — use loadIvfRq4FsR")
-    val centroids = readCentroids(spark, s"$path/centroids")
-    new IvfRq4FastScanIndex(centroids.length, centroids,
-      loadRq(spark, s"$path/codebooks"), readNormCb(spark, s"$path/normcb"),
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("list_no").cast("int"), col("code")))
-  }
-
-  def loadIvfRq4FsR(spark: SparkSession, path: String): IvfRq4FastScanRIndex = {
-    require(JsonSidecar.read(spark, s"$path/meta")
-      .select(col("by_residual")).first().getBoolean(0),
-      s"$path holds a non-residual (x4fs) index — use loadIvfRq4Fs")
-    val centroids = readCentroids(spark, s"$path/centroids")
-    new IvfRq4FastScanRIndex(centroids.length, centroids,
-      loadRq(spark, s"$path/codebooks"), readNormCb(spark, s"$path/normcb"),
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("list_no").cast("int"), col("code")))
-  }
-
-  def saveIvfPq4FsR(idx: IvfPq4FastScanRIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no").parquet(s"$path/codes")
-    saveCentroids(spark, idx.centroids, s"$path/centroids")
-    val m = idx.model
-    (for (mi <- 0 until m.m; j <- m.codebooks(mi).indices)
-      yield (mi, j, m.codebooks(mi)(j).toSeq, m.ksub, m.dsub))
-      .toDF("m", "j", "centroid", "ksub", "dsub")
-      .writeSidecar(s"$path/codebooks")
-    saveKind(spark, path, "ivfpq4fsr")
-  }
-
-  def loadIvfPq4FsR(spark: SparkSession, path: String): IvfPq4FastScanRIndex = {
-    val centroids = readCentroids(spark, s"$path/centroids")
-    new IvfPq4FastScanRIndex(centroids.length, centroids,
-      readPqModel(spark, s"$path/codebooks"),
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("list_no").cast("int"), col("code")))
-  }
-
-  // ---- IVF-SQ -----------------------------------------------------------
-  // (write_index of IndexIVFScalarQuantizer, index_write.cpp: coarse
-  // centroids + SQ trained range + by_residual + per-list codes.)
-  def saveIvfSq(idx: IvfSqIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no").parquet(s"$path/codes")
-    saveCentroids(spark, idx.centroids, s"$path/centroids")
-    // fp16 has NO trained range -> this dataset is empty (the loadSq
-    // convention); qtype/by_residual live in their own sidecar
-    idx.vmin.indices.map(i => (i, idx.vmin(i), idx.vdiff(i)))
-      .toDF("dim", "vmin", "vdiff")
-      .writeSidecar(s"$path/range")
-    Seq((idx.qtype, idx.byResidual)).toDF("qtype", "by_residual")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "ivfsq")
-  }
-
-  def loadIvfSq(spark: SparkSession, path: String): IvfSqIndex = {
-    val centroids = readCentroids(spark, s"$path/centroids")
-    val meta = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("qtype"), col("by_residual")).first()
-    // Only fp16 legitimately has NO trained range (the saveIvfSq
-    // convention); for every other qtype a missing/empty range dataset
-    // is a truncated index — fail the load, not the later scan (the
-    // reference's read_index fails fast on truncated trained state).
-    val range =
-      try JsonSidecar.read(spark, s"$path/range")
-        .select(col("dim").cast("int"), col("vmin").cast("double"),
-          col("vdiff").cast("double")).collect()
-      catch { case _: org.apache.spark.sql.AnalysisException
-          if meta.getString(0) == "fp16" =>
-        Array.empty[org.apache.spark.sql.Row] }
-    require(meta.getString(0) == "fp16" || range.nonEmpty,
-      s"$path/range: missing/empty trained SQ range for qtype " +
-        s"${meta.getString(0)} — truncated or corrupt index")
-    val vmin = new Array[Double](range.length)
-    val vdiff = new Array[Double](range.length)
-    range.foreach { r =>
-      vmin(r.getInt(0)) = r.getDouble(1); vdiff(r.getInt(0)) = r.getDouble(2)
-    }
-    new IvfSqIndex(centroids.length, centroids, vmin, vdiff,
-      meta.getBoolean(1),
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("list_no").cast("int"), col("code")),
-      meta.getString(0))
-  }
-
-  // ---- IVF-AQ (non-fast-scan) -------------------------------------------
-  // (write_index of IndexIVFResidualQuantizer /
-  // IndexIVFLocalSearchQuantizer, index_write.cpp: coarse centroids +
-  // AQ codebooks + per-list codes — the AQ_decompress search form.)
-  def saveIvfRq(idx: IvfRqIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    idx.codes.repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no").parquet(s"$path/codes")
-    saveCentroids(spark, idx.centroids, s"$path/centroids")
-    saveRq(spark, idx.model, s"$path/codebooks")
-    saveKind(spark, path, "ivfrq")
-  }
-
-  def loadIvfRq(spark: SparkSession, path: String): IvfRqIndex = {
-    val centroids = readCentroids(spark, s"$path/centroids")
-    new IvfRqIndex(centroids.length, centroids,
-      loadRq(spark, s"$path/codebooks"),
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("list_no").cast("int"), col("code")))
-  }
-
-  /** `IVF<n>,{RQ|LSQ}<L>x<nb>_N<norm>` LUT form: the decompress
-    * form's state plus the per-row DECODED stored norm (`nq`) and the
-    * nonorm flag — the norm codec's trained state is baked into the
-    * decoded values (see [[graft.index.IvfRqNormIndex]]), so a reload
-    * scans bit-identically with no codec retrain. The codes table is
-    * stored ONCE (codesNq is a superset of the decompress columns). */
-  def saveIvfRqNorm(idx: IvfRqNormIndex, path: String): Unit = {
-    val spark = idx.codesNq.sparkSession
-    import spark.implicits._
-    idx.codesNq.repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no").parquet(s"$path/codes")
-    saveCentroids(spark, idx.idx.centroids, s"$path/centroids")
-    saveRq(spark, idx.idx.model, s"$path/codebooks")
-    Seq(idx.nonorm).toDF("nonorm")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "ivfrqnorm")
-  }
-
-  def loadIvfRqNorm(spark: SparkSession, path: String): IvfRqNormIndex = {
-    val nonorm = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("nonorm")).first().getBoolean(0)
-    val centroids = readCentroids(spark, s"$path/centroids")
-    val cols = Seq(col("id"), col("list_no").cast("int"), col("code")) ++
-      (if (nonorm) Nil else Seq(col("nq").cast("double")))
-    val codesNq = spark.read.parquet(s"$path/codes").select(cols: _*)
-    new IvfRqNormIndex(
-      new IvfRqIndex(centroids.length, centroids,
-        loadRq(spark, s"$path/codebooks"), codesNq),
-      codesNq, nonorm)
-  }
-
-  // ---- Binary flat / hash -------------------------------------------------
-  // (write_index_binary of IndexBinaryFlat / IndexBinaryHash /
-  // IndexBinaryMultiHash, index_write.cpp — the flat store is d +
-  // codes; the hash forms add their bucket parameters. The bucketed
-  // layout is partitionBy(bucket) so a reloaded query scan keeps the
-  // bucket pruning.)
-  def saveBinaryFlat(codes: DataFrame, path: String): Unit = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    codes.select(col("id"), col("code"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    // ntotal=0 round-trips (write_index_binary handles it): store
-    // code_size 0 when there are no rows to derive a width from.
-    val sz = codes.select(length(col("code")).cast("int"))
-      .head(1).headOption.map(_.getInt(0)).getOrElse(0)
-    Seq(sz).toDF("code_size")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "bflat")
-  }
-
-  def loadBinaryFlat(spark: SparkSession, path: String): DataFrame = {
-    val want = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("code_size").cast("int")).first().getInt(0)
-    val codes = spark.read.parquet(s"$path/codes").select(col("id"), col("code"))
-    val got = codes.select(length(col("code")).cast("int"))
-      .head(1).headOption.map(_.getInt(0)).getOrElse(0)
-    require(got == want || got == 0,
-      s"$path: stored code width $got != meta $want")
-    codes
-  }
-
-  def saveBinaryHash(idx: BinaryHashIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/codes")
-    Seq(idx.b).toDF("b")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "bhash")
-  }
-
-  def loadBinaryHash(spark: SparkSession, path: String): BinaryHashIndex = {
-    val b = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("b").cast("int")).first().getInt(0)
-    new BinaryHashIndex(b,
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("code"), col("bucket").cast("long")))
-  }
-
-  def saveBinaryMultiHash(idx: BinaryMultiHashIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.select(col("id"), col("code"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    Seq((idx.nhash, idx.b)).toDF("nhash", "b")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "bmultihash")
-  }
-
-  def loadBinaryMultiHash(spark: SparkSession, path: String): BinaryMultiHashIndex = {
-    val meta = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("nhash").cast("int"), col("b").cast("int")).first()
-    new BinaryMultiHashIndex(meta.getInt(0), meta.getInt(1),
-      spark.read.parquet(s"$path/codes").select(col("id"), col("code")))
-  }
-
-  // ---- LSH ----------------------------------------------------------------
-  // (write_index of IndexLSH, index_write.cpp: the rotation, the
-  // trained thresholds, the packed codes.)
-  def saveLsh(idx: LshIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.write.mode("overwrite").parquet(s"$path/codes")
-    if (idx.rot != null) saveTransform(spark, idx.rot, s"$path/rot")
-    idx.thresholds.foreach { th =>
-      th.zipWithIndex.map { case (t, i) => (i, t) }.toSeq.toDF("i", "t")
-        .writeSidecar(s"$path/thresholds")
-    }
-    Seq((idx.rot != null, idx.thresholds.isDefined))
-      .toDF("rotate_data", "train_thresholds")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "lsh")
-  }
-
-  def loadLsh(spark: SparkSession, path: String): LshIndex = {
-    val meta = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("rotate_data"), col("train_thresholds")).first()
-    val rot =
-      if (meta.getBoolean(0))
-        loadTransform(spark, s"$path/rot").asInstanceOf[Linear]
-      else null
-    val th =
-      if (meta.getBoolean(1))
-        Some(JsonSidecar.read(spark, s"$path/thresholds")
-          .select(col("i").cast("int"), col("t").cast("double"))
-          .collect().sortBy(_.getInt(0)).map(_.getDouble(1)))
-      else None
-    new LshIndex(rot, th,
-      spark.read.parquet(s"$path/codes").select(col("id"), col("code")))
-  }
-
-  // ---- ZnLattice ------------------------------------------------------------
-  // (write_index of IndexLattice, index_write.cpp: d/nsq/scale_nbit/r2
-  // + trained norm ranges + codes; the sphere enumeration re-derives
-  // from (dsq, r2) — no codebook is stored, in either system.)
-  def saveLattice(idx: LatticeIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.write.mode("overwrite").parquet(s"$path/codes")
-    val c = idx.codec
-    (0 until c.nsq).map(j =>
-      (j, c.mins(j), c.maxs(j), c.d, c.nsq, c.scaleNbit, c.r2))
-      .toDF("j", "mn", "mx", "d", "nsq", "scale_nbit", "r2")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "lattice")
-  }
-
-  def loadLattice(spark: SparkSession, path: String): LatticeIndex = {
-    val rows = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("j").cast("int"), col("mn").cast("float"),
-        col("mx").cast("float"), col("d").cast("int"),
-        col("nsq").cast("int"), col("scale_nbit").cast("int"),
-        col("r2").cast("int")).collect()
-    val nsq = rows.head.getInt(4)
-    val mins = new Array[Float](nsq); val maxs = new Array[Float](nsq)
-    rows.foreach { r =>
-      mins(r.getInt(0)) = r.getFloat(1); maxs(r.getInt(0)) = r.getFloat(2)
-    }
-    new LatticeIndex(
-      new graft.core.LatticeCodec(rows.head.getInt(3), nsq,
-        rows.head.getInt(5), rows.head.getInt(6), mins, maxs),
-      spark.read.parquet(s"$path/codes").select(col("id"), col("code")))
-  }
-
-  // ---- MinMax wrappers --------------------------------------------------
-  // (write_index of IndexRowwiseMinMax[FP16], index_write.cpp: the
-  // wrapper flag + the inner index. Inner trained state: SQ range rows
-  // or PQ codebooks; SQfp16 is stateless.)
-  def saveMinMax(idx: MinMaxIndex, path: String): Unit = {
-    val spark = idx.codes.sparkSession
-    import spark.implicits._
-    idx.codes.write.mode("overwrite").parquet(s"$path/codes")
-    Seq((idx.inner, idx.fp16Coeffs)).toDF("inner", "fp16_coeffs")
-      .writeSidecar(s"$path/meta")
-    if (idx.sqMins.nonEmpty)
-      idx.sqMins.indices.map(i => (i, idx.sqMins(i), idx.sqDiff(i)))
-        .toDF("dim", "vmin", "vdiff")
-        .writeSidecar(s"$path/range")
-    if (idx.pqModel != null)
-      pqModelDf(spark, idx.pqModel)
-        .writeSidecar(s"$path/codebooks")
-    saveKind(spark, path, "minmax")
-  }
-
-  def loadMinMax(spark: SparkSession, path: String): MinMaxIndex = {
-    val meta = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("inner"), col("fp16_coeffs")).first()
-    val inner = meta.getString(0)
-    val (mins, vdiff) =
-      if (inner == "SQ8" || inner == "SQ4" || inner == "SQ6") {
-        val rows = JsonSidecar.read(spark, s"$path/range")
-          .select(col("dim").cast("int"), col("vmin").cast("double"),
-            col("vdiff").cast("double")).collect()
-        val mn = new Array[Double](rows.length)
-        val df = new Array[Double](rows.length)
-        rows.foreach { r =>
-          mn(r.getInt(0)) = r.getDouble(1); df(r.getInt(0)) = r.getDouble(2)
-        }
-        (mn, df)
-      } else (Array.empty[Double], Array.empty[Double])
-    val pq =
-      if (inner.startsWith("PQ")) readPqModel(spark, s"$path/codebooks")
-      else null
-    new MinMaxIndex(inner, meta.getBoolean(1), mins, vdiff, pq,
-      spark.read.parquet(s"$path/codes")
-        .select(col("id"), col("_mn").cast("double"),
-          col("_sc").cast("double"), col("code")))
-  }
-
-  // ---- Refine chain -------------------------------------------------------
-  // (write_index of IndexRefine / IndexRefineFlat, index_write.cpp:
-  // base_index + refine_index + k_factor. The SQ-family coarse stage
-  // persists through saveSq — which stores its qtype — and the refine
-  // storage is the exact base table; wider chains re-compose from the
-  // parts' own save/loads.)
-  def saveRefineFlat(idx: RefineFlatIndex, path: String): Unit = {
-    val spark = idx.base.sparkSession
-    import spark.implicits._
-    saveSq(idx.inner, s"$path/inner")
-    idx.base.write.mode("overwrite").parquet(s"$path/base")
-    Seq((idx.kFactor, idx.metric)).toDF("k_factor", "metric")
-      .writeSidecar(s"$path/meta")
-    saveKind(spark, path, "refineflat")
-  }
-
-  def loadRefineFlat(spark: SparkSession, path: String): RefineFlatIndex = {
-    val meta = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("k_factor").cast("int"), col("metric")).first()
-    new RefineFlatIndex(loadSq(spark, s"$path/inner"),
-      spark.read.parquet(s"$path/base").select(col("id"), col("vec")),
-      meta.getInt(0), meta.getString(1))
-  }
-
-  // ---- kind tag / generic load / reverse_index_factory -----------------
-  // (the fourcc analog: write_index stamps a per-class fourcc so
-  // read_index can dispatch without being told the type,
-  // faiss/impl/index_write.cpp — every save* here stamps <path>/kind
-  // the same way.)
-  private[graft] def saveKind(spark: SparkSession, path: String,
-      kind: String): Unit = {
-    import spark.implicits._
-    // driver-side sidecar write (byte-compatible with the Spark JSON
-    // writer): the last remaining per-save Spark job after r19
-    // converted the other 37 sidecar sites (ADVICE r19)
-    Seq(kind).toDF("kind").writeSidecar(s"$path/kind")
-  }
+  /** Kept as a named entry point: `vecbench` calls it by name. */
+  def saveIvfPq(idx: IvfPqIndex, path: String): Unit = save(idx, path)
 
   /** The stored family tag of a saved index. */
   def loadKind(spark: SparkSession, path: String): String =
@@ -851,43 +81,31 @@ object IndexIO {
     catch { case e: org.apache.spark.sql.AnalysisException =>
       throw new IllegalArgumentException(
         s"$path has no kind tag — not a saved index (or pre-r16 layout); " +
-          s"use the family's typed load", e)
+          s"use IndexIO.loadAs with the family's type", e)
     }
+
+  private def codecOf(spark: SparkSession, path: String): Codec[_] = {
+    val kind = loadKind(spark, path)
+    IndexCodecs.byKind(kind).getOrElse(
+      throw new IllegalArgumentException(s"$path: unknown index kind '$kind'"))
+  }
 
   /** read_index dispatch (faiss/index_io.h:38 — open ANY saved index
     * without being told its family). Returns the family's own index
-    * type; pattern-match or pass to [[reverseFactory]]. */
-  def load(spark: SparkSession, path: String): Any =
-    loadKind(spark, path) match {
-      case "ivfflat" => IvfIndex.load(spark, path)
-      case "sq" => loadSq(spark, path)
-      case "pq" => loadPq(spark, path)
-      case "ivfpq" => loadIvfPq(spark, path)
-      case "twolayer" => loadTwoLayer(spark, path)
-      case "bivf" => loadBinaryIvf(spark, path)
-      case "imi" => loadImi(spark, path)
-      case "imipq" => loadImiPq(spark, path)
-      case "miq2layer" => loadMiqTwoLayer(spark, path)
-      case "ivfsh" => loadSpectralHash(spark, path)
-      case "pq4fs" => loadPq4Fs(spark, path)
-      case "ivfpq4fs" => loadIvfPq4Fs(spark, path)
-      case "ivfpq4fsr" => loadIvfPq4FsR(spark, path)
-      case "rq4fs" => loadRq4Fs(spark, path)
-      case "ivfrq4fs" => loadIvfRq4Fs(spark, path)
-      case "ivfrq4fsr" => loadIvfRq4FsR(spark, path)
-      case "ivfsq" => loadIvfSq(spark, path)
-      case "ivfrq" => loadIvfRq(spark, path)
-      case "ivfrqnorm" => loadIvfRqNorm(spark, path)
-      case "bflat" => loadBinaryFlat(spark, path)
-      case "bhash" => loadBinaryHash(spark, path)
-      case "bmultihash" => loadBinaryMultiHash(spark, path)
-      case "lsh" => loadLsh(spark, path)
-      case "lattice" => loadLattice(spark, path)
-      case "minmax" => loadMinMax(spark, path)
-      case "refineflat" => loadRefineFlat(spark, path)
-      case other => throw new IllegalArgumentException(
-        s"$path: unknown index kind '$other'")
+    * type; pattern-match, or pass to [[reverseFactory]]. */
+  def load(spark: SparkSession, path: String): Any = codecOf(spark, path).read(spark, path)
+
+  /** Typed load: the stored kind tag must be T's; a directory without
+    * one (the pre-r16 layout) is read with T's codec. */
+  def loadAs[T: ClassTag](spark: SparkSession, path: String): T = {
+    val want = IndexCodecs.byClass(classTag[T].runtimeClass)
+    val (fs, tag) = JsonSidecar.hadoopFs(spark, s"$path/kind")
+    if (fs.exists(tag)) {
+      val kind = loadKind(spark, path)
+      require(kind == want.kind, s"$path holds a '$kind' index, not '${want.kind}'")
     }
+    want.read(spark, path).asInstanceOf[T]
+  }
 
   /** reverse_index_factory over a PERSISTED index
     * (contrib/factory_tools.py:76 applied to a read_index result):
@@ -897,47 +115,8 @@ object IndexIO {
     * refuse with an explanation — see
     * [[graft.index.IndexFactory.reverseIndexFactory]]. */
   def reverseFactory(spark: SparkSession, path: String): String =
-    loadKind(spark, path) match {
-      case "bflat" => "BFlat" // a bare codes table, no structure to walk
-      case _ => IndexFactory.reverseIndexFactory(load(spark, path))
+    codecOf(spark, path) match {
+      case c if c.kind == "bflat" => "BFlat" // a bare codes table, no structure to walk
+      case c => IndexFactory.reverseIndexFactory(c.read(spark, path))
     }
-
-  // ---- VectorTransform chain -----------------------------------------
-  // (write_VectorTransform / read_VectorTransform, faiss/index_io.h:67)
-  def saveTransform(spark: SparkSession, t: VecTransform, path: String): Unit = {
-    import spark.implicits._
-    def rows(t: VecTransform, pos: Int): Seq[(Int, String, Int, Seq[Float], Seq[Float])] =
-      t match {
-        case Normalization => Seq((pos, "l2norm", -1, Nil, Nil))
-        case Centering(m) => Seq((pos, "center", -1, m.toSeq, Nil))
-        case Remap(idx) => Seq((pos, "remap", -1, idx.map(_.toFloat).toSeq, Nil))
-        case Linear(a, b) => a.indices.map(i =>
-          (pos, "linear", i, a(i).toSeq, if (b == null) Nil else Seq(b(i))))
-        case Chain(ts) => ts.zipWithIndex.flatMap { case (s, i) => rows(s, pos * 100 + i) }
-      }
-    rows(t, 0).toDF("pos", "kind", "row", "weights", "bias")
-      .writeSidecar(path)
-  }
-
-  def loadTransform(spark: SparkSession, path: String): VecTransform = {
-    val rows = JsonSidecar.read(spark, path)
-      .select(col("pos").cast("int"), col("kind"), col("row").cast("int"),
-        col("weights").cast("array<float>"), col("bias").cast("array<float>"))
-      .collect()
-    val byPos = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-    val parts = byPos.map { case (_, rs) =>
-      rs.head.getString(1) match {
-        case "l2norm" => Normalization
-        case "center" => Centering(rs.head.getSeq[Float](3).toArray)
-        case "remap" => Remap(rs.head.getSeq[Float](3).map(_.toInt).toArray)
-        case "linear" =>
-          val sorted = rs.sortBy(_.getInt(2))
-          val a = sorted.map(_.getSeq[Float](3).toArray).toArray
-          val biases = sorted.map(_.getSeq[Float](4))
-          val b = if (biases.head.isEmpty) null else biases.map(_.head).toArray
-          Linear(a, b)
-      }
-    }
-    if (parts.length == 1) parts.head else Chain(parts)
-  }
 }

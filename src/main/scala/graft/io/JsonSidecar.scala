@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * `df.coalesce(1).write.mode("overwrite").json(path)` schedules a
   * full Spark job — plan, one task, commit protocol — to move a few
   * KB the driver already holds (every sidecar DataFrame is a local
-  * `Seq(...).toDF`), and reading one back through
+  * relation built by [[Part.write]]), and reading one back through
   * `spark.read.json(path)` pays a schema-inference job plus a collect
   * job per sidecar. A save→load lifecycle carries 4-8 such jobs of
   * pure scheduling latency; `index_io_matrix` runs 26 lifecycles and
@@ -40,7 +40,7 @@ object JsonSidecar {
     * `java.nio.Files` write silently dropped scheme-qualified sidecars
     * onto the driver's local disk while the codes went to the shared
     * store). Still driver-side, still zero Spark jobs. */
-  private def hadoopFs(spark: SparkSession, path: String)
+  private[io] def hadoopFs(spark: SparkSession, path: String)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
@@ -225,10 +225,5 @@ object JsonSidecar {
       rows.add(Row.fromSeq(fields.map { case (name, t) => convert(n.get(name), t) }))
     }
     Some(spark.createDataFrame(rows, schema))
-  }
-
-  /** Import for the `.writeSidecar(path)` spelling at the save sites. */
-  implicit class SidecarWriter(private val df: DataFrame) extends AnyVal {
-    def writeSidecar(path: String): Unit = write(df, path)
   }
 }

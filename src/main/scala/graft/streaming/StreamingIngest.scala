@@ -17,7 +17,7 @@ import graft.core.ScopedConf
 object StreamingIngest {
 
   /** Start appending a stream of (id, vec) rows into `indexPath`
-    * (same layout as [[graft.index.IvfIndex.save]]): each microbatch
+    * (the `ivfflat` layout of [[graft.io.IndexIO.save]]): each microbatch
     * is coarse-assigned with the trained centroids and appended to its
     * list_no partitions. */
   def startIngest(stream: DataFrame, model: KMeans.Model, indexPath: String,

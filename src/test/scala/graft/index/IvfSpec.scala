@@ -119,7 +119,7 @@ class IvfSpec extends SparkTestBase {
   test("save/load round-trip preserves search results") {
     val dir = java.nio.file.Files.createTempDirectory("ivf").toString
     idx.save(dir)
-    val loaded = IvfIndex.load(spark, dir)
+    val loaded = graft.io.IndexIO.loadAs[IvfIndex](spark, dir)
     assert(resultSet(loaded.search(q, 5, nprobe = 8)) == resultSet(idx.search(q, 5, nprobe = 8)))
     assert(loaded.nlist == idx.nlist && loaded.d == idx.d && loaded.metric == idx.metric)
   }

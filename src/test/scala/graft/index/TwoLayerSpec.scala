@@ -91,8 +91,8 @@ class TwoLayerSpec extends SparkTestBase {
     val idx = MiqTwoLayerIndex.build(data, "id", "vec",
       mCoarse = 2, nbit = 4, m = 8, ksub = 16, niterCoarse = 3, niterPq = 3)
     val dir = java.nio.file.Files.createTempDirectory("miq2l").toString
-    graft.io.IndexIO.saveMiqTwoLayer(idx, dir)
-    val loaded = graft.io.IndexIO.loadMiqTwoLayer(spark, dir)
+    graft.io.IndexIO.save(idx, dir)
+    val loaded = graft.io.IndexIO.loadAs[graft.index.MiqTwoLayerIndex](spark, dir)
     assert(loaded.mCoarse == 2 && loaded.ksub == 16 && loaded.nlist == 256)
     def snap(i: MiqTwoLayerIndex) = i.reconstruct
       .select(col("id"), round(element_at(col("vec"), 1).cast("double"), 5).as("v"))

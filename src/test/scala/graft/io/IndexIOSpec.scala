@@ -20,8 +20,8 @@ class IndexIOSpec extends SparkTestBase {
   test("SQ index save/load round-trip preserves search results") {
     val idx = SqIndex.build(b, "id", "vec")
     val dir = java.nio.file.Files.createTempDirectory("sqio").toString
-    IndexIO.saveSq(idx, dir)
-    val loaded = IndexIO.loadSq(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.SqIndex](spark, dir)
     assert(results(loaded.search(q, 5)) == results(idx.search(q, 5)))
   }
 
@@ -29,8 +29,8 @@ class IndexIOSpec extends SparkTestBase {
     for (qtype <- Seq("SQ4", "SQ6", "fp16")) {
       val idx = SqIndex.build(b, "id", "vec", qtype = qtype)
       val dir = java.nio.file.Files.createTempDirectory(s"sqio_$qtype").toString
-      IndexIO.saveSq(idx, dir)
-      val loaded = IndexIO.loadSq(spark, dir)
+      IndexIO.save(idx, dir)
+      val loaded = IndexIO.loadAs[graft.index.SqIndex](spark, dir)
       assert(loaded.qtype == qtype, s"qtype lost: ${loaded.qtype}")
       assert(results(loaded.search(q, 5)) == results(idx.search(q, 5)), qtype)
     }
@@ -39,8 +39,8 @@ class IndexIOSpec extends SparkTestBase {
   test("PQ index save/load round-trip preserves search results") {
     val idx = PqIndex.build(b, "id", "vec", m = 8, ksub = 16, niter = 3)
     val dir = java.nio.file.Files.createTempDirectory("pqio").toString
-    IndexIO.savePq(idx, dir)
-    val loaded = IndexIO.loadPq(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.PqIndex](spark, dir)
     assert(results(loaded.search(q, 5)) == results(idx.search(q, 5)))
     assert(loaded.model.ksub == 16 && loaded.model.m == 8)
   }
@@ -49,8 +49,8 @@ class IndexIOSpec extends SparkTestBase {
     val idx = graft.index.IvfPqIndex.build(b, "id", "vec",
       nlist = 4, m = 8, ksub = 16, niterCoarse = 3, niterPq = 3)
     val dir = java.nio.file.Files.createTempDirectory("ivfpqio").toString
-    IndexIO.saveIvfPq(idx, dir)
-    val loaded = IndexIO.loadIvfPq(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.IvfPqIndex](spark, dir)
     assert(results(loaded.search(q, 5, nprobe = 4)) ==
       results(idx.search(q, 5, nprobe = 4)))
     // list_no-partitioned on disk: static pruning survives the reload
@@ -63,14 +63,14 @@ class IndexIOSpec extends SparkTestBase {
     "RQ4fs all round-trip bit-identically, including the trained norm_scale") {
     val fs = graft.index.Pq4FastScanIndex.build(b, "id", "vec", m = 8, niter = 3)
     val d1 = java.nio.file.Files.createTempDirectory("pq4fsio").toString
-    IndexIO.savePq4Fs(fs, d1)
-    assert(results(IndexIO.loadPq4Fs(spark, d1).search(q, 5)) ==
+    IndexIO.save(fs, d1)
+    assert(results(IndexIO.loadAs[graft.index.Pq4FastScanIndex](spark, d1).search(q, 5)) ==
       results(fs.search(q, 5)))
     val ivf = graft.index.IvfPq4FastScanIndex.build(b, "id", "vec", nlist = 4,
       m = 8, niterCoarse = 2, niterPq = 3)
     val d2 = java.nio.file.Files.createTempDirectory("ivfpq4fsio").toString
-    IndexIO.saveIvfPq4Fs(ivf, d2)
-    val ivfLoaded = IndexIO.loadIvfPq4Fs(spark, d2)
+    IndexIO.save(ivf, d2)
+    val ivfLoaded = IndexIO.loadAs[graft.index.IvfPq4FastScanIndex](spark, d2)
     assert(results(ivfLoaded.search(q, 5, nprobe = 2)) ==
       results(ivf.search(q, 5, nprobe = 2)))
     // adversarial magnitudes -> norm_scale > 1; the reload must carry it
@@ -81,8 +81,8 @@ class IndexIOSpec extends SparkTestBase {
     val rs = graft.index.Rq4FastScanIndex.build(adv, "id", "vec", levels = 2, niter = 3)
     assert(rs.normScale > 1)
     val d3 = java.nio.file.Files.createTempDirectory("rq4fsio").toString
-    IndexIO.saveRq4Fs(rs, d3)
-    val rsLoaded = IndexIO.loadRq4Fs(spark, d3)
+    IndexIO.save(rs, d3)
+    val rsLoaded = IndexIO.loadAs[graft.index.Rq4FastScanIndex](spark, d3)
     assert(rsLoaded.normScale == rs.normScale, "trained norm_scale lost")
     assert(results(rsLoaded.search(q, 5)) == results(rs.search(q, 5)))
   }
@@ -92,25 +92,27 @@ class IndexIOSpec extends SparkTestBase {
     val ivf = graft.index.IvfRq4FastScanIndex.build(b, "id", "vec",
       nlist = 4, levels = 2, niterCoarse = 2, niter = 3)
     val d1 = java.nio.file.Files.createTempDirectory("ivfrq4fsio").toString
-    IndexIO.saveIvfRq4Fs(ivf, d1)
-    assert(results(IndexIO.loadIvfRq4Fs(spark, d1).search(q, 5, nprobe = 2)) ==
+    IndexIO.save(ivf, d1)
+    assert(results(IndexIO.loadAs[graft.index.IvfRq4FastScanIndex](spark, d1)
+      .search(q, 5, nprobe = 2)) ==
       results(ivf.search(q, 5, nprobe = 2)))
     val ivfr = graft.index.IvfRq4FastScanRIndex.build(b, "id", "vec",
       nlist = 4, levels = 2, niterCoarse = 2, niter = 3)
     val d2 = java.nio.file.Files.createTempDirectory("ivfrq4fsrio").toString
-    IndexIO.saveIvfRq4FsR(ivfr, d2)
-    assert(results(IndexIO.loadIvfRq4FsR(spark, d2).search(q, 5, nprobe = 2)) ==
+    IndexIO.save(ivfr, d2)
+    assert(results(IndexIO.loadAs[graft.index.IvfRq4FastScanRIndex](spark, d2)
+      .search(q, 5, nprobe = 2)) ==
       results(ivfr.search(q, 5, nprobe = 2)))
     // loading a residual store through the non-residual entry (or vice
     // versa) would silently score residual codes against raw-vector
     // LUTs — the meta flag makes it loud
-    intercept[IllegalArgumentException](IndexIO.loadIvfRq4Fs(spark, d2))
-    intercept[IllegalArgumentException](IndexIO.loadIvfRq4FsR(spark, d1))
+    intercept[IllegalArgumentException](IndexIO.loadAs[graft.index.IvfRq4FastScanIndex](spark, d2))
+    intercept[IllegalArgumentException](IndexIO.loadAs[graft.index.IvfRq4FastScanRIndex](spark, d1))
     val pqr = graft.index.IvfPq4FastScanRIndex.build(b, "id", "vec",
       nlist = 4, m = 8, niterCoarse = 2, niterPq = 3)
     val d3 = java.nio.file.Files.createTempDirectory("ivfpq4fsrio").toString
-    IndexIO.saveIvfPq4FsR(pqr, d3)
-    val loaded = IndexIO.loadIvfPq4FsR(spark, d3)
+    IndexIO.save(pqr, d3)
+    val loaded = IndexIO.loadAs[graft.index.IvfPq4FastScanRIndex](spark, d3)
     def r4set(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "rank", "id", "dist").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
@@ -123,8 +125,8 @@ class IndexIOSpec extends SparkTestBase {
     val idx = graft.index.TwoLayerIndex.build(b, "id", "vec",
       nlist = 4, m = 8, ksub = 16, niterCoarse = 3, niterPq = 3)
     val dir = java.nio.file.Files.createTempDirectory("twolayerio").toString
-    IndexIO.saveTwoLayer(idx, dir)
-    val loaded = IndexIO.loadTwoLayer(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.TwoLayerIndex](spark, dir)
     def recon(i: graft.index.TwoLayerIndex) =
       i.reconstruct.select(col("id"),
         round(element_at(col("vec"), 1).cast("double"), 5).as("v"))
@@ -136,8 +138,8 @@ class IndexIOSpec extends SparkTestBase {
     val idx = graft.index.BinaryIvfIndex.buildFromVectors(b, "id", "vec",
       nlist = 4, niter = 3)
     val dir = java.nio.file.Files.createTempDirectory("bivfio").toString
-    IndexIO.saveBinaryIvf(idx, dir)
-    val loaded = IndexIO.loadBinaryIvf(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.BinaryIvfIndex](spark, dir)
     val qc = q.select(col("qid"), graft.functions.sign_bits(col("qvec")).as("qcode"))
     assert(results(loaded.search(qc, 5, nprobe = 4)) ==
       results(idx.search(qc, 5, nprobe = 4)))
@@ -146,8 +148,8 @@ class IndexIOSpec extends SparkTestBase {
   test("IMI save/load round-trip preserves search results") {
     val idx = graft.index.ImiIndex.build(b, "id", "vec", ksub = 4, niter = 3)
     val dir = java.nio.file.Files.createTempDirectory("imiio").toString
-    IndexIO.saveImi(idx, dir)
-    val loaded = IndexIO.loadImi(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.ImiIndex](spark, dir)
     assert(results(loaded.search(q, 5, nprobe = loaded.nlist)) ==
       results(idx.search(q, 5, nprobe = idx.nlist)))
   }
@@ -157,8 +159,8 @@ class IndexIOSpec extends SparkTestBase {
     val idx = graft.index.ImiPqIndex.build(b, "id", "vec", ksub = 4,
       m = 8, pqKsub = 16, niterCoarse = 3, niterPq = 3)
     val dir = java.nio.file.Files.createTempDirectory("imipqio").toString
-    IndexIO.saveImiPq(idx, dir)
-    val loaded = IndexIO.loadImiPq(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.ImiPqIndex](spark, dir)
     assert(loaded.ksub == idx.ksub)
     assert(results(loaded.search(q, 5, nprobe = 4)) ==
       results(idx.search(q, 5, nprobe = 4)))
@@ -171,8 +173,8 @@ class IndexIOSpec extends SparkTestBase {
     val idx = graft.index.IvfSpectralHash.build(b, "id", "vec",
       nlist = 4, nbit = 16, period = 1.0, thresholdType = "median", niter = 2)
     val dir = java.nio.file.Files.createTempDirectory("shio").toString
-    IndexIO.saveSpectralHash(idx, dir)
-    val loaded = IndexIO.loadSpectralHash(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.IvfSpectralHashIndex](spark, dir)
     assert(results(loaded.search(q, 5, nprobe = 4)) ==
       results(idx.search(q, 5, nprobe = 4)))
     assert(loaded.nbit == 16 && loaded.period == 1.0)
@@ -181,8 +183,8 @@ class IndexIOSpec extends SparkTestBase {
   test("RQ model save/load round-trip reproduces the decode exactly") {
     val m = graft.index.Rq.train(b, "vec", levels = 2, k = 8, niter = 3)
     val dir = java.nio.file.Files.createTempDirectory("rqio").toString
-    IndexIO.saveRq(spark, m, dir)
-    val loaded = IndexIO.loadRq(spark, dir)
+    Parts.rq.write(spark, m, dir)
+    val loaded = Parts.rq.read(spark, dir)
     def rt(mm: graft.index.RqModel) =
       b.select(col("id"), round(element_at(mm.roundtripCol(col("vec")), 1)
         .cast("double"), 6).as("v"))
@@ -209,10 +211,10 @@ class IndexIOSpec extends SparkTestBase {
     val d2 = java.nio.file.Files.createTempDirectory("ivfm2").toString
     val dm = java.nio.file.Files.createTempDirectory("ivfmerged").toString
     idx1.save(d1); idx2.save(d2)
-    val merged = graft.index.IvfIndex.load(spark, d1)
-      .mergeFrom(graft.index.IvfIndex.load(spark, d2))
+    val merged = graft.io.IndexIO.loadAs[graft.index.IvfIndex](spark, d1)
+      .mergeFrom(graft.io.IndexIO.loadAs[graft.index.IvfIndex](spark, d2))
     merged.save(dm)
-    val got = results(graft.index.IvfIndex.load(spark, dm)
+    val got = results(graft.io.IndexIO.loadAs[graft.index.IvfIndex](spark, dm)
       .search(q, 5, nprobe = 4))
     val want = results(new graft.index.IvfIndex(idx1.d, idx1.metric,
       idx1.nlist, idx1.centroids, inv(b)).search(q, 5, nprobe = 4))
@@ -225,8 +227,8 @@ class IndexIOSpec extends SparkTestBase {
       val idx = graft.index.IvfSqIndex.build(b, "id", "vec", nlist = 4,
         niter = 3, byResidual = byRes, qtype = qtype)
       val dir = java.nio.file.Files.createTempDirectory(s"ivfsqio_$qtype").toString
-      IndexIO.saveIvfSq(idx, dir)
-      val loaded = IndexIO.loadIvfSq(spark, dir)
+      IndexIO.save(idx, dir)
+      val loaded = IndexIO.loadAs[graft.index.IvfSqIndex](spark, dir)
       assert(loaded.qtype == qtype && loaded.byResidual == byRes,
         s"meta lost: ${loaded.qtype}/${loaded.byResidual}")
       assert(results(loaded.search(q, 5, nprobe = 2)) ==
@@ -243,8 +245,8 @@ class IndexIOSpec extends SparkTestBase {
     val idx = graft.index.IvfRq.build(b, "id", "vec", nlist = 4,
       levels = 2, k = 16, niterCoarse = 3, niterRq = 3)
     val dir = java.nio.file.Files.createTempDirectory("ivfrqio").toString
-    IndexIO.saveIvfRq(idx, dir)
-    val loaded = IndexIO.loadIvfRq(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.IvfRqIndex](spark, dir)
     assert(results(loaded.search(q, 5, nprobe = 2)) ==
       results(idx.search(q, 5, nprobe = 2)))
     def recon(i: graft.index.IvfRqIndex) =
@@ -269,16 +271,16 @@ class IndexIOSpec extends SparkTestBase {
       .drop("normsq")
     val norm = new graft.index.IvfRqNormIndex(idx, codesNq, nonorm = false)
     val d1 = java.nio.file.Files.createTempDirectory("ivfrqnormio").toString
-    IndexIO.saveIvfRqNorm(norm, d1)
-    val loaded = IndexIO.loadIvfRqNorm(spark, d1)
+    IndexIO.save(norm, d1)
+    val loaded = IndexIO.loadAs[graft.index.IvfRqNormIndex](spark, d1)
     assert(!loaded.nonorm)
     assert(results(loaded.search(q, 5, nprobe = 4)) ==
       results(norm.search(q, 5, nprobe = 4)))
     // nonorm form: no nq column at all
     val non = new graft.index.IvfRqNormIndex(idx, idx.codes, nonorm = true)
     val d2 = java.nio.file.Files.createTempDirectory("ivfrqnonormio").toString
-    IndexIO.saveIvfRqNorm(non, d2)
-    val nonLoaded = IndexIO.loadIvfRqNorm(spark, d2)
+    IndexIO.save(non, d2)
+    val nonLoaded = IndexIO.loadAs[graft.index.IvfRqNormIndex](spark, d2)
     assert(nonLoaded.nonorm)
     assert(results(nonLoaded.search(q, 5, nprobe = 4)) ==
       results(non.search(q, 5, nprobe = 4)))
@@ -288,8 +290,8 @@ class IndexIOSpec extends SparkTestBase {
     "stored width") {
     val codes = b.select(col("id"), graft.functions.sign_bits(col("vec")).as("code"))
     val dir = java.nio.file.Files.createTempDirectory("bflatio").toString
-    IndexIO.saveBinaryFlat(codes, dir)
-    val loaded = IndexIO.loadBinaryFlat(spark, dir)
+    IndexIO.save(codes, dir)
+    val loaded = IndexIO.loadAs[org.apache.spark.sql.DataFrame](spark, dir)
     val qc = q.select(col("qid"), graft.functions.sign_bits(col("qvec")).as("qcode"))
     assert(results(graft.index.BinaryFlat.knnJoin(qc, loaded, 5)) ==
       results(graft.index.BinaryFlat.knnJoin(qc, codes, 5)))
@@ -300,8 +302,8 @@ class IndexIOSpec extends SparkTestBase {
     val codes = b.select(col("id"), graft.functions.sign_bits(col("vec")).as("code"))
       .filter(lit(false))
     val dir = java.nio.file.Files.createTempDirectory("bflatio_empty").toString
-    IndexIO.saveBinaryFlat(codes, dir)
-    val loaded = IndexIO.loadBinaryFlat(spark, dir)
+    IndexIO.save(codes, dir)
+    val loaded = IndexIO.loadAs[org.apache.spark.sql.DataFrame](spark, dir)
     assert(loaded.count() == 0)
   }
 
@@ -311,11 +313,11 @@ class IndexIOSpec extends SparkTestBase {
     val idx = graft.index.IvfSqIndex.build(b, "id", "vec", nlist = 4,
       niter = 3, byResidual = true, qtype = "SQ8")
     val dir = java.nio.file.Files.createTempDirectory("ivfsqio_trunc").toString
-    IndexIO.saveIvfSq(idx, dir)
+    IndexIO.save(idx, dir)
     // truncate: drop the trained range dataset
     val rangeDir = new java.io.File(s"$dir/range")
     rangeDir.listFiles().foreach(_.delete()); rangeDir.delete()
-    val ex = intercept[Exception] { IndexIO.loadIvfSq(spark, dir) }
+    val ex = intercept[Exception] { IndexIO.loadAs[graft.index.IvfSqIndex](spark, dir) }
     assert(ex.getMessage != null, "load of a truncated SQ8 index must fail")
     idx.close()
   }
@@ -325,8 +327,8 @@ class IndexIOSpec extends SparkTestBase {
     val codes = b.select(col("id"), graft.functions.sign_bits(col("vec")).as("code"))
     val idx = graft.index.BinaryHashIndex.build(codes, b = 6)
     val d1 = java.nio.file.Files.createTempDirectory("bhashio").toString
-    IndexIO.saveBinaryHash(idx, d1)
-    val loaded = IndexIO.loadBinaryHash(spark, d1)
+    IndexIO.save(idx, d1)
+    val loaded = IndexIO.loadAs[graft.index.BinaryHashIndex](spark, d1)
     assert(loaded.b == 6)
     val qc = q.select(col("qid"), graft.functions.sign_bits(col("qvec")).as("qcode"))
     assert(results(loaded.search(qc, 5)) == results(idx.search(qc, 5)))
@@ -335,8 +337,8 @@ class IndexIOSpec extends SparkTestBase {
     assert(parts.nonEmpty, "bucket partitioning lost")
     val mh = new graft.index.BinaryMultiHashIndex(4, 8, codes)
     val d2 = java.nio.file.Files.createTempDirectory("bmhio").toString
-    IndexIO.saveBinaryMultiHash(mh, d2)
-    val mhLoaded = IndexIO.loadBinaryMultiHash(spark, d2)
+    IndexIO.save(mh, d2)
+    val mhLoaded = IndexIO.loadAs[graft.index.BinaryMultiHashIndex](spark, d2)
     assert(mhLoaded.nhash == 4 && mhLoaded.b == 8)
     assert(results(mhLoaded.search(qc, 5)) == results(mh.search(qc, 5)))
   }
@@ -351,8 +353,8 @@ class IndexIOSpec extends SparkTestBase {
         graft.index.LshIndex.signBits(r, t, col("vec")).as("code"))
       val idx = new graft.index.LshIndex(r, t, codes)
       val dir = java.nio.file.Files.createTempDirectory("lshio").toString
-      IndexIO.saveLsh(idx, dir)
-      val loaded = IndexIO.loadLsh(spark, dir)
+      IndexIO.save(idx, dir)
+      val loaded = IndexIO.loadAs[graft.index.LshIndex](spark, dir)
       assert((loaded.rot == null) == (r == null))
       assert(loaded.thresholds.isDefined == t.isDefined)
       assert(results(loaded.search(q, 5)) == results(idx.search(q, 5)),
@@ -365,8 +367,8 @@ class IndexIOSpec extends SparkTestBase {
     val idx = graft.index.Lattice.build(b, "id", "vec",
       nsq = 16, scaleNbit = 8, r2 = 10)
     val dir = java.nio.file.Files.createTempDirectory("latio").toString
-    IndexIO.saveLattice(idx, dir)
-    val loaded = IndexIO.loadLattice(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.LatticeIndex](spark, dir)
     assert(loaded.codec.d == idx.codec.d && loaded.codec.nsq == 16 &&
       loaded.codec.scaleNbit == 8 && loaded.codec.r2 == 10)
     assert(loaded.codec.mins.sameElements(idx.codec.mins))
@@ -388,8 +390,8 @@ class IndexIOSpec extends SparkTestBase {
         inner, fp16c, niter = 3)
       assert(rt(idx.reconstruct) == rt(direct), s"$inner buildIndex drifted")
       val dir = java.nio.file.Files.createTempDirectory(s"mmio_$inner").toString
-      IndexIO.saveMinMax(idx, dir)
-      val loaded = IndexIO.loadMinMax(spark, dir)
+      IndexIO.save(idx, dir)
+      val loaded = IndexIO.loadAs[graft.index.MinMaxIndex](spark, dir)
       assert(loaded.inner == inner && loaded.fp16Coeffs == fp16c)
       assert(rt(loaded.reconstruct) == rt(direct), s"$inner reload drifted")
     }
@@ -399,8 +401,8 @@ class IndexIOSpec extends SparkTestBase {
     "search results and k_factor") {
     val idx = graft.index.RefineFlatIndex.build(b, "id", "vec", kFactor = 3)
     val dir = java.nio.file.Files.createTempDirectory("refineio").toString
-    IndexIO.saveRefineFlat(idx, dir)
-    val loaded = IndexIO.loadRefineFlat(spark, dir)
+    IndexIO.save(idx, dir)
+    val loaded = IndexIO.loadAs[graft.index.RefineFlatIndex](spark, dir)
     assert(loaded.kFactor == 3 && loaded.metric == "l2sq")
     assert(loaded.inner.qtype == "SQ8")
     assert(results(loaded.search(q, 5)) == results(idx.search(q, 5)))
@@ -412,13 +414,66 @@ class IndexIOSpec extends SparkTestBase {
       Transforms.pca(emb, "embedding", 8),
       Normalization))
     val dir = java.nio.file.Files.createTempDirectory("tio").toString + "/t"
-    IndexIO.saveTransform(spark, chain, dir)
-    val loaded = IndexIO.loadTransform(spark, dir)
+    Parts.transform.write(spark, chain, dir)
+    val loaded = Parts.transform.read(spark, dir)
     val a = emb.limit(20).select(chain.applyCol(col("embedding")).as("y")).collect()
     val c = emb.limit(20).select(loaded.applyCol(col("embedding")).as("y")).collect()
     a.zip(c).foreach { case (x, y) =>
       val xs = x.getSeq[Float](0); val ys = y.getSeq[Float](0)
       xs.zip(ys).foreach { case (u, v) => assert(math.abs(u - v) < 1e-6) }
     }
+  }
+
+  test("nested transform chains round-trip: steps keep their order and none " +
+    "is dropped") {
+    val d = emb.select(size(col("embedding"))).first().getInt(0)
+    val a = Centering(Array.tabulate(d)(i => 0.01f * i))
+    val b = Linear(Transforms.randomRotation(d, 7L).a)
+    val c = Remap(Array.tabulate(d)(i => d - 1 - i))
+    val e = Linear(Array.tabulate(4, d)((r, i) => if (i % 4 == r) 1f else 0f),
+      Array(0.5f, -0.5f, 0.25f, 0f))
+    for (chain <- Seq(Chain(Seq(a, Chain(Seq(b, c)), e)), Chain(Seq(Chain(Seq(a, b)), c)))) {
+      val dir = java.nio.file.Files.createTempDirectory("tnest").toString + "/t"
+      Parts.transform.write(spark, chain, dir)
+      val loaded = Parts.transform.read(spark, dir)
+      val want = emb.limit(20).select(chain.applyCol(col("embedding"))).collect()
+      val got = emb.limit(20).select(loaded.applyCol(col("embedding"))).collect()
+      assert(got.map(_.getSeq[Float](0)).toSeq == want.map(_.getSeq[Float](0)).toSeq,
+        s"$chain reloaded as $loaded")
+    }
+  }
+
+  test("SQ: a save without its qtype sidecar (the pre-r7 layout) loads as SQ8 " +
+    "and searches identically; a non-fp16 save without its range fails fast") {
+    val idx = SqIndex.build(b, "id", "vec")
+    val dir = java.nio.file.Files.createTempDirectory("sqio_legacy").toString
+    IndexIO.save(idx, dir)
+    graft.streaming.StreamingIngest.rmTree(java.nio.file.Paths.get(s"$dir/qtype"))
+    val loaded = IndexIO.loadAs[SqIndex](spark, dir)
+    assert(loaded.qtype == "SQ8")
+    assert(results(loaded.search(q, 5)) == results(idx.search(q, 5)))
+    val sq4 = SqIndex.build(b, "id", "vec", qtype = "SQ4")
+    val d4 = java.nio.file.Files.createTempDirectory("sqio_trunc").toString
+    IndexIO.save(sq4, d4)
+    graft.streaming.StreamingIngest.rmTree(java.nio.file.Paths.get(s"$d4/meta"))
+    val ex = intercept[IllegalArgumentException](IndexIO.loadAs[SqIndex](spark, d4))
+    assert(ex.getMessage.contains(s"$d4/meta"), ex.getMessage)
+  }
+
+  test("the kind tag is written last: a save that fails part-way over an " +
+    "earlier save leaves a directory that no load accepts") {
+    val a = graft.index.IvfPqIndex.build(b, "id", "vec",
+      nlist = 4, m = 8, ksub = 16, niterCoarse = 3, niterPq = 3)
+    val dir = java.nio.file.Files.createTempDirectory("kindlast").toString
+    IndexIO.save(a, dir)
+    assert(IndexIO.load(spark, dir).isInstanceOf[graft.index.IvfPqIndex])
+    // one codebook row missing: the save fails while writing its sidecars
+    val books = a.model.codebooks.map(_.clone())
+    books(0)(0) = null
+    val broken = new graft.index.IvfPqIndex(a.nlist, a.centroids,
+      a.model.copy(codebooks = books), a.codes)
+    intercept[NullPointerException](IndexIO.save(broken, dir))
+    val ex = intercept[IllegalArgumentException](IndexIO.load(spark, dir))
+    assert(ex.getMessage.contains("no kind tag"), ex.getMessage)
   }
 }

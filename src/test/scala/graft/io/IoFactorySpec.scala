@@ -263,63 +263,63 @@ class IoFactorySpec extends SparkTestBase {
       save(d)
       assert(IndexIO.reverseFactory(spark, d) == expect, s"at $d")
     }
-    check("IVF8,Flat", d => graft.index.IvfIndex.save(
+    check("IVF8,Flat", d => graft.io.IndexIO.save(
       graft.index.IvfIndex.build(b, "id", "vec", nlist = 8, niter = 2), d))
-    check("SQ8", d => IndexIO.saveSq(
+    check("SQ8", d => IndexIO.save(
       graft.index.SqIndex.build(b, "id", "vec"), d))
-    check("PQ8x16", d => IndexIO.savePq(
+    check("PQ8x16", d => IndexIO.save(
       graft.index.PqIndex.build(b, "id", "vec", m = 8, ksub = 16, niter = 2), d))
-    check("IVF4,PQ8x16", d => IndexIO.saveIvfPq(
+    check("IVF4,PQ8x16", d => IndexIO.save(
       graft.index.IvfPqIndex.build(b, "id", "vec",
         nlist = 4, m = 8, ksub = 16, niterCoarse = 2, niterPq = 2), d))
-    check("Residual4,PQ8x16", d => IndexIO.saveTwoLayer(
+    check("Residual4,PQ8x16", d => IndexIO.save(
       graft.index.TwoLayerIndex.build(b, "id", "vec",
         nlist = 4, m = 8, ksub = 16, niterCoarse = 2, niterPq = 2), d))
-    check("Residual2x4,PQ8x16", d => IndexIO.saveMiqTwoLayer(
+    check("Residual2x4,PQ8x16", d => IndexIO.save(
       graft.index.MiqTwoLayerIndex.build(b, "id", "vec",
         mCoarse = 2, nbit = 4, m = 8, ksub = 16,
         niterCoarse = 2, niterPq = 2), d))
-    check("IMI2x2,Flat", d => IndexIO.saveImi(
+    check("IMI2x2,Flat", d => IndexIO.save(
       graft.index.ImiIndex.build(b, "id", "vec", ksub = 4, niter = 2), d))
-    check("IMI2x2,PQ8x16", d => IndexIO.saveImiPq(
+    check("IMI2x2,PQ8x16", d => IndexIO.save(
       graft.index.ImiPqIndex.build(b, "id", "vec", ksub = 4,
         m = 8, pqKsub = 16, niterCoarse = 2, niterPq = 2), d))
-    check("BIVF4", d => IndexIO.saveBinaryIvf(
+    check("BIVF4", d => IndexIO.save(
       graft.index.BinaryIvfIndex.buildFromVectors(b, "id", "vec",
         nlist = 4, niter = 2), d))
-    check("IVF4,SH16x1g", d => IndexIO.saveSpectralHash(
+    check("IVF4,SH16x1g", d => IndexIO.save(
       graft.index.IvfSpectralHash.build(b, "id", "vec", nlist = 4,
         nbit = 16, period = 1.0, thresholdType = "global", niter = 2), d))
-    check("PQ8x4fs", d => IndexIO.savePq4Fs(
+    check("PQ8x4fs", d => IndexIO.save(
       graft.index.Pq4FastScanIndex.build(b, "id", "vec", m = 8, niter = 2), d))
-    check("IVF4,PQ8x4fs", d => IndexIO.saveIvfPq4Fs(
+    check("IVF4,PQ8x4fs", d => IndexIO.save(
       graft.index.IvfPq4FastScanIndex.build(b, "id", "vec", nlist = 4,
         m = 8, niterCoarse = 2, niterPq = 2), d))
-    check("IVF4,PQ8x4fsr", d => IndexIO.saveIvfPq4FsR(
+    check("IVF4,PQ8x4fsr", d => IndexIO.save(
       graft.index.IvfPq4FastScanRIndex.build(b, "id", "vec", nlist = 4,
         m = 8, niterCoarse = 2, niterPq = 2), d))
-    check("RQ2x4fs", d => IndexIO.saveRq4Fs(
+    check("RQ2x4fs", d => IndexIO.save(
       graft.index.Rq4FastScanIndex.build(b, "id", "vec",
         levels = 2, niter = 2), d))
-    check("IVF4,RQ2x4fs", d => IndexIO.saveIvfRq4Fs(
+    check("IVF4,RQ2x4fs", d => IndexIO.save(
       graft.index.IvfRq4FastScanIndex.build(b, "id", "vec",
         nlist = 4, levels = 2, niterCoarse = 2, niter = 2), d))
-    check("IVF4,RQ2x4fsr", d => IndexIO.saveIvfRq4FsR(
+    check("IVF4,RQ2x4fsr", d => IndexIO.save(
       graft.index.IvfRq4FastScanRIndex.build(b, "id", "vec",
         nlist = 4, levels = 2, niterCoarse = 2, niter = 2), d))
-    check("IVF4,SQ8", d => IndexIO.saveIvfSq(
+    check("IVF4,SQ8", d => IndexIO.save(
       graft.index.IvfSqIndex.build(b, "id", "vec", nlist = 4,
         niter = 2, byResidual = true, qtype = "SQ8"), d))
     val ivfRq = graft.index.IvfRq.build(b, "id", "vec", nlist = 4,
       levels = 2, k = 16, niterCoarse = 2, niterRq = 2)
-    check("IVF4,RQ2x4", d => IndexIO.saveIvfRq(ivfRq, d))
-    check("IVF4,RQ2x4_Nnone", d => IndexIO.saveIvfRqNorm(
+    check("IVF4,RQ2x4", d => IndexIO.save(ivfRq, d))
+    check("IVF4,RQ2x4_Nnone", d => IndexIO.save(
       new graft.index.IvfRqNormIndex(ivfRq, ivfRq.codes, nonorm = true), d))
     val bcodes = b.select(col("id"), graft.functions.sign_bits(col("vec")).as("code"))
-    check("BFlat", d => IndexIO.saveBinaryFlat(bcodes, d))
-    check("BHash6", d => IndexIO.saveBinaryHash(
+    check("BFlat", d => IndexIO.save(bcodes, d))
+    check("BHash6", d => IndexIO.save(
       graft.index.BinaryHashIndex.build(bcodes, b = 6), d))
-    check("BHash4x8", d => IndexIO.saveBinaryMultiHash(
+    check("BHash4x8", d => IndexIO.save(
       new graft.index.BinaryMultiHashIndex(4, 8, bcodes), d))
     val dim = b.select(size(col("vec"))).first().getInt(0)
     val rot = graft.transform.Linear(
@@ -329,19 +329,19 @@ class IoFactorySpec extends SparkTestBase {
         (rot, th, "LSHrt"), (rot, None, "LSHr"), (null, None, "LSH"))) {
       val codes = b.select(col("id"),
         graft.index.LshIndex.signBits(r, t, col("vec")).as("code"))
-      check(expect, d => IndexIO.saveLsh(
+      check(expect, d => IndexIO.save(
         new graft.index.LshIndex(r, t, codes), d))
     }
-    check("ZnLattice16x10_8", d => IndexIO.saveLattice(
+    check("ZnLattice16x10_8", d => IndexIO.save(
       graft.index.Lattice.build(b, "id", "vec",
         nsq = 16, scaleNbit = 8, r2 = 10), d))
-    check("MinMax,SQ8", d => IndexIO.saveMinMax(
+    check("MinMax,SQ8", d => IndexIO.save(
       MinMaxCodec.buildIndex(b, "id", "vec", "SQ8", fp16Coeffs = false,
         niter = 2), d))
-    check("MinMaxFP16,SQfp16", d => IndexIO.saveMinMax(
+    check("MinMaxFP16,SQfp16", d => IndexIO.save(
       MinMaxCodec.buildIndex(b, "id", "vec", "SQfp16", fp16Coeffs = true,
         niter = 2), d))
-    check("SQ8,RFlat", d => IndexIO.saveRefineFlat(
+    check("SQ8,RFlat", d => IndexIO.save(
       graft.index.RefineFlatIndex.build(b, "id", "vec", kFactor = 3), d))
   }
 
@@ -353,7 +353,7 @@ class IoFactorySpec extends SparkTestBase {
     val sh = graft.index.IvfSpectralHash.build(b, "id", "vec", nlist = 4,
       nbit = 16, period = 1.0, thresholdType = "median", niter = 2)
     val d1 = java.nio.file.Files.createTempDirectory("revio_shmed").toString
-    IndexIO.saveSpectralHash(sh, d1)
+    IndexIO.save(sh, d1)
     val e1 = intercept[IllegalArgumentException] {
       IndexIO.reverseFactory(spark, d1) }
     assert(e1.getMessage.contains("Thresh_global"))
@@ -362,7 +362,7 @@ class IoFactorySpec extends SparkTestBase {
       levels = 2, k = 16, niterCoarse = 2, niterRq = 2)
     val withNq = ivfRq.codes.withColumn("nq", lit(1.0))
     val d2 = java.nio.file.Files.createTempDirectory("revio_rqnorm").toString
-    IndexIO.saveIvfRqNorm(
+    IndexIO.save(
       new graft.index.IvfRqNormIndex(ivfRq, withNq, nonorm = false), d2)
     val e2 = intercept[IllegalArgumentException] {
       IndexIO.reverseFactory(spark, d2) }

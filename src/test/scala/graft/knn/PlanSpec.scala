@@ -100,7 +100,7 @@ class PlanSpec extends SparkTestBase {
     val idx = IvfIndex.build(b, "id", "vec", nlist = 8, niter = 3)
     val dir = java.nio.file.Files.createTempDirectory("ivfplan").toString
     idx.save(dir)
-    val loaded = IvfIndex.load(spark, dir)
+    val loaded = graft.io.IndexIO.loadAs[IvfIndex](spark, dir)
     val oneQuery = q.limit(1)
     val lists = loaded.probedListNos(oneQuery, 2)
     val probed = loaded.invlists

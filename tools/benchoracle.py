@@ -11,9 +11,16 @@ Writes one line per query to <out.txt>: `<name> <seconds>` with
 seconds = -1 for a failed oracle and -2 for one skipped because the
 overall budget was spent. Stdout/stderr carry progress only.
 """
-import sys, json, os, time
+import sys, json, os, re, time
 
 import duckdb
+
+# Sidecar-based oracle SQL embeds the absolute oracle_aux root of the
+# checkout that ran Verify, at sf0.01. Point every such path at this
+# checkout's sidecars for the sf being checked.
+AUX_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "target", "oracle_aux")
+AUX_PREFIX = re.compile(r"'[^']*/oracle_aux/sf0\.01/")
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -31,7 +38,7 @@ def main():
     t_start = time.time()
     lines = []
     for name, sql in oracle.items():
-        sql = sql.replace("/oracle_aux/sf0.01/", f"/oracle_aux/{sfbase}/")
+        sql = AUX_PREFIX.sub(f"'{AUX_ROOT}/{sfbase}/", sql)
         if time.time() - t_start > budget:
             lines.append(f"{name} -2")
             continue

@@ -8,8 +8,15 @@ Assumes `sbt "runMain graft.Verify <sfdir> <outdir>"` already produced
 oracle SQL in DuckDB over views of the testdata tables, then compares
 (sorted columns, sorted rows) against the Spark parquet output.
 """
-import sys, json, glob, os
+import sys, json, glob, os, re
 import duckdb
+
+# Sidecar-based oracle SQL embeds the absolute oracle_aux root of the
+# checkout that ran Verify, at sf0.01. Point every such path at this
+# checkout's sidecars for the sf being checked.
+AUX_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "target", "oracle_aux")
+AUX_PREFIX = re.compile(r"'[^']*/oracle_aux/sf0\.01/")
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -32,14 +39,13 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-    # Sidecar-based oracles hardcode the driver's fixed sf0.01 aux path
-    # (the static SQL has no directory parameter). When replicating the
-    # gate at another scale, point them at the sidecars Verify just
-    # wrote for THIS sf directory.
+    # Sidecar-based oracles read the sf0.01 aux path (the static SQL has
+    # no directory parameter). When replicating the gate at another
+    # scale, point them at the sidecars Verify just wrote for THIS sf.
     sfbase = os.path.basename(sfdir.rstrip("/"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
-        sql = sql.replace("/oracle_aux/sf0.01/", f"/oracle_aux/{sfbase}/")
+        sql = AUX_PREFIX.sub(f"'{AUX_ROOT}/{sfbase}/", sql)
         spark_dir = f"{outdir}/{name}"
         files = glob.glob(f"{spark_dir}/*.parquet")
         if not files:
