@@ -9,7 +9,19 @@ import org.apache.spark.sql.DataFrame
   * of a shuffle-containing lineage; the same redundant job class the
   * r19 round removed elsewhere). */
 object Widen {
-  def apply(df: DataFrame): DataFrame = {
+
+  /** What a lineage's partitioning is, read from its optimized plan. */
+  sealed trait Width
+  /** Its topmost partitioning node implies an exchange at
+    * `spark.sql.shuffle.partitions`, which is sized for the cluster. */
+  case object Cluster extends Width
+  /** Its topmost partitioning node runs in one partition: a global
+    * limit, an ungrouped aggregate or a window with no partition spec. */
+  case object Single extends Width
+  /** No exchange: it runs at its scan's split count. */
+  case object Scan extends Width
+
+  def width(df: DataFrame): Width = {
     import org.apache.spark.sql.catalyst.plans.logical._
     // Only nodes that IMPLY an exchange count as proof of
     // cluster-sized parallelism (ADVICE r8): a broadcast-hinted join
@@ -20,6 +32,9 @@ object Widen {
     // shingle/minhash kernels. A join without a broadcast hint plans
     // as a shuffle join on both sides (a stats-based auto-broadcast
     // would pass through unwidened — the conservative pre-r9 behavior).
+    // An exchange into ONE partition proves nothing, and the topmost
+    // node decides: a limit over a groupBy runs in one partition, a
+    // groupBy over a limit at shuffle width.
     // Decided from the OPTIMIZED plan: only there does
     // EliminateResolvedHint fold the broadcast() hint into Join.hint —
     // in the analyzed plan the hint is a separate ResolvedHint node
@@ -28,15 +43,24 @@ object Widen {
     def broadcastHinted(j: Join): Boolean =
       Seq(j.hint.leftHint, j.hint.rightHint).flatten
         .flatMap(_.strategy).contains(BROADCAST)
-    val shuffled = df.queryExecution.optimizedPlan.collectFirst {
+    df.queryExecution.optimizedPlan.collectFirst {
+      case _: GlobalLimit => Single
+      case a: Aggregate if a.groupingExpressions.isEmpty => Single
+      case w: Window if w.partitionSpec.isEmpty => Single
       case _: Aggregate | _: RepartitionByExpression | _: Window |
-          _: Distinct | _: Deduplicate | _: GlobalLimit => ()
-      case Repartition(_, true, _) => ()
-      case s: Sort if s.global => ()
-      case j: Join if !broadcastHinted(j) => ()
-    }.isDefined
-    if (shuffled) df // runs at spark.sql.shuffle.partitions — cluster-sized
-    else {
+          _: Distinct | _: Deduplicate => Cluster
+      case Repartition(_, true, _) => Cluster
+      case s: Sort if s.global => Cluster
+      case j: Join if !broadcastHinted(j) => Cluster
+    }.getOrElse(Scan)
+  }
+
+  def apply(df: DataFrame): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    width(df) match {
+      case Cluster => df
+      // counting its partitions would run the exchange into it
+      case Single => df.repartition(target)
       // shuffle-free lineage: with no shuffle stages to materialize,
       // .rdd here is (at most) a plan conversion plus the build of any
       // hinted-broadcast side — small by the hint's own contract
@@ -44,8 +68,7 @@ object Widen {
       // already wider than the target (the many-split 100 TB case)
       // passes through; only a genuinely narrow scan pays the
       // widening shuffle.
-      val target = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+      case Scan => if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
     }
   }
 }

@@ -88,7 +88,7 @@ class BinaryIvfIndex(
     val probes = coarseProbes(queries, nprobe, queryId, queryCode,
       hnswCoarse, hnswM)
     val probed = probes.select("list_no").distinct().collect().map(_.getInt(0))
-    invlists.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
+    invlists.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probes), "list_no")
       .select(col(queryId), col("id"),
         hamming_dist(col(queryCode), col("code")).cast("double").as("_d"))
@@ -110,7 +110,7 @@ class BinaryIvfIndex(
     val probes = coarseProbes(queries, nprobe, queryId, queryCode,
       hnswCoarse, hnswM)
     val probed = probes.select("list_no").distinct().collect().map(_.getInt(0))
-    invlists.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
+    invlists.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probes), "list_no")
       .select(col(queryId), col("id"),
         hamming_dist(col(queryCode), col("code")).as("hd"))

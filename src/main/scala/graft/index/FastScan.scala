@@ -101,7 +101,7 @@ class IvfPq4FastScanIndex(
       shim.col(Pq4QuantLut(shim.expr(col(queryVec)), model.codebooks)).as("_ql"),
       explode(col("_sel")).as("_p"))
       .select(col(queryId), col("_ql"), col("_p.list_no").as("list_no"))
-    codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
+    codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId),
         shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq"))))
@@ -390,7 +390,7 @@ class IvfRq4FastScanIndex(
         (a, x) => a + x * x).as("_qn"),
       explode(col("_sel")).as("_p"))
       .select(col(queryId), col("_ql"), col("_qn"), col("_p.list_no").as("list_no"))
-    codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
+    codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId),
         shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq"))))
@@ -492,7 +492,7 @@ class IvfRq4FastScanRIndex(
       .select(col(queryId), col("list_no"), col("_ql"), col("_qn"),
         (lit(-2.0) * graft.functions.inner_product(col(queryVec), col("centroid")))
           .as("_bias"))
-    codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
+    codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("id"),
         (col("_qn") + col("_bias") +
@@ -606,7 +606,7 @@ class IvfPq4FastScanRIndex(
         shim.col(Pq4QuantLut(
           shim.expr(vec_sub(col(queryVec), col("centroid"))),
           model.codebooks)).as("_ql"))
-    codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
+    codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("id"),
         (shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq"))))

@@ -91,7 +91,7 @@ class ImiIndex(
   private def scanCells(probes: DataFrame, k: Int,
       queryId: String, queryVec: String, metric: String): DataFrame = {
     val probed = probes.select("cell").distinct().collect().map(_.getInt(0))
-    invlists.filter(col("cell").isin(probed.map(Integer.valueOf): _*))
+    invlists.filter(Probes.listFilter(col("cell"), probed))
       .join(broadcast(probes), "cell")
       .select(col(queryId), col("id"),
         vec_dist(col(queryVec), col("vec"), metric).as("_d"))
@@ -311,7 +311,7 @@ class ImiPqIndex(
       if (!broadcastQueries) codes
       else {
         val probed = Probes.probedListIds(pl.select(col("cell").as("list_no")))
-        codes.filter(col("cell").isin(probed.map(Integer.valueOf).toSeq: _*))
+        codes.filter(Probes.listFilter(col("cell"), probed))
       }
     val codesRaw = pruneCells(probesLut)
     // max_codes = per-query TOTAL scan budget consumed in probe-rank
@@ -381,7 +381,7 @@ class ImiPqIndex(
       if (!broadcastQueries) codes
       else {
         val probed = Probes.probedListIds(probesLut.select(col("cell").as("list_no")))
-        codes.filter(col("cell").isin(probed.map(Integer.valueOf).toSeq: _*))
+        codes.filter(Probes.listFilter(col("cell"), probed))
       }
     val probeSide = if (broadcastQueries) broadcast(probesLut) else probesLut
     scanSide.join(probeSide, "cell")
@@ -405,7 +405,7 @@ class ImiPqIndex(
         shim.col(graft.core.PQEncode(shim.expr(col("_qres")),
           model.codebooks)).as("_qcode"))
     val probed = Probes.probedListIds(probesLut.select(col("cell").as("list_no")))
-    codes.filter(col("cell").isin(probed.map(Integer.valueOf).toSeq: _*))
+    codes.filter(Probes.listFilter(col("cell"), probed))
       .join(broadcast(probesLut), "cell")
       .select(col(queryId), col("cell").as("list_no"), col("pr"), col("id"),
         model.adcCol(col("code"), col("_lut")).as("dist"),
@@ -467,7 +467,7 @@ class ImiSqIndex(
       if (!broadcastQueries) codes
       else {
         val probed = Probes.probedListIds(probes.select(col("cell").as("list_no")))
-        codes.filter(col("cell").isin(probed.map(Integer.valueOf).toSeq: _*))
+        codes.filter(Probes.listFilter(col("cell"), probed))
       }
     val probeSide = if (broadcastQueries) broadcast(probes) else probes
     scanSide.join(probeSide, "cell")

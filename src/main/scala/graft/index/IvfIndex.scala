@@ -8,18 +8,22 @@ import graft.cluster.KMeans
 import graft.functions.{topk, vec_dist}
 
 /** IVF (inverted-file) index: the reference's scale path
-  * (faiss/IndexIVF.cpp) re-expressed as a list_no-partitioned
-  * DataFrame plus a small centroid table.
+  * (faiss/IndexIVF.cpp) re-expressed as a DataFrame of (id, vec,
+  * list_no) rows plus a small centroid table.
   *
-  * Build = k-means on a subsample + assign + repartition by list_no
-  * (IndexIVF::train / add_core, IndexIVF.cpp:254). Search = per-query
-  * coarse quantization to nprobe lists (broadcast-size centroid table
-  * embedded in the plan) + equi-join on list_no against only the
-  * probed lists + per-query top-k (IndexIVF::search,
-  * IndexIVF.cpp:302-683). With parquet persistence partitioned on
-  * list_no, the probe filter becomes static partition pruning: at
-  * 100 TB the scan touches nprobe/nlist of the data, which is the
-  * whole point of IVF.
+  * Build = k-means on a subsample + assign (IndexIVF::train /
+  * add_core, IndexIVF.cpp:254). Search = per-query coarse quantization
+  * to nprobe lists (broadcast-size centroid table embedded in the
+  * plan) + equi-join on list_no against only the probed lists +
+  * per-query top-k (IndexIVF::search, IndexIVF.cpp:302-683). A saved
+  * index stores its lists as list_no-sorted parquet files, the analog
+  * of the reference's one-file `OnDiskInvertedLists`. A search's probe
+  * filter ([[Probes.listFilter]]) is pushed into the scan, and parquet
+  * skips the row groups and pages that hold only unprobed lists. Every
+  * split of the store is still planned and has its footer read, and a
+  * page shared with a probed list is read whole. PlanSpec pins it on
+  * 100 lists of one page each: 32 scattered probed lists read their
+  * 32 000 of 100 000 rows.
   */
 class IvfIndex(
     val d: Int,
@@ -67,10 +71,10 @@ class IvfIndex(
         col("_pr").as("pr")), probed)
   }
 
-  /** The invlists statically pruned to `probed`, or all of them when
-    * the scan set is left to the equi-join. */
+  /** The invlists filtered to `probed`, or all of them when the scan
+    * set is left to the equi-join. */
   private def prunedLists(probed: Option[Array[Int]]): DataFrame =
-    probed.fold(invlists)(p => invlists.filter(col("list_no").isin(p.map(Integer.valueOf): _*)))
+    probed.fold(invlists)(p => invlists.filter(Probes.listFilter(col("list_no"), p)))
 
   /** Distinct lists any query probes at this nprobe (the scan set). */
   def probedListNos(queries: DataFrame, nprobe: Int,
@@ -126,8 +130,9 @@ class IvfIndex(
     * @param broadcastQueries true (default) broadcasts the probe table
     *        (small query sets); false leaves it to a shuffle equi-join
     *        on list_no — the right plan when the query set itself is
-    *        huge (e.g. a full-corpus self-join for dedup). Partition
-    *        pruning applies either way. */
+    *        huge (e.g. a full-corpus self-join for dedup). Unprobed
+    *        lists are pruned either way: by the filter pushed into the
+    *        scan, or by the join. */
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       filter: Option[Column] = None,
@@ -137,14 +142,14 @@ class IvfIndex(
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
     // Small query sets (broadcastQueries=true) are coarse-quantized on
     // the driver, once: the query rows come back with their ranked
-    // probe arrays, and the probed lists turn the invlists scan into a
-    // statically partition-pruned read. Big-batch sets
+    // probe arrays, and the probed lists become a filter
+    // (Probes.listFilter) that the parquet scan of a saved index uses
+    // to skip row groups and pages. Big-batch sets
     // (broadcastQueries=false, corpus-sized queries): the probed union
-    // approaches every list, the isin would prune nothing, and the
+    // approaches every list, the filter would prune nothing, and the
     // collect would force an eager full coarse-quantization job inside
     // a plan builder — so the scan set is left entirely to the shuffle
-    // equi-join (unprobed lists drop out of the join; parquet partition
-    // pruning on list_no still applies dynamically). Plan construction
+    // equi-join (unprobed lists drop out of the join). Plan construction
     // launches ZERO jobs on that path (PlanSpec pins it). A maxCodes
     // cut drops lists from the probe table; the scan set stays the
     // probed lists, and the join drops the cut ones.
@@ -380,15 +385,15 @@ object IvfIndex {
   }
 
   /** merge_ondisk (contrib/ondisk.py:13): union many indexes that
-    * share ONE trained quantizer into a single list_no-partitioned
+    * share ONE trained quantizer into a single list_no-sorted
     * on-disk store and return the merged index backed by it — the
     * shard-build-then-merge lifecycle of corpus-scale ingestion (each
     * worker populates its own invlists against the common centroids;
     * the merge is a write, never a recluster). The store is a FULL
     * save (invlists + meta sidecar), so a later session reopens it
     * with [[graft.io.IndexIO.load]]; the returned index reads from
-    * disk, so searches partition-prune the merged store exactly like
-    * any loaded one. */
+    * disk, so searches skip its unprobed lists exactly like any
+    * loaded one. */
   def mergeOnDisk(indexes: Seq[IvfIndex], path: String): IvfIndex = {
     require(indexes.nonEmpty, "no indexes to merge")
     val h = indexes.head

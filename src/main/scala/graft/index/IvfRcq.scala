@@ -52,7 +52,7 @@ class IvfRcqFlatIndex(
       model.codebooks.head.head.length)
     val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
-    invlists.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
+    invlists.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("id"), l2sq(col(queryVec), col("vec")).as("_d"))
       .groupBy(col(queryId))

@@ -45,7 +45,7 @@ class IvfRqIndex(
       nprobe, "l2sq", coarse, graphCacheKey)
     val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
       .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
-    codes.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
+    codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(centDf), "list_no")
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("id"),
@@ -93,7 +93,7 @@ class IvfRqIndex(
     val ip = model.ipFromLutCol(col("code"), col("_lut"))
     val d = if (nonorm) col("_cd") - lit(2.0) * ip
       else col("_cd") - lit(2.0) * ip + col("nq")
-    codesNq.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
+    codesNq.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("id"), d.as("_dist"))
       .groupBy(col(queryId))

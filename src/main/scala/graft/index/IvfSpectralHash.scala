@@ -65,7 +65,7 @@ class IvfSpectralHashIndex(
       .join(broadcast(threshDf), "list_no")
       .select(col(queryId), col("list_no"),
         signature(vt.applyCol(col(queryVec)), col("_th"), nbit, period).as("_qsig"))
-    codes.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
+    codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probes), "list_no")
       .select(col(queryId), col("id"),
         bit_count(col("sig").bitwiseXOR(col("_qsig"))).cast("double").as("_hd"))

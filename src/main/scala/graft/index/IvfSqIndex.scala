@@ -52,7 +52,7 @@ class IvfSqIndex(
       probes = probes.join(broadcast(Probes.centroidsDf(queries.sparkSession, centroids)), "list_no")
         .select(col(queryId), col("list_no"),
           vec_sub(col(queryVec), col("centroid")).as(queryVec))
-    codes.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
+    codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probes), "list_no")
       .select(col(queryId), col("id"),
         shim.col(SqVariant.adcL2(qtype, shim.expr(col(queryVec)),

@@ -286,7 +286,7 @@ class IvfPqIndex(
         shim.col(PQEncode(shim.expr(col("_qres")), model.codebooks))).drop("_qres")
       case None => probesPlan.drop("_qres")
     }
-    var cand = codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
+    var cand = codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probesPlan), "list_no")
     polysemousHt.foreach { ht =>
       cand = cand.filter(hamming_dist(col("code"), col("_qcode")) <= ht)
@@ -320,7 +320,7 @@ class IvfPqIndex(
       .select(col(queryId), col("list_no"), col("pr"),
         model.lutCol(col("_qres")).as("_lut"),
         shim.col(PQEncode(shim.expr(col("_qres")), model.codebooks)).as("_qcode"))
-    codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
+    codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probesPlan), "list_no")
       .select(col(queryId), col("list_no"), col("pr"), col("id"),
         model.adcCol(col("code"), col("_lut")).as("dist"),
@@ -355,7 +355,7 @@ class IvfPqIndex(
       .withColumn("_qres", vec_sub(col(queryVec), col("centroid")))
       .select(col("ef"), col(queryId), col("list_no"), col("pr"),
         model.lutCol(col("_qres")).as("_lut"))
-    codes.filter(col("list_no").isin(probed.map(Integer.valueOf).toSeq: _*))
+    codes.filter(Probes.listFilter(col("list_no"), probed))
       .join(broadcast(probesPlan), Seq("list_no"))
       .select(col("ef"), col(queryId), col("list_no"), col("pr"), col("id"),
         model.adcCol(col("code"), col("_lut")).as("dist"))
@@ -418,7 +418,7 @@ class IvfPqrIndex(
       .select(col(queryId), col("list_no"),
         vec_sub(col(queryVec), col("centroid")).as("_qres"))
       .withColumn("_lut", model1.lutCol(col("_qres")))
-    val lists = codes.filter(col("list_no").isin(probed.map(Integer.valueOf): _*))
+    val lists = codes.filter(Probes.listFilter(col("list_no"), probed))
     // stage 1: ADC over code1, keep k*kFactor candidates per query
     val stage1 = lists.join(broadcast(probes.select(col(queryId), col("list_no"), col("_lut"))), "list_no")
       .select(col(queryId), col("id"), model1.adcCol(col("code"), col("_lut")).as("_d1"))

@@ -23,6 +23,30 @@ object Probes {
   def probedListIds(probesPlan: DataFrame): Array[Int] =
     probesPlan.select("list_no").distinct().collect().map(_.getInt(0))
 
+  /** At most this many disjuncts in a [[listFilter]], which every row
+    * the scan returns evaluates. */
+  val MaxRuns = 64
+
+  /** Keeps the rows of the `probed` lists of cluster column `c`, as an
+    * OR of one `c IN (…)` per run of adjacent probed lists. Spark pushes
+    * it into a parquet scan. Parquet prunes row groups and pages by an
+    * IN of more than spark.sql.parquet.pushdown.inFilterThreshold (10)
+    * values by its min and max alone: exact for a run, but a single IN
+    * over scattered lists would read almost the whole list_no-sorted
+    * file. Past [[MaxRuns]] runs, the runs across the narrowest gaps
+    * are merged into ranges, and one IN of all the lists keeps the
+    * result exact. */
+  def listFilter(c: Column, probed: Array[Int]): Column = {
+    val s = probed.distinct.sorted
+    def in(v: Array[Int]) = c.isin(v.map(Integer.valueOf): _*)
+    // a run starts after each gap; past MaxRuns runs, only the widest gaps split
+    val gaps = (1 until s.length).filter(i => s(i) > s(i - 1) + 1)
+    val cuts = gaps.sortBy(i => s(i - 1) - s(i)).take(MaxRuns - 1).sorted
+    val runs = (0 +: cuts).zip(cuts :+ s.length).map { case (a, b) => s.slice(a, b) }
+    if (cuts.length == gaps.length) runs.map(in).reduce(_ || _)
+    else in(s) && runs.map(r => c.between(r.head, r.last)).reduce(_ || _)
+  }
+
   /** Collects `side` (a search's id column(s) and `queryVec`) with the
     * ranked probe array `sel` ([[selExpr]]-shaped) as `_sel`, once, as
     * internal rows. Returns them as a LocalRelation frame, which the

@@ -142,20 +142,60 @@ object Parts {
   }
 }
 
-/** A parquet frame of family T: its directory, the partition column
+/** A parquet frame of family T: its directory, the cluster column
   * ("" = none) and the columns/casts read back (empty = all). */
 final case class Frame[T](name: String, get: T => DataFrame, by: String = "",
     cols: Seq[String] = Nil) {
 
+  /** A clustered frame is hash-shuffled on `by`, so each list lands in
+    * one file, and each file is sorted by `by`: a few files in all,
+    * whose row-group and page statistics let a search's
+    * [[graft.index.Probes.listFilter]] skip the unprobed lists. */
   def write(idx: T, path: String): Unit = {
     val df = get(idx)
-    val w = if (by.isEmpty) df.write else df.repartition(col(by)).write.partitionBy(by)
-    w.mode("overwrite").parquet(s"$path/$name")
+    val out = if (by.isEmpty) df else df.repartition(col(by)).sortWithinPartitions(by)
+    out.write.mode("overwrite").parquet(s"$path/$name")
   }
 
   def read(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(s"$path/$name")
+    val df = Frame.read(spark, s"$path/$name")
     if (cols.isEmpty) df else df.select(cols.map(Parts.column): _*)
+  }
+}
+
+object Frame {
+
+  private def entries(spark: SparkSession, dir: String) = {
+    val (fs, p) = JsonSidecar.hadoopFs(spark, dir)
+    (fs, if (fs.exists(p)) fs.listStatus(p).toSeq else Nil)
+  }
+
+  private def isByDir(s: org.apache.hadoop.fs.FileStatus) =
+    s.isDirectory && s.getPath.getName.contains("=")
+
+  /** A store in the older layout: one `by=` directory per list. */
+  def legacy(spark: SparkSession, dir: String): Boolean = entries(spark, dir)._2.exists(isByDir)
+
+  /** Reads a frame directory with the Spark schema stored in one data
+    * file's footer, read on the driver, so no schema-inference job runs.
+    * A legacy `by=` store, or a directory with no Spark-written data
+    * file, is read by plain `spark.read.parquet`. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    footerSchema(spark, dir).fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+
+  private def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val (fs, all) = entries(spark, dir)
+    if (all.exists(isByDir)) None
+    else all.filter(s => s.isFile && !"_.".contains(s.getPath.getName.head))
+      .sortBy(_.getPath.getName).headOption.flatMap { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, fs.getConf))
+      val json =
+        try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally reader.close()
+      Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+    }
   }
 }
 

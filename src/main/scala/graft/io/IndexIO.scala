@@ -14,7 +14,11 @@ import graft.index._
   * declaration. `<path>/kind` holds the family tag (the fourcc analog);
   * a save removes it first and stamps it last.
   *
-  * Layout per kind: frames (partition column), then sidecars.
+  * Layout per kind: frames, then sidecars. `(list_no)` marks a frame
+  * clustered on that column (`cell`, `bucket` likewise): hash-shuffled
+  * on it, so each list sits in one file, and written as files sorted
+  * by it. A frame is read with the schema in a data file's parquet
+  * footer, read on the driver, so opening it runs no Spark job.
   * {{{
   * ivfflat    invlists (list_no)      meta = centroids + d, metric, nlist
   * sq         codes                   meta = SQ range; qtype
@@ -44,7 +48,15 @@ import graft.index._
   * refineflat base                    inner = a saved sq index; meta = k_factor, metric
   * }}}
   * `?` marks a sidecar written only when the index holds that state.
-  * A partitioned frame keeps static partition pruning after a reload.
+  * IVF and IMI searches filter the scan to their probed lists (`cell`
+  * for imi/imipq) with [[graft.index.Probes.listFilter]]. Spark pushes
+  * it into the parquet scan, which skips every row group and page that
+  * holds no probed list: sorted files keep each list's pages together.
+  * The scan still plans every split of the store and reads its footer.
+  * A binary-hash search joins on `bucket` and pushes no filter, so it
+  * reads the whole store. A store saved in the older layout, one
+  * `list_no=` directory per list, still loads (the filter prunes its
+  * directories) and re-saves in this one.
   *
   * Graph-shard policy (the HNSW/NSG/NNDescent partition shards,
   * [[graft.knn.PartitionedHnsw]]/[[graft.knn.PartitionedNsg]]): the

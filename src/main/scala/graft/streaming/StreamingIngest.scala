@@ -6,32 +6,40 @@ import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cluster.KMeans
 import graft.core.ScopedConf
+import graft.io.Frame
 
 /** Structured-Streaming ingest into an IVF index (SURVEY §2.10): the
   * reference's incremental `add` path (faiss/Index.h:100-116,
   * IndexIVF.cpp:254 omp add loop) is embarrassingly parallel
   * assign→append, which maps exactly onto foreachBatch over a
-  * list_no-partitioned parquet index. SlidingIndexWindow
+  * list_no-sorted parquet index. SlidingIndexWindow
   * (faiss/IVFlib.h:87-112) becomes time-partition retention.
   */
 object StreamingIngest {
 
   /** Start appending a stream of (id, vec) rows into `indexPath`
     * (the `ivfflat` layout of [[graft.io.IndexIO.save]]): each microbatch
-    * is coarse-assigned with the trained centroids and appended to its
-    * list_no partitions. */
+    * is coarse-assigned with the trained centroids and appended as
+    * list_no-sorted files, one per task, with no shuffle. A list then
+    * spans files, and its pages in each are contiguous. A store in the
+    * older one-directory-per-list layout is refused: flat files beside
+    * its `list_no=` directories would make it unreadable. */
   def startIngest(stream: DataFrame, model: KMeans.Model, indexPath: String,
-      checkpoint: String): StreamingQuery =
+      checkpoint: String): StreamingQuery = {
+    val invlists = s"$indexPath/invlists"
+    require(!Frame.legacy(stream.sparkSession, invlists),
+      s"$invlists is in the list_no= directory layout; re-save it with IndexIO.save first")
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         model.assign(batch, "vec")
           .select(col("id"), col("vec"), col("list_no"))
-          .write.mode("append").partitionBy("list_no")
-          .parquet(s"$indexPath/invlists")
+          .sortWithinPartitions("list_no")
+          .write.mode("append").parquet(invlists)
       }
       .start()
+  }
 
   /** Retention step of a sliding window over time-partitioned data
     * (SlidingIndexWindow::step): keep only the newest `keep`

@@ -45,6 +45,14 @@ class IndexIOSpec extends SparkTestBase {
     assert(loaded.model.ksub == 16 && loaded.model.m == 8)
   }
 
+  /** Every stored file of a clustered frame is sorted by its cluster
+    * column `by`, and no list spans two files. */
+  private def assertListSorted(dir: String, by: String = "list_no"): Unit = {
+    val files = IndexLayoutFixtures.storedLists(spark, dir, by)
+    assert(files.nonEmpty && files.forall(_.nonEmpty), s"$dir: no data files")
+    assert(IndexLayoutFixtures.clustered(files), s"$dir: not clustered by $by: $files")
+  }
+
   test("IVFPQ index save/load round-trip preserves search results and pruning layout") {
     val idx = graft.index.IvfPqIndex.build(b, "id", "vec",
       nlist = 4, m = 8, ksub = 16, niterCoarse = 3, niterPq = 3)
@@ -53,10 +61,9 @@ class IndexIOSpec extends SparkTestBase {
     val loaded = IndexIO.loadAs[graft.index.IvfPqIndex](spark, dir)
     assert(results(loaded.search(q, 5, nprobe = 4)) ==
       results(idx.search(q, 5, nprobe = 4)))
-    // list_no-partitioned on disk: static pruning survives the reload
-    val parts = new java.io.File(s"$dir/codes").listFiles()
-      .filter(_.getName.startsWith("list_no=")).map(_.getName)
-    assert(parts.nonEmpty)
+    // list_no-sorted on disk: a probed-list filter skips row groups
+    // and pages after the reload
+    assertListSorted(s"$dir/codes")
   }
 
   test("fast-scan save/load: PQ4fs, IVF-PQ4fs (partitioned) and the rescaling " +
@@ -233,9 +240,7 @@ class IndexIOSpec extends SparkTestBase {
         s"meta lost: ${loaded.qtype}/${loaded.byResidual}")
       assert(results(loaded.search(q, 5, nprobe = 2)) ==
         results(idx.search(q, 5, nprobe = 2)), s"$qtype byRes=$byRes")
-      val parts = new java.io.File(s"$dir/codes").listFiles()
-        .filter(_.getName.startsWith("list_no=")).map(_.getName)
-      assert(parts.nonEmpty)
+      assertListSorted(s"$dir/codes")
       idx.close(); loaded.close()
     }
   }
@@ -332,9 +337,7 @@ class IndexIOSpec extends SparkTestBase {
     assert(loaded.b == 6)
     val qc = q.select(col("qid"), graft.functions.sign_bits(col("qvec")).as("qcode"))
     assert(results(loaded.search(qc, 5)) == results(idx.search(qc, 5)))
-    val parts = new java.io.File(s"$d1/codes").listFiles()
-      .filter(_.getName.startsWith("bucket=")).map(_.getName)
-    assert(parts.nonEmpty, "bucket partitioning lost")
+    assertListSorted(s"$d1/codes", "bucket")
     val mh = new graft.index.BinaryMultiHashIndex(4, 8, codes)
     val d2 = java.nio.file.Files.createTempDirectory("bmhio").toString
     IndexIO.save(mh, d2)

@@ -84,36 +84,113 @@ object IndexLayoutFixtures {
       }
     walk(root, "")
   }
+
+  /** The `by` values of each data file of a frame directory, in stored
+    * row order, one sequence per file. */
+  def storedLists(spark: SparkSession, dir: String, by: String): Seq[Seq[Long]] =
+    new java.io.File(dir).listFiles().toSeq.map(_.getName).filter(_.endsWith(".parquet"))
+      .sorted.map(f => spark.read.parquet(s"$dir/$f").select(col(by).cast("long"))
+        .collect().map(_.getLong(0)).toSeq)
+
+  /** Each file sorted, and no list in two files. */
+  def clustered(files: Seq[Seq[Long]]): Boolean =
+    files.forall(l => l == l.sorted) &&
+      files.flatMap(_.distinct).distinct.size == files.map(_.distinct.size).sum
+
+  /** A row as a comparable string (byte arrays by value). */
+  def show(v: Any): String = v match {
+    case null => "null"
+    case b: Array[Byte] => b.mkString("bytes(", ",", ")")
+    case s: scala.collection.Seq[_] => s.map(show).mkString("[", ",", "]")
+    case r: org.apache.spark.sql.Row => r.toSeq.map(show).mkString("(", ",", ")")
+    case x => x.toString
+  }
 }
 
 class IndexLayoutSpec extends SparkTestBase {
   import IndexLayoutFixtures._
 
-  /** Saved by the per-family writers this codec table replaced, from the
-    * same fixtures (parquet data included, checksum files left out). */
-  private def golden(kind: String) =
-    new java.io.File(getClass.getResource(s"/index_layout/$kind").toURI)
+  /** Goldens under `index_layout/` are saved by the current writer;
+    * `index_layout_legacy/` holds the kinds whose frames the earlier
+    * writer laid out as one `by=` directory per list, as it saved them
+    * (parquet data included, checksum files left out). */
+  private def golden(kind: String, set: String = "index_layout") =
+    new java.io.File(getClass.getResource(s"/$set/$kind").toURI)
+
+  private def legacyKinds =
+    new java.io.File(getClass.getResource("/index_layout_legacy").toURI).list().toSeq.sorted
+
+  private def clusteredKinds = IndexCodecs.all.filter(_.frames.exists(_.by.nonEmpty))
+
+  /** Schema and sorted rows of every frame of an index. */
+  private def frameRows(idx: Any): Seq[(String, Seq[String])] =
+    IndexCodecs.byClass(idx.getClass).asInstanceOf[Codec[Any]].frames.map { f =>
+      val df = f.get(idx)
+      f.name -> (df.schema.simpleString +: df.collect().map(show).toSeq.sorted)
+    }
+
+  // (kind, first entry that differs from the golden) per failing save
+  private def diff(kind: String, got: Seq[(String, String)], want: Seq[(String, String)]) =
+    if (got == want) Nil
+    else Seq(kind -> got.zipAll(want, null, null).find { case (g, w) => g != w })
+
+  private def inTmp[A](body: java.io.File => A): A = {
+    val tmp = java.nio.file.Files.createTempDirectory("index_layout").toFile
+    try body(tmp) finally graft.streaming.StreamingIngest.rmTree(tmp.toPath)
+  }
 
   test("every kind saves its frame directories and sidecar bytes exactly as " +
     "the golden layout, and each golden loads back and re-saves identically") {
     val fixtures = all(spark)
     assert(fixtures.map(_._1).toSet == IndexCodecs.all.map(_.kind).toSet)
     assert(fixtures.size == 26)
-    val tmp = java.nio.file.Files.createTempDirectory("index_layout").toFile
-    // (kind, first entry that differs from the golden) per failing save
-    def diff(kind: String, got: Seq[(String, String)], want: Seq[(String, String)]) =
-      if (got == want) Nil
-      else Seq(kind -> got.zipAll(want, null, null).find { case (g, w) => g != w })
-    try {
+    inTmp { tmp =>
       val bad = fixtures.flatMap { case (kind, idx) =>
         val want = layout(golden(kind))
         val dir = new java.io.File(tmp, kind)
         IndexIO.save(idx, dir.toString)
         val again = new java.io.File(tmp, s"$kind-reloaded")
-        IndexIO.save(IndexIO.load(spark, golden(kind).toString), again.toString)
-        diff(kind, layout(dir), want) ++ diff(s"$kind reloaded", layout(again), want)
+        val loaded = IndexIO.load(spark, golden(kind).toString)
+        IndexIO.save(loaded, again.toString)
+        diff(kind, layout(dir), want) ++ diff(s"$kind reloaded", layout(again), want) ++
+          (if (frameRows(loaded) == frameRows(idx)) Nil else Seq(kind -> Some("rows")))
       }
       assert(bad.isEmpty, bad.mkString("\n"))
-    } finally graft.streaming.StreamingIngest.rmTree(tmp.toPath)
+    }
+  }
+
+  test("each legacy one-directory-per-list golden loads the same rows as its " +
+    "new golden and re-saves to the new golden") {
+    assert(legacyKinds == clusteredKinds.map(_.kind).sorted)
+    assert(legacyKinds.size == 14)
+    inTmp { tmp =>
+      val bad = legacyKinds.flatMap { kind =>
+        val old = IndexIO.load(spark, golden(kind, "index_layout_legacy").toString)
+        val again = new java.io.File(tmp, kind)
+        IndexIO.save(old, again.toString)
+        (if (frameRows(old) == frameRows(IndexIO.load(spark, golden(kind).toString))) Nil
+         else Seq(kind -> Some("rows"))) ++ diff(kind, layout(again), layout(golden(kind)))
+      }
+      assert(bad.isEmpty, bad.mkString("\n"))
+    }
+  }
+
+  test("a clustered frame is stored as by-sorted files with each list in one " +
+    "file, and loads with its footer schema and no Spark job") {
+    val fixtures = all(spark).toMap
+    inTmp { tmp =>
+      clusteredKinds.foreach { c =>
+        val dir = new java.io.File(tmp, c.kind).toString
+        IndexIO.save(fixtures(c.kind), dir)
+        c.frames.filter(_.by.nonEmpty).foreach { f =>
+          val files = storedLists(spark, s"$dir/${f.name}", f.by)
+          assert(files.nonEmpty && IndexLayoutFixtures.clustered(files), s"${c.kind}: $files")
+          assert(Frame.read(spark, s"$dir/${f.name}").schema ==
+            spark.read.parquet(s"$dir/${f.name}").schema, c.kind)
+        }
+        val (_, jobs) = jobsLaunchedBy(IndexIO.load(spark, dir))
+        assert(jobs == 0, s"${c.kind}: load ran $jobs jobs")
+      }
+    }
   }
 }

@@ -97,20 +97,95 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("persisted IVF search reads only the probed list_no partitions") {
-    val idx = IvfIndex.build(b, "id", "vec", nlist = 8, niter = 3)
+    // 100 lists of 1000 rows, saved as list_no-sorted files with more
+    // than one 20 000-row parquet page each
+    val nlist = 100
+    val n = 100000
+    val inv = spark.range(n).select(col("id"),
+      array((col("id") % nlist).cast("float"), lit(0f), lit(0f), lit(0f)).as("vec"),
+      (col("id") % nlist).cast("int").as("list_no"))
+    val idx = new IvfIndex(4, "l2sq", nlist, Array.tabulate(nlist)(l => Array(l.toFloat, 0f, 0f, 0f)), inv)
     val dir = java.nio.file.Files.createTempDirectory("ivfplan").toString
     idx.save(dir)
+    val files = graft.io.IndexLayoutFixtures.storedLists(spark, s"$dir/invlists", "list_no")
+    assert(files.map(_.size).max > 20000, s"file sizes ${files.map(_.size)}")
     val loaded = graft.io.IndexIO.loadAs[IvfIndex](spark, dir)
-    val oneQuery = q.limit(1)
+    import spark.implicits._
+    val oneQuery = Seq((0L, Seq(42.3f, 0f, 0f, 0f))).toDF("qid", "qvec")
     val lists = loaded.probedListNos(oneQuery, 2)
+    assert(lists.sorted.toSeq == Seq(42, 43))
     val probed = loaded.invlists
       .filter(col("list_no").isin(lists.map(Integer.valueOf): _*))
-    // inputFiles ignores filters; count selected partitions from the scan
     val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") &&
-      plan.contains("list_no"), s"no partition filter on list_no:\n$plan")
-    val scanned = probed.select(col("list_no")).distinct().count()
-    assert(scanned <= lists.length, s"scanned $scanned lists for ${lists.length} probes")
+    assert("PushedFilters: \\[[^\\n]*list_no".r.findFirstIn(plan).isDefined,
+      s"list_no filter not pushed to the parquet scan:\n$plan")
+    val read = probed.select(col("list_no"))
+    val got = read.collect().map(_.getInt(0))
+    assert(got.length == 2000 && got.distinct.sorted.toSeq == Seq(42, 43))
+    // the pushed filter skips pages: the scan emits fewer rows than stored
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(read.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 1)
+    val scanned = scans.head.metrics("numOutputRows").value
+    assert(scanned >= 2000 && scanned < n, s"scanned $scanned of $n rows")
+  }
+
+  test("persisted IVF search over scattered probed lists reads only their pages") {
+    // 8 queries x nprobe 4 probe 32 lists spread over all 100: more
+    // values than spark.sql.parquet.pushdown.inFilterThreshold (10),
+    // past which parquet prunes pages by an IN's min and max alone.
+    // Pages of 1000 rows, one list each: the shape of a store whose
+    // lists are larger than parquet's default 20 000-row page.
+    val nlist = 100
+    val n = 100000
+    val inv = spark.range(n).select(col("id"),
+      array((col("id") % nlist).cast("float"), lit(0f), lit(0f), lit(0f)).as("vec"),
+      (col("id") % nlist).cast("int").as("list_no"))
+    val idx = new IvfIndex(4, "l2sq", nlist, Array.tabulate(nlist)(l => Array(l.toFloat, 0f, 0f, 0f)), inv)
+    val dir = java.nio.file.Files.createTempDirectory("ivfscatter").toString
+    val key = "parquet.page.row.count.limit"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1000")
+    try idx.save(dir) finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val loaded = graft.io.IndexIO.loadAs[IvfIndex](spark, dir)
+    import spark.implicits._
+    // runs of 4 lists (each pushed as equalities) and of 12 (each as
+    // one parquet IN, pruned by its min and max)
+    for ((xs, nprobe) <- Seq(Seq(3.2f, 15.7f, 27.1f, 40.4f, 52.8f, 66.3f, 78.6f, 91.2f) -> 4,
+        Seq(6.5f, 50.5f, 85.5f) -> 12)) {
+      val qs = xs.zipWithIndex.map { case (x, i) => (i.toLong, Seq(x, 0f, 0f, 0f)) }.toDF("qid", "qvec")
+      val lists = loaded.probedListNos(qs, nprobe).sorted
+      val rows = lists.length * 1000
+      assert(lists.length > 30 && lists.head < 5 && lists.last > 90, lists.mkString(","))
+      val res = loaded.search(qs, k = 5, nprobe = nprobe)
+      assert(res.collect().length == xs.length * 5)
+      val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(res.queryExecution.executedPlan) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+      assert(scans.size == 1)
+      val scanned = scans.head.metrics("numOutputRows").value
+      // the probed lists' rows, and at most one page on each side of
+      // each run of adjacent lists
+      assert(scanned >= rows && scanned <= rows + 2 * xs.length * 1000,
+        s"scanned $scanned of $n rows for the probed lists' $rows")
+    }
+  }
+
+  test("listFilter keeps exactly the probed lists, with or without merged runs") {
+    val ids = spark.range(300).select(col("id").cast("int").as("list_no"))
+    for (p <- Seq(Array.empty[Int], Array(7), (40 until 60).toArray, Array(5, 3, 4, 90, 17, 17, 250),
+        (0 until 300 by 2).toArray)) {
+      val got = ids.filter(graft.index.Probes.listFilter(col("list_no"), p))
+        .collect().map(_.getInt(0)).sorted.toSeq
+      assert(got == p.distinct.sorted.toSeq)
+    }
+    // 150 runs: merged into 64 ranges, and the IN of all keeps it exact
+    import org.apache.spark.sql.catalyst.expressions.{In, Or}
+    val merged = ids.filter(graft.index.Probes.listFilter(col("list_no"), (0 until 300 by 2).toArray))
+      .queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter].condition
+    assert(merged.collect { case o: Or => o }.size == graft.index.Probes.MaxRuns - 1)
+    assert(merged.collect { case i: In => i.list.size } == Seq(150))
   }
 
   test("session-built (cached) IVF search pushes the probed-list INSET into the scan") {

@@ -54,6 +54,31 @@ class MiscSpec extends SparkTestBase {
     val written = spark.read.parquet(s"$dir/invlists")
     assert(written.count() == 500)
     assert(written.select("list_no").distinct().count() <= 4)
+    // each appended file is sorted by list_no
+    val files = graft.io.IndexLayoutFixtures.storedLists(spark, s"$dir/invlists", "list_no")
+    assert(files.size >= 2 && files.forall(l => l == l.sorted), files.map(_.take(20)))
+  }
+
+  test("streaming ingest refuses a store in the list_no= directory layout") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val legacy = java.nio.file.Paths.get(getClass.getResource("/index_layout_legacy/ivfflat").toURI)
+    val dir = Files.createTempDirectory("ingest_legacy")
+    try {
+      val walk = Files.walk(legacy)
+      try walk.iterator().asScala.foreach(p =>
+        if (p != legacy) Files.copy(p, dir.resolve(legacy.relativize(p).toString)))
+      finally walk.close()
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      implicit val sqlCtx = spark.sqlContext
+      import spark.implicits._
+      val stream = MemoryStream[(Long, Seq[Float])].toDF()
+        .select(col("_1").as("id"), col("_2").as("vec"))
+      val model = KMeans.Model(Array(Array(0f, 0f, 0f, 0f)), 0.0, Nil, Array(0L))
+      val ex = intercept[IllegalArgumentException](StreamingIngest.startIngest(stream, model,
+        dir.toString, dir.resolve("ckpt").toString))
+      assert(ex.getMessage.contains("list_no="))
+    } finally StreamingIngest.rmTree(dir)
   }
 
   test("sliding window retention keeps newest partitions") {
