@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 import graft.functions._
 import graft.knn.Knn
-import graft.core.{NearestCentroid, VecSumAgg}
+import graft.core.{NearestCentroid, TopKAgg, VecSumAgg}
 import graft.index.IvfIndex
 import graft.llm.{Dedup, Multimodal, TextFunctions => TF}
 
@@ -290,11 +290,8 @@ private[graft] trait CatalogAq { this: QueriesBase =>
       val q = qDf(s, dir, 10)
       b.crossJoin(broadcast(q))
         .select(col("qid"), col("id"), l2sq(col("qvec"), col("dv")).as("_d"))
-        .groupBy(col("qid"))
-        .agg(topk(col("_d"), col("id"), 5, asc = true).as("_tk"))
-        .select(col("qid"), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-        .select(col("qid"), (col("_pos") + 1).cast("long").as("rank"),
-          col("_r.id").as("id"), round(col("_r.dist"), 4).as("dist"))
+        .transform(TopKAgg.ranked(_, Seq(col("qid")), col("_d"), col("id"), 5, asc = true))
+        .select(col("qid"), col("rank"), col("id"), round(col("dist"), 4).as("dist"))
     },
       Some(s"""WITH cb AS (SELECT m, j, c FROM read_parquet('$AUX/rq_codebooks/*.parquet')),
               |codes AS (SELECT id, codes FROM read_parquet('$AUX/lsq_codes/*.parquet')),
@@ -352,11 +349,8 @@ private[graft] trait CatalogAq { this: QueriesBase =>
       val q = qDf(s, dir, 10)
       b.crossJoin(broadcast(q))
         .select(col("qid"), col("id"), l2sq(col("qvec"), col("dv")).as("_d"))
-        .groupBy(col("qid"))
-        .agg(topk(col("_d"), col("id"), 5, asc = true).as("_tk"))
-        .select(col("qid"), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-        .select(col("qid"), (col("_pos") + 1).cast("long").as("rank"),
-          col("_r.id").as("id"), round(col("_r.dist"), 4).as("dist"))
+        .transform(TopKAgg.ranked(_, Seq(col("qid")), col("_d"), col("id"), 5, asc = true))
+        .select(col("qid"), col("rank"), col("id"), round(col("dist"), 4).as("dist"))
     },
       Some(s"""WITH cb AS (SELECT m, j, c FROM read_parquet('$AUX/rq_codebooks/*.parquet')),
               |a0 AS (SELECT vec_id, embedding, j0 FROM (
@@ -405,11 +399,8 @@ private[graft] trait CatalogAq { this: QueriesBase =>
         .select(col("qid"), col("id"),
           (col("qn") - lit(2.0) * rq.ipFromLutCol(col("codes"), col("lut"))
             + col("normsq")).as("_d"))
-        .groupBy(col("qid"))
-        .agg(topk(col("_d"), col("id"), 5, asc = true).as("_tk"))
-        .select(col("qid"), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-        .select(col("qid"), (col("_pos") + 1).cast("long").as("rank"),
-          col("_r.id").as("id"), round(col("_r.dist"), 4).as("dist"))
+        .transform(TopKAgg.ranked(_, Seq(col("qid")), col("_d"), col("id"), 5, asc = true))
+        .select(col("qid"), col("rank"), col("id"), round(col("dist"), 4).as("dist"))
     },
       Some(s"""WITH cb AS (SELECT m, j, c FROM read_parquet('$AUX/rq_codebooks/*.parquet')),
               |codes AS (SELECT id, codes FROM read_parquet('$AUX/rq_codes/*.parquet')),
@@ -551,11 +542,8 @@ private[graft] trait CatalogAq { this: QueriesBase =>
       rqNormBase(s, dir).crossJoin(broadcast(q))
         .select(col("qid"), col("id"),
           rq.ipFromLutCol(col("codes"), col("lut")).as("_d"))
-        .groupBy(col("qid"))
-        .agg(topk(col("_d"), col("id"), 5, asc = false).as("_tk"))
-        .select(col("qid"), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-        .select(col("qid"), (col("_pos") + 1).cast("long").as("rank"),
-          col("_r.id").as("id"), round(col("_r.dist"), 4).as("dist"))
+        .transform(TopKAgg.ranked(_, Seq(col("qid")), col("_d"), col("id"), 5, asc = false))
+        .select(col("qid"), col("rank"), col("id"), round(col("dist"), 4).as("dist"))
     },
       Some(s"""WITH cb AS (SELECT m, j, c FROM read_parquet('$AUX/rq_codebooks/*.parquet')),
               |codes AS (SELECT id, codes FROM read_parquet('$AUX/rq_codes/*.parquet')),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 import graft.functions._
 import graft.knn.Knn
-import graft.core.{NearestCentroid, VecSumAgg}
+import graft.core.{NearestCentroid, TopKAgg, VecSumAgg}
 import graft.index.IvfIndex
 import graft.llm.{Dedup, Multimodal, TextFunctions => TF}
 
@@ -304,11 +304,8 @@ private[graft] trait CatalogCore { this: QueriesBase =>
         col("l_returnflag"),
         (col("l_orderkey") * 10 + col("l_linenumber")).as("id"),
         col("l_extendedprice").as("price"))
-      li.groupBy(col("l_returnflag"))
-        .agg(topk(col("price"), col("id"), 3, asc = false).as("_tk"))
-        .select(col("l_returnflag"), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-        .select(col("l_returnflag"), (col("_pos") + 1).cast("long").as("rank"),
-          col("_r.id").as("id"), col("_r.dist").as("price"))
+      TopKAgg.ranked(li, Seq(col("l_returnflag")), col("price"), col("id"), 3, asc = false)
+        .select(col("l_returnflag"), col("rank"), col("id"), col("dist").as("price"))
     },
       Some("""SELECT l_returnflag, "rank", id, price FROM (
              |  SELECT l_returnflag, l_orderkey*10 + l_linenumber AS id, l_extendedprice AS price,

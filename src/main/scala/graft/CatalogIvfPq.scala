@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 import graft.functions._
 import graft.knn.Knn
-import graft.core.{NearestCentroid, VecSumAgg}
+import graft.core.{NearestCentroid, TopKAgg, VecSumAgg}
 import graft.index.IvfIndex
 import graft.llm.{Dedup, Multimodal, TextFunctions => TF}
 
@@ -208,11 +208,8 @@ private[graft] trait CatalogIvfPq { this: QueriesBase =>
       val base = vals.filter(col("id") >= 10)
       base.crossJoin(broadcast(qs))
         .select(col("qid"), col("id"), abs(col("v") - col("qv")).as("_d"))
-        .groupBy(col("qid"))
-        .agg(topk(col("_d"), col("id"), 3, asc = true).as("_tk"))
-        .select(col("qid"), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-        .select(col("qid"), (col("_pos") + 1).cast("long").as("rank"),
-          col("_r.id").as("id"), round(col("_r.dist"), 4).as("dist"))
+        .transform(TopKAgg.ranked(_, Seq(col("qid")), col("_d"), col("id"), 3, asc = true))
+        .select(col("qid"), col("rank"), col("id"), round(col("dist"), 4).as("dist"))
     },
       Some("""SELECT qid, "rank", id, round(dist, 4) AS dist FROM (
              |  SELECT q.vec_id AS qid, b.vec_id AS id,

@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.ByteBuffer
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -159,4 +160,23 @@ case class TopKAgg(
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TopKAgg =
     copy(left = newLeft, right = newRight)
+}
+
+object TopKAgg {
+  import org.apache.spark.sql.functions.{col, posexplode}
+
+  /** The ranked tail every search shares (the reference's one
+    * ResultHandler, faiss/impl/ResultHandler.h:25): the k best
+    * (`dist`, `id`) rows of each `by` group of `cand`, by the partial
+    * top-k aggregate, exploded to `by ++ (rank: long, 1-based, id,
+    * dist)` best-first with ties on ascending id. A caller that renames
+    * or rounds a column does so on the output. */
+  def ranked(cand: DataFrame, by: Seq[Column], dist: Column, id: Column,
+      k: Int, asc: Boolean): DataFrame = {
+    val g = cand.groupBy(by: _*).agg(graft.functions.topk(dist, id, k, asc).as("_tk"))
+    val keys = g.columns.init.toSeq.map(col)
+    g.select(keys :+ posexplode(col("_tk")).as(Seq("_pos", "_r")): _*)
+      .select(keys ++ Seq((col("_pos") + 1).cast("long").as("rank"),
+        col("_r.id").as("id"), col("_r.dist").as("dist")): _*)
+  }
 }

@@ -25,6 +25,10 @@ object Metric {
   * Re-expresses faiss's DistanceComputer family
   * (faiss/impl/DistanceComputer.h:25, faiss/utils/distances.h:28-37,
   * faiss/utils/extra_distances-inl.h:29-113) as Catalyst expressions.
+  * Two vectors of different lengths raise an error naming both
+  * operands and lengths (the reference fixes d per index and asserts
+  * it, faiss/Index.h:71-81): one int compare per row, where the
+  * kernels alone would read past the shorter array or stop early.
   */
 case class VecDistance(left: Expression, right: Expression, metric: String,
     metricArg: Double = 0.0) extends BinaryExpression {
@@ -56,8 +60,15 @@ case class VecDistance(left: Expression, right: Expression, metric: String,
 
   private val kernel = "graft.core.VecKernels"
 
+  /** The error for operands of `n` and `m` elements. */
+  def lengthMismatch(n: Int, m: Int): IllegalArgumentException =
+    new IllegalArgumentException(s"$prettyName: vector lengths differ: " +
+      s"${left.sql} has $n elements, ${right.sql} has $m")
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+    if (x.numElements() != y.numElements())
+      throw lengthMismatch(x.numElements(), y.numElements())
     metric match {
       case "l2sq"          => VecKernels.l2sq(x, y)
       case "ip"            => VecKernels.ip(x, y)
@@ -73,19 +84,22 @@ case class VecDistance(left: Expression, right: Expression, metric: String,
     }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    metric match {
-      case "lp" =>
-        defineCodeGen(ctx, ev, (a, b) => s"$kernel.lp($a, $b, $metricArg)")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val call: (String, String) => String = metric match {
+      case "lp" => (a, b) => s"$kernel.lp($a, $b, $metricArg)"
       // the binary popcount kernels own the bare names; the float
       // generalizations are the *Float overload-free variants
-      case "jaccard" =>
-        defineCodeGen(ctx, ev, (a, b) => s"$kernel.jaccardFloat($a, $b)")
-      case "hamming" =>
-        defineCodeGen(ctx, ev, (a, b) => s"$kernel.hammingFloat($a, $b)")
-      case m =>
-        defineCodeGen(ctx, ev, (a, b) => s"$kernel.$m($a, $b)")
+      case "jaccard" => (a, b) => s"$kernel.jaccardFloat($a, $b)"
+      case "hamming" => (a, b) => s"$kernel.hammingFloat($a, $b)"
+      case m => (a, b) => s"$kernel.$m($a, $b)"
     }
+    val self = ctx.addReferenceObj("vecDistance", this)
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""if ($a.numElements() != $b.numElements()) {
+         |  throw $self.lengthMismatch($a.numElements(), $b.numElements());
+         |}
+         |${ev.value} = ${call(a, b)};""".stripMargin)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -2,7 +2,8 @@ package graft.index
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{hamming_dist, jaccard_dist, topk}
+import graft.core.TopKAgg
+import graft.functions.{hamming_dist, jaccard_dist}
 
 /** Binary flat index (IndexBinaryFlat, faiss/IndexBinaryFlat.h:20):
   * packed-bit codes in a BinaryType column, exhaustively searched
@@ -11,31 +12,33 @@ import graft.functions.{hamming_dist, jaccard_dist, topk}
   * partial-top-k shape as the float path. */
 object BinaryFlat {
 
+  /** The ranked tail of the Hamming searches over `cand`'s
+    * (queryId, baseId, _d: double): (queryId, rank, baseId, hd: long). */
+  private[index] def rankedHd(cand: DataFrame, k: Int, queryId: String,
+      baseId: String): DataFrame =
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_d"), col(baseId), k, asc = true)
+      .select(col(queryId), col("rank"), col("id").as(baseId),
+        col("dist").cast("long").as("hd"))
+
   /** kNN under Hamming distance. Output (qid, rank, id, hd). */
   def knnJoin(queries: DataFrame, base: DataFrame, k: Int,
       queryId: String = "qid", queryCode: String = "qcode",
       baseId: String = "id", baseCode: String = "code"): DataFrame =
-    base.crossJoin(broadcast(queries))
+    rankedHd(base.crossJoin(broadcast(queries))
       .select(col(queryId), col(baseId),
-        hamming_dist(col(queryCode), col(baseCode)).cast("double").as("_d"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col(baseId), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as(baseId), col("_r.dist").cast("long").as("hd"))
+        hamming_dist(col(queryCode), col(baseCode)).cast("double").as("_d")),
+      k, queryId, baseId)
 
   /** kNN under binary Jaccard distance. Output (qid, rank, id, jd). */
   def knnJoinJaccard(queries: DataFrame, base: DataFrame, k: Int,
       queryId: String = "qid", queryCode: String = "qcode",
-      baseId: String = "id", baseCode: String = "code"): DataFrame =
-    base.crossJoin(broadcast(queries))
+      baseId: String = "id", baseCode: String = "code"): DataFrame = {
+    val cand = base.crossJoin(broadcast(queries))
       .select(col(queryId), col(baseId),
         jaccard_dist(col(queryCode), col(baseCode)).as("_d"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col(baseId), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as(baseId), col("_r.dist").as("jd"))
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_d"), col(baseId), k, asc = true)
+      .select(col(queryId), col("rank"), col("id").as(baseId), col("dist").as("jd"))
+  }
 
   /** Hash-bucketed Hamming kNN (IndexBinaryHash,
     * faiss/IndexBinaryHash.h:26: codes bucketed by a bit-prefix; a
@@ -47,14 +50,10 @@ object BinaryFlat {
       queryId: String = "qid", queryCode: String = "qcode",
       baseId: String = "id", baseCode: String = "code",
       bucket: String = "bucket"): DataFrame =
-    base.join(broadcast(queries), bucket)
+    rankedHd(base.join(broadcast(queries), bucket)
       .select(col(queryId), col(baseId),
-        hamming_dist(col(queryCode), col(baseCode)).cast("double").as("_d"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col(baseId), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as(baseId), col("_r.dist").cast("long").as("hd"))
+        hamming_dist(col(queryCode), col(baseCode)).cast("double").as("_d")),
+      k, queryId, baseId)
 
   /** Multi-hash bucketed Hamming kNN (IndexBinaryMultiHash,
     * faiss/IndexBinaryHash.h:83): `nhash` independent tables, table t
@@ -80,17 +79,12 @@ object BinaryFlat {
     val qk = queries
       .select(col(queryId), col(queryCode), keys(col(queryCode)).as("_tk"))
       .select(col(queryId), col(queryCode), col("_tk.t").as("_t"), col("_tk.key").as("_key"))
-    bk.join(broadcast(qk), Seq("_t", "_key"))
+    rankedHd(bk.join(broadcast(qk), Seq("_t", "_key"))
       .select(col(queryId), col(baseId),
         hamming_dist(col(queryCode), col(baseCode)).cast("double").as("_d"))
       // dedup the union across tables (a pair can collide in several)
       .groupBy(col(queryId), col(baseId))
-      .agg(min(col("_d")).as("_d"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col(baseId), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as(baseId), col("_r.dist").cast("long").as("hd"))
+      .agg(min(col("_d")).as("_d")), k, queryId, baseId)
   }
 
   /** Bit-prefix bucket key of the first `b` bits of a packed code —

@@ -6,7 +6,7 @@ import graft.functions.{hamming_dist, sign_bits, topk}
 
 /** Binary IVF index (faiss/IndexBinaryIVF.h:33): inverted lists of
   * packed binary codes, a binary coarse quantizer, Hamming-pruned
-  * search. Composes the IVF pruned-join shape of [[IvfIndex]] with the
+  * search. Composes the shared IVF scan ([[Probes.scan]]) with the
   * Hamming kernels of [[BinaryFlat]].
   *
   * Training follows the reference's recipe (IndexBinaryIVF::train →
@@ -72,12 +72,10 @@ class BinaryIvfIndex(
         val centF = centroidBits.map(_.map(_.toFloat))
         val qbits = shim.col(graft.core.UnpackBits(
           shim.expr(col(queryCode)), nbits)).cast("array<float>")
-        queries.select(col(queryId), col(queryCode),
-          explode(shim.col(graft.core.NearestCentroidsHnsw(
+        Probes.rows(queries, Seq(col(queryId), col(queryCode)),
+          sel = shim.col(graft.core.NearestCentroidsHnsw(
             shim.expr(qbits), centF, math.min(nprobe, nlist), ef,
-            m = hnswM, cacheKey = s"$hnswCacheKey:m=$hnswM"))).as("_p"))
-          .select(col(queryId), col(queryCode),
-            col("_p.list_no").as("list_no"))
+            m = hnswM, cacheKey = s"$hnswCacheKey:m=$hnswM")))
       case None => flatProbes(queries, nprobe, queryId, queryCode)
     }
   }
@@ -87,16 +85,11 @@ class BinaryIvfIndex(
       hnswCoarse: Option[Int] = None, hnswM: Int = 16): DataFrame = {
     val probes = coarseProbes(queries, nprobe, queryId, queryCode,
       hnswCoarse, hnswM)
-    val probed = probes.select("list_no").distinct().collect().map(_.getInt(0))
-    invlists.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probes), "list_no")
-      .select(col(queryId), col("id"),
-        hamming_dist(col(queryCode), col("code")).cast("double").as("_d"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").cast("long").as("hd"))
+    BinaryFlat.rankedHd(
+      Probes.scan(invlists, probes, Some(Probes.probedListIds(probes)))
+        .select(col(queryId), col("id"),
+          hamming_dist(col(queryCode), col("code")).cast("double").as("_d")),
+      k, queryId, "id")
   }
 
   /** Hamming radius search over the probed lists
@@ -109,9 +102,7 @@ class BinaryIvfIndex(
       hnswCoarse: Option[Int] = None, hnswM: Int = 16): DataFrame = {
     val probes = coarseProbes(queries, nprobe, queryId, queryCode,
       hnswCoarse, hnswM)
-    val probed = probes.select("list_no").distinct().collect().map(_.getInt(0))
-    invlists.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probes), "list_no")
+    Probes.scan(invlists, probes, Some(Probes.probedListIds(probes)))
       .select(col(queryId), col("id"),
         hamming_dist(col(queryCode), col("code")).as("hd"))
       .filter(col("hd") <= maxHamming)

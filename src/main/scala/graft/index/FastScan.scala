@@ -1,10 +1,34 @@
 package graft.index
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 import graft.core._
 import graft.functions.topk
+
+/** The ranked tail of the quantized-LUT fast-scan searches: the k best
+  * integer scores `adc` per query over `cand`'s (queryId, id, _ql), which
+  * also carry the query's affine (`_ql.a`, `_ql.b`) and with `qn` its
+  * `_qn` through the aggregate. Output (queryId, rank, id, qdist: the
+  * integer score, dist: qdist/a + b [+ qn], rounded to 4 places). */
+private object FastScanTail {
+  def apply(cand: DataFrame, adc: Column, queryId: String,
+      k: Int, qn: Boolean): DataFrame = {
+    val qnCol = if (qn) Seq("_qn") else Nil
+    val carried = Seq("_a", "_b") ++ qnCol
+    val scaled = col("_r.dist") / col("_a")
+    cand.select(Seq(col(queryId), adc.cast("double").as("_d"), col("id"),
+        col("_ql.a").as("_a"), col("_ql.b").as("_b")) ++ qnCol.map(col): _*)
+      .groupBy(col(queryId))
+      .agg(topk(col("_d"), col("id"), k, asc = true).as("_tk"),
+        carried.map(c => first(col(c)).as(c)): _*)
+      .select(col(queryId) +: carried.map(col) :+
+        posexplode(col("_tk")).as(Seq("_pos", "_r")): _*)
+      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
+        col("_r.id").as("id"), col("_r.dist").cast("long").as("qdist"),
+        round((if (qn) col("_qn") + scaled else scaled) + col("_b"), 4).as("dist"))
+  }
+}
 
 /** Fast-scan PQ family (faiss/IndexFastScan.h:29 — IndexPQFastScan,
   * faiss/IndexPQFastScan.h:20; IndexIVFPQFastScan,
@@ -41,19 +65,9 @@ class Pq4FastScanIndex(val model: PqModel, val codes: DataFrame) {
       queryId: String = "qid", queryVec: String = "qvec"): DataFrame = {
     val q = queries.select(col(queryId),
       shim.col(Pq4QuantLut(shim.expr(col(queryVec)), model.codebooks)).as("_ql"))
-    codes.crossJoin(broadcast(q))
-      .select(col(queryId),
-        shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq"))))
-          .cast("double").as("_d"),
-        col("id"), col("_ql.a").as("_a"), col("_ql.b").as("_b"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col("id"), k, asc = true).as("_tk"),
-        first(col("_a")).as("_a"), first(col("_b")).as("_b"))
-      .select(col(queryId), col("_a"), col("_b"),
-        posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").cast("long").as("qdist"),
-        round(col("_r.dist") / col("_a") + col("_b"), 4).as("dist"))
+    FastScanTail(codes.crossJoin(broadcast(q)),
+      shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq")))),
+      queryId, k, qn = false)
   }
 }
 
@@ -92,29 +106,14 @@ class IvfPq4FastScanIndex(
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
     // LUT computed ONCE per query (pre-explode), replicated over the
-    // probe rows by the generator; query rows and their probe arrays
-    // cross the driver (Probes.local), the LUT-bearing probe rows stay
-    // cluster-side inside the broadcast.
+    // probe rows by the generator
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
-    val probesPlan = q.select(col(queryId),
-      shim.col(Pq4QuantLut(shim.expr(col(queryVec)), model.codebooks)).as("_ql"),
-      explode(col("_sel")).as("_p"))
-      .select(col(queryId), col("_ql"), col("_p.list_no").as("list_no"))
-    codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probesPlan), "list_no")
-      .select(col(queryId),
-        shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq"))))
-          .cast("double").as("_d"),
-        col("id"), col("_ql.a").as("_a"), col("_ql.b").as("_b"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col("id"), k, asc = true).as("_tk"),
-        first(col("_a")).as("_a"), first(col("_b")).as("_b"))
-      .select(col(queryId), col("_a"), col("_b"),
-        posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").cast("long").as("qdist"),
-        round(col("_r.dist") / col("_a") + col("_b"), 4).as("dist"))
+    val probesPlan = Probes.rows(q, Seq(col(queryId),
+      shim.col(Pq4QuantLut(shim.expr(col(queryVec)), model.codebooks)).as("_ql")))
+    FastScanTail(Probes.scan(codes, probesPlan, Some(probed)),
+      shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq")))),
+      queryId, k, qn = false)
   }
 }
 
@@ -159,18 +158,7 @@ class Rq4FastScanIndex(
           shim.expr(col("_ql.lutq")), normScale, 2))
       else
         shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq"))))
-    codes.crossJoin(broadcast(q))
-      .select(col(queryId), adc.cast("double").as("_d"),
-        col("id"), col("_ql.a").as("_a"), col("_ql.b").as("_b"), col("_qn"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col("id"), k, asc = true).as("_tk"),
-        first(col("_a")).as("_a"), first(col("_b")).as("_b"),
-        first(col("_qn")).as("_qn"))
-      .select(col(queryId), col("_a"), col("_b"), col("_qn"),
-        posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").cast("long").as("qdist"),
-        round(col("_qn") + col("_r.dist") / col("_a") + col("_b"), 4).as("dist"))
+    FastScanTail(codes.crossJoin(broadcast(q)), adc, queryId, k, qn = true)
   }
 }
 
@@ -383,28 +371,14 @@ class IvfRq4FastScanIndex(
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
-    val probesPlan = q.select(col(queryId),
+    val probesPlan = Probes.rows(q, Seq(col(queryId),
       shim.col(Rq4FsQuantLut(shim.expr(col(queryVec)), model.codebooks, normCb))
         .as("_ql"),
       aggregate(col(queryVec).cast("array<double>"), lit(0.0),
-        (a, x) => a + x * x).as("_qn"),
-      explode(col("_sel")).as("_p"))
-      .select(col(queryId), col("_ql"), col("_qn"), col("_p.list_no").as("list_no"))
-    codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probesPlan), "list_no")
-      .select(col(queryId),
-        shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq"))))
-          .cast("double").as("_d"),
-        col("id"), col("_ql.a").as("_a"), col("_ql.b").as("_b"), col("_qn"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col("id"), k, asc = true).as("_tk"),
-        first(col("_a")).as("_a"), first(col("_b")).as("_b"),
-        first(col("_qn")).as("_qn"))
-      .select(col(queryId), col("_a"), col("_b"), col("_qn"),
-        posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").cast("long").as("qdist"),
-        round(col("_qn") + col("_r.dist") / col("_a") + col("_b"), 4).as("dist"))
+        (a, x) => a + x * x).as("_qn")))
+    FastScanTail(Probes.scan(codes, probesPlan, Some(probed)),
+      shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq")))),
+      queryId, k, qn = true)
   }
 }
 
@@ -475,34 +449,25 @@ class IvfRq4FastScanRIndex(
     val spark = queries.sparkSession
     val centDf = Probes.centroidsDf(spark, centroids)
     // ONE quantized LUT + ||q||^2 per query (pre-explode), a scalar
-    // -2<q,c> bias per probe row; query rows and their probe arrays
-    // cross the driver (Probes.local), the LUT-bearing probe rows stay
-    // cluster-side inside the broadcast.
+    // -2<q,c> bias per probe row
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
-    val probesPlan = q.select(col(queryId), col(queryVec),
+    val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec),
       shim.col(Rq4FsQuantLut(shim.expr(col(queryVec)), model.codebooks, normCb))
         .as("_ql"),
       aggregate(col(queryVec).cast("array<double>"), lit(0.0),
-        (a, x) => a + x * x).as("_qn"),
-      explode(col("_sel")).as("_p"))
-      .select(col(queryId), col(queryVec), col("_ql"), col("_qn"),
-        col("_p.list_no").as("list_no"))
+        (a, x) => a + x * x).as("_qn")))
       .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"), col("_ql"), col("_qn"),
         (lit(-2.0) * graft.functions.inner_product(col(queryVec), col("centroid")))
           .as("_bias"))
-    codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probesPlan), "list_no")
+    val cand = Probes.scan(codes, probesPlan, Some(probed))
       .select(col(queryId), col("id"),
         (col("_qn") + col("_bias") +
           shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq"))))
             .cast("double") / col("_ql.a") + col("_ql.b")).as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), round(col("_r.dist"), 4).as("dist"))
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
+      .select(col(queryId), col("rank"), col("id"), round(col("dist"), 4).as("dist"))
   }
 }
 
@@ -594,28 +559,21 @@ class IvfPq4FastScanRIndex(
     import graft.functions.vec_sub
     val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     // per (query, probed list): float32 residual -> double LUT ->
-    // uint8 quantization; query rows and their probe arrays cross the
-    // driver (Probes.local), the per-probe LUTs stay cluster-side
-    // inside the broadcast.
+    // uint8 quantization
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
-    val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
-      .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
+    val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
       .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"),
         shim.col(Pq4QuantLut(
           shim.expr(vec_sub(col(queryVec), col("centroid"))),
           model.codebooks)).as("_ql"))
-    codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probesPlan), "list_no")
+    val cand = Probes.scan(codes, probesPlan, Some(probed))
       .select(col(queryId), col("id"),
         (shim.col(Pq4AdcQ(shim.expr(col("code")), shim.expr(col("_ql.lutq"))))
           .cast("double") / col("_ql.a") + col("_ql.b")).as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), round(col("_r.dist"), 4).as("dist"))
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
+      .select(col(queryId), col("rank"), col("id"), round(col("dist"), 4).as("dist"))
   }
 }
 

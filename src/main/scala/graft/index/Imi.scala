@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
-import graft.core.PQSubAssign
+import graft.core.{PQSubAssign, TopKAgg}
 import graft.functions.{topk, vec_dist}
 
 /** IMI — inverted multi-index (MultiIndexQuantizer, faiss/IndexPQ.h:139-171,
@@ -86,21 +86,15 @@ class ImiIndex(
     scanCells(probes, k, queryId, queryVec, metric)
   }
 
-  /** Shared pruned cell scan: static cell pruning + broadcast probes +
-    * exact distance + partial/merge top-k. */
+  /** Shared pruned cell scan: [[Probes.scan]] over the probed cells +
+    * exact distance + the ranked top-k. */
   private def scanCells(probes: DataFrame, k: Int,
-      queryId: String, queryVec: String, metric: String): DataFrame = {
-    val probed = probes.select("cell").distinct().collect().map(_.getInt(0))
-    invlists.filter(Probes.listFilter(col("cell"), probed))
-      .join(broadcast(probes), "cell")
-      .select(col(queryId), col("id"),
-        vec_dist(col(queryVec), col("vec"), metric).as("_d"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
-  }
+      queryId: String, queryVec: String, metric: String): DataFrame =
+    TopKAgg.ranked(
+      Probes.scan(invlists, probes, Some(Probes.probedListIds(probes, "cell")), "cell")
+        .select(col(queryId), col("id"),
+          vec_dist(col(queryVec), col("vec"), metric).as("_d")),
+      Seq(col(queryId)), col("_d"), col("id"), k, asc = true)
 }
 
 object ImiIndex {
@@ -156,6 +150,12 @@ object ImiIndex {
   * cells, never the K² enumeration (at the reference's IMI2x12 that
   * would be 16M cells per query). */
 private[index] object ImiProbes {
+
+  /** The probed cells of `probes`, enumerated by a Spark distinct, for a
+    * small query set (`broadcastQueries`); None leaves the prune to the
+    * shuffle equi-join on cell ([[Probes.scan]]). */
+  def probedCells(probes: DataFrame, broadcastQueries: Boolean): Option[Array[Int]] =
+    Option.when(broadcastQueries)(Probes.probedListIds(probes, "cell"))
 
   /** (_j<m>, _c<m>) broadcast table of half-space m's centroids — the
     * shared residual/decode side of every IMI family member (one
@@ -301,53 +301,32 @@ class ImiPqIndex(
       case None => probesLut.drop("_qres")
     }
     // static cell pruning FOR SMALL QUERY SETS ONLY: distinct cell
-    // ints cross the driver (Probes.probedListIds) and the codes scan
+    // ints cross the driver (ImiProbes.probedCells) and the codes scan
     // reads just the probed cells. With broadcastQueries=false
     // (corpus-sized query sets) the probed union approaches every cell
     // and the collect would be an eager full probe-selection job
     // inside a plan builder — the shuffle equi-join on cell IS the
     // prune there (the IvfIndex.search contract).
-    def pruneCells(pl: DataFrame): DataFrame =
-      if (!broadcastQueries) codes
-      else {
-        val probed = Probes.probedListIds(pl.select(col("cell").as("list_no")))
-        codes.filter(Probes.listFilter(col("cell"), probed))
-      }
-    val codesRaw = pruneCells(probesLut)
+    val probed0 = ImiProbes.probedCells(probesLut, broadcastQueries)
     // max_codes = per-query TOTAL scan budget consumed in probe-rank
-    // order (IndexIVF.cpp:586 — whole lists accumulate until the
-    // budget trips; the IvfIndex.budgetProbes semantics): the cell at
-    // probe rank r is scanned iff the raw sizes of the better-ranked
-    // cells sum below the budget. A probe prefilter, never a
-    // per-candidate aggregate.
+    // order over the raw cell sizes (Probes.budget)
     maxCodes.foreach { mc =>
-      import org.apache.spark.sql.expressions.Window
-      val sizes = codesRaw.groupBy("cell").agg(count(lit(1)).as("_csz0"))
-      val w = Window.partitionBy(col(queryId)).orderBy(col("pr"))
-      probesLut = probesLut.join(sizes, Seq("cell"), "left")
-        .withColumn("_csz", coalesce(col("_csz0"), lit(0L)))
-        .withColumn("_before", sum(col("_csz")).over(w) - col("_csz"))
-        .filter(col("_before") < mc)
-        .drop("_csz0", "_csz", "_before")
+      probesLut = Probes.budget(probesLut, Probes.pruned(codes, probed0, "cell"), mc,
+        queryId, "cell")
     }
     probesLut = probesLut.drop("pr")
-    val scanSide = if (maxCodes.isDefined) pruneCells(probesLut) else codesRaw
-    val probeSide = if (broadcastQueries) broadcast(probesLut) else probesLut
-    var cand = scanSide.join(probeSide, "cell")
+    var cand = Probes.scan(codes, probesLut,
+      if (maxCodes.isDefined) ImiProbes.probedCells(probesLut, broadcastQueries) else probed0,
+      "cell")
     ht.foreach { t =>
       // polysemous pre-filter (IndexIVFPQ polysemous_ht): Hamming
       // between the query's PER-CELL residual code and the stored code
       cand = cand.filter(
         graft.functions.hamming_dist(col("code"), col("_qcode")) <= t)
     }
-    val scored = cand.select(col(queryId), col("cell"), col("id"),
-      model.adcCol(col("code"), col("_lut")).as("_dist"))
-    scored
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(cand.select(col(queryId), col("cell"), col("id"),
+      model.adcCol(col("code"), col("_lut")).as("_dist")),
+      Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
   }
 
   /** Lossy reconstruction (reconstruct_from_offset under the IMI
@@ -377,14 +356,8 @@ class ImiPqIndex(
     val probesLut = residualProbes(queries, nprobe, queryId, queryVec)
       .select(col(queryId), col("cell"), model.lutCol(col("_qres")).as("_lut"))
     // static cell prune only for small query sets (see [[search]])
-    val scanSide =
-      if (!broadcastQueries) codes
-      else {
-        val probed = Probes.probedListIds(probesLut.select(col("cell").as("list_no")))
-        codes.filter(Probes.listFilter(col("cell"), probed))
-      }
-    val probeSide = if (broadcastQueries) broadcast(probesLut) else probesLut
-    scanSide.join(probeSide, "cell")
+    Probes.scan(codes, probesLut,
+        ImiProbes.probedCells(probesLut, broadcastQueries), "cell")
       .select(col(queryId), col("id"),
         model.adcCol(col("code"), col("_lut")).as("dist"))
       .filter(col("dist") < radius)
@@ -404,9 +377,7 @@ class ImiPqIndex(
         model.lutCol(col("_qres")).as("_lut"),
         shim.col(graft.core.PQEncode(shim.expr(col("_qres")),
           model.codebooks)).as("_qcode"))
-    val probed = Probes.probedListIds(probesLut.select(col("cell").as("list_no")))
-    codes.filter(Probes.listFilter(col("cell"), probed))
-      .join(broadcast(probesLut), "cell")
+    Probes.scan(codes, probesLut, Some(Probes.probedListIds(probesLut, "cell")), "cell")
       .select(col(queryId), col("cell").as("list_no"), col("pr"), col("id"),
         model.adcCol(col("code"), col("_lut")).as("dist"),
         graft.functions.hamming_dist(col("code"), col("_qcode")).as("ham"))
@@ -463,22 +434,12 @@ class ImiSqIndex(
     // broadcastQueries=false: shuffle equi-join for huge query sets,
     // no driver enumeration of the probed cells (the ImiPqIndex.search
     // convention — the join is the prune)
-    val scanSide =
-      if (!broadcastQueries) codes
-      else {
-        val probed = Probes.probedListIds(probes.select(col("cell").as("list_no")))
-        codes.filter(Probes.listFilter(col("cell"), probed))
-      }
-    val probeSide = if (broadcastQueries) broadcast(probes) else probes
-    scanSide.join(probeSide, "cell")
+    val cand = Probes.scan(codes, probes,
+        ImiProbes.probedCells(probes, broadcastQueries), "cell")
       .select(col(queryId), col("id"),
         shim.col(SqVariant.adcL2(qtype, shim.expr(col(queryVec)),
           shim.expr(col("code")), vmin, vdiff)).as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
   }
 }
 

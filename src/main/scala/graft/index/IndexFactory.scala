@@ -203,11 +203,10 @@ object IndexFactory {
       chain: VecTransform) extends Built {
     def search(q: DataFrame, k: Int, nprobe: Int, qid: String, qvec: String) = {
       val qq = q.withColumn(qvec, chain.applyCol(col(qvec)))
-      val probesDf = qq.select(col(qid),
-        explode(shim.col(graft.core.NearestCentroids(
+      val probesDf = Probes.rows(qq, Seq(col(qid)),
+        sel = shim.col(graft.core.NearestCentroids(
           shim.expr(lin.applyCol(col(qvec))), tCents,
-          math.min(math.max(nprobe, 1), tCents.length), "l2sq"))).as("_p"))
-        .select(col(qid), col("_p.list_no").as("list_no"))
+          math.min(math.max(nprobe, 1), tCents.length), "l2sq")))
       idx.searchPreassigned(qq, probesDf, k, qid, qvec)
     }
   }
@@ -508,13 +507,9 @@ object IndexFactory {
       val ip = model.ipFromLutCol(col("codes"), col("_lut"))
       val d = if (nonorm) ip
         else col("_qn") - lit(2.0) * ip + col("nq")
-      codes.crossJoin(broadcast(qq))
-        .select(col(qid), col("id"), d.as("_d"))
-        .groupBy(col(qid))
-        .agg(graft.functions.topk(col("_d"), col("id"), k, asc = !nonorm).as("_tk"))
-        .select(col(qid), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-        .select(col(qid), (col("_pos") + 1).cast("long").as("rank"),
-          col("_r.id").as("id"), col("_r.dist").as("dist"))
+      graft.core.TopKAgg.ranked(codes.crossJoin(broadcast(qq))
+        .select(col(qid), col("id"), d.as("_d")),
+        Seq(col(qid)), col("_d"), col("id"), k, asc = !nonorm)
     }
   }
   private final class IvfRqBuilt(idx: IvfRqIndex, chain: VecTransform,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 import graft.core.{Metric, TopKAgg}
 import graft.cluster.KMeans
-import graft.functions.{topk, vec_dist}
+import graft.functions.vec_dist
 
 /** IVF (inverted-file) index: the reference's scale path
   * (faiss/IndexIVF.cpp) re-expressed as a DataFrame of (id, vec,
@@ -39,8 +39,8 @@ class IvfIndex(
     * every task of every search over THIS index reuses one graph. */
   private val graphCacheKey = java.util.UUID.randomUUID().toString
 
-  /** Per-query probe lists: (qid, qvec, list_no, coarse_dist, pr), and
-    * with `local` the probed-list scan set. `coarse =
+  /** Per-query probe lists: (qid, qvec, pr, list_no) ([[Probes.rows]]),
+    * and with `local` the probed-list scan set. `coarse =
     * Some(HnswCoarse/NsgCoarse)` routes the coarse quantization
     * through a graph walk over the centroids (the reference's
     * `IVF{n}_HNSW{m}` / `IVF{n}_NSG{R}` coarse grammar) — the scale
@@ -63,18 +63,8 @@ class IvfIndex(
           nprobe, metric, coarse, graphCacheKey)
         (lq, col("_sel"), Some(ids))
       }
-    (q.select(col(queryId), col(queryVec), posexplode(sel).as(Seq("_pr", "_p")))
-      .select(col(queryId), col(queryVec),
-        col("_p.list_no").as("list_no"), col("_p.dist").as("coarse_dist"),
-        // 0-based probe rank (closest centroid first): lets a sweep
-        // reconstruct the nprobe=j candidate set as `pr < j`
-        col("_pr").as("pr")), probed)
+    (Probes.rows(q, Seq(col(queryId), col(queryVec)), ranked = true, sel), probed)
   }
-
-  /** The invlists filtered to `probed`, or all of them when the scan
-    * set is left to the equi-join. */
-  private def prunedLists(probed: Option[Array[Int]]): DataFrame =
-    probed.fold(invlists)(p => invlists.filter(Probes.listFilter(col("list_no"), p)))
 
   /** Distinct lists any query probes at this nprobe (the scan set). */
   def probedListNos(queries: DataFrame, nprobe: Int,
@@ -97,35 +87,11 @@ class IvfIndex(
       .toSeq.groupMapReduce(_._1)(_._2)(math.min).toArray
   }
 
-  /** max_codes probe-budget filter (IndexIVF::search_preassigned,
-    * faiss/IndexIVF.cpp:586: `nscan` accumulates WHOLE scanned lists
-    * in probe-rank order and the scan breaks once nscan >= max_codes)
-    * — a per-query TOTAL budget, so the list at probe rank r is
-    * scanned iff the RAW sizes of the better-ranked lists sum below
-    * the budget. Sizes are pre-IDSelector (the reference counts
-    * invlists->list_size, not surviving candidates). Expressed as a
-    * probe-table prefilter: whole lists are cut before the scan join
-    * — at scale this PRUNES partitions, where a per-candidate cap
-    * would add an aggregate over every scanned code. */
-  private def budgetProbes(pr: DataFrame, listsRaw: DataFrame, mc: Int,
-      queryId: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sizes = listsRaw.groupBy("list_no").agg(count(lit(1)).as("_lsz"))
-    // pr is unique per (query, list), so the running-sum frame is
-    // well-defined; probed-but-empty lists carry size 0
-    val w = Window.partitionBy(col(queryId)).orderBy(col("pr"))
-    pr.join(sizes, Seq("list_no"), "left")
-      .withColumn("_csz", coalesce(col("_lsz"), lit(0L)))
-      .withColumn("_before", sum(col("_csz")).over(w) - col("_csz"))
-      .filter(col("_before") < mc)
-      .drop("_lsz", "_csz", "_before")
-  }
-
   /** kNN search over the probed lists (search_preassigned,
     * faiss/IndexIVF.cpp:398-683). Output (qid, rank, id, dist).
     * `filter` = IDSelector pushed inside the scan (IndexIVF.h:377).
     * `maxCodes` = the per-query TOTAL scan budget consumed in
-    * probe-rank order (faiss/IndexIVF.h:67-72; see [[budgetProbes]]).
+    * probe-rank order (faiss/IndexIVF.h:67-72; see [[Probes.budget]]).
     *
     * @param broadcastQueries true (default) broadcasts the probe table
     *        (small query sets); false leaves it to a shuffle equi-join
@@ -140,51 +106,46 @@ class IvfIndex(
       withCentroid: Boolean = false,
       broadcastQueries: Boolean = true,
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    // Small query sets (broadcastQueries=true) are coarse-quantized on
-    // the driver, once: the query rows come back with their ranked
-    // probe arrays, and the probed lists become a filter
-    // (Probes.listFilter) that the parquet scan of a saved index uses
-    // to skip row groups and pages. Big-batch sets
-    // (broadcastQueries=false, corpus-sized queries): the probed union
-    // approaches every list, the filter would prune nothing, and the
-    // collect would force an eager full coarse-quantization job inside
-    // a plan builder — so the scan set is left entirely to the shuffle
-    // equi-join (unprobed lists drop out of the join). Plan construction
-    // launches ZERO jobs on that path (PlanSpec pins it). A maxCodes
-    // cut drops lists from the probe table; the scan set stays the
-    // probed lists, and the join drops the cut ones.
+    // Big-batch sets (broadcastQueries=false, corpus-sized queries):
+    // the probed union approaches every list, the filter would prune
+    // nothing, and its collect would force an eager full
+    // coarse-quantization job inside a plan builder — so plan
+    // construction launches ZERO jobs on that path (PlanSpec pins it).
+    // A maxCodes cut drops lists from the probe table; the scan set
+    // stays the probed lists, and the join drops the cut ones.
+    val cand = candidates(queries, nprobe, queryId, queryVec, filter, maxCodes,
+      coarse, broadcastQueries, "_dist")
+    val asc = Metric.ascending(metric)
+    if (withCentroid) {
+      // search_and_return_centroids (faiss/IVFlib.h:74): carry list_no
+      // through the top-k by packing it into the id (id * nlist + list)
+      val packed = cand.select(col(queryId),
+        (col("id") * nlist + col("list_no")).as("_pid"), col("_dist"))
+      TopKAgg.ranked(packed, Seq(col(queryId)), col("_dist"), col("_pid"), k, asc)
+        .select(col(queryId), col("rank"),
+          // integer floor-div/mod round-trip: `/` is double division
+          // and loses precision for id*nlist near 2^53
+          expr(s"id div $nlist").cast("long").as("id"),
+          pmod(col("id"), lit(nlist.toLong)).cast("int").as("list_no"),
+          col("dist"))
+    } else TopKAgg.ranked(cand, Seq(col(queryId)), col("_dist"), col("id"), k, asc)
+  }
+
+  /** The scanned candidates of [[search]] and [[rangeSearch]]:
+    * (queryId, list_no, id, `dist`) over each query's probed lists,
+    * after the maxCodes cut ([[Probes.budget]], over list sizes taken
+    * before the IDSelector `filter`, as the reference counts raw
+    * list_size) and the filter. */
+  private def candidates(queries: DataFrame, nprobe: Int, queryId: String,
+      queryVec: String, filter: Option[Column], maxCodes: Option[Int],
+      coarse: Option[Probes.CoarseQuant], broadcastQueries: Boolean,
+      dist: String): DataFrame = {
     val (pr0, probed) = probes(queries, nprobe, queryId, queryVec, coarse,
       broadcastQueries)
-    val listsRaw = prunedLists(probed)
-    val pr = maxCodes.map(budgetProbes(pr0, listsRaw, _, queryId)).getOrElse(pr0)
-    val lists = filter.map(listsRaw.filter).getOrElse(listsRaw)
-    val prSide = if (broadcastQueries) broadcast(pr) else pr
-    val cand = lists.join(prSide, "list_no")
+    val pr = maxCodes.fold(pr0)(Probes.budget(pr0, Probes.pruned(invlists, probed), _, queryId))
+    Probes.scan(invlists, pr, probed, filter = filter)
       .select(col(queryId), col("list_no"), col("id"),
-        vec_dist(col(queryVec), col("vec"), metric).as("_dist"))
-    val agg =
-      if (withCentroid) {
-        // search_and_return_centroids (faiss/IVFlib.h:74): carry list_no
-        // through the top-k by packing it into the id (id * nlist + list)
-        val packed = cand.select(col(queryId),
-          (col("id") * nlist + col("list_no")).as("_pid"), col("_dist"))
-        packed.groupBy(col(queryId))
-          .agg(topk(col("_dist"), col("_pid"), k, Metric.ascending(metric)).as("_tk"))
-          .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-          .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-            // integer floor-div/mod round-trip: `/` is double division
-            // and loses precision for id*nlist near 2^53
-            expr(s"_r.id div $nlist").cast("long").as("id"),
-            pmod(col("_r.id"), lit(nlist.toLong)).cast("int").as("list_no"),
-            col("_r.dist").as("dist"))
-      } else {
-        cand.groupBy(col(queryId))
-          .agg(topk(col("_dist"), col("id"), k, Metric.ascending(metric)).as("_tk"))
-          .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-          .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-            col("_r.id").as("id"), col("_r.dist").as("dist"))
-      }
-    agg
+        vec_dist(col(queryVec), col("vec"), metric).as(dist))
   }
 
   /** search_preassigned with CALLER-PROVIDED probe assignments
@@ -192,7 +153,7 @@ class IvfIndex(
     * used by IVFlib's big-batch search and index-merge tooling). The
     * coarse quantization step is skipped entirely: `probesDf` is a
     * (queryId, list_no) table naming the lists each query scans.
-    * Identical pruned-join shape to [[search]] — the probed-list union
+    * The same [[Probes.scan]] as [[search]] — the probed-list union
     * statically prunes the invlists read, the probe table broadcasts,
     * one partial-top-k exchange. `broadcastProbes = false` is the
     * big-batch form ([[search]]'s broadcastQueries contract): probesDf
@@ -202,13 +163,9 @@ class IvfIndex(
       queryId: String = "qid", queryVec: String = "qvec",
       filter: Option[Column] = None,
       broadcastProbes: Boolean = true): DataFrame =
-    preassignedCandidates(queries, probesDf, queryId, queryVec, filter,
-      broadcastProbes)
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, Metric.ascending(metric)).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(preassignedCandidates(queries, probesDf, queryId, queryVec,
+      filter, broadcastProbes), Seq(col(queryId)), col("_dist"), col("id"), k,
+      Metric.ascending(metric))
 
   /** Shared scan head of the preassigned entry points: statically
     * prune the invlists to the probed set (derived from probesDf
@@ -223,10 +180,9 @@ class IvfIndex(
       .join(probesDf.select(col(queryId), col("list_no")), queryId)
     // a broadcastable probesDf is small: its list_no column crosses
     // the driver whole and is deduplicated there
-    val lists0 = prunedLists(Option.when(broadcastProbes)(
-      probesDf.select(col("list_no").cast("int")).collect().map(_.getInt(0)).distinct))
-    val lists = filter.map(lists0.filter).getOrElse(lists0)
-    lists.join(if (broadcastProbes) broadcast(pr) else pr, "list_no")
+    val probed = Option.when(broadcastProbes)(
+      probesDf.select(col("list_no").cast("int")).collect().map(_.getInt(0)).distinct)
+    Probes.scan(invlists, pr, probed, filter = filter)
       .select(col(queryId), col("id"),
         vec_dist(col(queryVec), col("vec"), metric).as("_dist"))
   }
@@ -250,27 +206,21 @@ class IvfIndex(
     // drive an eager probed-set collect — the equi-join is the prune
     val (pr, probed) = probes(queries, nprobes.max, queryId, queryVec, None,
       broadcastQueries)
-    val lists = prunedLists(probed)
-    val prSide = if (broadcastQueries) broadcast(pr) else pr
-    val cand = lists.join(prSide, "list_no")
+    val cand = Probes.scan(invlists, pr, probed)
       .select(col(queryId), col("pr"), col("id"),
         vec_dist(col(queryVec), col("vec"), metric).as("_dist"))
     import sess.implicits._
     // tiny nprobe axis: broadcast theta-join fans each candidate out to
     // only the sweep points whose probe budget includes its list
     val nps = broadcast(nprobes.toDF("np"))
-    cand.join(nps, col("pr") < col("np"))
-      .groupBy(col("np"), col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, Metric.ascending(metric)).as("_tk"))
-      .select(col("np"), col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col("np"), col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(cand.join(nps, col("pr") < col("np")), Seq(col("np"), col(queryId)),
+      col("_dist"), col("id"), k, Metric.ascending(metric))
   }
 
   /** IVF range search (faiss/IndexIVF.cpp:690-795): same pruning,
     * radius predicate instead of top-k. `filter` is the IDSelector
     * pushed inside the scan and `maxCodes` the per-query TOTAL scan
-    * budget in probe-rank order ([[budgetProbes]]) —
+    * budget in probe-rank order ([[Probes.budget]]) —
     * range_search_with_parameters (faiss/IVFlib.h:46) takes the
     * identical knobs search_with_parameters does. */
   def rangeSearch(queries: DataFrame, radius: Double, nprobe: Int,
@@ -280,19 +230,9 @@ class IvfIndex(
       coarse: Option[Probes.CoarseQuant] = None,
       broadcastQueries: Boolean = true): DataFrame = {
     // static prune only for small query sets; see [[search]]
-    val (pr0, probed) = probes(queries, nprobe, queryId, queryVec, coarse,
-      broadcastQueries)
-    // budget sizes are pre-IDSelector (the reference counts raw
-    // list_size even under a selector)
-    val listsRaw = prunedLists(probed)
-    val pr = maxCodes.map(budgetProbes(pr0, listsRaw, _, queryId)).getOrElse(pr0)
-    val lists = filter.map(listsRaw.filter).getOrElse(listsRaw)
-    val asc = Metric.ascending(metric)
-    val pred = if (asc) col("dist") < radius else col("dist") > radius
-    val prSide = if (broadcastQueries) broadcast(pr) else pr
-    lists.join(prSide, "list_no")
-      .select(col(queryId), col("list_no"), col("id"),
-        vec_dist(col(queryVec), col("vec"), metric).as("dist"))
+    val pred = if (Metric.ascending(metric)) col("dist") < radius else col("dist") > radius
+    candidates(queries, nprobe, queryId, queryVec, filter, maxCodes, coarse,
+      broadcastQueries, "dist")
       .select(col(queryId), col("id"), col("dist")).filter(pred)
   }
 

@@ -3,8 +3,8 @@ package graft.index
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
-import graft.core.RcqTopLists
-import graft.functions.{l2sq, topk}
+import graft.core.{RcqTopLists, TopKAgg}
+import graft.functions.l2sq
 
 /** IVF whose coarse quantizer is a ResidualCoarseQuantizer
   * (faiss/IndexAdditiveQuantizer.h:193; factory grammar
@@ -17,7 +17,7 @@ import graft.functions.{l2sq, topk}
   * IVF whose quantizer costs 2·1024·d, not 10^6·d, per assignment.
   *
   * Storage is Flat (the invlists hold raw vectors); search is the
-  * [[IvfIndex]] pruned-join shape — the beam search runs on the driver
+  * shared IVF scan ([[Probes.scan]]) — the beam search runs on the driver
   * over the collected queries ([[Probes.local]]) and its probed lists
   * statically prune the scan, probe rows broadcast,
   * exact distance over the probed lists, partial+merge top-k.
@@ -50,16 +50,10 @@ class IvfRcqFlatIndex(
       queryVec, shim.col(RcqTopLists(shim.expr(col(queryVec)),
         model.codebooks, probeBeam, math.min(nprobe, nlist))),
       model.codebooks.head.head.length)
-    val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
-      .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
-    invlists.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probesPlan), "list_no")
+    val cand = Probes.scan(invlists, Probes.rows(q, Seq(col(queryId), col(queryVec))),
+        Some(probed))
       .select(col(queryId), col("id"), l2sq(col(queryVec), col("vec")).as("_d"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_d"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_d"), col("id"), k, asc = true)
   }
 }
 

@@ -3,8 +3,8 @@ package graft.index
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
-import graft.core.NearestCentroids
-import graft.functions.{l2sq, topk, vec_add, vec_sub}
+import graft.core.{NearestCentroids, TopKAgg}
+import graft.functions.{l2sq, vec_add, vec_sub}
 
 /** IndexIVFResidualQuantizer (faiss/IndexIVFAdditiveQuantizer.h:26,64):
   * coarse quantizer + residual (additive) quantizer codes per list,
@@ -12,8 +12,9 @@ import graft.functions.{l2sq, topk, vec_add, vec_sub}
   * AQ_decompress search type (impl/AdditiveQuantizer.h:58: decode the
   * code, compute the exact distance to the decoded vector).
   *
-  * Composes the IVF pruned-join shape (static list_no pruning from a
-  * driver-side probe set, base never shuffles) with the RQ expression
+  * Composes the shared IVF scan ([[Probes.scan]]: static list_no
+  * pruning from a driver-side probe set, base never shuffles; ranked by
+  * [[graft.core.TopKAgg.ranked]]) with the RQ expression
   * kernels (beam-search + optional ICM encode, in-row decode). At
   * 100 TB: per probed list the scan reads L*log2(k) bits + 8-byte id
   * per row; decode + distance run inside the projection, no joins
@@ -37,25 +38,15 @@ class IvfRqIndex(
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
     val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
-    // the query rows and their probe arrays cross the driver once
-    // (Probes.local); the probe rows themselves — query vectors
-    // replicated per probe — are exploded in the plan and stay
-    // cluster-side inside the broadcast
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
-    val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
-      .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
-    codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(centDf), "list_no")
-      .join(broadcast(probesPlan), "list_no")
+    val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
+    val cand = Probes.scan(codes.join(broadcast(centDf), "list_no"), probesPlan,
+        Some(probed))
       .select(col(queryId), col("id"),
         l2sq(col(queryVec),
           vec_add(col("centroid"), model.decodeCol(col("code")))).as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
   }
 
   /** The ST_norm_* / ST_LUT_nonorm LUT scan over the SAME residual
@@ -84,8 +75,7 @@ class IvfRqIndex(
     val centDf = Probes.centroidsDf(s, centroids)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
-    val probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
-      .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
+    val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
       .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"),
         l2sq(col(queryVec), col("centroid")).as("_cd"),
@@ -93,14 +83,9 @@ class IvfRqIndex(
     val ip = model.ipFromLutCol(col("code"), col("_lut"))
     val d = if (nonorm) col("_cd") - lit(2.0) * ip
       else col("_cd") - lit(2.0) * ip + col("nq")
-    codesNq.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probesPlan), "list_no")
-      .select(col(queryId), col("id"), d.as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(Probes.scan(codesNq, probesPlan, Some(probed))
+      .select(col(queryId), col("id"), d.as("_dist")),
+      Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
   }
 
   /** Lossy reconstruction: centroid + decoded residual, shuffle-free. */

@@ -3,8 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
-import graft.core.{NearestCentroid, NearestCentroids}
-import graft.functions.topk
+import graft.core.{NearestCentroid, NearestCentroids, TopKAgg}
 
 /** IndexIVFSpectralHash (faiss/IndexIVFSpectralHash.h:31): inverted
   * lists storing nbit-bit binary signatures. Vectors are transformed
@@ -23,8 +22,9 @@ import graft.functions.topk
   * IndexIVFSpectralHash.cpp:127-140).
   *
   * Spark shape: signatures are one BIGINT column (nbit <= 64) in a
-  * list_no-keyed table; search is the IVF pruned join + XOR/popcount —
-  * at scale the scan reads 8 bytes/vector in nprobe/nlist of the data.
+  * list_no-keyed table; search is the shared IVF scan ([[Probes.scan]])
+  * + XOR/popcount — at scale the scan reads 8 bytes/vector in
+  * nprobe/nlist of the data.
   */
 class IvfSpectralHashIndex(
     val nlist: Int,
@@ -55,25 +55,18 @@ class IvfSpectralHashIndex(
       .map { case (t, l) => (l, t.toSeq) }.toDF("list_no", "_th")
       .select(col("list_no"), col("_th").cast("array<float>").as("_th"))
     // probe selection on the ORIGINAL d-dim vector (coarse quantizer
-    // runs before the hash transform, IndexIVF::search_preassigned),
-    // on the driver (Probes.local); the rotation + threshold join +
-    // signature plan below executes once, inside the join.
+    // runs before the hash transform, IndexIVF::search_preassigned)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
-    val probes = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
-      .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
+    val probes = Probes.rows(q, Seq(col(queryId), col(queryVec)))
       .join(broadcast(threshDf), "list_no")
       .select(col(queryId), col("list_no"),
         signature(vt.applyCol(col(queryVec)), col("_th"), nbit, period).as("_qsig"))
-    codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probes), "list_no")
+    val cand = Probes.scan(codes, probes, Some(probed))
       .select(col(queryId), col("id"),
         bit_count(col("sig").bitwiseXOR(col("_qsig"))).cast("double").as("_hd"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_hd"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").cast("long").as("hamming"))
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_hd"), col("id"), k, asc = true)
+      .select(col(queryId), col("rank"), col("id"), col("dist").cast("long").as("hamming"))
   }
 }
 

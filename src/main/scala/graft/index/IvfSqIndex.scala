@@ -3,12 +3,13 @@ package graft.index
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
-import graft.core.{NearestCentroids, SQAdcL2, SQEncode, VecMinMaxAgg}
-import graft.functions.{topk, vec_sub}
+import graft.core.{NearestCentroids, SQAdcL2, SQEncode, TopKAgg, VecMinMaxAgg}
+import graft.functions.vec_sub
 
 /** IVF + scalar-quantized codes (IndexIVFScalarQuantizer,
-  * faiss/IndexScalarQuantizer.h:64): the IVF pruned-join shape of
-  * [[IvfIndex]] with SQ8 codes instead of raw floats in the inverted
+  * faiss/IndexScalarQuantizer.h:64): the shared IVF scan of
+  * [[IvfIndex]] ([[Probes.scan]] and [[graft.core.TopKAgg.ranked]])
+  * with SQ8 codes instead of raw floats in the inverted
   * lists — 4× less data scanned per probe.
   *
   * `byResidual = true` (the reference default) encodes
@@ -46,22 +47,16 @@ class IvfSqIndex(
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
-    var probes = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
-      .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
+    var probes = Probes.rows(q, Seq(col(queryId), col(queryVec)))
     if (byResidual)
       probes = probes.join(broadcast(Probes.centroidsDf(queries.sparkSession, centroids)), "list_no")
         .select(col(queryId), col("list_no"),
           vec_sub(col(queryVec), col("centroid")).as(queryVec))
-    codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probes), "list_no")
+    val cand = Probes.scan(codes, probes, Some(probed))
       .select(col(queryId), col("id"),
         shim.col(SqVariant.adcL2(qtype, shim.expr(col(queryVec)),
           shim.expr(col("code")), vmin, vdiff)).as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
   }
 }
 

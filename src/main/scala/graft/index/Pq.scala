@@ -201,13 +201,9 @@ class PqIndex(val model: PqModel, val codes: DataFrame) {
     polysemousHt.foreach { ht =>
       cand = cand.filter(hamming_dist(col("code"), col("_qcode")) <= ht)
     }
-    cand
-      .select(col(queryId), col("id"), model.adcCol(col("code"), col("_lut")).as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(cand.select(col(queryId), col("id"),
+      model.adcCol(col("code"), col("_lut")).as("_dist")),
+      Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
   }
 
   /** Lossy reconstruction (sa_decode). */
@@ -229,8 +225,8 @@ object PqIndex {
 
 /** IVFPQ (faiss/IndexIVFPQ.h:34): coarse quantizer + PQ on RESIDUALS
   * (by_residual), searched with per-(query, probed-list) LUTs over the
-  * residual q - centroid. Composes IvfIndex's pruned-join shape with
-  * PQ's ADC scan. */
+  * residual q - centroid. Composes the shared IVF scan
+  * ([[Probes.scan]], [[TopKAgg.ranked]]) with PQ's ADC scan. */
 class IvfPqIndex(
     val nlist: Int,
     val centroids: Array[Array[Float]],
@@ -254,20 +250,11 @@ class IvfPqIndex(
       queryId: String = "qid", queryVec: String = "qvec",
       polysemousHt: Option[Int] = None,
       coarse: Option[Probes.CoarseQuant] = None): DataFrame =
-    adcCandidates(queries, nprobe, queryId, queryVec, polysemousHt,
-      coarse)
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(adcCandidates(queries, nprobe, queryId, queryVec,
+      polysemousHt, coarse), Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
 
-  /** Shared ADC scan head of [[search]] / [[rangeSearch]]: the query
-    * rows and their ranked probe arrays cross the driver once
-    * ([[Probes.local]]), and the probed lists statically prune the
-    * codes scan; the per-(query, probed-list) residual LUT rows are
-    * computed in the plan and stay cluster-side inside the broadcast,
-    * then the pruned codes join scores every candidate. */
+  /** Shared ADC scan head of [[search]] / [[rangeSearch]]: the
+    * per-(query, probed-list) residual LUT rows over [[Probes.scan]]. */
   private def adcCandidates(queries: DataFrame, nprobe: Int,
       queryId: String, queryVec: String,
       polysemousHt: Option[Int] = None,
@@ -275,8 +262,7 @@ class IvfPqIndex(
     val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
-    var probesPlan = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
-      .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
+    var probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
       .join(broadcast(centDf), "list_no")
       .withColumn("_qres", vec_sub(col(queryVec), col("centroid")))
       .select(col(queryId), col("list_no"), col("_qres"),
@@ -286,8 +272,7 @@ class IvfPqIndex(
         shim.col(PQEncode(shim.expr(col("_qres")), model.codebooks))).drop("_qres")
       case None => probesPlan.drop("_qres")
     }
-    var cand = codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probesPlan), "list_no")
+    var cand = Probes.scan(codes, probesPlan, Some(probed))
     polysemousHt.foreach { ht =>
       cand = cand.filter(hamming_dist(col("code"), col("_qcode")) <= ht)
     }
@@ -311,17 +296,13 @@ class IvfPqIndex(
     val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       math.min(npMax, nlist), "l2sq", coarse, graphCacheKey)
-    val probesPlan = q.select(col(queryId), col(queryVec),
-      posexplode(col("_sel")).as(Seq("_pr", "_p")))
-      .select(col(queryId), col(queryVec), col("_pr").as("pr"),
-        col("_p.list_no").as("list_no"))
+    val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)), ranked = true)
       .join(broadcast(centDf), "list_no")
       .withColumn("_qres", vec_sub(col(queryVec), col("centroid")))
       .select(col(queryId), col("list_no"), col("pr"),
         model.lutCol(col("_qres")).as("_lut"),
         shim.col(PQEncode(shim.expr(col("_qres")), model.codebooks)).as("_qcode"))
-    codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probesPlan), "list_no")
+    Probes.scan(codes, probesPlan, Some(probed))
       .select(col(queryId), col("list_no"), col("pr"), col("id"),
         model.adcCol(col("code"), col("_lut")).as("dist"),
         hamming_dist(col("code"), col("_qcode")).as("ham"))
@@ -347,16 +328,13 @@ class IvfPqIndex(
     val sel = efs.tail.foldLeft(when(col("ef") === efs.head, walk(efs.head))) {
       (w, ef) => w.when(col("ef") === ef, walk(ef)) }
     val (q, probed) = Probes.local(side, queryVec, sel, centroids.head.length)
-    val probesPlan = q.select(col("ef"), col(queryId), col(queryVec),
-        posexplode(col("_sel")).as(Seq("_pr", "_p")))
-      .select(col("ef"), col(queryId), col(queryVec), col("_pr").as("pr"),
-        col("_p.list_no").as("list_no"))
+    val probesPlan = Probes.rows(q, Seq(col("ef"), col(queryId), col(queryVec)),
+        ranked = true)
       .join(broadcast(centDf), "list_no")
       .withColumn("_qres", vec_sub(col(queryVec), col("centroid")))
       .select(col("ef"), col(queryId), col("list_no"), col("pr"),
         model.lutCol(col("_qres")).as("_lut"))
-    codes.filter(Probes.listFilter(col("list_no"), probed))
-      .join(broadcast(probesPlan), Seq("list_no"))
+    Probes.scan(codes, probesPlan, Some(probed))
       .select(col("ef"), col(queryId), col("list_no"), col("pr"), col("id"),
         model.adcCol(col("code"), col("_lut")).as("dist"))
   }
@@ -412,15 +390,14 @@ class IvfPqrIndex(
     val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", None, "")
-    val probes = q.select(col(queryId), col(queryVec), explode(col("_sel")).as("_p"))
-      .select(col(queryId), col(queryVec), col("_p.list_no").as("list_no"))
+    val probes = Probes.rows(q, Seq(col(queryId), col(queryVec)))
       .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"),
         vec_sub(col(queryVec), col("centroid")).as("_qres"))
       .withColumn("_lut", model1.lutCol(col("_qres")))
-    val lists = codes.filter(Probes.listFilter(col("list_no"), probed))
     // stage 1: ADC over code1, keep k*kFactor candidates per query
-    val stage1 = lists.join(broadcast(probes.select(col(queryId), col("list_no"), col("_lut"))), "list_no")
+    val stage1 = Probes.scan(codes,
+        probes.select(col(queryId), col("list_no"), col("_lut")), Some(probed))
       .select(col(queryId), col("id"), model1.adcCol(col("code"), col("_lut")).as("_d1"))
       .groupBy(col(queryId))
       .agg(topk(col("_d1"), col("id"), k * kFactor, asc = true).as("_tk"))
@@ -428,18 +405,15 @@ class IvfPqrIndex(
       .select(col(queryId), col("_r.id").as("id"))
     // stage 2: re-rank with the two-codebook reconstruction
     val rescored = stage1
-      .join(lists.select(col("id"), col("list_no"), col("code"), col("code2")), "id")
+      .join(Probes.pruned(codes, Some(probed))
+        .select(col("id"), col("list_no"), col("code"), col("code2")), "id")
       .join(broadcast(probes.select(col(queryId), col("list_no"), col("_qres"))),
         Seq(queryId, "list_no"))
       .select(col(queryId), col("id"),
         graft.functions.l2sq(col("_qres"),
           graft.functions.vec_add(model1.decodeCol(col("code")),
             model2.decodeCol(col("code2")))).as("_d2"))
-    rescored.groupBy(col(queryId))
-      .agg(topk(col("_d2"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(rescored, Seq(col(queryId)), col("_d2"), col("id"), k, asc = true)
   }
 }
 

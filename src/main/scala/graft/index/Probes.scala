@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, size, when}
+import org.apache.spark.sql.functions.{broadcast, col, explode, posexplode, size, when}
 import org.apache.spark.sql.graft.shim
 
 /** Driver-side handling of IVF probe plans (the (qid, …, list_no)
@@ -13,15 +13,85 @@ import org.apache.spark.sql.graft.shim
   * arrays cross the driver ([[local]]), and the probed list ids read
   * from them statically prune the invlists scan. LUT and residual rows
   * never cross the driver: callers compute them in the plan and ship
-  * them to the scan inside the broadcast (VERDICT r8). */
+  * them to the scan inside the broadcast (VERDICT r8).
+  *
+  * It also holds the head of every IVF-family scan, the analog of the
+  * reference's one IndexIVF::search_preassigned loop: [[rows]] explodes
+  * the ranked probe arrays into probe rows, and [[scan]] prunes the
+  * lists to the probed ones and joins the probe rows. A family adds
+  * only its distance, and [[graft.core.TopKAgg.ranked]] is the tail. */
 object Probes {
 
-  /** The distinct probed list ids of a probe plan, by a Spark
-    * distinct: the IMI cell-pair probes, whose selector is a join of
-    * two sub-quantizer rankings rather than one [[selExpr]] column.
-    * Every single-selector search uses [[local]] instead. */
-  def probedListIds(probesPlan: DataFrame): Array[Int] =
-    probesPlan.select("list_no").distinct().collect().map(_.getInt(0))
+  /** The distinct probed list ids (cluster column `by`) of a probe
+    * plan, by a Spark distinct: the IMI cell-pair probes and the binary
+    * IVF's Hamming probes, whose selector is a join or an aggregate
+    * rather than one [[selExpr]] column. Every single-selector search
+    * uses [[local]] instead. */
+  def probedListIds(probesPlan: DataFrame, by: String = "list_no"): Array[Int] =
+    probesPlan.select(by).distinct().collect().map(_.getInt(0))
+
+  /** One row per (query, probed list) of the ranked probe array `sel`
+    * ([[selExpr]]-shaped; by default the `_sel` column of a [[local]]
+    * frame): the `keep` columns of `q`, then with `ranked` the 0-based
+    * probe rank `pr` (closest list first, so a sweep keeps the
+    * nprobe = j set as `pr < j`), then `list_no`. The probe explode of
+    * every IVF-family search (search_preassigned's per-query list
+    * loop, faiss/IndexIVF.cpp:398). */
+  def rows(q: DataFrame, keep: Seq[Column], ranked: Boolean = false,
+      sel: Column = col("_sel")): DataFrame = {
+    val x = q.select(keep :+ (if (ranked) posexplode(sel).as(Seq("_pr", "_p"))
+      else explode(sel).as("_p")): _*)
+    val pr = if (ranked) Seq(col("_pr").as("pr")) else Nil
+    x.select(x.columns.toSeq.dropRight(pr.size + 1).map(col) ++ pr
+      :+ col("_p.list_no").as("list_no"): _*)
+  }
+
+  /** `lists` kept to the `probed` lists of cluster column `by`
+    * ([[listFilter]]); all of them when the probed set is not known on
+    * the driver (`None`: a corpus-sized query set, where the equi-join
+    * is the prune). */
+  def pruned(lists: DataFrame, probed: Option[Array[Int]],
+      by: String = "list_no"): DataFrame =
+    probed.fold(lists)(p => lists.filter(listFilter(col(by), p)))
+
+  /** max_codes probe-budget filter (IndexIVF::search_preassigned,
+    * faiss/IndexIVF.cpp:586: `nscan` accumulates WHOLE scanned lists
+    * in probe-rank order and the scan breaks once nscan >= max_codes)
+    * — a per-query TOTAL budget, so the list at probe rank `pr` is
+    * scanned iff the sizes in `lists` of the better-ranked lists sum
+    * below the budget. Expressed as a prefilter of the `probeRows`
+    * (queryId, `by`, pr, …): whole lists are cut before the scan join
+    * — at scale this PRUNES partitions, where a per-candidate cap would
+    * add an aggregate over every scanned code. */
+  def budget(probeRows: DataFrame, lists: DataFrame, maxCodes: Int,
+      queryId: String, by: String = "list_no"): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
+    val sizes = lists.groupBy(by).agg(count(lit(1)).as("_lsz"))
+    // pr is unique per (query, list), so the running-sum frame is
+    // well-defined; probed-but-empty lists carry size 0
+    val w = Window.partitionBy(col(queryId)).orderBy(col("pr"))
+    probeRows.join(sizes, Seq(by), "left")
+      .withColumn("_csz", coalesce(col("_lsz"), lit(0L)))
+      .withColumn("_before", sum(col("_csz")).over(w) - col("_csz"))
+      .filter(col("_before") < maxCodes)
+      .drop("_lsz", "_csz", "_before")
+  }
+
+  /** The scan head of every IVF-family search: the [[pruned]] lists,
+    * narrowed by the optional IDSelector `filter`, joined on `by` with
+    * the probe rows. A probed set known on the driver means a small
+    * query set, so the probe rows broadcast and the lists never
+    * shuffle; with `None` the probe rows meet the lists in a shuffle
+    * equi-join. Each search supplies only the distance it computes on
+    * the joined rows (the reference's InvertedListScanner,
+    * faiss/IndexIVF.h:368-427), and [[graft.core.TopKAgg.ranked]] keeps
+    * the top k. */
+  def scan(lists: DataFrame, probeRows: DataFrame, probed: Option[Array[Int]],
+      by: String = "list_no", filter: Option[Column] = None): DataFrame = {
+    val l = pruned(lists, probed, by)
+    filter.fold(l)(l.filter).join(if (probed.isDefined) broadcast(probeRows) else probeRows, by)
+  }
 
   /** At most this many disjuncts in a [[listFilter]], which every row
     * the scan returns evaluates. */

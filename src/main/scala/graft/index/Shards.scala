@@ -2,7 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.topk
+import graft.core.TopKAgg
 
 /** IndexShards (faiss/IndexShards.h:27): one logical index over a set
   * of independently-built shards — search runs every shard and merges
@@ -42,10 +42,6 @@ object Shards {
         r.select(col(queryId), id, col("dist"))
       }
       .reduce(_ unionByName _)
-    cand.groupBy(col(queryId))
-      .agg(topk(col("dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("dist"), col("id"), k, asc = true)
   }
 }

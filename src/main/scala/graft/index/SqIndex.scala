@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 import graft.core._
-import graft.functions.topk
 
 /** Flat scalar-quantized index (IndexScalarQuantizer,
   * faiss/IndexScalarQuantizer.h:25, QT_8bit / RS_minmax): vectors
@@ -31,13 +30,9 @@ class SqIndex(
       queryId: String = "qid", queryVec: String = "qvec"): DataFrame = {
     val dist = shim.col(SqVariant.adcL2(qtype,
       shim.expr(col(queryVec)), shim.expr(col("code")), vmin, vdiff))
-    codes.crossJoin(broadcast(queries))
-      .select(col(queryId), col("id"), dist.as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col("id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("id"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(codes.crossJoin(broadcast(queries))
+      .select(col(queryId), col("id"), dist.as("_dist")),
+      Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
   }
 
   /** Lossy reconstruct (sa_decode): (id, vec array<double>). */

@@ -3,7 +3,7 @@ package graft.knn
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{topk, vec_dist}
-import graft.core.Metric
+import graft.core.{Metric, TopKAgg}
 
 /** Exact brute-force similarity search — the Spark re-expression of
   * IndexFlat::search (faiss/IndexFlat.cpp:25-66) and the index-free
@@ -35,21 +35,20 @@ object Knn {
       queryId: String = "qid", queryVec: String = "qvec",
       baseId: String = "id", baseVec: String = "vec",
       filter: Option[Column] = None): DataFrame = {
-    val asc = Metric.ascending(metric)
     val filteredBase = filter.map(base.filter).getOrElse(base)
-    val joined = filteredBase.crossJoin(broadcast(queries))
     val dist = vec_dist(col(queryVec), col(baseVec), metric, metricArg)
-    joined
-      .select(col(queryId), col(baseId), dist.as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col(baseId), k, asc).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(
-        col(queryId),
-        (col("_pos") + 1).cast("long").as("rank"),
-        col(s"_r.id").as(baseId),
-        col(s"_r.dist").as("dist"))
+    ranked(filteredBase.crossJoin(broadcast(queries))
+      .select(col(queryId), col(baseId), dist.as("_dist")),
+      k, metric, queryId, baseId)
   }
+
+  /** The ranked tail over `cand`'s (queryId, baseId, _dist), output
+    * (queryId, rank, baseId, dist). */
+  private def ranked(cand: DataFrame, k: Int, metric: String,
+      queryId: String, baseId: String): DataFrame =
+    TopKAgg.ranked(cand, Seq(col(queryId)), col("_dist"), col(baseId), k,
+      Metric.ascending(metric))
+      .select(col(queryId), col("rank"), col("id").as(baseId), col("dist"))
 
   /** 1-NN assignment (Index::assign, faiss/Index.h:158): returns
     * (qid, id, dist) of the single nearest base row. Uses the k=1
@@ -136,16 +135,10 @@ object Knn {
       metric: String = "l2sq", metricArg: Double = 0.0,
       queryId: String = "qid", queryVec: String = "qvec",
       baseId: String = "id", baseVec: String = "vec"): DataFrame = {
-    val asc = Metric.ascending(metric)
     val cand = candidates.join(base, baseId)               // (qid, id, vec)
       .join(broadcast(queries), queryId)                   // + qvec
-    cand
-      .select(col(queryId), col(baseId),
-        vec_dist(col(queryVec), col(baseVec), metric, metricArg).as("_dist"))
-      .groupBy(col(queryId))
-      .agg(topk(col("_dist"), col(baseId), k, asc).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as(baseId), col("_r.dist").as("dist"))
+    ranked(cand.select(col(queryId), col(baseId),
+        vec_dist(col(queryVec), col(baseVec), metric, metricArg).as("_dist")),
+      k, metric, queryId, baseId)
   }
 }

@@ -3,7 +3,7 @@ package graft.knn
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
-import graft.core.ScopedConf
+import graft.core.{ScopedConf, TopKAgg}
 
 /** Batch kNN-graph construction (the capability behind the
   * reference's Deep1B kNN-graph benchmark, benchs/README.md:313, and
@@ -43,18 +43,25 @@ object KnnGraph {
       else Knn.knnJoinBlocked(q, wide, k + 1, blocks, metric,
         baseId = idCol, baseVec = vecCol)
     // drop the self edge, re-rank 1..k
-    res.filter(col("qid") =!= col(idCol))
-      .groupBy(col("qid"))
-      .agg(graft.functions.topk(col("dist"), col(idCol), k, asc = true).as("_tk"))
-      .select(col("qid").as("src"), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col("src"), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("dst"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(res.filter(col("qid") =!= col(idCol)), Seq(col("qid")),
+      col("dist"), col(idCol), k, asc = true)
+      .select(col("qid").as("src"), col("rank"), col("id").as("dst"), col("dist"))
   }
 
   /** NN-descent refinement (Dong et al., WWW'11): start from a cheap
     * initial graph, repeatedly propose neighbors-of-neighbors (in both
     * edge directions) and keep each node's best k. Converges in a few
-    * rounds on metric data; each round is two equi-joins + a top-k. */
+    * rounds on metric data; each round is two equi-joins + a top-k.
+    *
+    * Precondition: recomputing `base` yields the same rows in the same
+    * partitions. The initial graph enumerates the ids with one counting
+    * pass over their partitions, then applies those per-partition
+    * offsets in a second, uncached computation of the same partitions.
+    * If a partition's rows change between the two (a nondeterministic
+    * sample or filter upstream), the enumeration skips or repeats
+    * positions; if only their order changes (a re-run shuffle read), the
+    * seed graph, and so the result, is no longer reproducible. Pass a
+    * cached or checkpointed `base` in either case. */
   def nnDescent(base: DataFrame, k: Int, iters: Int = 3,
       metric: String = "l2sq", idCol: String = "id", vecCol: String = "vec",
       seed: Long = 1234L): DataFrame = {
@@ -162,11 +169,8 @@ object KnnGraph {
     // the same pairs (the old shape) paid two extra joins and a
     // distance pass for information the graph already carries. Same
     // (dist, id) tie-order as knnByIdx ⇒ identical output.
-    graph.groupBy(col("src"))
-      .agg(graft.functions.topk(col("dist"), col("dst"), k,
-        asc = graft.core.Metric.ascending(metric)).as("_tk"))
-      .select(col("src"), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col("src"), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as("dst"), col("_r.dist").as("dist"))
+    TopKAgg.ranked(graph, Seq(col("src")), col("dist"), col("dst"), k,
+      graft.core.Metric.ascending(metric))
+      .select(col("src"), col("rank"), col("id").as("dst"), col("dist"))
   }
 }

@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.functions.topk
 
 /** Distributed approximate kNN via per-partition in-memory HNSW
   * graphs — the capability answer to the reference's IndexHNSWfast
@@ -173,11 +172,8 @@ object PartitionedHnsw {
         org.apache.spark.sql.types.StructField("_qid", org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("_id", org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("_dist", org.apache.spark.sql.types.DoubleType, nullable = false))))
-    candDf
-      .groupBy(col("_qid").as(queryId))
-      .agg(topk(col("_dist"), col("_id"), k, asc = true).as("_tk"))
-      .select(col(queryId), posexplode(col("_tk")).as(Seq("_pos", "_r")))
-      .select(col(queryId), (col("_pos") + 1).cast("long").as("rank"),
-        col("_r.id").as(baseId), col("_r.dist").as("dist"))
+    graft.core.TopKAgg.ranked(candDf, Seq(col("_qid").as(queryId)), col("_dist"),
+        col("_id"), k, asc = true)
+      .select(col(queryId), col("rank"), col("id").as(baseId), col("dist"))
   }
 }

@@ -143,7 +143,7 @@ object AutoTune {
     val cand = candidates.cache()
     try {
       // max_codes = per-query TOTAL scan budget consumed in probe-rank
-      // order (IndexIVF.cpp:586; the IvfIndex.budgetProbes semantics):
+      // order (IndexIVF.cpp:586; the Probes.budget semantics):
       // the list at rank r is scanned iff the RAW sizes of the
       // better-ranked lists sum below the budget — independent of ht
       // (the reference counts scanned codes before the polysemous

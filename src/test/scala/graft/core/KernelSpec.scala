@@ -103,6 +103,29 @@ class KernelSpec extends AnyFunSuite {
     assert(math.abs(VecKernels.lp(arr(a), arr(b), 1.0) - VecKernels.l1(arr(a), arr(b))) < 1e-9)
   }
 
+  test("vec distance rejects vectors of different lengths, interpreted and codegen") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    def input(i: Int) = BoundReference(i, ArrayType(FloatType, containsNull = false), nullable = true)
+    // ROADMAP item 6: the kernels alone return 0.0 and 14.0 here
+    for ((a, b) <- Seq((Array(1f, 2f), Array(1f, 2f, 3f)), (Array(1f, 2f, 3f), Array(0f, 0f)))) {
+      val e = VecDistance(input(0), input(1), "l2sq")
+      val row = InternalRow(arr(a), arr(b))
+      val interpreted = intercept[IllegalArgumentException](e.eval(row))
+      val generated = intercept[IllegalArgumentException](
+        GenerateUnsafeProjection.generate(Seq(e)).apply(row))
+      for (err <- Seq(interpreted, generated))
+        assert(err.getMessage.contains(s"has ${a.length} elements") &&
+          err.getMessage.contains(s"has ${b.length}"), err.getMessage)
+    }
+    val same = InternalRow(arr(Array(1f, 2f)), arr(Array(0f, 0f)))
+    assert(VecDistance(input(0), input(1), "l2sq").eval(same) == 5.0)
+    assert(GenerateUnsafeProjection.generate(Seq(VecDistance(input(0), input(1), "l2sq")))
+      .apply(same).getDouble(0) == 5.0)
+  }
+
   test("sub/add round-trip") {
     val a = randVec(16); val b = randVec(16)
     val back = VecKernels.add(arr(VecKernels.sub(arr(a), arr(b))), arr(b))

@@ -464,16 +464,18 @@ class IvfSpec extends SparkTestBase {
   }
 
   /** A d=4 corpus and the d=4 IVF-Flat and IVF-PQ indexes over it. */
-  private lazy val idx4 = {
+  private lazy val base4 = {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(7)
-    val base = (0 until 400).map(i => (i.toLong, Array.fill(4)(rnd.nextFloat())))
+    (0 until 400).map(i => (i.toLong, Array.fill(4)(rnd.nextFloat())))
       .toDF("id", "vec")
-    (IvfIndex.build(base, "id", "vec", nlist = 4, niter = 2),
-      IvfPqIndex.build(base, "id", "vec", nlist = 4, m = 2, ksub = 4,
-        niterCoarse = 2, niterPq = 2))
   }
+
+  private lazy val idx4 =
+    (IvfIndex.build(base4, "id", "vec", nlist = 4, niter = 2),
+      IvfPqIndex.build(base4, "id", "vec", nlist = 4, m = 2, ksub = 4,
+        niterCoarse = 2, niterPq = 2))
 
   private def queries4(vecs: Option[Seq[Float]]*) = {
     val s = spark
@@ -484,14 +486,43 @@ class IvfSpec extends SparkTestBase {
   test("probe step rejects a query vector whose length is not d, without a job") {
     val (flat, pq) = idx4
     val bad = queries4(Some(Seq(0.1f, 0.2f, 0.3f, 0.4f)), Some(Seq(0.1f, 0.2f, 0.3f)))
+    val b = base4
+    val sq = IvfSqIndex.build(b, "id", "vec", nlist = 4, niter = 2)
+    val rq = IvfRq.build(b, "id", "vec", nlist = 4, levels = 2, k = 4,
+      niterCoarse = 2, niterRq = 2)
+    val rcq = IvfRcq.build(b, "id", "vec", levels = 2, bits = 1, niter = 2)
+    val pqr = IvfPqrIndex.build(b, "id", "vec", nlist = 4, m = 2, ksub = 4,
+      niterCoarse = 2, niterPq = 2)
+    val sh = IvfSpectralHash.build(b, "id", "vec", nlist = 4, nbit = 4,
+      period = 1.0, niter = 2)
+    val pq4 = IvfPq4FastScanIndex.build(b, "id", "vec", nlist = 4, m = 2,
+      niterCoarse = 2, niterPq = 2)
+    val pq4r = IvfPq4FastScanRIndex.build(b, "id", "vec", nlist = 4, m = 2,
+      niterCoarse = 2, niterPq = 2)
+    val rq4 = IvfRq4FastScanIndex.build(b, "id", "vec", nlist = 4, levels = 2,
+      niterCoarse = 2, niter = 2)
+    val rq4r = IvfRq4FastScanRIndex.build(b, "id", "vec", nlist = 4, levels = 2,
+      niterCoarse = 2, niter = 2)
     for ((name, search) <- Seq[(String, () => Any)](
         "IVF-Flat" -> (() => flat.search(bad, 5, nprobe = 2)),
-        "IVF-PQ" -> (() => pq.search(bad, 5, nprobe = 2)))) {
+        "IVF-PQ" -> (() => pq.search(bad, 5, nprobe = 2)),
+        "IVF-SQ" -> (() => sq.search(bad, 5, nprobe = 2)),
+        "IVF-RQ" -> (() => rq.search(bad, 5, nprobe = 2)),
+        "IVF-RQ LUT" -> (() => rq.searchNormLut(bad, 5, 2, rq.codes, nonorm = true)),
+        "IVF-RCQ" -> (() => rcq.search(bad, 5, nprobe = 2)),
+        "IVF-PQR" -> (() => pqr.search(bad, 5, nprobe = 2)),
+        "IVF-SH" -> (() => sh.search(bad, 5, nprobe = 2)),
+        "IVF-PQ fast-scan" -> (() => pq4.search(bad, 5, nprobe = 2)),
+        "IVF-PQ fast-scan by residual" -> (() => pq4r.search(bad, 5, nprobe = 2)),
+        "IVF-RQ fast-scan" -> (() => rq4.search(bad, 5, nprobe = 2)),
+        "IVF-RQ fast-scan by residual" -> (() => rq4r.search(bad, 5, nprobe = 2)))) {
       val (err, jobs) = jobsLaunchedBy(intercept[IllegalArgumentException](search()))
       assert(err.getMessage.contains("`qvec` has a row of length 3") &&
         err.getMessage.contains("d = 4"), s"$name: ${err.getMessage}")
       assert(jobs == 0, s"$name: the shape check launched $jobs job(s)")
     }
+    Seq(sq.codes, rq.codes, rcq.invlists, pqr.codes, pq4.codes, pq4r.codes,
+      rq4.codes, rq4r.codes).foreach(_.unpersist())
   }
 
   test("a null query vector yields no rows for that query") {

@@ -37,6 +37,17 @@ class KnnSpec extends SparkTestBase {
     assert(rows.groupBy(_.getLong(0)).forall(_._2.length == 3))
   }
 
+  test("knnJoin rejects a query whose length differs from the base rows'") {
+    import spark.implicits._
+    // ROADMAP item 6: a 2-d query against a 3-d row scored 2.0 and ranked it first
+    val q2 = Seq((0L, Array(1f, 2f))).toDF("qid", "qvec")
+    val b3 = Seq((7L, Array(2f, 3f, 9f)), (8L, Array(1f, 2f))).toDF("id", "vec")
+    val err = intercept[Exception](Knn.knnJoin(q2, b3, 2).collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("has 2 elements") && m.contains("has 3")),
+      err.toString)
+  }
+
   test("assign equals knnJoin rank 1") {
     val a = Knn.assign(q, b).select("qid", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val k1 = Knn.knnJoin(q, b, 1).select("qid", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
