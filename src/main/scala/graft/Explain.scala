@@ -17,7 +17,7 @@ object Explain {
     // query set is non-empty so the sections show the real scan +
     // pruning shapes.
     val bigDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val spark = GraftSession.local(8)
+    val root = GraftSession.local(8)
 
     val interesting = Seq(
       "knn_flat_l2", "knn_idsel_range", "assign_1nn", "range_search_l2",
@@ -97,20 +97,31 @@ object Explain {
     sb.append("ObjectHashAggregate with partial_topk (map-side heap combine),\n")
     sb.append("PushedFilters/ReadSchema on the parquet scans (pushdown +\n")
     sb.append("column pruning), and a single hashpartitioning exchange per\n")
-    sb.append("top-k (only ≤k rows per group cross the wire).\n")
-    interesting.foreach { name =>
-      // contains, not endsWith: ivf_search_big_batch derives its
-      // query set from the big table too (empty below sf0.01, where
-      // the plan would fold to a degenerate LocalTableScan)
-      val df = SparkEntry.queries(name)(spark,
-        if (name.contains("_big")) bigDir else dir)
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("```\n")
+    sb.append("top-k (only ≤k rows per group cross the wire), or none when a\n")
+    sb.append("small batch's IVF scan looks its probe rows up\n")
+    sb.append("(Generate inline(probe_lookup(...))) over one input split.\n")
+    // whole plans: the session default (8192 characters) cuts the
+    // longest plans mid-tree, and two commits' dumps would then differ
+    // only where the cut falls
+    val whole = "spark.sql.maxPlanStringLength" ->
+      org.apache.spark.unsafe.array.ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toString
+    graft.core.ScopedConf.withConfs(root, whole) { spark =>
+      // a plan string is cut at the ACTIVE session's length
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      interesting.foreach { name =>
+        // contains, not endsWith: ivf_search_big_batch derives its
+        // query set from the big table too (empty below sf0.01, where
+        // the plan would fold to a degenerate LocalTableScan)
+        val df = SparkEntry.queries(name)(spark,
+          if (name.contains("_big")) bigDir else dir)
+        sb.append(s"\n## $name\n\n```\n")
+        sb.append(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+        sb.append("```\n")
+      }
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"wrote $out")
-    spark.stop()
+    root.stop()
   }
 }

@@ -446,8 +446,6 @@ class IvfRq4FastScanRIndex(
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val spark = queries.sparkSession
-    val centDf = Probes.centroidsDf(spark, centroids)
     // ONE quantized LUT + ||q||^2 per query (pre-explode), a scalar
     // -2<q,c> bias per probe row
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
@@ -457,10 +455,9 @@ class IvfRq4FastScanRIndex(
         .as("_ql"),
       aggregate(col(queryVec).cast("array<double>"), lit(0.0),
         (a, x) => a + x * x).as("_qn")))
-      .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"), col("_ql"), col("_qn"),
-        (lit(-2.0) * graft.functions.inner_product(col(queryVec), col("centroid")))
-          .as("_bias"))
+        (lit(-2.0) * graft.functions.inner_product(col(queryVec),
+          Probes.centroid(col("list_no"), centroids))).as("_bias"))
     val cand = Probes.scan(codes, probesPlan, Some(probed))
       .select(col(queryId), col("id"),
         (col("_qn") + col("_bias") +
@@ -557,16 +554,14 @@ class IvfPq4FastScanRIndex(
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
     import graft.functions.vec_sub
-    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     // per (query, probed list): float32 residual -> double LUT ->
     // uint8 quantization
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
     val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
-      .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"),
         shim.col(Pq4QuantLut(
-          shim.expr(vec_sub(col(queryVec), col("centroid"))),
+          shim.expr(vec_sub(col(queryVec), Probes.centroid(col("list_no"), centroids))),
           model.codebooks)).as("_ql"))
     val cand = Probes.scan(codes, probesPlan, Some(probed))
       .select(col(queryId), col("id"),

@@ -37,15 +37,13 @@ class IvfRqIndex(
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
     val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
-    val cand = Probes.scan(codes.join(broadcast(centDf), "list_no"), probesPlan,
-        Some(probed))
+    val cand = Probes.scan(codes, probesPlan, Some(probed))
       .select(col(queryId), col("id"),
-        l2sq(col(queryVec),
-          vec_add(col("centroid"), model.decodeCol(col("code")))).as("_dist"))
+        l2sq(col(queryVec), vec_add(Probes.centroid(col("list_no"), centroids),
+          model.decodeCol(col("code")))).as("_dist"))
     TopKAgg.ranked(cand, Seq(col(queryId)), col("_dist"), col("id"), k, asc = true)
   }
 
@@ -71,15 +69,13 @@ class IvfRqIndex(
       codesNq: DataFrame, nonorm: Boolean = false,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val s = queries.sparkSession
-    val centDf = Probes.centroidsDf(s, centroids)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
+    val c = Probes.centroid(col("list_no"), centroids)
     val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
-      .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"),
-        l2sq(col(queryVec), col("centroid")).as("_cd"),
-        model.lutCol(vec_sub(col(queryVec), col("centroid"))).as("_lut"))
+        l2sq(col(queryVec), c).as("_cd"),
+        model.lutCol(vec_sub(col(queryVec), c)).as("_lut"))
     val ip = model.ipFromLutCol(col("code"), col("_lut"))
     val d = if (nonorm) col("_cd") - lit(2.0) * ip
       else col("_cd") - lit(2.0) * ip + col("nq")

@@ -49,19 +49,14 @@ class IvfSpectralHashIndex(
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val s = queries.sparkSession
-    import s.implicits._
-    val threshDf = thresholds.zipWithIndex.toSeq
-      .map { case (t, l) => (l, t.toSeq) }.toDF("list_no", "_th")
-      .select(col("list_no"), col("_th").cast("array<float>").as("_th"))
     // probe selection on the ORIGINAL d-dim vector (coarse quantizer
     // runs before the hash transform, IndexIVF::search_preassigned)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
     val probes = Probes.rows(q, Seq(col(queryId), col(queryVec)))
-      .join(broadcast(threshDf), "list_no")
       .select(col(queryId), col("list_no"),
-        signature(vt.applyCol(col(queryVec)), col("_th"), nbit, period).as("_qsig"))
+        signature(vt.applyCol(col(queryVec)), Probes.centroid(col("list_no"), thresholds),
+          nbit, period).as("_qsig"))
     val cand = Probes.scan(codes, probes, Some(probed))
       .select(col(queryId), col("id"),
         bit_count(col("sig").bitwiseXOR(col("_qsig"))).cast("double").as("_hd"))

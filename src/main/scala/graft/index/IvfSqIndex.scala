@@ -49,9 +49,8 @@ class IvfSqIndex(
       nprobe, "l2sq", coarse, graphCacheKey)
     var probes = Probes.rows(q, Seq(col(queryId), col(queryVec)))
     if (byResidual)
-      probes = probes.join(broadcast(Probes.centroidsDf(queries.sparkSession, centroids)), "list_no")
-        .select(col(queryId), col("list_no"),
-          vec_sub(col(queryVec), col("centroid")).as(queryVec))
+      probes = probes.select(col(queryId), col("list_no"),
+        vec_sub(col(queryVec), Probes.centroid(col("list_no"), centroids)).as(queryVec))
     val cand = Probes.scan(codes, probes, Some(probed))
       .select(col(queryId), col("id"),
         shim.col(SqVariant.adcL2(qtype, shim.expr(col(queryVec)),

@@ -259,12 +259,10 @@ class IvfPqIndex(
       queryId: String, queryVec: String,
       polysemousHt: Option[Int] = None,
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", coarse, graphCacheKey)
     var probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
-      .join(broadcast(centDf), "list_no")
-      .withColumn("_qres", vec_sub(col(queryVec), col("centroid")))
+      .withColumn("_qres", vec_sub(col(queryVec), Probes.centroid(col("list_no"), centroids)))
       .select(col(queryId), col("list_no"), col("_qres"),
         model.lutCol(col("_qres")).as("_lut"))
     probesPlan = polysemousHt match {
@@ -293,12 +291,10 @@ class IvfPqIndex(
   def sweepCandidates(queries: DataFrame, npMax: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       coarse: Option[Probes.CoarseQuant] = None): DataFrame = {
-    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       math.min(npMax, nlist), "l2sq", coarse, graphCacheKey)
     val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)), ranked = true)
-      .join(broadcast(centDf), "list_no")
-      .withColumn("_qres", vec_sub(col(queryVec), col("centroid")))
+      .withColumn("_qres", vec_sub(col(queryVec), Probes.centroid(col("list_no"), centroids)))
       .select(col(queryId), col("list_no"), col("pr"),
         model.lutCol(col("_qres")).as("_lut"),
         shim.col(PQEncode(shim.expr(col("_qres")), model.codebooks)).as("_qcode"))
@@ -318,7 +314,6 @@ class IvfPqIndex(
     * shape. */
   def sweepCandidatesEf(queries: DataFrame, npMax: Int, efs: Seq[Int],
       queryId: String = "qid", queryVec: String = "qvec"): DataFrame = {
-    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     // one driver collect for every budget: each (ef, query) row takes
     // the walk of its own ef
     val side = efs.map(ef => queries.select(lit(ef).as("ef"), col(queryId), col(queryVec)))
@@ -330,8 +325,7 @@ class IvfPqIndex(
     val (q, probed) = Probes.local(side, queryVec, sel, centroids.head.length)
     val probesPlan = Probes.rows(q, Seq(col("ef"), col(queryId), col(queryVec)),
         ranked = true)
-      .join(broadcast(centDf), "list_no")
-      .withColumn("_qres", vec_sub(col(queryVec), col("centroid")))
+      .withColumn("_qres", vec_sub(col(queryVec), Probes.centroid(col("list_no"), centroids)))
       .select(col("ef"), col(queryId), col("list_no"), col("pr"),
         model.lutCol(col("_qres")).as("_lut"))
     Probes.scan(codes, probesPlan, Some(probed))
@@ -387,13 +381,11 @@ class IvfPqrIndex(
 
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec"): DataFrame = {
-    val centDf = Probes.centroidsDf(queries.sparkSession, centroids)
     val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
       nprobe, "l2sq", None, "")
     val probes = Probes.rows(q, Seq(col(queryId), col(queryVec)))
-      .join(broadcast(centDf), "list_no")
       .select(col(queryId), col("list_no"),
-        vec_sub(col(queryVec), col("centroid")).as("_qres"))
+        vec_sub(col(queryVec), Probes.centroid(col("list_no"), centroids)).as("_qres"))
       .withColumn("_lut", model1.lutCol(col("_qres")))
     // stage 1: ADC over code1, keep k*kFactor candidates per query
     val stage1 = Probes.scan(codes,

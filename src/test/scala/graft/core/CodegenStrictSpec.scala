@@ -243,4 +243,30 @@ class CodegenStrictSpec extends AnyFunSuite {
       assert(eErr <= gErr + 1e-12, s"joint assign worse than greedy at $v")
     }
   }
+
+  test("centroid and probe lookups compile under CODEGEN_ONLY") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    // a range, not a local relation, so the optimizer folds nothing and
+    // the lookups run in generated code; list 3 reads as null
+    val lists = strict.range(-1, 6).select(
+      when(col("id") =!= 3, col("id").cast("int")).as("l"))
+    val cents = Array(Array(0f, 1f), Array(2f, 3f), Array(4f, 5f), Array(6f, 7f))
+    val got = lists.select(col("l"), shim.col(CentroidLookup(shim.expr(col("l")), cents)).as("c"))
+      .collect().map(r => (Option(r.get(0)), Option(r.getSeq[Float](1)))).toMap
+    assert(got == Map(Some(-1) -> None, Some(0) -> Some(Seq(0f, 1f)), Some(1) -> Some(Seq(2f, 3f)),
+      Some(2) -> Some(Seq(4f, 5f)), None -> None, Some(4) -> None, Some(5) -> None))
+    val schema = StructType(Seq(StructField("list_no", IntegerType), StructField("qid", LongType),
+      StructField("v", DoubleType)))
+    val probes = Seq(InternalRow(1, 10L, 0.5), InternalRow(1, 11L, 0.25),
+      InternalRow(2, 12L, 1.0), InternalRow(null, 13L, 2.0))
+    // past the byte bound (or at -1) there is no table
+    assert(ProbeTable(probes.iterator, schema, "list_no", 40).isEmpty)
+    assert(ProbeTable(probes.iterator, schema, "list_no", -1).isEmpty)
+    val (table, st) = ProbeTable(probes.iterator, schema, "list_no", 1000).get
+    assert(table.rows == 3)
+    val pairs = lists.select(col("l"), inline(shim.col(ProbeLookup(shim.expr(col("l")), table, st))))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    assert(pairs == Seq((1, 10L, 0.5), (1, 11L, 0.25), (2, 12L, 1.0)))
+  }
 }

@@ -293,40 +293,45 @@ class FastScanSpec extends SparkTestBase {
     assert(IndexFactory.codeSize("IVF4,PQ8x4fsr", 64) == 4)
   }
 
-  test("IVF fast-scan probe side: LUT rows are broadcast from the plan," +
-    " never collected to a driver-local relation (VERDICT r8)") {
-    // With the r8 idiom the per-query quantized LUTs were collected and
-    // re-shipped as a LocalTableScan — the first driver OOM at a 100x
-    // query table. Now only the query rows and their ranked probe
-    // arrays are collected (one local relation of qid, qvec and _sel,
-    // or the list_no field the optimizer extracts from it); the
-    // LUT-bearing probe subplan must appear INSIDE the broadcast
-    // exchange, so no other local relation is in the plan.
-    val ivf = IvfPq4FastScanIndex.build(b, "id", "vec", nlist = 4, m = 8,
-      niterCoarse = 3, niterPq = 3)
-    val plan = ivf.search(q, 5, nprobe = 2).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastExchange"), s"no broadcast:\n$plan")
-    val locals = plan.linesIterator.filter(_.contains("LocalTableScan")).toSeq
-    assert(locals.forall("LocalTableScan \\[qid#\\d+L, qvec#\\d+, _(sel|extract_list_no)#\\d+\\]".r
-      .findFirstIn(_).isDefined), s"probe rows collected to a local relation:\n$plan")
+  /** The executed plan of `df` built with
+    * `spark.sql.autoBroadcastJoinThreshold` at `threshold`. */
+  private def planAt(threshold: String)(df: => org.apache.spark.sql.DataFrame) = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, threshold)
+    try df.queryExecution.executedPlan
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  test("x4fsr probe side: only the centroid table is driver-local," +
-    " per-(query,list) residual LUTs stay in the broadcast plan") {
+  /** Whether a plan looks its probe rows up, and its broadcast count
+    * (outside any cached relation's plan). */
+  private def probeSide(plan: org.apache.spark.sql.execution.SparkPlan) =
+    (plan.toString.contains("probe_lookup"),
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}.collect(plan) {
+        case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => e }.size)
+
+  test("IVF fast-scan probe side: per-query LUT rows are looked up in the scan" +
+    " within the broadcast threshold, and broadcast past it") {
+    // The quantized LUTs are computed once per query on the driver, as
+    // the broadcast built them there before, and ride in the plan as
+    // the probe lookup's table; past the threshold they broadcast.
+    val ivf = IvfPq4FastScanIndex.build(b, "id", "vec", nlist = 4, m = 8,
+      niterCoarse = 3, niterPq = 3)
+    val lookup = ivf.search(q, 5, nprobe = 2).queryExecution.executedPlan
+    assert(probeSide(lookup) == (true, 0), s"probe rows not looked up:\n$lookup")
+    val joined = planAt("-1")(ivf.search(q, 5, nprobe = 2))
+    assert(probeSide(joined) == (false, 1), s"probe rows not broadcast past the threshold:\n$joined")
+  }
+
+  test("x4fsr probe side: per-(query,list) residual LUTs are looked up in the scan" +
+    " within the broadcast threshold, and broadcast past it") {
     val ivfpq = IvfPqIndex.build(b, "id", "vec", nlist = 4, m = 8, ksub = 16,
       niterCoarse = 3, niterPq = 3)
     val fsr = IvfPq4FastScanRIndex.fromIvfPq(ivfpq)
-    val plan = fsr.search(q, 5, nprobe = 2).queryExecution.executedPlan.toString
-    // local relations may appear (the nlist-bounded centroid table,
-    // possibly rendered once per adaptive subplan), but none may carry
-    // the per-(query,list) LUT column — that would mean probe rows
-    // were collected through the driver again
-    val lutLocals = plan.linesIterator
-      .filter(_.contains("LocalTableScan")).filter(_.contains("_ql"))
-    assert(lutLocals.isEmpty,
-      s"LUT-bearing local relation in plan:\n$plan")
-    assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastQueryStage"),
-      s"no broadcast:\n$plan")
+    val lookup = fsr.search(q, 5, nprobe = 2).queryExecution.executedPlan
+    assert(probeSide(lookup) == (true, 0), s"probe rows not looked up:\n$lookup")
+    val joined = planAt("-1")(fsr.search(q, 5, nprobe = 2))
+    assert(probeSide(joined) == (false, 1), s"probe rows not broadcast past the threshold:\n$joined")
   }
 
   test("factory x4fsr Built.close() is wired, idempotent, and keeps searches valid") {

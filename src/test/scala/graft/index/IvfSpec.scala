@@ -525,6 +525,73 @@ class IvfSpec extends SparkTestBase {
       rq4.codes, rq4r.codes).foreach(_.unpersist())
   }
 
+  /** `f` with `spark.sql.autoBroadcastJoinThreshold` at -1: a search's
+    * probe rows broadcast-join the lists instead of being looked up. */
+  private def probeJoin[A](f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("every family behind Probes.scan looks its probe rows up and returns " +
+    "the rows of its probe-join plan") {
+    val (flat, pq) = idx4
+    val rnd = new scala.util.Random(11)
+    val qs = queries4(Seq.fill(6)(Some(Seq.fill(4)(rnd.nextFloat()))): _*)
+    val b = base4
+    val sq = IvfSqIndex.build(b, "id", "vec", nlist = 4, niter = 2, byResidual = true)
+    val rq = IvfRq.build(b, "id", "vec", nlist = 4, levels = 2, k = 4,
+      niterCoarse = 2, niterRq = 2)
+    val rcq = IvfRcq.build(b, "id", "vec", levels = 2, bits = 1, niter = 2)
+    val pqr = IvfPqrIndex.build(b, "id", "vec", nlist = 4, m = 2, ksub = 4,
+      niterCoarse = 2, niterPq = 2)
+    val sh = IvfSpectralHash.build(b, "id", "vec", nlist = 4, nbit = 4,
+      period = 1.0, niter = 2)
+    val pq4 = IvfPq4FastScanIndex.build(b, "id", "vec", nlist = 4, m = 2,
+      niterCoarse = 2, niterPq = 2)
+    val pq4r = IvfPq4FastScanRIndex.build(b, "id", "vec", nlist = 4, m = 2,
+      niterCoarse = 2, niterPq = 2)
+    val rq4 = IvfRq4FastScanIndex.build(b, "id", "vec", nlist = 4, levels = 2,
+      niterCoarse = 2, niter = 2)
+    val rq4r = IvfRq4FastScanRIndex.build(b, "id", "vec", nlist = 4, levels = 2,
+      niterCoarse = 2, niter = 2)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def lookedUp(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("probe_lookup")
+    // IVF-Flat's probe-join plan is its big-batch one, with the quantizer in the plan
+    for ((name, lookup, join) <- Seq[(String, () => org.apache.spark.sql.DataFrame,
+        () => org.apache.spark.sql.DataFrame)](
+        ("IVF-Flat", () => flat.search(qs, 5, nprobe = 2),
+          () => flat.search(qs, 5, nprobe = 2, broadcastQueries = false)),
+        ("IVF-Flat range", () => flat.rangeSearch(qs, 0.3, nprobe = 2),
+          () => flat.rangeSearch(qs, 0.3, nprobe = 2, broadcastQueries = false)),
+        ("IVF-Flat sweep", () => flat.searchSweep(qs, 5, Seq(1, 2, 3)),
+          () => flat.searchSweep(qs, 5, Seq(1, 2, 3), broadcastQueries = false)))) {
+      val got = lookup()
+      assert(lookedUp(got) && rows(got) == rows(join()), name)
+    }
+    for ((name, search) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "IVF-PQ" -> (() => pq.search(qs, 5, nprobe = 2)),
+        "IVF-PQR" -> (() => pqr.search(qs, 5, nprobe = 2)),
+        "IVF-SQ" -> (() => sq.search(qs, 5, nprobe = 2)),
+        "IVF-RQ" -> (() => rq.search(qs, 5, nprobe = 2)),
+        "IVF-RQ LUT" -> (() => rq.searchNormLut(qs, 5, 2, rq.codes, nonorm = true)),
+        "IVF-RCQ" -> (() => rcq.search(qs, 5, nprobe = 2)),
+        "IVF-SH" -> (() => sh.search(qs, 5, nprobe = 2)),
+        "IVF-PQ fast-scan" -> (() => pq4.search(qs, 5, nprobe = 2)),
+        "IVF-PQ fast-scan by residual" -> (() => pq4r.search(qs, 5, nprobe = 2)),
+        "IVF-RQ fast-scan" -> (() => rq4.search(qs, 5, nprobe = 2)),
+        "IVF-RQ fast-scan by residual" -> (() => rq4r.search(qs, 5, nprobe = 2)))) {
+      val got = search()
+      val (joined, joinedLookup) = probeJoin { val j = search(); (rows(j), lookedUp(j)) }
+      assert(lookedUp(got) && !joinedLookup, s"$name: lookup plan ${lookedUp(got)}")
+      assert(rows(got).nonEmpty && rows(got) == joined, name)
+    }
+    Seq(sq.codes, rq.codes, rcq.invlists, pqr.codes, pq4.codes, pq4r.codes,
+      rq4.codes, rq4r.codes).foreach(_.unpersist())
+  }
+
   test("a null query vector yields no rows for that query") {
     val (flat, pq) = idx4
     val qs = queries4(None, Some(Seq(0.5f, 0.5f, 0.5f, 0.5f)))

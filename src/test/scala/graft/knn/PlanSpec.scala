@@ -215,14 +215,14 @@ class PlanSpec extends SparkTestBase {
     assert(shuffles == 1, s"expected 1 hash exchange, got $shuffles:\n$plan")
   }
 
-  test("IVF fast-scan pushes the probed-list filter below the broadcast probe join") {
+  test("IVF fast-scan pushes the probed-list filter below the probe lookup") {
     val ivf = graft.index.IvfPq4FastScanIndex.build(b, "id", "vec", nlist = 8,
       m = 8, niterCoarse = 2, niterPq = 2)
     val plan = ivf.search(q, 5, nprobe = 2).queryExecution.executedPlan.toString
     assert("list_no(#\\d+)? IN \\(".r.findFirstIn(plan).isDefined,
       s"probed-list filter not pushed:\n$plan")
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-      s"probe table not broadcast:\n$plan")
+    assert("Generate inline\\(probe_lookup\\(list_no".r.findFirstIn(plan).isDefined,
+      s"probe rows not looked up in the scan:\n$plan")
     assert(plan.toLowerCase.contains("partial_topk"), s"no partial top-k:\n$plan")
   }
 
@@ -329,6 +329,87 @@ class PlanSpec extends SparkTestBase {
     assert(rows.length == 50 && execJobs <= 3, s"IVF-Flat action ran $execJobs jobs")
     assert(adc.count() == 50)
     pq.codes.unpersist()
+  }
+
+  /** An IVF-Flat index over `b`, saved as `files` list-sorted data
+    * files (one shuffle partition per file, AQE off) and loaded. */
+  private def savedIvf(files: Int): IvfIndex = {
+    val idx = IvfIndex.build(b, "id", "vec", nlist = 8, niter = 2)
+    val dir = java.nio.file.Files.createTempDirectory("ivfsplits").toString
+    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> files.toString)
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try idx.save(dir)
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    val stored = graft.io.IndexLayoutFixtures.storedLists(spark, s"$dir/invlists", "list_no")
+    assert(stored.size == files, s"${stored.size} data files, wanted $files")
+    graft.io.IndexIO.loadAs[IvfIndex](spark, dir)
+  }
+
+  private def localQueries = spark.createDataFrame(q.collect().toSeq.asJava, q.schema)
+
+  private val planWalk = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** Rows the probe-lookup generators of a finished plan emitted. */
+  private def lookupRows(df: org.apache.spark.sql.DataFrame): Long =
+    planWalk.collect(df.queryExecution.executedPlan) {
+      case g: org.apache.spark.sql.execution.GenerateExec
+          if g.generator.exists(_.isInstanceOf[graft.core.ProbeLookup]) =>
+        g.metrics("numOutputRows").value
+    }.sum
+
+  /** Rows the join nodes of a finished plan emitted. */
+  private def joinRows(df: org.apache.spark.sql.DataFrame): Long =
+    planWalk.collect(df.queryExecution.executedPlan) {
+      case j if j.nodeName.endsWith("Join") => j.metrics("numOutputRows").value
+    }.sum
+
+  test("small-batch IVF-Flat search over a saved one-file index runs one job: " +
+    "probe rows looked up in the scan, top-k merged in its task") {
+    val idx = savedIvf(1)
+    val local = localQueries
+    val ((rows, df), jobs) = jobsLaunchedBy {
+      val df = idx.search(local, 5, nprobe = 2)
+      (df.collect(), df)
+    }
+    assert(jobs == 1, s"search and collect ran $jobs jobs")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("probe_lookup"), s"no probe lookup:\n$plan")
+    assert(!plan.contains("Exchange"), s"exchange in a one-split search:\n$plan")
+    assert(rows.length == 50 &&
+      rows.toSet == idx.search(local, 5, nprobe = 2, broadcastQueries = false).collect().toSet)
+  }
+
+  test("small-batch IVF-Flat search over a two-split store keeps its top-k exchange") {
+    val idx = savedIvf(2)
+    val local = localQueries
+    val df = idx.search(local, 5, nprobe = 2)
+    val rows = df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("probe_lookup"), s"no probe lookup:\n$plan")
+    val exchanges = planWalk.collect(plan) {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e.nodeName }
+    assert(exchanges == Seq("Exchange"), s"expected the top-k exchange alone:\n$plan")
+    assert(rows.toSet == idx.search(local, 5, nprobe = 2, broadcastQueries = false).collect().toSet)
+  }
+
+  test("the probe lookup emits as many (probe, list row) pairs as the probe join") {
+    val idx = savedIvf(1)
+    val local = localQueries
+    val viaLookup = idx.search(local, 5, nprobe = 3)
+    val viaJoin = idx.search(local, 5, nprobe = 3, broadcastQueries = false)
+    assert(viaLookup.collect().toSet == viaJoin.collect().toSet)
+    val pairs = lookupRows(viaLookup)
+    assert(pairs > 0 && pairs == joinRows(viaJoin),
+      s"lookup emitted $pairs pairs, the shuffle join ${joinRows(viaJoin)}")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val viaBroadcast =
+      try idx.search(local, 5, nprobe = 3) finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    viaBroadcast.collect()
+    assert(lookupRows(viaBroadcast) == 0 && joinRows(viaBroadcast) == pairs)
   }
 
   test("assign uses the heap aggregate (no window, no sort aggregate)") {

@@ -8,13 +8,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.index.Probes`, and the ranked top-k tail (top-k aggregate,
   * posexplode, 1-based rank) is written out only in
   * `graft.core.TopKAgg.ranked` and in FastScan's own tail, which
-  * carries per-query scalars through the aggregate. */
+  * carries per-query scalars through the aggregate. A search attaches
+  * each list's centroid to its probe rows by projection
+  * (`Probes.centroid`), never by a broadcast join after its probe step,
+  * so its probe side stays local rows. */
 class ScanGuardSpec extends AnyFunSuite {
 
   private val tail = """posexplode\(col\("_tk"\)\)""".r
   /** A `listFilter(` call, over any lines, that reaches `.join(broadcast(`
     * before the statement ends. */
   private val prunedJoin = """(?s)listFilter\((?:(?!\n\s*\n)[^;])*?\.join\(\s*broadcast\(""".r
+
+  /** A probe step (`Probes.local(` or `Probes.rows(`) followed, in the
+    * same block, by a broadcast join of a centroid table. */
+  private val centroidJoin =
+    """(?s)Probes\.(?:local|rows)\((?:(?!\n\s*\n)[^;])*?\.join\(\s*broadcast\(\s*(?:cent\w*|thresh\w*|Probes\.centroidsDf\()""".r
 
   /** How many times each file may hold the tail: its helper, FastScan's
     * tail and IMI's top-nprobe cell explode, which ranks probes, not
@@ -44,6 +52,19 @@ class ScanGuardSpec extends AnyFunSuite {
   }
 
   def scan(lists: DataFrame) = l.join(broadcast(probeRows), by)""").isEmpty)
+    // the probe-side centroid joins as written in Pq, IvfRq and IvfSpectralHash
+    assert(centroidJoin.findFirstIn("""    val (q, probed) = Probes.local(queries, queryId, queryVec, centroids,
+      nprobe, "l2sq", coarse, graphCacheKey)
+    var probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
+      .join(broadcast(centDf), "list_no")""").isDefined)
+    assert(centroidJoin.findFirstIn("""    val probesPlan = Probes.rows(q, Seq(col(queryId), col(queryVec)))
+    val cand = Probes.scan(codes.join(broadcast(centDf), "list_no"), probesPlan,""").isDefined)
+    assert(centroidJoin.findFirstIn("""    val probes = Probes.rows(q, Seq(col(queryId), col(queryVec)))
+      .join(broadcast(threshDf), "list_no")""").isDefined)
+    assert(centroidJoin.findFirstIn("""    val probes = Probes.rows(q, Seq(col(queryId), col(queryVec)))
+      .select(col(queryId), col("list_no"),
+        vec_sub(col(queryVec), Probes.centroid(col("list_no"), centroids)).as("_qres"))
+    val rescored = stage1.join(broadcast(probes.select(col(queryId))), "id")""").isEmpty)
   }
 
   test("the ranked top-k tail is written only in its helper and FastScan's tail") {
@@ -56,5 +77,10 @@ class ScanGuardSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
     val calls = SourceScan.offenders("src/main/scala", """listFilter\(""", Set("Probes.scala"))
     assert(calls.isEmpty, calls.mkString("\n", "\n", ""))
+  }
+
+  test("searches attach centroids by projection, not by a broadcast join after the probe step") {
+    val found = counts(centroidJoin).filterNot(_._1 == "Probes.scala")
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }
