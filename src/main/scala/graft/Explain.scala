@@ -87,7 +87,11 @@ object Explain {
       // r18: the hot-bucket cap — the plan must show the
       // filter(size(ids) <= cap) BEFORE the pair explode, bounding
       // per-bucket work ahead of the O(B^2) expansion
-      "minhash_hotcap_neardup")
+      "minhash_hotcap_neardup",
+      // the rest of the IMI and binary IVF searches: every one picks its
+      // probes in process and looks its probe rows up in the scan
+      "imi_search", "imi_pq_range_search", "imi_sq_residual_search",
+      "bivf_range_search")
     val sb = new StringBuilder
     sb.append("# EXPLAIN — formatted physical plans of headline operators\n\n")
     sb.append("Generated by `graft.Explain` at sf0.001 (sf0.01 for the *_big\n")

@@ -311,3 +311,66 @@ case class NearestCentroidsIvf2(child: Expression,
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
+
+/** The inverted multi-index's cell ranking (MultiIndexQuantizer2::search,
+  * faiss/IndexPQ.cpp:1042): each half-space ranks its ksub
+  * half-centroids through the query's half LUT ([[PqKernels.lut]]) and
+  * keeps the top k2 = min(max(nprobe, 1), ksub); the cells are the
+  * k2·k2 pairs (j0, j1) → cell j0·ksub + j1 at distance d0 + d1, and
+  * the top nprobe by (distance, cell) are returned best-first. Min-sum
+  * over per-half top-k2 is exhaustive for any final rank <= k2, and k2
+  * caps at ksub, so the result is the top nprobe of all ksub² cells. */
+private[graft] object CentroidImiKernels {
+  def nearestCells(a: ArrayData, codebooks: Array[Array[Array[Float]]],
+      nprobe: Int): ArrayData = {
+    val ksub = codebooks(0).length
+    val lut = PqKernels.lut(a, codebooks)
+    val k2 = math.min(math.max(nprobe, 1), ksub)
+    def half(m: Int): (Array[Long], Array[Double]) = {
+      val h = new TopKHeap(k2, asc = true)
+      var j = 0
+      while (j < ksub) { h.insert(lut(m * ksub + j), j.toLong); j += 1 }
+      h.sorted()
+    }
+    val (j0, d0) = half(0)
+    val (j1, d1) = half(1)
+    val np = math.min(math.max(nprobe, 0), k2 * k2)
+    val h = new TopKHeap(np, asc = true)
+    var x = 0
+    while (np > 0 && x < k2) {
+      var y = 0
+      while (y < k2) { h.insert(d0(x) + d1(y), j0(x) * ksub + j1(y)); y += 1 }
+      x += 1
+    }
+    val (cells, dists) = h.sorted()
+    val out = new Array[Any](cells.length)
+    var i = 0
+    while (i < cells.length) { out(i) = InternalRow(cells(i).toInt, dists(i)); i += 1 }
+    new GenericArrayData(out)
+  }
+}
+
+/** See [[CentroidImiKernels]]: the probe selector of the IMI families
+  * over the two half-space codebooks of a 2-subspace coarse PQ. Same
+  * output contract as [[NearestCentroids]], with the cell id in
+  * `list_no`. */
+case class NearestCellsImi(child: Expression,
+    codebooks: Array[Array[Array[Float]]], nprobe: Int)
+  extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("list_no", IntegerType, nullable = false),
+    StructField("dist", DoubleType, nullable = false))), containsNull = false)
+  override def prettyName: String = "nearest_cells_imi"
+
+  override def nullSafeEval(v: Any): Any =
+    CentroidImiKernels.nearestCells(v.asInstanceOf[ArrayData], codebooks, nprobe)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cb = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
+    defineCodeGen(ctx, ev, c =>
+      s"graft.core.CentroidImiKernels.nearestCells($c, $cb, $nprobe)")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}

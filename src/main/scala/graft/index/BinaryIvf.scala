@@ -1,8 +1,10 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{hamming_dist, sign_bits, topk}
+import org.apache.spark.sql.graft.shim
+import graft.core.{NearestCentroid, UnpackBits}
+import graft.functions.{hamming_dist, sign_bits}
 
 /** Binary IVF index (faiss/IndexBinaryIVF.h:33): inverted lists of
   * packed binary codes, a binary coarse quantizer, Hamming-pruned
@@ -12,9 +14,10 @@ import graft.functions.{hamming_dist, sign_bits, topk}
   * Training follows the reference's recipe (IndexBinaryIVF::train →
   * float k-means over the bits, then binarize the centroids): k-means
   * runs on the codes unpacked to 0/1 floats and each centroid is
-  * re-packed by thresholding at 0.5 — so the coarse quantizer is
-  * itself a binary code table and assignment is pure integer Hamming
-  * (deterministic; ties on the lower list_no).
+  * binarized by thresholding at 0.5 — so the coarse quantizer is
+  * itself a binary code table, and assignment and probe selection rank
+  * the lists by Hamming distance (squared L2 over the 0/1 bits;
+  * deterministic, ties on the lower list_no).
   */
 class BinaryIvfIndex(
     val nlist: Int,
@@ -27,66 +30,38 @@ class BinaryIvfIndex(
     * (the IvfIndex convention). */
   private val hnswCacheKey = java.util.UUID.randomUUID().toString
 
-  private def centDf: DataFrame = {
-    val spark = invlists.sparkSession
-    import spark.implicits._
-    centroidBits.zipWithIndex.toSeq
-      .map { case (bits, l) => (l, BinaryIvfIndex.pack(bits)) }
-      .toDF("list_no", "ccode")
+  /** The probe step shared by [[search]] and [[rangeSearch]], the one
+    * of every IVF family ([[Probes.local]]): Hamming on packed codes
+    * equals squared L2 on the 0/1-unpacked bits (each mismatching bit
+    * contributes exactly 1, the IndexBinaryFromFloat identity), so the
+    * float selector over the unpacked centroids ranks the lists by
+    * Hamming distance, ties on the lower list_no. `hnswCoarse =
+    * Some(efSearch)` walks a per-executor HNSW graph over them instead
+    * — the reference's `BIVF<n>_HNSW<m>` coarse grammar
+    * (index_factory.cpp:895-900, IndexBinaryHNSW as quantizer);
+    * efSearch >= nlist degenerates to the exact ranking. A code whose
+    * byte length is not the index's is rejected. Output the probe rows
+    * (queryId, queryCode, list_no) and the probed lists. */
+  private def probes(queries: DataFrame, nprobe: Int,
+      queryId: String, queryCode: String,
+      hnswCoarse: Option[Int], hnswM: Int): (DataFrame, Array[Int]) = {
+    val nbits = centroidBits.head.length
+    val qbits = shim.col(UnpackBits(shim.expr(col(queryCode)), nbits))
+    val sel = Probes.selExpr(qbits, centroidBits.map(_.map(_.toFloat)), nprobe, "l2sq",
+      hnswCoarse.map(Probes.HnswCoarse(_, hnswM)), hnswCacheKey)
+    val (q, probed) = Probes.local(queries.select(col(queryId), col(queryCode)),
+      queryCode, sel, (nbits + 7) / 8)
+    (Probes.rows(q, Seq(col(queryId), col(queryCode))), probed)
   }
-
-  /** Exact Hamming probe selection (one definition shared by search
-    * and rangeSearch — a tie-break or cast fix must reach both, the
-    * ImiProbes convention). Output (queryId, queryCode, list_no). */
-  private def flatProbes(queries: DataFrame, nprobe: Int,
-      queryId: String, queryCode: String): DataFrame =
-    queries.crossJoin(broadcast(centDf))
-      .select(col(queryId), col(queryCode),
-        hamming_dist(col(queryCode), col("ccode")).cast("double").as("_hd"),
-        col("list_no"))
-      .groupBy(col(queryId), col(queryCode))
-      .agg(topk(col("_hd"), col("list_no").cast("long"), nprobe, asc = true).as("_tk"))
-      .select(col(queryId), col(queryCode), explode(col("_tk")).as("_r"))
-      .select(col(queryId), col(queryCode), col("_r.id").cast("int").as("list_no"))
 
   /** Hamming kNN over the nprobe closest lists. Output
-    * (qid, rank, id, hd).
-    *
-    * `hnswCoarse = Some(efSearch)` routes probe selection through a
-    * per-executor HNSW graph over the centroids — the reference's
-    * `BIVF<n>_HNSW<m>` coarse grammar (index_factory.cpp:895-900,
-    * IndexBinaryHNSW as quantizer). Hamming on packed codes equals
-    * squared L2 on the 0/1-unpacked bits (each mismatching bit
-    * contributes exactly 1, the IndexBinaryFromFloat identity), so the
-    * float HNSW walk over unpacked centroids selects Hamming-correct
-    * probes; efSearch >= nlist degenerates to the exact ranking. */
-  /** Probe head shared by [[search]] and [[rangeSearch]] — exact
-    * Hamming ranking or the float HNSW walk over unpacked centroids. */
-  private def coarseProbes(queries: DataFrame, nprobe: Int,
-      queryId: String, queryCode: String,
-      hnswCoarse: Option[Int], hnswM: Int): DataFrame = {
-    import org.apache.spark.sql.graft.shim
-    hnswCoarse match {
-      case Some(ef) =>
-        val nbits = centroidBits.headOption.map(_.length).getOrElse(0)
-        val centF = centroidBits.map(_.map(_.toFloat))
-        val qbits = shim.col(graft.core.UnpackBits(
-          shim.expr(col(queryCode)), nbits)).cast("array<float>")
-        Probes.rows(queries, Seq(col(queryId), col(queryCode)),
-          sel = shim.col(graft.core.NearestCentroidsHnsw(
-            shim.expr(qbits), centF, math.min(nprobe, nlist), ef,
-            m = hnswM, cacheKey = s"$hnswCacheKey:m=$hnswM")))
-      case None => flatProbes(queries, nprobe, queryId, queryCode)
-    }
-  }
-
+    * (qid, rank, id, hd). */
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryCode: String = "qcode",
       hnswCoarse: Option[Int] = None, hnswM: Int = 16): DataFrame = {
-    val probes = coarseProbes(queries, nprobe, queryId, queryCode,
-      hnswCoarse, hnswM)
+    val (pr, probed) = probes(queries, nprobe, queryId, queryCode, hnswCoarse, hnswM)
     BinaryFlat.rankedHd(
-      Probes.scan(invlists, probes, Some(Probes.probedListIds(probes)))
+      Probes.scan(invlists, pr, Some(probed))
         .select(col(queryId), col("id"),
           hamming_dist(col(queryCode), col("code")).cast("double").as("_d")),
       k, queryId, "id")
@@ -100,9 +75,8 @@ class BinaryIvfIndex(
   def rangeSearch(queries: DataFrame, maxHamming: Long, nprobe: Int,
       queryId: String = "qid", queryCode: String = "qcode",
       hnswCoarse: Option[Int] = None, hnswM: Int = 16): DataFrame = {
-    val probes = coarseProbes(queries, nprobe, queryId, queryCode,
-      hnswCoarse, hnswM)
-    Probes.scan(invlists, probes, Some(Probes.probedListIds(probes)))
+    val (pr, probed) = probes(queries, nprobe, queryId, queryCode, hnswCoarse, hnswM)
+    Probes.scan(invlists, pr, Some(probed))
       .select(col(queryId), col("id"),
         hamming_dist(col(queryCode), col("code")).as("hd"))
       .filter(col("hd") <= maxHamming)
@@ -110,16 +84,6 @@ class BinaryIvfIndex(
 }
 
 object BinaryIvfIndex {
-
-  private[index] def pack(bits: Array[Int]): Array[Byte] = {
-    val out = new Array[Byte]((bits.length + 7) / 8)
-    var i = 0
-    while (i < bits.length) {
-      if (bits(i) != 0) out(i >> 3) = (out(i >> 3) | (1 << (i & 7))).toByte
-      i += 1
-    }
-    out
-  }
 
   /** Train + add from float vectors: codes = sign bits, coarse
     * quantizer = k-means on the 0/1 bit vectors, binarized. */
@@ -137,9 +101,7 @@ object BinaryIvfIndex {
   def buildFromCodes(df: DataFrame, idCol: String, codeCol: String,
       nbits: Int, nlist: Int, niter: Int = 6, seed: Long = 1234L): BinaryIvfIndex = {
     val data = df.select(col(idCol).as("id"), col(codeCol).as("code"),
-      org.apache.spark.sql.graft.shim.col(
-        graft.core.UnpackBits(
-          org.apache.spark.sql.graft.shim.expr(col(codeCol)), nbits)).as("_bits"))
+      shim.col(UnpackBits(shim.expr(col(codeCol)), nbits)).as("_bits"))
     buildFromPrepared(data, nlist, niter, seed)
   }
 
@@ -148,21 +110,12 @@ object BinaryIvfIndex {
     val model = graft.cluster.KMeans.fit(data.select(col("_bits")), "_bits",
       graft.cluster.KMeans.Params(k = nlist, niter = niter, seed = seed))
     val centroidBits = model.centroids.map(_.map(x => if (x >= 0.5f) 1 else 0))
-    val spark = data.sparkSession
-    import spark.implicits._
-    val centDf = centroidBits.zipWithIndex.toSeq
-      .map { case (b, l) => (l, pack(b)) }.toDF("list_no", "ccode")
-    // assignment = min Hamming to the binarized centroids (ties on the
-    // lower list_no, the TopKHeap convention)
-    val assigned = data.select(col("id"), col("code"))
-      .crossJoin(broadcast(centDf))
-      .select(col("id"), col("code"),
-        hamming_dist(col("code"), col("ccode")).cast("double").as("_hd"),
-        col("list_no"))
-      .groupBy(col("id"), col("code"))
-      .agg(topk(col("_hd"), col("list_no").cast("long"), 1, asc = true).as("_tk"))
-      .select(col("id"), col("code"), explode(col("_tk")).as("_r"))
-      .select(col("id"), col("code"), col("_r.id").cast("int").as("list_no"))
+    // assignment = the nearest binarized centroid over the 0/1 bits,
+    // squared L2 = Hamming (ties on the lower list_no)
+    val assigned = data
+      .withColumn("_a", shim.col(NearestCentroid(shim.expr(col("_bits")),
+        centroidBits.map(_.map(_.toFloat)), "l2sq")))
+      .select(col("id"), col("code"), col("_a.list_no").as("list_no"))
     new BinaryIvfIndex(nlist, centroidBits, assigned)
   }
 }

@@ -1,10 +1,10 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
-import graft.core.{PQSubAssign, TopKAgg}
-import graft.functions.{topk, vec_dist}
+import graft.core.{NearestCellsImi, PQSubAssign, TopKAgg}
+import graft.functions.vec_dist
 
 /** IMI — inverted multi-index (MultiIndexQuantizer, faiss/IndexPQ.h:139-171,
   * used as the `IMI2x…` coarse quantizer of every SIFT1B/Deep1B
@@ -12,15 +12,15 @@ import graft.functions.{topk, vec_dist}
   * so the cell table is the CARTESIAN product of two K-entry codebooks
   * — K² cells from 2K trained centroids. Cell distance decomposes as
   * d(q, cell(j1,j2)) = d(q_half1, cb1[j1]) + d(q_half2, cb2[j2]), so
-  * probe selection ranks K² sums computed from two K-entry LUTs
+  * probe selection ranks cell sums computed from two K-entry LUTs
   * (faiss's multi-sequence scan, IndexPQ.cpp MultiIndexQuantizer::search).
   *
   * Spark shape: training reuses the joint subspace Lloyd of
   * [[Pq.train]] (m=2); cell assignment is one [[PQEncode]] expression;
-  * probe selection is LUT explode + the bounded-heap top-nprobe
-  * aggregate; the scan is the same statically pruned cell join as
-  * [[IvfIndex]] — at scale the K² cells partition the corpus finer
-  * than plain IVF for the same training cost (256 cells from 32
+  * probe selection is the in-process MinSumK selector
+  * ([[ImiProbes.local]]); the scan is the same statically pruned cell
+  * scan as [[IvfIndex]] — at scale the K² cells partition the corpus
+  * finer than plain IVF for the same training cost (256 cells from 32
   * centroids here).
   */
 class ImiIndex(
@@ -31,78 +31,33 @@ class ImiIndex(
 
   def nlist: Int = ksub * ksub
 
-  /** Exact-distance search over the nprobe best cells.
-    * Output (qid, rank, id, dist).
-    *
-    * Guard: above [[ImiIndex.MaxEnumCells]] cells the K² LUT-sum
-    * enumeration below is unreachable — the call routes through the
-    * MinSumK two-level ranking of [[search2]], which selects the SAME
-    * top-nprobe cells (min-sum over per-half top-k2 is exhaustive for
-    * any final rank <= k2, and k2 caps at ksub, making the combine
-    * exhaustive whenever nprobe > ksub). At the reference's IMI2x12
-    * the enumeration would explode 16.7M rows PER QUERY; the guard
-    * makes that plan impossible to reach by accident at scale. */
+  /** Exact-distance search over the nprobe best cells
+    * ([[ImiProbes.local]]: the per-half top-k2 and min-sum combine of
+    * MultiIndexQuantizer2::search, which never ranks all K² cells), the
+    * pruned cell scan ([[Probes.scan]]) and the ranked top-k. Output
+    * (qid, rank, id, dist). */
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       metric: String = "l2sq"): DataFrame = {
-    if (nlist > ImiIndex.MaxEnumCells)
-      return search2(queries, k, nprobe, queryId, queryVec, metric)
-    val kl = lit(ksub)
-    // per-query cell ranking from the two half-space LUTs
-    val probes = queries
-      .select(col(queryId), col(queryVec), model.lutCol(col(queryVec)).as("_lut"))
-      .select(col(queryId), col(queryVec), col("_lut"),
-        explode(sequence(lit(0), lit(nlist - 1))).as("_cell"))
-      .select(col(queryId), col(queryVec), col("_cell"),
-        (element_at(col("_lut"), (col("_cell") / kl).cast("int") + 1) +
-          element_at(col("_lut"), kl + pmod(col("_cell"), kl).cast("int") + 1)).as("_cd"))
-      .groupBy(col(queryId), col(queryVec))
-      .agg(topk(col("_cd"), col("_cell").cast("long"), nprobe, asc = true).as("_tk"))
-      .select(col(queryId), col(queryVec), explode(col("_tk")).as("_r"))
-      .select(col(queryId), col(queryVec), col("_r.id").cast("int").as("cell"))
-    scanCells(probes, k, queryId, queryVec, metric)
-  }
-
-  /** MultiIndexQuantizer2 search (faiss/IndexPQ.h:171 — "the PQ
-    * assignment is performed by sub-indexes";
-    * MultiIndexQuantizer2::search, IndexPQ.cpp:1042): instead of
-    * ranking all K² cells from the two LUTs, each HALF-SPACE runs its
-    * own top-k2 search through its assign sub-index (k2 =
-    * min(nprobe, ksub), the reference's k2; the default sub-index is
-    * an exact flat scan of the K half-centroids, which the LUT is),
-    * and the cell ranking is the min-sum combine of the two k2-lists
-    * (the reference's MinSumK) — k2·k2 candidate sums instead of K².
-    * Same top-nprobe cells as [[search]] (min-sum over per-half top-k2
-    * is exhaustive for any final rank <= k2), then the identical
-    * pruned cell scan. */
-  def search2(queries: DataFrame, k: Int, nprobe: Int,
-      queryId: String = "qid", queryVec: String = "qvec",
-      metric: String = "l2sq"): DataFrame = {
-    // both levels live in the shared [[ImiProbes.minSumK]] (one
-    // implementation for search2, ImiPqIndex and ImiSqIndex — a probe
-    // tie-break fix reaches all of them); the probe rank is unused here
-    val probes = ImiProbes.minSumK(queries, model, ksub, nprobe,
-      queryId, queryVec).drop("pr")
-    scanCells(probes, k, queryId, queryVec, metric)
-  }
-
-  /** Shared pruned cell scan: [[Probes.scan]] over the probed cells +
-    * exact distance + the ranked top-k. */
-  private def scanCells(probes: DataFrame, k: Int,
-      queryId: String, queryVec: String, metric: String): DataFrame =
+    val (probes, probed) = ImiProbes.local(queries, model, nprobe, queryId, queryVec)
     TopKAgg.ranked(
-      Probes.scan(invlists, probes, Some(Probes.probedListIds(probes, "cell")), "cell")
+      Probes.scan(invlists, probes, Some(probed), "cell")
         .select(col(queryId), col("id"),
           vec_dist(col(queryVec), col("vec"), metric).as("_d")),
       Seq(col(queryId)), col("_d"), col("id"), k, asc = true)
+  }
+
+  /** MultiIndexQuantizer2 search (faiss/IndexPQ.h:171, "the PQ
+    * assignment is performed by sub-indexes"): [[search]], whose
+    * selector already runs each half-space's top-k2 through the half
+    * LUT (the default flat sub-index) and the MinSumK combine. */
+  def search2(queries: DataFrame, k: Int, nprobe: Int,
+      queryId: String = "qid", queryVec: String = "qvec",
+      metric: String = "l2sq"): DataFrame =
+    search(queries, k, nprobe, queryId, queryVec, metric)
 }
 
 object ImiIndex {
-  /** Cell-count ceiling for [[ImiIndex.search]]'s direct K²
-    * enumeration; beyond it the MinSumK route is forced (same
-    * results, O(nprobe²) candidate cells instead of K²). */
-  val MaxEnumCells = 4096
-
   /** Train the 2-subspace coarse quantizer + assign every row to its
     * cartesian cell. */
   def build(df: DataFrame, idCol: String, vecCol: String, ksub: Int = 16,
@@ -122,50 +77,39 @@ object ImiIndex {
   }
 }
 
-/** `IMI2x<b>,PQ<m>` — IVFPQ whose coarse quantizer is the inverted
-  * multi-index (the factory composition index_factory.cpp:834-878;
-  * the SIFT1B flagship config `IMI2x12,PQ16` of benchs/README.md:107).
-  * Cells are the K² cartesian product of the two half-space codebooks;
-  * codes are a product quantizer over the RESIDUAL against the cell
-  * centroid (= the concatenation of the two half-centroids), searched
-  * by per-(query, probed-cell) ADC LUTs — exactly [[IvfPqIndex]] with
-  * [[ImiIndex]]'s probe selection.
-  *
-  * Spark shape: probe selection is the MinSumK two-level ranking of
-  * [[ImiIndex.search2]] (per-half top-nprobe through the half LUT,
-  * then the min-sum combine — O(nprobe²) candidate cells, never the
-  * K² enumeration, which at the reference's IMI2x12 would be 16M cells
-  * per query); residuals come from TWO K-row broadcast joins against
-  * the half-centroid tables, so no K²-row centroid table ever
-  * materializes; the codes scan is statically pruned to the probed
-  * cells and aggregated by the bounded-heap top-k. Optional `ht`
-  * (polysemous Hamming pre-filter on the residual codes,
-  * IndexIVFPQ.h polysemous_ht) and `maxCodes` (per-query TOTAL scan
-  * budget in probe-rank order, IndexIVF.h:67-72 / IndexIVF.cpp:586)
-  * expose the SIFT1B operating-point knobs. */
-/** Shared IMI probe selection: the MinSumK two-level cell ranking
-  * (MultiIndexQuantizer2::search, IndexPQ.cpp:1042) — per-half top-k2
-  * through the half LUTs (k2 = min(nprobe, ksub)), min-sum combine,
-  * top-nprobe cells by (cell distance, cell). O(nprobe²) candidate
-  * cells, never the K² enumeration (at the reference's IMI2x12 that
-  * would be 16M cells per query). */
+/** Shared IMI probe step and cell-centroid projection (one definition
+  * for ImiIndex, ImiPqIndex, ImiSqIndex and the MIQ two-layer index, so
+  * a tie-break or decode fix reaches all of them). */
 private[index] object ImiProbes {
 
-  /** The probed cells of `probes`, enumerated by a Spark distinct, for a
-    * small query set (`broadcastQueries`); None leaves the prune to the
-    * shuffle equi-join on cell ([[Probes.scan]]). */
-  def probedCells(probes: DataFrame, broadcastQueries: Boolean): Option[Array[Int]] =
-    Option.when(broadcastQueries)(Probes.probedListIds(probes, "cell"))
-
-  /** (_j<m>, _c<m>) broadcast table of half-space m's centroids — the
-    * shared residual/decode side of every IMI family member (one
-    * definition so a cast or ordering fix reaches all of them). */
-  def halfDf(spark: SparkSession, coarse: PqModel, m: Int): DataFrame = {
-    import spark.implicits._
-    coarse.codebooks(m).zipWithIndex.toSeq
-      .map { case (c, j) => (j, c.toSeq) }.toDF(s"_j$m", s"_c$m")
-      .select(col(s"_j$m"), col(s"_c$m").cast("array<float>").as(s"_c$m"))
+  /** The probe step of every IMI search, the one of every IVF family
+    * ([[Probes.local]]): the [[graft.core.NearestCellsImi]] selector
+    * (per-half top-k2 through the half LUTs, k2 = min(nprobe, ksub),
+    * min-sum combine, top nprobe cells by (cell distance, cell)) over
+    * `queries`' (queryId, queryVec). Returns the probe rows (queryId,
+    * queryVec, [pr,] cell), with `ranked` the 0-based probe rank `pr`
+    * (best cell first, so an autotune sweep keeps the nprobe = j set
+    * as `pr < j`), and the probed cells. */
+  def local(queries: DataFrame, coarse: PqModel, nprobe: Int, queryId: String,
+      queryVec: String, ranked: Boolean = false): (DataFrame, Array[Int]) = {
+    val (q, probed) = Probes.local(queries.select(col(queryId), col(queryVec)), queryVec,
+      shim.col(NearestCellsImi(shim.expr(col(queryVec)), coarse.codebooks, nprobe)),
+      coarse.m * coarse.dsub)
+    (Probes.rows(q, Seq(col(queryId), col(queryVec)), ranked)
+      .withColumnRenamed("list_no", "cell"), probed)
   }
+
+  /** The centroid of the cell whose per-subspace indexes are `js` (one
+    * per subspace of the multi-index `coarse`, in order): the subspace
+    * centroids, each attached by projection ([[Probes.centroid]]),
+    * concatenated — never a K^M-row centroid table. */
+  def centroid(js: Seq[Column], coarse: PqModel): Column =
+    concat(js.zipWithIndex.map { case (j, m) => Probes.centroid(j, coarse.codebooks(m)) }: _*)
+
+  /** [[centroid]] of IMI cell id `cell` = j0·ksub + j1. */
+  def cellCentroid(cell: Column, coarse: PqModel): Column =
+    centroid(Seq((cell / coarse.ksub).cast("int"), pmod(cell, lit(coarse.ksub)).cast("int")),
+      coarse)
 
   /** One coarse assignment per row over (…, vec): appends `cell` and
     * `_cent` (the concatenated half-centroid pair = the cell centroid
@@ -177,11 +121,11 @@ private[index] object ImiProbes {
     * would silently truncate any half index >= 256 mod 256 (the
     * IMI2x<b> grammar admits b up to the reference's flagship 12+) —
     * computes the two half argmins as INTS ([[graft.core.PQSubAssign]],
-    * the ImiIndex.build shape) and decodes the centroid through two
-    * K-row broadcast joins. */
+    * the ImiIndex.build shape) and attaches the centroid by projection
+    * ([[centroid]]). */
   def assignCells(data: DataFrame, coarse: PqModel, ksub: Int): DataFrame =
     if (ksub <= 256) {
-      val byteAt = (c: org.apache.spark.sql.Column, i: Int) =>
+      val byteAt = (c: Column, i: Int) =>
         conv(hex(c.substr(i, 1)), 16, 10).cast("int")
       data.withColumn("_ccode",
           shim.col(graft.core.PQEncode(shim.expr(col("vec")), coarse.codebooks)))
@@ -190,7 +134,6 @@ private[index] object ImiProbes {
         .withColumn("_cent", coarse.decodeCol(col("_ccode")))
         .drop("_ccode")
     } else {
-      val spark = data.sparkSession
       val dsub = coarse.dsub
       data
         .withColumn("_j0", shim.col(PQSubAssign(shim.expr(lit(0)),
@@ -198,49 +141,31 @@ private[index] object ImiProbes {
         .withColumn("_j1", shim.col(PQSubAssign(shim.expr(lit(1)),
           shim.expr(slice(col("vec"), dsub + 1, dsub)), coarse.codebooks)))
         .withColumn("cell", col("_j0") * ksub + col("_j1"))
-        .join(broadcast(halfDf(spark, coarse, 0)), "_j0")
-        .join(broadcast(halfDf(spark, coarse, 1)), "_j1")
-        .withColumn("_cent", concat(col("_c0"), col("_c1")))
-        .drop("_j0", "_j1", "_c0", "_c1")
+        .withColumn("_cent", centroid(Seq(col("_j0"), col("_j1")), coarse))
+        .drop("_j0", "_j1")
     }
-
-  /** Output (queryId, queryVec, cell). */
-  def minSumK(queries: DataFrame, coarse: PqModel, ksub: Int, nprobe: Int,
-      queryId: String, queryVec: String): DataFrame = {
-    val kl = lit(ksub)
-    val k2 = math.min(math.max(nprobe, 1), ksub)
-    val halfTop = queries
-      .select(col(queryId), col(queryVec), coarse.lutCol(col(queryVec)).as("_lut"))
-      .select(col(queryId), col(queryVec), explode(sequence(lit(0), lit(1))).as("_m"),
-        col("_lut"))
-      .select(col(queryId), col(queryVec), col("_m"),
-        posexplode(slice(col("_lut"), col("_m") * kl + 1, kl)).as(Seq("_j", "_hd")))
-      .groupBy(col(queryId), col("_m"))
-      .agg(first(col(queryVec)).as(queryVec),
-        topk(col("_hd"), col("_j").cast("long"), k2, asc = true).as("_tk"))
-      .select(col(queryId), col(queryVec), col("_m"), explode(col("_tk")).as("_r"))
-      .select(col(queryId), col(queryVec), col("_m"),
-        col("_r.id").cast("int").as("_j"), col("_r.dist").as("_hd"))
-    val h0 = halfTop.filter(col("_m") === 0)
-      .select(col(queryId), col(queryVec), col("_j").as("_j0"), col("_hd").as("_d0"))
-    val h1 = halfTop.filter(col("_m") === 1)
-      .select(col(queryId), col("_j").as("_j1"), col("_hd").as("_d1"))
-    h0.join(h1, Seq(queryId))
-      .select(col(queryId), col(queryVec),
-        (col("_j0") * kl + col("_j1")).as("_cell"),
-        (col("_d0") + col("_d1")).as("_cd"))
-      .groupBy(col(queryId))
-      .agg(first(col(queryVec)).as(queryVec),
-        topk(col("_cd"), col("_cell").cast("long"), nprobe, asc = true).as("_tk"))
-      // 0-based probe rank (best cell first): lets an autotune sweep
-      // reconstruct the nprobe=j candidate set as `pr < j`, the
-      // IvfIndex.probes convention
-      .select(col(queryId), col(queryVec), posexplode(col("_tk")).as(Seq("pr", "_r")))
-      .select(col(queryId), col(queryVec), col("pr"),
-        col("_r.id").cast("int").as("cell"))
-  }
 }
 
+/** `IMI2x<b>,PQ<m>` — IVFPQ whose coarse quantizer is the inverted
+  * multi-index (the factory composition index_factory.cpp:834-878;
+  * the SIFT1B flagship config `IMI2x12,PQ16` of benchs/README.md:107).
+  * Cells are the K² cartesian product of the two half-space codebooks;
+  * codes are a product quantizer over the RESIDUAL against the cell
+  * centroid (= the concatenation of the two half-centroids), searched
+  * by per-(query, probed-cell) ADC LUTs — exactly [[IvfPqIndex]] with
+  * [[ImiIndex]]'s probe selection.
+  *
+  * Spark shape: probe selection is the in-process MinSumK selector of
+  * [[ImiIndex.search]] (O(nprobe²) candidate cells, never the K²
+  * ranking, which at the reference's IMI2x12 would be 16M cells per
+  * query); residuals subtract the cell centroid attached by projection
+  * ([[ImiProbes.centroid]]), so no K²-row centroid table ever
+  * materializes; the codes scan is statically pruned to the probed
+  * cells and aggregated by the bounded-heap top-k. Optional `ht`
+  * (polysemous Hamming pre-filter on the residual codes,
+  * IndexIVFPQ.h polysemous_ht) and `maxCodes` (per-query TOTAL scan
+  * budget in probe-rank order, IndexIVF.h:67-72 / IndexIVF.cpp:586)
+  * expose the SIFT1B operating-point knobs. */
 class ImiPqIndex(
     val ksub: Int,
     /** m=2 half-space coarse codebooks. */
@@ -258,66 +183,39 @@ class ImiPqIndex(
     * into Built.close()). */
   def close(): Unit = codes.unpersist(blocking = false)
 
-  private def halfDf(m: Int) = ImiProbes.halfDf(codes.sparkSession, coarse, m)
-
   /** Shared probe head of search/rangeSearch/sweepCandidates (one
     * definition — a cell-decode or residual fix reaches all three, the
-    * ImiProbes convention): MinSumK cell selection, then the
-    * per-(query, cell) float32 residual against the concat of the two
-    * half-centroids — two K-row broadcast joins, never a K²-row table.
-    * Output (queryId, cell, pr, _qres). */
+    * ImiProbes convention): the IMI probe step, then the per-(query,
+    * cell) float32 residual against the cell centroid. Output
+    * (queryId, cell, pr, _qres) and the probed cells. */
   private def residualProbes(queries: DataFrame, nprobe: Int,
-      queryId: String, queryVec: String): DataFrame = {
-    val kl = lit(ksub)
-    ImiProbes.minSumK(queries, coarse, ksub, nprobe, queryId, queryVec)
-      .withColumn("_j0", (col("cell") / kl).cast("int"))
-      .withColumn("_j1", pmod(col("cell"), kl).cast("int"))
-      .join(broadcast(halfDf(0)), "_j0")
-      .join(broadcast(halfDf(1)), "_j1")
-      .select(col(queryId), col("cell"), col("pr"),
-        graft.functions.vec_sub(col(queryVec),
-          concat(col("_c0"), col("_c1"))).as("_qres"))
+      queryId: String, queryVec: String): (DataFrame, Array[Int]) = {
+    val (probes, probed) = ImiProbes.local(queries, coarse, nprobe, queryId, queryVec,
+      ranked = true)
+    (probes.select(col(queryId), col("cell"), col("pr"),
+      graft.functions.vec_sub(col(queryVec),
+        ImiProbes.cellCentroid(col("cell"), coarse)).as("_qres")), probed)
   }
 
   /** Output (qid, rank, id, dist) — ADC distances over the probed
-    * cells' residual codes.
-    * @param broadcastQueries true (default) broadcasts the LUT-bearing
-    *        probe table (small query sets); false leaves it to a
-    *        shuffle equi-join on cell — the right plan when the query
-    *        set itself is huge (the IvfIndex.search convention: the
-    *        probe rows carry nq·nprobe LUTs of 16·M doubles, which
-    *        must not ship as one broadcast at full-corpus nq). Static
-    *        cell pruning applies either way. */
+    * cells' residual codes. */
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
-      ht: Option[Int] = None, maxCodes: Option[Int] = None,
-      broadcastQueries: Boolean = true): DataFrame = {
-    var probesLut = residualProbes(queries, nprobe, queryId, queryVec)
-      .withColumn("_lut", model.lutCol(col("_qres")))
+      ht: Option[Int] = None, maxCodes: Option[Int] = None): DataFrame = {
+    val (probes, probed) = residualProbes(queries, nprobe, queryId, queryVec)
+    var probesLut = probes.withColumn("_lut", model.lutCol(col("_qres")))
     probesLut = ht match {
       case Some(_) => probesLut.withColumn("_qcode",
         shim.col(graft.core.PQEncode(shim.expr(col("_qres")), model.codebooks)))
         .drop("_qres")
       case None => probesLut.drop("_qres")
     }
-    // static cell pruning FOR SMALL QUERY SETS ONLY: distinct cell
-    // ints cross the driver (ImiProbes.probedCells) and the codes scan
-    // reads just the probed cells. With broadcastQueries=false
-    // (corpus-sized query sets) the probed union approaches every cell
-    // and the collect would be an eager full probe-selection job
-    // inside a plan builder — the shuffle equi-join on cell IS the
-    // prune there (the IvfIndex.search contract).
-    val probed0 = ImiProbes.probedCells(probesLut, broadcastQueries)
     // max_codes = per-query TOTAL scan budget consumed in probe-rank
-    // order over the raw cell sizes (Probes.budget)
-    maxCodes.foreach { mc =>
-      probesLut = Probes.budget(probesLut, Probes.pruned(codes, probed0, "cell"), mc,
-        queryId, "cell")
-    }
-    probesLut = probesLut.drop("pr")
-    var cand = Probes.scan(codes, probesLut,
-      if (maxCodes.isDefined) ImiProbes.probedCells(probesLut, broadcastQueries) else probed0,
-      "cell")
+    // order over the raw cell sizes (Probes.budget); the scan set stays
+    // the probed cells, and the join drops the cut ones
+    probesLut = maxCodes.fold(probesLut)(Probes.budget(probesLut,
+      Probes.pruned(codes, Some(probed), "cell"), _, queryId, "cell")).drop("pr")
+    var cand = Probes.scan(codes, probesLut, Some(probed), "cell")
     ht.foreach { t =>
       // polysemous pre-filter (IndexIVFPQ polysemous_ht): Hamming
       // between the query's PER-CELL residual code and the stored code
@@ -330,34 +228,24 @@ class ImiPqIndex(
   }
 
   /** Lossy reconstruction (reconstruct_from_offset under the IMI
-    * coarse): cell centroid (decoded from the cell's two half codes)
-    * + decoded residual — two K-row broadcast joins + in-row decode,
-    * no shuffle. Output (id, vec). */
-  def reconstruct: DataFrame = {
-    val kl = lit(ksub)
-    codes
-      .withColumn("_j0", (col("cell") / kl).cast("int"))
-      .withColumn("_j1", pmod(col("cell"), kl).cast("int"))
-      .join(broadcast(halfDf(0)), "_j0")
-      .join(broadcast(halfDf(1)), "_j1")
-      .select(col("id"),
-        graft.functions.vec_add(concat(col("_c0"), col("_c1")),
-          model.decodeCol(col("code"))).as("vec"))
-  }
+    * coarse): cell centroid (the cell's two half-centroids, by
+    * projection) + decoded residual — in-row, no join, no shuffle.
+    * Output (id, vec). */
+  def reconstruct: DataFrame =
+    codes.select(col("id"),
+      graft.functions.vec_add(ImiProbes.cellCentroid(col("cell"), coarse),
+        model.decodeCol(col("code"))).as("vec"))
 
   /** ADC radius search over the probed cells (IndexIVF::range_search
     * semantics under the IMI coarse — the filter applies BELOW any
     * aggregation, the IvfPqIndex.rangeSearch convention). Output
-    * (qid, id, dist) with approximate distance < radius.
-    * `broadcastQueries` as on [[search]]. */
+    * (qid, id, dist) with approximate distance < radius. */
   def rangeSearch(queries: DataFrame, radius: Double, nprobe: Int,
-      queryId: String = "qid", queryVec: String = "qvec",
-      broadcastQueries: Boolean = true): DataFrame = {
-    val probesLut = residualProbes(queries, nprobe, queryId, queryVec)
-      .select(col(queryId), col("cell"), model.lutCol(col("_qres")).as("_lut"))
-    // static cell prune only for small query sets (see [[search]])
-    Probes.scan(codes, probesLut,
-        ImiProbes.probedCells(probesLut, broadcastQueries), "cell")
+      queryId: String = "qid", queryVec: String = "qvec"): DataFrame = {
+    val (probes, probed) = residualProbes(queries, nprobe, queryId, queryVec)
+    val probesLut = probes.select(col(queryId), col("cell"),
+      model.lutCol(col("_qres")).as("_lut"))
+    Probes.scan(codes, probesLut, Some(probed), "cell")
       .select(col(queryId), col("id"),
         model.adcCol(col("code"), col("_lut")).as("dist"))
       .filter(col("dist") < radius)
@@ -372,12 +260,12 @@ class ImiPqIndex(
     * consumes either coarse family through one code path. */
   def sweepCandidates(queries: DataFrame, npMax: Int,
       queryId: String = "qid", queryVec: String = "qvec"): DataFrame = {
-    val probesLut = residualProbes(queries, npMax, queryId, queryVec)
-      .select(col(queryId), col("cell"), col("pr"),
-        model.lutCol(col("_qres")).as("_lut"),
-        shim.col(graft.core.PQEncode(shim.expr(col("_qres")),
-          model.codebooks)).as("_qcode"))
-    Probes.scan(codes, probesLut, Some(Probes.probedListIds(probesLut, "cell")), "cell")
+    val (probes, probed) = residualProbes(queries, npMax, queryId, queryVec)
+    val probesLut = probes.select(col(queryId), col("cell"), col("pr"),
+      model.lutCol(col("_qres")).as("_lut"),
+      shim.col(graft.core.PQEncode(shim.expr(col("_qres")),
+        model.codebooks)).as("_qcode"))
+    Probes.scan(codes, probesLut, Some(probed), "cell")
       .select(col(queryId), col("cell").as("list_no"), col("pr"), col("id"),
         model.adcCol(col("code"), col("_lut")).as("dist"),
         graft.functions.hamming_dist(col("code"), col("_qcode")).as("ham"))
@@ -388,7 +276,7 @@ class ImiPqIndex(
   * multi-index coarse (the factory grammar composes IMI with any IVF
   * code, index_factory.cpp:834-878; SQ widths per
   * IndexScalarQuantizer.h:64). Cells via [[ImiIndex]]'s 2-subspace
-  * assignment, searched with [[ImiProbes.minSumK]] probe selection
+  * assignment, searched with [[ImiProbes.local]] probe selection
   * and the asymmetric SQ ADC over the statically pruned cells.
   * `byResidual = true` (the IndexIVFScalarQuantizer ctor default,
   * IndexScalarQuantizer.h:74 — the form the factory builds) scales
@@ -411,31 +299,17 @@ class ImiSqIndex(
   /** Release the cached codes table (see [[ImiPqIndex.close]]). */
   def close(): Unit = codes.unpersist(blocking = false)
 
-  private def halfDf(m: Int) = ImiProbes.halfDf(codes.sparkSession, coarse, m)
-
+  /** SQ ADC kNN over the nprobe best cells. Output (qid, rank, id,
+    * dist). */
   def search(queries: DataFrame, k: Int, nprobe: Int,
-      queryId: String = "qid", queryVec: String = "qvec",
-      broadcastQueries: Boolean = true): DataFrame = {
-    val kl = lit(ksub)
-    var probes = ImiProbes.minSumK(queries, coarse, ksub, nprobe,
-      queryId, queryVec).drop("pr")
-    if (byResidual) {
-      // subtract the probed cell centroid before the ADC — the
-      // residual buffer of IndexIVFScalarQuantizer::search
-      probes = probes
-        .withColumn("_j0", (col("cell") / kl).cast("int"))
-        .withColumn("_j1", pmod(col("cell"), kl).cast("int"))
-        .join(broadcast(halfDf(0)), "_j0")
-        .join(broadcast(halfDf(1)), "_j1")
-        .select(col(queryId), col("cell"),
-          graft.functions.vec_sub(col(queryVec),
-            concat(col("_c0"), col("_c1"))).as(queryVec))
-    }
-    // broadcastQueries=false: shuffle equi-join for huge query sets,
-    // no driver enumeration of the probed cells (the ImiPqIndex.search
-    // convention — the join is the prune)
-    val cand = Probes.scan(codes, probes,
-        ImiProbes.probedCells(probes, broadcastQueries), "cell")
+      queryId: String = "qid", queryVec: String = "qvec"): DataFrame = {
+    val (probes0, probed) = ImiProbes.local(queries, coarse, nprobe, queryId, queryVec)
+    // by residual: subtract the probed cell centroid before the ADC —
+    // the residual buffer of IndexIVFScalarQuantizer::search
+    val probes = if (!byResidual) probes0 else probes0.select(col(queryId), col("cell"),
+      graft.functions.vec_sub(col(queryVec),
+        ImiProbes.cellCentroid(col("cell"), coarse)).as(queryVec))
+    val cand = Probes.scan(codes, probes, Some(probed), "cell")
       .select(col(queryId), col("id"),
         shim.col(SqVariant.adcL2(qtype, shim.expr(col(queryVec)),
           shim.expr(col("code")), vmin, vdiff)).as("_dist"))

@@ -1,7 +1,8 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{broadcast, col, explode, inline, posexplode, size, when}
+import org.apache.spark.sql.functions.{broadcast, col, explode, inline, length, posexplode, size, when}
+import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.sql.graft.shim
 import graft.core.{CentroidLookup, ProbeLookup, ProbeTable}
 
@@ -12,7 +13,11 @@ import graft.core.{CentroidLookup, ProbeLookup, ProbeTable}
   * IndexIVF::search runs its quantizer in-process (faiss/IndexIVF.cpp:330)
   * before search_preassigned (:341): query rows and their ranked probe
   * arrays cross the driver ([[local]]), and the probed list ids read
-  * from them statically prune the invlists scan.
+  * from them statically prune the invlists scan. Every family selects
+  * its probes with one such selector column: IMI's cell pairs
+  * ([[graft.core.NearestCellsImi]], the in-process MinSumK of
+  * MultiIndexQuantizer2::search) and the binary IVF's Hamming probes
+  * (nearest centroids over the unpacked bits) included.
   *
   * It also holds the head of every IVF-family scan, the analog of the
   * reference's one IndexIVF::search_preassigned loop: [[rows]] explodes
@@ -34,14 +39,6 @@ import graft.core.{CentroidLookup, ProbeLookup, ProbeTable}
   * and the probe side is then computed and broadcast by Spark as
   * before. */
 object Probes {
-
-  /** The distinct probed list ids (cluster column `by`) of a probe
-    * plan, by a Spark distinct: the IMI cell-pair probes and the binary
-    * IVF's Hamming probes, whose selector is a join or an aggregate
-    * rather than one [[selExpr]] column. Every single-selector search
-    * uses [[local]] instead. */
-  def probedListIds(probesPlan: DataFrame, by: String = "list_no"): Array[Int] =
-    probesPlan.select(by).distinct().collect().map(_.getInt(0))
 
   /** One row per (query, probed list) of the ranked probe array `sel`
     * ([[selExpr]]-shaped; by default the `_sel` column of a [[local]]
@@ -167,19 +164,24 @@ object Probes {
     * caller explodes with [[rows]], and the probed list ids. Over a
     * LocalRelation side the selector runs on the driver
     * (`shim.localRows`: no job, no optimizer pass); over any other the
-    * collect is one narrow job. A vector whose length is not `d`
-    * is rejected before the selector sees it; a null vector gets a null
-    * `_sel`, so no probe rows. */
+    * collect is one narrow job. A vector whose length is not `d` (a
+    * binary code's: whose byte length is not `d`) is rejected before
+    * the selector sees it; a null vector gets a null `_sel`, so no
+    * probe rows. */
   def local(side: DataFrame, queryVec: String, sel: Column,
       d: Int): (DataFrame, Array[Int]) = {
-    val q = side.select(col("*"), when(size(col(queryVec)) === d, sel).as("_sel"))
+    val binary = side.schema(queryVec).dataType == BinaryType
+    val len = if (binary) length(col(queryVec)) else size(col(queryVec))
+    val q = side.select(col("*"), when(len === d, sel).as("_sel"))
     val rows = shim.localRows(q).fold(shim.collectRows(q))(_.toArray)
     val (v, s) = (q.schema.fieldIndex(queryVec), q.schema.fieldIndex("_sel"))
     val probed = scala.collection.mutable.BitSet.empty
     rows.foreach { r =>
       if (!r.isNullAt(v)) {
-        val n = r.getArray(v).numElements()
-        require(n == d, s"query vector column `$queryVec` has a row of length $n; the index has d = $d")
+        val n = if (binary) r.getBinary(v).length else r.getArray(v).numElements()
+        require(n == d, if (binary)
+          s"query code column `$queryVec` has a row of $n bytes; the index has $d-byte codes"
+          else s"query vector column `$queryVec` has a row of length $n; the index has d = $d")
         val a = r.getArray(s)
         var i = 0
         while (i < a.numElements()) { probed += a.getStruct(i, 2).getInt(0); i += 1 }

@@ -67,7 +67,7 @@ object TwoLayerIndex {
   * contract as [[TwoLayerIndex]], but the first-layer cell decomposes
   * into M per-subspace codebook indexes, so the cell centroid is
   * never materialized as a 2^(M·nbit)-row table: reconstruction
-  * concatenates the M half-centroids through M tiny broadcast joins
+  * concatenates the M subspace centroids, each attached by projection
   * (the ImiProbes convention — our cell digit order puts subspace 0
   * in the HIGH digits, documented engine-wide).
   */
@@ -91,22 +91,15 @@ class MiqTwoLayerIndex(
   /** reconstruct_n: concat of the M coarse half-centroids (decoded
     * from the cell's digits) + the PQ-decoded residual. */
   def reconstruct: DataFrame = {
-    val s = codes.sparkSession
-    var df = codes
-    var i = 0
-    while (i < mCoarse) {
-      // j_i = (cell div K^(M-1-i)) % K — INTEGER digit extraction
-      // (Spark's `/` on longs is double division, inexact past 2^53)
+    // j_i = (cell div K^(M-1-i)) % K — INTEGER digit extraction
+    // (Spark's `/` on longs is double division, inexact past 2^53)
+    val digits = (0 until mCoarse).map { i =>
       var p = 1L; var t = 0
       while (t < mCoarse - 1 - i) { p *= ksub; t += 1 }
-      df = df.withColumn(s"_j$i",
-        expr(s"(cell div ${p}L) % ${ksub}L").cast("int"))
-        .join(broadcast(ImiProbes.halfDf(s, coarse, i)), s"_j$i")
-      i += 1
+      expr(s"(cell div ${p}L) % ${ksub}L").cast("int")
     }
-    val cent = concat((0 until mCoarse).map(i => col(s"_c$i")): _*)
-    df.select(col("id"),
-      vec_add(cent, model.decodeCol(col("code"))).as("vec"))
+    codes.select(col("id"),
+      vec_add(ImiProbes.centroid(digits, coarse), model.decodeCol(col("code"))).as("vec"))
   }
 }
 
@@ -130,7 +123,6 @@ object MiqTwoLayerIndex {
     val coarse = Pq.train(data, "vec", mCoarse, k, niter = niterCoarse,
       seed = seed)
     val dsub = coarse.dsub
-    val s = df.sparkSession
     var assigned = data
     for (mm <- 0 until mCoarse)
       assigned = assigned.withColumn(s"_j$mm",
@@ -139,9 +131,7 @@ object MiqTwoLayerIndex {
           coarse.codebooks)))
     val cell = (0 until mCoarse).map(mm => col(s"_j$mm").cast("long"))
       .reduceLeft((acc, j) => acc * k + j)
-    for (mm <- 0 until mCoarse)
-      assigned = assigned.join(broadcast(ImiProbes.halfDf(s, coarse, mm)), s"_j$mm")
-    val cent = concat((0 until mCoarse).map(mm => col(s"_c$mm")): _*)
+    val cent = ImiProbes.centroid((0 until mCoarse).map(mm => col(s"_j$mm")), coarse)
     val residuals = assigned
       .select(col("id"), cell.as("cell"), vec_sub(col("vec"), cent).as("_res"))
     val cachedRes = residuals.cache()

@@ -157,4 +157,27 @@ class KernelSpec extends AnyFunSuite {
     assert(cb.map(_.map(_.toSeq).toSeq).toSeq == cb2.map(_.map(_.toSeq).toSeq).toSeq)
     assert(codes.map(_.toSeq).toSeq == codes2.map(_.toSeq).toSeq)
   }
+
+  test("IMI cell selector equals a brute-force K² ranking by (sum, cell), ties included") {
+    // integer codebooks and queries: every half distance is an exact
+    // small integer, so many cells tie and only the (sum, cell) order
+    // separates them
+    for (ksub <- Seq(6, 300)) {
+      val dsub = 2
+      val cb = Array.fill(2, ksub)(Array.fill(dsub)(rnd.nextInt(4).toFloat))
+      for (_ <- 1 to 5) {
+        val q = Array.fill(2 * dsub)(rnd.nextInt(4).toFloat)
+        def half(m: Int, j: Int) =
+          (0 until dsub).map(i => math.pow(q(m * dsub + i).toDouble - cb(m)(j)(i), 2)).sum
+        val all = (for (j0 <- 0 until ksub; j1 <- 0 until ksub)
+          yield (half(0, j0) + half(1, j1), j0 * ksub + j1)).sorted
+        for (np <- Seq(1, 3, ksub, ksub + 1, ksub * ksub)) {
+          val got = CentroidImiKernels.nearestCells(arr(q), cb, np)
+          val cells = (0 until got.numElements()).map { i =>
+            val r = got.getStruct(i, 2); (r.getDouble(1), r.getInt(0)) }
+          assert(cells == all.take(np), s"ksub = $ksub, nprobe = $np")
+        }
+      }
+    }
+  }
 }

@@ -485,6 +485,7 @@ class IvfSpec extends SparkTestBase {
 
   test("probe step rejects a query vector whose length is not d, without a job") {
     val (flat, pq) = idx4
+    val (imi, imipq, imisq, bivf) = imiFamily
     val bad = queries4(Some(Seq(0.1f, 0.2f, 0.3f, 0.4f)), Some(Seq(0.1f, 0.2f, 0.3f)))
     val b = base4
     val sq = IvfSqIndex.build(b, "id", "vec", nlist = 4, niter = 2)
@@ -515,14 +516,55 @@ class IvfSpec extends SparkTestBase {
         "IVF-PQ fast-scan" -> (() => pq4.search(bad, 5, nprobe = 2)),
         "IVF-PQ fast-scan by residual" -> (() => pq4r.search(bad, 5, nprobe = 2)),
         "IVF-RQ fast-scan" -> (() => rq4.search(bad, 5, nprobe = 2)),
-        "IVF-RQ fast-scan by residual" -> (() => rq4r.search(bad, 5, nprobe = 2)))) {
+        "IVF-RQ fast-scan by residual" -> (() => rq4r.search(bad, 5, nprobe = 2)),
+        "IMI" -> (() => imi.search(bad, 5, nprobe = 2)),
+        "IMI search2" -> (() => imi.search2(bad, 5, nprobe = 2)),
+        "IMI-PQ" -> (() => imipq.search(bad, 5, nprobe = 2)),
+        "IMI-PQ range" -> (() => imipq.rangeSearch(bad, 0.3, nprobe = 2)),
+        "IMI-PQ sweep" -> (() => imipq.sweepCandidates(bad, 2)),
+        "IMI-SQ" -> (() => imisq.search(bad, 5, nprobe = 2)))) {
       val (err, jobs) = jobsLaunchedBy(intercept[IllegalArgumentException](search()))
       assert(err.getMessage.contains("`qvec` has a row of length 3") &&
         err.getMessage.contains("d = 4"), s"$name: ${err.getMessage}")
       assert(jobs == 0, s"$name: the shape check launched $jobs job(s)")
     }
+    // a binary IVF over d = 12 sign bits takes 2-byte codes
+    val badCode = codes2(Array[Byte](1, 2), Array[Byte](1, 2, 3))
+    for ((name, search) <- Seq[(String, () => Any)](
+        "BinaryIvf" -> (() => bivf.search(badCode, 5, nprobe = 2)),
+        "BinaryIvf range" -> (() => bivf.rangeSearch(badCode, 3, nprobe = 2)),
+        "BinaryIvf HNSW" -> (() => bivf.search(badCode, 5, nprobe = 2, hnswCoarse = Some(8))),
+        "BinaryIvf HNSW range" ->
+          (() => bivf.rangeSearch(badCode, 3, nprobe = 2, hnswCoarse = Some(8))))) {
+      val (err, jobs) = jobsLaunchedBy(intercept[IllegalArgumentException](search()))
+      assert(err.getMessage.contains("`qcode` has a row of 3 bytes") &&
+        err.getMessage.contains("2-byte codes"), s"$name: ${err.getMessage}")
+      assert(jobs == 0, s"$name: the shape check launched $jobs job(s)")
+    }
     Seq(sq.codes, rq.codes, rcq.invlists, pqr.codes, pq4.codes, pq4r.codes,
       rq4.codes, rq4r.codes).foreach(_.unpersist())
+  }
+
+  /** IMI, IMI-PQ and by-residual IMI-SQ indexes (2×2 cells) and a
+    * binary IVF over 12 sign bits, all over [[base4]]. */
+  private lazy val imiFamily = {
+    val b = base4
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(5)
+    val b12 = (0 until 400).map(i => (i.toLong, Array.fill(12)(rnd.nextFloat() - 0.5f)))
+      .toDF("id", "vec")
+    (ImiIndex.build(b, "id", "vec", ksub = 2, niter = 2),
+      ImiPqIndex.build(b, "id", "vec", ksub = 2, m = 2, pqKsub = 4, niterCoarse = 2,
+        niterPq = 2),
+      ImiSqIndex.build(b, "id", "vec", ksub = 2, niterCoarse = 2, byResidual = true),
+      BinaryIvfIndex.buildFromVectors(b12, "id", "vec", nlist = 4, niter = 2))
+  }
+
+  private def codes2(codes: Array[Byte]*) = {
+    val s = spark
+    import s.implicits._
+    codes.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toDF("qid", "qcode")
   }
 
   /** `f` with `spark.sql.autoBroadcastJoinThreshold` at -1: a search's
@@ -537,8 +579,10 @@ class IvfSpec extends SparkTestBase {
   test("every family behind Probes.scan looks its probe rows up and returns " +
     "the rows of its probe-join plan") {
     val (flat, pq) = idx4
+    val (imi, imipq, imisq, bivf) = imiFamily
     val rnd = new scala.util.Random(11)
     val qs = queries4(Seq.fill(6)(Some(Seq.fill(4)(rnd.nextFloat()))): _*)
+    val qcodes = codes2(Seq.fill(6)(Array.fill(2)(rnd.nextInt(256).toByte)): _*)
     val b = base4
     val sq = IvfSqIndex.build(b, "id", "vec", nlist = 4, niter = 2, byResidual = true)
     val rq = IvfRq.build(b, "id", "vec", nlist = 4, levels = 2, k = 4,
@@ -582,7 +626,15 @@ class IvfSpec extends SparkTestBase {
         "IVF-PQ fast-scan" -> (() => pq4.search(qs, 5, nprobe = 2)),
         "IVF-PQ fast-scan by residual" -> (() => pq4r.search(qs, 5, nprobe = 2)),
         "IVF-RQ fast-scan" -> (() => rq4.search(qs, 5, nprobe = 2)),
-        "IVF-RQ fast-scan by residual" -> (() => rq4r.search(qs, 5, nprobe = 2)))) {
+        "IVF-RQ fast-scan by residual" -> (() => rq4r.search(qs, 5, nprobe = 2)),
+        "IMI" -> (() => imi.search(qs, 5, nprobe = 2)),
+        "IMI-PQ" -> (() => imipq.search(qs, 5, nprobe = 2)),
+        "IMI-PQ range" -> (() => imipq.rangeSearch(qs, 0.5, nprobe = 2)),
+        "IMI-PQ sweep" -> (() => imipq.sweepCandidates(qs, 2)),
+        "IMI-SQ by residual" -> (() => imisq.search(qs, 5, nprobe = 2)),
+        "BinaryIvf" -> (() => bivf.search(qcodes, 5, nprobe = 2)),
+        "BinaryIvf range" -> (() => bivf.rangeSearch(qcodes, 8, nprobe = 2)),
+        "BinaryIvf HNSW" -> (() => bivf.search(qcodes, 5, nprobe = 2, hnswCoarse = Some(8))))) {
       val got = search()
       val (joined, joinedLookup) = probeJoin { val j = search(); (rows(j), lookedUp(j)) }
       assert(lookedUp(got) && !joinedLookup, s"$name: lookup plan ${lookedUp(got)}")

@@ -68,16 +68,8 @@ class TwoLayerSpec extends SparkTestBase {
     assert(cells.forall(c => c >= 0 && c < 256))
     // full reconstruction beats the coarse-only (concat-half) decode
     val full = sse(idx.reconstruct.select(col("id"), col("vec").as("rv")))
-    val coarseOnly = {
-      val s = spark
-      val df = idx.codes
-        .withColumn("_j0", (col("cell") / 16).cast("long").cast("int"))
-        .withColumn("_j1", (col("cell") % 16).cast("int"))
-      val h0 = ImiProbes.halfDf(s, idx.coarse, 0)
-      val h1 = ImiProbes.halfDf(s, idx.coarse, 1)
-      sse(df.join(broadcast(h0), "_j0").join(broadcast(h1), "_j1")
-        .select(col("id"), concat(col("_c0"), col("_c1")).as("rv")))
-    }
+    val coarseOnly = sse(idx.codes.select(col("id"),
+      ImiProbes.cellCentroid(col("cell"), idx.coarse).as("rv")))
     assert(full < coarseOnly, s"MIQ 2-layer sse $full !< coarse sse $coarseOnly")
     // factory route builds the same model (same seed/iters) and searches
     val built = IndexFactory.build(data, "id", "vec", "Residual2x4,PQ8", niter = 3)

@@ -35,14 +35,19 @@ class PlanSpec extends SparkTestBase {
     assert(shuffles == 0, s"reconstruct must not shuffle, got $shuffles:\n$plan")
   }
 
-  test("spectral-hash search: broadcast probes/thresholds, single top-k exchange") {
+  test("spectral-hash search: probe rows looked up in the scan, single top-k exchange") {
     val idx = graft.index.IvfSpectralHash.build(b, "id", "vec",
       nlist = 4, nbit = 16, period = 1.0, thresholdType = "global", niter = 2)
-    val plan = idx.search(q, k = 5, nprobe = 2).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"no broadcast join:\n$plan")
-    assert(plan.toLowerCase.contains("partial_topk"), s"no partial top-k:\n$plan")
-    val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(shuffles == 1, s"expected 1 hash exchange, got $shuffles:\n$plan")
+    val plan = idx.search(q, k = 5, nprobe = 2).queryExecution.executedPlan
+    assert(plan.toString.contains("probe_lookup"), s"no probe lookup:\n$plan")
+    // the in-session codes are not cached, so the plan also carries the
+    // build's own joins; the search adds only the top-k merge's exchange
+    val exchanges = planWalk.collect(plan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+    assert(exchanges.size == 1 && planWalk.collect(exchanges.head.child) {
+      case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec =>
+        a.toString.toLowerCase.contains("partial_topk") }.contains(true),
+      s"expected the partial top-k's exchange alone:\n$plan")
   }
 
   test("window-rank filter gets the built-in WindowGroupLimit pushdown (no custom Rule needed)") {
@@ -226,27 +231,26 @@ class PlanSpec extends SparkTestBase {
     assert(plan.toLowerCase.contains("partial_topk"), s"no partial top-k:\n$plan")
   }
 
-  test("IMI+PQ search: probed-cell filter pushed, probes broadcast, partial top-k") {
+  test("IMI+PQ search: probed-cell filter pushed, probe rows looked up, partial top-k") {
     val idx = graft.index.ImiPqIndex.build(b, "id", "vec", ksub = 4,
       m = 8, pqKsub = 16, niterCoarse = 2, niterPq = 2)
-    // the MinSumK probe subplan makes this tree longer than the
-    // session's 8192-char render budget — the codes-scan node (where
-    // the pushed filter lives) would be truncated away
-    val prev = spark.conf.get("spark.sql.maxPlanStringLength")
-    spark.conf.set("spark.sql.maxPlanStringLength", "262144")
-    val plan =
-      try idx.search(q, 5, nprobe = 4).queryExecution.executedPlan.toString
-      finally spark.conf.set("spark.sql.maxPlanStringLength", prev)
-    // static cell pruning below the probe join (the 100 TB claim: the
+    val plan = idx.search(q, 5, nprobe = 4).queryExecution.executedPlan
+    val text = plan.toString
+    // static cell pruning below the probe lookup (the 100 TB claim: the
     // codes scan touches only the probed cells); Spark renders small
     // in-lists as `IN (...)` and larger ones as `INSET ...`
-    assert("cell(#\\d+)? IN(SET)?[ (]".r.findFirstIn(plan).isDefined,
-      s"probed-cell filter not pushed:\n$plan")
-    // the LUT/qcode-bearing probe table ships as a broadcast, and the
-    // MinSumK probe selection never materializes a K²-row cell table
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-      s"probe table not broadcast:\n$plan")
-    assert(plan.toLowerCase.contains("partial_topk"), s"no partial top-k:\n$plan")
+    assert("cell(#\\d+)? IN(SET)?[ (]".r.findFirstIn(text).isDefined,
+      s"probed-cell filter not pushed:\n$text")
+    // the LUT/qcode-bearing probe rows are looked up in the codes scan:
+    // no join, and at most the top-k merge's exchange (none when the
+    // codes scan as one split and the top-k merges in the scan's task)
+    assert(text.contains("probe_lookup") && !text.contains("Join"),
+      s"probe rows not looked up:\n$text")
+    val exchanges = planWalk.collect(plan) {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e.nodeName }
+    assert(exchanges.size <= 1, s"expected the top-k exchange alone:\n$text")
+    assert(text.toLowerCase.contains("partial_topk"), s"no partial top-k:\n$text")
+    idx.close()
   }
 
   test("big-batch IVF search (broadcastQueries=false): the probe join survives " +
@@ -329,6 +333,28 @@ class PlanSpec extends SparkTestBase {
     assert(rows.length == 50 && execJobs <= 3, s"IVF-Flat action ran $execJobs jobs")
     assert(adc.count() == 50)
     pq.codes.unpersist()
+  }
+
+  test("small-batch IMI-PQ and binary IVF search pick their probes on the driver " +
+    "over a createDataFrame query set: no job before the action") {
+    val imipq = graft.index.ImiPqIndex.build(b, "id", "vec", ksub = 4, m = 8,
+      pqKsub = 16, niterCoarse = 2, niterPq = 2)
+    val bivf = graft.index.BinaryIvfIndex.buildFromVectors(b, "id", "vec",
+      nlist = 8, niter = 2)
+    val local = spark.createDataFrame(q.collect().toSeq.asJava, q.schema)
+    val localCodes = spark.createDataFrame(
+      q.select(col("qid"), graft.functions.sign_bits(col("qvec")).as("qcode"))
+        .collect().toSeq.asJava, new org.apache.spark.sql.types.StructType()
+        .add("qid", "long").add("qcode", "binary"))
+    val ((adc, hd), planJobs) = jobsLaunchedBy(
+      (imipq.search(local, 5, nprobe = 4), bivf.search(localCodes, 5, nprobe = 2)))
+    assert(planJobs == 0, s"search plan construction launched $planJobs job(s)")
+    for (df <- Seq(adc, hd)) {
+      assert(df.count() == 50)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("probe_lookup"), s"no probe lookup:\n$plan")
+    }
+    imipq.close()
   }
 
   /** An IVF-Flat index over `b`, saved as `files` list-sorted data

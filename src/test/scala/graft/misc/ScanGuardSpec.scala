@@ -24,10 +24,9 @@ class ScanGuardSpec extends AnyFunSuite {
   private val centroidJoin =
     """(?s)Probes\.(?:local|rows)\((?:(?!\n\s*\n)[^;])*?\.join\(\s*broadcast\(\s*(?:cent\w*|thresh\w*|Probes\.centroidsDf\()""".r
 
-  /** How many times each file may hold the tail: its helper, FastScan's
-    * tail and IMI's top-nprobe cell explode, which ranks probes, not
-    * results. */
-  private val tailAllowed = Map("TopKAgg.scala" -> 1, "FastScan.scala" -> 1, "Imi.scala" -> 1)
+  /** How many times each file may hold the tail: its helper and
+    * FastScan's tail. */
+  private val tailAllowed = Map("TopKAgg.scala" -> 1, "FastScan.scala" -> 1)
 
   private def counts(re: scala.util.matching.Regex) =
     SourceScan.sources("src/main/scala").map { p =>
