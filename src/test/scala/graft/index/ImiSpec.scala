@@ -26,6 +26,40 @@ class ImiSpec extends SparkTestBase {
     assert(got == want)
   }
 
+  test("MIQ2 search2 (per-half sub-index top-k2 + MinSumK) == search (r9)") {
+    // MultiIndexQuantizer2 (IndexPQ.h:171): the two-level cell ranking
+    // must select the same probe cells as a K² enumeration — min-sum
+    // over per-half top-k2 is exhaustive for any final rank <= k2. The
+    // reference ranks all K² cells on the driver and scans the top np
+    // exactly.
+    val idx = ImiIndex.build(b, "id", "vec", ksub = 4, niter = 3)
+    val cb = idx.model.codebooks
+    val dsub = idx.model.dsub
+    val base = idx.invlists.select("id", "vec", "cell").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
+    val queries = q.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    def l2(a: Array[Float], b: Array[Float]) =
+      a.indices.map(i => math.pow(a(i).toDouble - b(i), 2)).sum
+    for (np <- Seq(1, 3, idx.nlist)) {
+      val got2 = idx.search2(q, k = 5, nprobe = np)
+        .select("qid", "rank", "id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val got = idx.search(q, k = 5, nprobe = np)
+        .select("qid", "rank", "id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got2 == got, s"nprobe=$np")
+      val want = queries.flatMap { case (qid, qv) =>
+        val halves = Array.tabulate(2)(m => qv.slice(m * dsub, (m + 1) * dsub))
+        val cells = (for (j0 <- 0 until idx.ksub; j1 <- 0 until idx.ksub)
+          yield (l2(halves(0), cb(0)(j0)) + l2(halves(1), cb(1)(j1)), j0 * idx.ksub + j1))
+          .sorted.take(np).map(_._2).toSet
+        base.filter(r => cells(r._3)).map(r => (l2(qv, r._2), r._1))
+          .sorted.take(5).map(r => (qid, r._2))
+      }.toSet
+      assert(got2.map(r => (r._1, r._3)) == want, s"nprobe=$np vs K² enumeration")
+    }
+  }
+
   test("cells cover 0 until K*K and partition the base") {
     val idx = ImiIndex.build(b, "id", "vec", ksub = 4, niter = 3)
     val cells = idx.invlists.select("cell").collect().map(_.getInt(0))
