@@ -17,13 +17,17 @@ import graft.functions.vec_dist
   * plan) + equi-join on list_no against only the probed lists +
   * per-query top-k (IndexIVF::search, IndexIVF.cpp:302-683). A saved
   * index stores its lists as list_no-sorted parquet files, the analog
-  * of the reference's one-file `OnDiskInvertedLists`. A search's probe
-  * filter ([[Probes.listFilter]]) is pushed into the scan, and parquet
-  * skips the row groups and pages that hold only unprobed lists. Every
-  * split of the store is still planned and has its footer read, and a
-  * page shared with a probed list is read whole. PlanSpec pins it on
-  * 100 lists of one page each: 32 scattered probed lists read their
-  * 32 000 of 100 000 rows.
+  * of the reference's one-file `OnDiskInvertedLists`. Where the store
+  * has more than one split or more than one page of list_no, a search's
+  * probe filter ([[Probes.listFilter]], through [[Probes.pruned]]) is
+  * pushed into the scan, and parquet skips the row groups and pages
+  * that hold only unprobed lists. Every split of the store is still
+  * planned and has its footer read, and a page shared with a probed
+  * list is read whole. PlanSpec pins it on 100 lists of one page each
+  * in one split: 32 scattered probed lists read their 32 000 of
+  * 100 000 rows. A store of one split and one page, where parquet could
+  * skip nothing, gets no filter: the probe lookup drops the unprobed
+  * lists, and one compiled scan serves every probe set.
   */
 class IvfIndex(
     val d: Int,
@@ -93,12 +97,16 @@ class IvfIndex(
     * `maxCodes` = the per-query TOTAL scan budget consumed in
     * probe-rank order (faiss/IndexIVF.h:67-72; see [[Probes.budget]]).
     *
-    * @param broadcastQueries true (default) broadcasts the probe table
-    *        (small query sets); false leaves it to a shuffle equi-join
-    *        on list_no — the right plan when the query set itself is
-    *        huge (e.g. a full-corpus self-join for dedup). Unprobed
-    *        lists are pruned either way: by the filter pushed into the
-    *        scan, or by the join. */
+    * @param broadcastQueries true (default) coarse-quantizes on the
+    *        driver (small query sets): each list row looks its probe
+    *        rows up inside the scan, or, past the broadcast threshold,
+    *        the probe table broadcasts ([[Probes.scan]]); false leaves
+    *        it to a shuffle equi-join on list_no — the right plan when
+    *        the query set itself is huge (e.g. a full-corpus self-join
+    *        for dedup). Unprobed lists are dropped either way: by the
+    *        lookup or the join, and before them by the filter pushed
+    *        into the scan where the read can skip rows
+    *        ([[Probes.pruned]]). */
   def search(queries: DataFrame, k: Int, nprobe: Int,
       queryId: String = "qid", queryVec: String = "qvec",
       filter: Option[Column] = None,

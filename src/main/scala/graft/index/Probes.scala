@@ -13,7 +13,8 @@ import graft.core.{CentroidLookup, ProbeLookup, ProbeTable}
   * IndexIVF::search runs its quantizer in-process (faiss/IndexIVF.cpp:330)
   * before search_preassigned (:341): query rows and their ranked probe
   * arrays cross the driver ([[local]]), and the probed list ids read
-  * from them statically prune the invlists scan. Every family selects
+  * from them statically prune the invlists scan where the read can skip
+  * rows ([[pruned]]). Every family selects
   * its probes with one such selector column: IMI's cell pairs
   * ([[graft.core.NearestCellsImi]], the in-process MinSumK of
   * MultiIndexQuantizer2::search) and the binary IVF's Hamming probes
@@ -63,12 +64,24 @@ object Probes {
     shim.col(CentroidLookup(shim.expr(listNo), centroids))
 
   /** `lists` kept to the `probed` lists of cluster column `by`
-    * ([[listFilter]]); all of them when the probed set is not known on
-    * the driver (`None`: a corpus-sized query set, where the equi-join
-    * is the prune). */
+    * ([[listFilter]]) where the read can skip rows by `by`
+    * (`shim.skipsRows`, on the driver with no job): cached batches, a
+    * partition column (the older `by=` layout), a store read as more
+    * than one split, or one whose data file holds `by` in more than one
+    * parquet page. Everywhere else the lists stay whole. Every caller
+    * looks the probe rows up or joins them on `by`, which drops the
+    * unprobed lists' rows, so the filter only saves I/O; and its probed
+    * list ids are literals in the scan's generated code, so each new
+    * probe set would compile a new class. Without it one compiled scan
+    * serves every probe set of the index, and an in-session index whose
+    * `by` is computed by a projection evaluates it once per row, not
+    * again in a filter pushed below the projection. All lists when the
+    * probed set is not known on the driver (`None`: a corpus-sized query
+    * set, where the equi-join is the prune). */
   def pruned(lists: DataFrame, probed: Option[Array[Int]],
       by: String = "list_no"): DataFrame =
-    probed.fold(lists)(p => lists.filter(listFilter(col(by), p)))
+    probed.filter(_ => shim.skipsRows(lists, by))
+      .fold(lists)(p => lists.filter(listFilter(col(by), p)))
 
   /** max_codes probe-budget filter (IndexIVF::search_preassigned,
     * faiss/IndexIVF.cpp:586: `nscan` accumulates WHOLE scanned lists
@@ -94,7 +107,8 @@ object Probes {
       .drop("_lsz", "_csz", "_before")
   }
 
-  /** The scan head of every IVF-family search: the [[pruned]] lists,
+  /** The scan head of every IVF-family search: the [[pruned]] lists
+    * (filtered to the probed lists where the read can skip the others),
     * narrowed by the optional IDSelector `filter`, joined on `by` with
     * the probe rows. Each search supplies only the distance it computes
     * on the joined rows (the reference's InvertedListScanner,
@@ -107,9 +121,13 @@ object Probes {
     * `inline`d into the columns the join emits: `by`, the lists', the
     * probe rows'), and lists that scan as one input split are declared
     * one partition, so the top-k merges in the scan's task with no
-    * exchange. Otherwise the probe rows broadcast and the lists never
-    * shuffle. With `None` the probe rows meet the lists in a shuffle
-    * equi-join. */
+    * exchange. The lookup emits no row for an unprobed list, so over a
+    * store that [[pruned]] leaves whole (one split of one page of `by`,
+    * the shape of a small saved index) it is the only prune, and the
+    * scan's generated code holds no probed list id: one compiled class
+    * serves every probe set. Otherwise the probe rows broadcast and the
+    * lists never shuffle. With `None` the probe rows meet the lists in a
+    * shuffle equi-join. */
   def scan(lists: DataFrame, probeRows: DataFrame, probed: Option[Array[Int]],
       by: String = "list_no", filter: Option[Column] = None): DataFrame = {
     val p = pruned(lists, probed, by)

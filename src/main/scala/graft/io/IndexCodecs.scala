@@ -150,7 +150,9 @@ final case class Frame[T](name: String, get: T => DataFrame, by: String = "",
   /** A clustered frame is hash-shuffled on `by`, so each list lands in
     * one file, and each file is sorted by `by`: a few files in all,
     * whose row-group and page statistics let a search's
-    * [[graft.index.Probes.listFilter]] skip the unprobed lists. */
+    * [[graft.index.Probes.listFilter]] skip the unprobed lists. A search
+    * pushes that filter only where they can: a store of more than one
+    * split, or of more than one page of `by` ([[graft.index.Probes.pruned]]). */
   def write(idx: T, path: String): Unit = {
     val df = get(idx)
     val out = if (by.isEmpty) df else df.repartition(col(by)).sortWithinPartitions(by)

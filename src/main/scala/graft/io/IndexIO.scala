@@ -49,10 +49,14 @@ import graft.index._
   * }}}
   * `?` marks a sidecar written only when the index holds that state.
   * IVF and IMI searches filter the scan to their probed lists (`cell`
-  * for imi/imipq) with [[graft.index.Probes.listFilter]]. Spark pushes
-  * it into the parquet scan, which skips every row group and page that
-  * holds no probed list: sorted files keep each list's pages together.
-  * The scan still plans every split of the store and reads its footer.
+  * for imi/imipq) with [[graft.index.Probes.listFilter]] where the
+  * store has more than one split or more than one page of that column
+  * ([[graft.index.Probes.pruned]]). Spark pushes it into the parquet
+  * scan, which skips every row group and page that holds no probed
+  * list: sorted files keep each list's pages together. A one-split,
+  * one-page store gets no filter, as parquet could skip nothing there;
+  * the probe lookup drops its unprobed lists. The scan still plans
+  * every split of the store and reads its footer.
   * A binary-hash search joins on `bucket` and pushes no filter, so it
   * reads the whole store. A store saved in the older layout, one
   * `list_no=` directory per list, still loads (the filter prunes its

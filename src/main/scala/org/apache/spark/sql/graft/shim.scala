@@ -2,16 +2,23 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression,
-  Generator, InterpretedMutableProjection, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, Cast,
+  Expression, Generator, InterpretedMutableProjection, Unevaluable}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LocalRelation,
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, LocalRelation,
   LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.Util
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.jdk.CollectionConverters._
 
 /** Bridge to the `private[sql]` parts of classic Spark that graft needs.
   *
@@ -22,7 +29,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * `clone`/`rebind` pair behind [[graft.core.ScopedConf]], and the
   * internal-row `collectRows`/`localFrame` pair behind
   * [[graft.index.Probes.local]], and the driver-side plan reads behind
-  * [[graft.index.Probes.scan]] (`localRows`, `oneSplit`).
+  * [[graft.index.Probes.scan]] (`localRows`, `oneSplit`, `skipsRows`).
   */
 object shim {
   def col(e: Expression): Column = ExpressionUtils.column(e)
@@ -98,15 +105,79 @@ object shim {
     * smallest split size (the lesser of `spark.sql.files.maxPartitionBytes`
     * and `spark.sql.files.openCostInBytes`), which no split rule cuts. */
   def oneSplit(df: DataFrame): Boolean = {
-    val conf = df.sparkSession.sessionState.conf
     def walk(p: LogicalPlan): Boolean = p match {
-      case LogicalRelation(r: HadoopFsRelation, _, _, false, _) =>
-        r.bucketSpec.isEmpty && r.location.inputFiles.length == 1 &&
-          r.location.sizeInBytes <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+      case LogicalRelation(r: HadoopFsRelation, _, _, false, _) => oneSplit(r)
       case Project(_, c) => walk(c)
       case Filter(_, c) => walk(c)
       case _ => false
     }
     walk(df.queryExecution.analyzed)
+  }
+
+  private def oneSplit(r: HadoopFsRelation): Boolean = {
+    val conf = r.sparkSession.sessionState.conf
+    r.bucketSpec.isEmpty && r.location.inputFiles.length == 1 &&
+      r.location.sizeInBytes <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+  }
+
+  /** Whether a filter on column `by` of `df` can skip rows where `df` is
+    * read, decided on the driver with no job. It looks at `df`'s analyzed
+    * plan with cached data substituted (what `queryExecution.withCachedData`
+    * holds, looked up afresh, so a frame cached after its first use counts
+    * as cached) and follows `by` through projections, filters and joins
+    * (into the side that outputs it) to where it is read:
+    *  - cached batches, a partition column, and a file relation read as
+    *    more than one split skip rows;
+    *  - so does a one-split parquet file that holds `by` in more than one
+    *    page, or that records no offset index to count them;
+    *  - a one-split file with one page of `by`, local rows, and a `by`
+    *    computed by a projection (Spark pushes the filter below it, where
+    *    it only re-evaluates the expression) skip nothing.
+    * Any other plan is taken to skip rows. */
+  def skipsRows(df: DataFrame, by: String): Boolean = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val resolver = spark.sessionState.conf.resolver
+    def source(e: Expression): Option[Attribute] = e match {
+      case a: Attribute => Some(a)
+      case Alias(c, _) => source(c)
+      case c: Cast => source(c.child)
+      case _ => None
+    }
+    def walk(p: LogicalPlan, a: Attribute): Boolean = p match {
+      case _: InMemoryRelation => true
+      case _: LocalRelation => false
+      case LogicalRelation(r: HadoopFsRelation, _, _, false, _) =>
+        r.partitionSchema.exists(f => resolver(f.name, a.name)) || !oneSplit(r) ||
+          !r.fileFormat.isInstanceOf[ParquetFileFormat] || pages(r, a.name) > 1
+      case Project(list, c) => list.find(_.exprId == a.exprId).flatMap(source).exists(walk(c, _))
+      case Filter(_, c) => walk(c, a)
+      case j: Join => j.children.find(_.outputSet.contains(a)).forall(walk(_, a))
+      case _ => true
+    }
+    val plan = spark.sharedState.cacheManager.useCachedData(df.queryExecution.analyzed)
+    plan.output.find(o => resolver(o.name, by)).forall(walk(plan, _))
+  }
+
+  /** Data pages of column `name` in the one data file of `r`, summed over
+    * its row groups from the footer and offset index; Int.MaxValue when
+    * the file records no offset index for it. Reads the footer and the
+    * offset indexes through one stream, with read options over the
+    * session's Hadoop conf: `ParquetFileReader.open`, or options built
+    * with no conf, load a new Hadoop conf and cost about 10 ms a call on
+    * a 4-vCPU VM. */
+  private def pages(r: HadoopFsRelation, name: String): Int = {
+    val conf = r.sparkSession.sparkContext.hadoopConfiguration
+    val file = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(r.location.inputFiles.head), conf)
+    val in = file.newStream()
+    try {
+      val refs = ParquetFileReader.readFooter(file, HadoopReadOptions.builder(conf).build(), in)
+        .getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString.equalsIgnoreCase(name)).map(c => Option(c.getOffsetIndexReference))
+      if (refs.isEmpty || refs.contains(None)) Int.MaxValue
+      else refs.flatten.map { ref =>
+        in.seek(ref.getOffset)
+        Util.readOffsetIndex(in).getPage_locationsSize
+      }.sum
+    } finally in.close()
   }
 }

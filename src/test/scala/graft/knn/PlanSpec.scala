@@ -3,6 +3,7 @@ package graft.knn
 import graft.SparkTestBase
 import graft.index.IvfIndex
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
 import scala.jdk.CollectionConverters._
 
 /** Physical-plan regression checks: the scale story depends on these
@@ -154,6 +155,8 @@ class PlanSpec extends SparkTestBase {
     spark.conf.set(key, "1000")
     try idx.save(dir) finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     val loaded = graft.io.IndexIO.loadAs[IvfIndex](spark, dir)
+    // one split: its pages, not its splits, keep the probed-list filter
+    assert(shim.oneSplit(loaded.invlists) && shim.skipsRows(loaded.invlists, "list_no"))
     import spark.implicits._
     // runs of 4 lists (each pushed as equalities) and of 12 (each as
     // one parquet IN, pruned by its min and max)
@@ -357,21 +360,26 @@ class PlanSpec extends SparkTestBase {
     imipq.close()
   }
 
-  /** An IVF-Flat index over `b`, saved as `files` list-sorted data
-    * files (one shuffle partition per file, AQE off) and loaded. */
-  private def savedIvf(files: Int): IvfIndex = {
-    val idx = IvfIndex.build(b, "id", "vec", nlist = 8, niter = 2)
+  /** `idx` saved with its clustered frame `frame` as `files`
+    * list-sorted data files (one shuffle partition per file, AQE off)
+    * under the extra `confs`, and loaded. */
+  private def saved[T: scala.reflect.ClassTag](idx: T, frame: String, files: Int,
+      confs: (String, String)*): T = {
     val dir = java.nio.file.Files.createTempDirectory("ivfsplits").toString
-    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> files.toString)
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try idx.save(dir)
+    val all = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> files.toString) ++ confs
+    val prev = all.map { case (k, _) => k -> spark.conf.getOption(k) }
+    all.foreach { case (k, v) => spark.conf.set(k, v) }
+    try graft.io.IndexIO.save(idx, dir)
     finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    val stored = graft.io.IndexLayoutFixtures.storedLists(spark, s"$dir/invlists", "list_no")
+    val stored = graft.io.IndexLayoutFixtures.storedLists(spark, s"$dir/$frame", "list_no")
     assert(stored.size == files, s"${stored.size} data files, wanted $files")
-    graft.io.IndexIO.loadAs[IvfIndex](spark, dir)
+    graft.io.IndexIO.loadAs[T](spark, dir)
   }
+
+  /** An IVF-Flat index over `b`, saved as `files` data files and loaded. */
+  private def savedIvf(files: Int): IvfIndex =
+    saved(IvfIndex.build(b, "id", "vec", nlist = 8, niter = 2), "invlists", files)
 
   private def localQueries = spark.createDataFrame(q.collect().toSeq.asJava, q.schema)
 
@@ -384,6 +392,23 @@ class PlanSpec extends SparkTestBase {
           if g.generator.exists(_.isInstanceOf[graft.core.ProbeLookup]) =>
         g.metrics("numOutputRows").value
     }.sum
+
+  /** `body` planned with the broadcast threshold off, so a search joins
+    * its probe rows instead of looking them up. */
+  private def probeJoin[A](body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Whether a plan filters on column `c`: in a Filter node, or pushed
+    * into a file scan. */
+  private def filtersOn(df: org.apache.spark.sql.DataFrame, c: String): Boolean =
+    planWalk.collect(df.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FilterExec => Seq(f.condition)
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.dataFilters ++ s.partitionFilters
+    }.flatten.exists(_.references.exists(_.name == c))
 
   /** Rows the join nodes of a finished plan emitted. */
   private def joinRows(df: org.apache.spark.sql.DataFrame): Long =
@@ -403,6 +428,8 @@ class PlanSpec extends SparkTestBase {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("probe_lookup"), s"no probe lookup:\n$plan")
     assert(!plan.contains("Exchange"), s"exchange in a one-split search:\n$plan")
+    // one page of list_no: parquet could skip nothing, so no filter
+    assert(!filtersOn(df, "list_no"), s"probed-list filter in a one-page search:\n$plan")
     assert(rows.length == 50 &&
       rows.toSet == idx.search(local, 5, nprobe = 2, broadcastQueries = false).collect().toSet)
   }
@@ -420,6 +447,122 @@ class PlanSpec extends SparkTestBase {
     assert(rows.toSet == idx.search(local, 5, nprobe = 2, broadcastQueries = false).collect().toSet)
   }
 
+  test("a saved one-page IVF-Flat or IVF-PQ store compiles its scan once for every probe set") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val flat = savedIvf(1)
+    val built = graft.index.IvfPqIndex.build(b, "id", "vec", nlist = 8, m = 8,
+      ksub = 16, niterCoarse = 2, niterPq = 2)
+    val pq = saved(built, "codes", 1)
+    built.codes.unpersist()
+    // a query at a centroid probes that centroid's list alone at nprobe 1
+    def at(cents: Array[Array[Float]], lists: Seq[Int]) = spark.createDataFrame(
+      lists.map(l => org.apache.spark.sql.Row(l.toLong, cents(l).toSeq)).asJava, q.schema)
+    assert(flat.probedListNos(at(flat.centroids, Seq(0, 1)), 1).toSet == Set(0, 1) &&
+      flat.probedListNos(at(flat.centroids, Seq(2, 3)), 1).toSet == Set(2, 3))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSet
+    for ((name, cents, search, viaJoin) <- Seq[(String, Array[Array[Float]],
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        ("IVF-Flat", flat.centroids, flat.search(_, 5, nprobe = 1),
+          flat.search(_, 5, nprobe = 1, broadcastQueries = false)),
+        ("IVF-PQ", pq.centroids, pq.search(_, 5, nprobe = 1),
+          qs => probeJoin(pq.search(qs, 5, nprobe = 1))))) {
+      val (warm, fresh) = (at(cents, Seq(0, 1)), at(cents, Seq(2, 3)))
+      search(warm).collect()
+      val expected = rows(viaJoin(fresh))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val got = search(fresh)
+      val res = rows(got)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"$name compiled $compiled classes for a new probe set:\n" +
+        got.queryExecution.executedPlan)
+      assert(res.size == 10 && res == expected, name)
+    }
+  }
+
+  test("the probed-list filter stays where the read can skip rows: pages, " +
+    "partitions, cached batches; not one page or a computed list_no") {
+    // 5000 rows over 8 lists in one data file: the small_batch_search store
+    val base = spark.range(5000).select(col("id"),
+      array((col("id") % 8).cast("float"), lit(0f), lit(0f), lit(0f)).as("vec"),
+      (col("id") % 8).cast("int").as("list_no"))
+    val cents = Array.tabulate(8)(l => Array(l.toFloat, 0f, 0f, 0f))
+    def store(confs: (String, String)*) =
+      saved(new IvfIndex(4, "l2sq", 8, cents, base), "invlists", 1, confs: _*).invlists
+    val onePage = store()
+    val paged = store("parquet.page.row.count.limit" -> "1000")
+    assert(shim.oneSplit(onePage) && shim.oneSplit(paged))
+    assert(!shim.skipsRows(onePage, "list_no"), "a one-page store keeps the filter")
+    assert(shim.skipsRows(paged, "list_no"), "a five-page store drops the filter")
+    // the one-page store's data file copied without its offset index
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = new org.apache.hadoop.fs.Path(onePage.inputFiles.head)
+    val copy = java.nio.file.Files.createTempDirectory("nooffsetindex").toString
+    val dst = new org.apache.hadoop.fs.Path(s"$copy/part-0.parquet")
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
+    val footer = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFooter.getFileMetaData finally r.close()
+    }
+    val w = new org.apache.parquet.hadoop.ParquetFileWriter(
+      org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(dst, conf), footer.getSchema,
+      org.apache.parquet.hadoop.ParquetFileWriter.Mode.CREATE, 128L << 20, 0)
+    w.start()
+    w.appendFile(in)
+    w.end(footer.getKeyValueMetaData)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dst, conf))
+    try assert(reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      .forall(reader.readOffsetIndex(_) == null))
+    finally reader.close()
+    val noIndex = graft.io.Frame.read(spark, copy)
+    assert(noIndex.count() == 5000 && shim.oneSplit(noIndex))
+    assert(shim.skipsRows(noIndex, "list_no"), "a store with no offset index keeps the filter")
+    // the older one-directory-per-list layout: one list in one file, one
+    // split and one page, pruned by its partition column
+    val legacy = java.nio.file.Files.createTempDirectory("bydirs").toString
+    base.filter(col("list_no") === 3).coalesce(1).write.mode("overwrite")
+      .partitionBy("list_no").parquet(legacy)
+    val byDirs = graft.io.Frame.read(spark, legacy)
+    assert(shim.oneSplit(byDirs) && shim.skipsRows(byDirs, "list_no"))
+    // cached batches keep it; a list_no computed by a projection, or read
+    // from local rows, does not
+    val inSession = IvfIndex.build(b, "id", "vec", nlist = 8, niter = 2).invlists
+    assert(!shim.skipsRows(inSession, "list_no"))
+    inSession.cache()
+    try assert(shim.skipsRows(inSession, "list_no")) finally inSession.unpersist()
+    import spark.implicits._
+    assert(!shim.skipsRows(Seq((1L, 3)).toDF("id", "list_no"), "list_no"))
+  }
+
+  test("an uncached in-session IVF-Flat or binary IVF search assigns each row " +
+    "once: one coarse assignment in the plan, none in a filter") {
+    val flat = IvfIndex.build(b, "id", "vec", nlist = 8, niter = 2)
+    val bivf = graft.index.BinaryIvfIndex.buildFromVectors(b, "id", "vec",
+      nlist = 8, niter = 2)
+    val local = localQueries
+    val codes = spark.createDataFrame(
+      q.select(col("qid"), graft.functions.sign_bits(col("qvec")).as("qcode"))
+        .collect().toSeq.asJava, new org.apache.spark.sql.types.StructType()
+        .add("qid", "long").add("qcode", "binary"))
+    for ((name, df, viaJoin, assign) <- Seq(
+        ("IVF-Flat", flat.search(local, 5, nprobe = 2),
+          flat.search(local, 5, nprobe = 2, broadcastQueries = false), "nearest_centroid"),
+        ("binary IVF", bivf.search(codes, 5, nprobe = 2),
+          probeJoin(bivf.search(codes, 5, nprobe = 2)), "transform"))) {
+      val rows = df.collect()
+      val plan = df.queryExecution.executedPlan
+      def calls(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+        e.collect { case x if x.prettyName == assign => x }.size
+      val perNode = planWalk.collect(plan) { case p => (p, p.expressions.map(calls).sum) }
+      assert(perNode.map(_._2).sum == 1, s"$name: not one $assign in the plan:\n$plan")
+      assert(perNode.forall { case (p, n) =>
+        n == 0 || !p.isInstanceOf[org.apache.spark.sql.execution.FilterExec] },
+        s"$name: $assign in a filter:\n$plan")
+      assert(rows.length == 50 && rows.toSet == viaJoin.collect().toSet, name)
+    }
+  }
+
   test("the probe lookup emits as many (probe, list row) pairs as the probe join") {
     val idx = savedIvf(1)
     val local = localQueries
@@ -429,11 +572,7 @@ class PlanSpec extends SparkTestBase {
     val pairs = lookupRows(viaLookup)
     assert(pairs > 0 && pairs == joinRows(viaJoin),
       s"lookup emitted $pairs pairs, the shuffle join ${joinRows(viaJoin)}")
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    val viaBroadcast =
-      try idx.search(local, 5, nprobe = 3) finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val viaBroadcast = probeJoin(idx.search(local, 5, nprobe = 3))
     viaBroadcast.collect()
     assert(lookupRows(viaBroadcast) == 0 && joinRows(viaBroadcast) == pairs)
   }
